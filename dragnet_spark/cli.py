@@ -74,7 +74,7 @@ _OPT_DEFS = {
     # round-9: sink fold, profiler, LM store
     "min-batches": True, "keep-last": True, "order-by": True,
     "format": True, "docs": True, "min-count": True, "lam-pct": True,
-    "min-mean-logp": True, "gram-n": True, "m-bits": True, "k": True,
+    "min-mean-logp": True, "gram-n": True, "m-bits": True,
     "max-hit-frac": True, "src-field": True, "attribute": False,
     # round-9: semdedup + KMV distinct
     "iterations": True, "threshold": True, "id-col": True,
@@ -426,7 +426,9 @@ def cmd_scan(argv, cat: Catalog, out):
         return
 
     spark = _get_spark()
-    observations = {} if opts.get("counters") else None
+    # --warnings reads the parser counts of the scan's own pass
+    want_obs = opts.get("counters") or opts.get("warnings")
+    observations = {} if want_obs else None
     df, resolver, value_col = load_datasource(
         spark, ds, query, observations=observations
     )
@@ -438,15 +440,13 @@ def cmd_scan(argv, cat: Catalog, out):
                observations=observations)
     rows = [tuple(r) for r in res.collect()]
     _render_result(rows, query, opts, out, dsname)
-    if observations:
+    if opts.get("counters"):
         _print_counters(observations, len(rows))
-    if opts.get("warnings"):
-        from dragnet_spark.sources.ndjson import corrupt_line_count
-
-        if ds.data_format == "json":
-            n = corrupt_line_count(spark, resolve_paths(ds, query))
-            if n:
-                sys.stderr.write("warn: %d unparseable input lines\n" % n)
+    if opts.get("warnings") and "json parser" in observations:
+        n = (observations["json parser"].get["ninputs"]
+             - observations["adapter"].get["noutputs"])
+        if n:
+            sys.stderr.write("warn: %d unparseable input lines\n" % n)
 
 
 def cmd_build(argv, cat: Catalog, out):
@@ -529,13 +529,11 @@ def cmd_index_config(argv, cat: Catalog, out):
 
 def cmd_index_scan(argv, cat: Catalog, out):
     """Map phase of a distributed build: emit each metric's aggregated
-    points, tagged with __dn_metric, ready to pipe into index-read."""
+    points — the aggregate ``dn build`` writes — tagged with
+    __dn_metric, ready to pipe into index-read."""
     from dragnet_spark.datasource import load_datasource
-    from dragnet_spark.index.build import BUCKET_COL, bucket_column
+    from dragnet_spark.index.build import aggregate_metrics
     from dragnet_spark.output.format import format_points
-    from dragnet_spark.scan import ColumnOverlayResolver, scan
-    from dragnet_spark.fieldspec import Breakdown
-    from pyspark.sql import functions as F
 
     opts = _parse_args(argv, ["before", "after", "filter", "breakdowns",
                               "counters", "index-config", "interval"])
@@ -550,59 +548,28 @@ def cmd_index_scan(argv, cat: Catalog, out):
     df, resolver, _vc = load_datasource(spark, ds, query)
     if df is None:
         return
-    # one-pass multiplexed map phase: all metrics share a single read
-    # + shuffle (index/build.fanout_aggregate), like the build path
-    from dragnet_spark.index.build import fanout_aggregate, select_metric
-    from dragnet_spark.krill import compile_predicate
-
-    src, r = df, resolver
-    if ds.filter:
-        src = src.filter(compile_predicate(ds.filter, r.raw))
-    if interval != "all" and ds.time_field:
-        src = src.withColumn(
-            BUCKET_COL,
-            bucket_column(
-                r.raw(ds.time_field), interval, r.dtype(ds.time_field)
-            ),
-        ).filter(F.col(BUCKET_COL).isNotNull())
-        r = ColumnOverlayResolver(r, [BUCKET_COL])
-        prefix = [Breakdown(BUCKET_COL, BUCKET_COL)]
-    else:
-        prefix = []
-    per_metric = []
-    fanned = []
-    for m in metrics:
-        bds = tuple(prefix) + m.breakdowns
-        fan_idx = len(fanned) if bds else None
-        per_metric.append((m, bds, fan_idx))
-        if bds:
-            fanned.append((m.filter, bds))
-    agg = None
-    if fanned:
-        agg = fanout_aggregate(src, fanned, r).persist()
-    try:
-        for i, (m, bds, fan_idx) in enumerate(per_metric):
-            q = QueryConfig(breakdowns=tuple(bds), filter=m.filter)
-            if fan_idx is not None:
-                res = select_metric(agg, fan_idx, bds)
-            else:
-                # zero-group total: keep scan()'s one-0-row shape
-                res = scan(src, q, resolver=r)
-            rows = [tuple(x) for x in res.collect()]
-            for line in format_points(rows, q):
-                obj = json.loads(line)
-                obj["fields"]["__dn_metric"] = i
-                out.write(json.dumps(obj, separators=(",", ":")) + "\n")
-    finally:
-        if agg is not None:
-            agg.unpersist()
+    results = aggregate_metrics(
+        df, metrics, interval, ds.time_field, ds.filter, resolver,
+        query.time_after, query.time_before,
+    )
+    for i, (_m, keys, res) in enumerate(results):
+        rows = [tuple(x) for x in res.collect()]
+        for line in format_points(rows, QueryConfig(breakdowns=keys)):
+            obj = json.loads(line)
+            obj["fields"]["__dn_metric"] = i
+            out.write(json.dumps(obj, separators=(",", ":")) + "\n")
 
 
 def cmd_index_read(argv, cat: Catalog, out):
     """Reduce phase of a distributed build: read tagged points from
-    stdin and materialize the index views."""
-    from dragnet_spark.index.build import BUCKET_COL, INDEX_META_FILE, INDEX_VERSION
-    import os
+    stdin and write them as the index views, with the build's writer
+    (only the buckets the points hold are replaced)."""
+    from dragnet_spark.index.build import (
+        metric_keys,
+        select_metric,
+        write_index_meta,
+        write_view,
+    )
 
     opts = _parse_args(argv, ["index-config", "interval"])
     (dsname,) = _nargs(opts, 1)
@@ -613,40 +580,27 @@ def cmd_index_read(argv, cat: Catalog, out):
     interval = opts.get("interval", "day")
     spark = _get_spark()
 
-    by_metric: dict[int, list[dict]] = {}
+    # points → the (metric id, key strings, value) rows of the build's
+    # fan-out aggregate, so select_metric restores the typed columns;
+    # a number's key string is its JSON text
+    rows = []
     for line in sys.stdin:
-        line = line.strip()
-        if not line:
+        if not line.strip():
             continue
         pt = json.loads(line)
         fields = pt["fields"]
-        idx = int(fields.pop("__dn_metric", 0))
-        fields["value"] = pt["value"]
-        by_metric.setdefault(idx, []).append(fields)
+        i = int(fields.pop("__dn_metric", 0))
+        keys = [fields[b.name] for b in metric_keys(metrics[i], interval)]
+        rows.append((i, [k if isinstance(k, str) else json.dumps(k) for k in keys],
+                     pt["value"]))
+    points = spark.createDataFrame(rows, "__m int, __k array<string>, value long")
 
     root = _index_root(ds, interval)
-    for i, m in enumerate(metrics):
-        rows = by_metric.get(i, [])
-        if not rows:
-            continue
-        sdf = spark.createDataFrame(rows)
-        path = os.path.join(root, m.name)
-        if BUCKET_COL in sdf.columns:
-            (sdf.repartition(BUCKET_COL).write.mode("overwrite")
-             .partitionBy(BUCKET_COL).parquet(path))
-        else:
-            sdf.coalesce(1).write.mode("overwrite").parquet(path)
-
-    meta = {
-        "version": INDEX_VERSION,
-        "interval": interval,
-        "time_field": ds.time_field,
-        "datasource_filter": ds.filter,
-        "metrics": [m.to_json() for m in metrics],
-    }
-    os.makedirs(root, exist_ok=True)
-    with open(os.path.join(root, INDEX_META_FILE), "w") as f:
-        json.dump(meta, f, indent=2)
+    for i in sorted({r[0] for r in rows}):
+        m = metrics[i]
+        write_view(select_metric(points, i, metric_keys(m, interval)),
+                   root, m, interval)
+    write_index_meta(root, metrics, interval, ds.time_field, ds.filter)
 
 
 def cmd_compact(argv, cat: Catalog, out):

@@ -17,13 +17,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from dragnet_spark.config import DatasourceConfig
 from dragnet_spark.query import QueryConfig
-from dragnet_spark.scan import SchemaResolver, VariantResolver, VARIANT_COL
-from dragnet_spark.sources.ndjson import read_skinner
+from dragnet_spark.scan import SchemaResolver, VariantResolver
+from dragnet_spark.sources.ndjson import parse_ndjson, read_skinner
 from dragnet_spark.sources.pathenum import prune_paths
 
 
@@ -128,24 +127,6 @@ def load_datasource(
         return df, SchemaResolver(df), None
 
     # raw NDJSON: one-pass text → variant parse; corrupt lines dropped
-    # (counted by the observation / the CLI's --warnings path)
+    # (counted by the observations, --counters / --warnings)
     txt = spark.read.option("recursiveFileLookup", "true").text(paths)
-    if observations is not None:
-        from pyspark.sql import Observation
-
-        obs = Observation("json parser")
-        observations["json parser"] = obs
-        txt = txt.observe(obs, F.count(F.lit(1)).alias("ninputs"))
-    nonblank = txt.filter(F.trim(F.col("value")) != "")
-    df = (
-        nonblank
-        .select(F.try_parse_json(F.col("value")).alias(VARIANT_COL))
-        .filter(F.col(VARIANT_COL).isNotNull())
-    )
-    if observations is not None:
-        from pyspark.sql import Observation
-
-        obs2 = Observation("adapter")
-        observations["adapter"] = obs2
-        df = df.observe(obs2, F.count(F.lit(1)).alias("noutputs"))
-    return df, VariantResolver(), None
+    return parse_ndjson(txt, observations), VariantResolver(), None

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,9 +33,17 @@ from pyspark.sql import functions as F
 
 from dragnet_spark.fieldspec import Breakdown, parse_breakdowns
 from dragnet_spark.index.lease import hold_lease
-from dragnet_spark.krill import validate_predicate
+from dragnet_spark.krill import compile_predicate, validate_predicate
 from dragnet_spark.query import QueryConfig
-from dragnet_spark.scan import VALUE_COL, scan, synthetic_date_column
+from dragnet_spark.scan import (
+    VALUE_COL,
+    ColumnOverlayResolver,
+    SchemaResolver,
+    breakdown_column,
+    in_time_bounds,
+    scan,
+    synthetic_date_column,
+)
 
 INDEX_META_FILE = "_dragnet_index.json"
 INDEX_VERSION = "2.0.0"  # tracks the reference's dragnet_config version
@@ -105,9 +113,6 @@ def fanout_aggregate(src, per_metric, resolver) -> DataFrame:
     ``per_metric``: list of (krill_filter_or_None, breakdown-tuple).
     Returns a DataFrame (__m int, __k array<string>, value long).
     """
-    from dragnet_spark.krill import compile_predicate
-    from dragnet_spark.scan import VALUE_COL, breakdown_column
-
     # each distinct breakdown expression is computed ONCE into a named
     # projection; branches reference the name from both the null guard
     # and the key array. Inlining the expression at every use (the
@@ -157,8 +162,6 @@ def fanout_aggregate(src, per_metric, resolver) -> DataFrame:
 def select_metric(agg: DataFrame, i: int, bds) -> DataFrame:
     """Project metric ``i``'s typed result out of a fanout_aggregate:
     key strings cast back to long for bucketized/date breakdowns."""
-    from dragnet_spark.scan import VALUE_COL
-
     cols = [
         F.col("__k")[j]
         .cast("long" if (b.bucketized or b.date) else "string")
@@ -166,6 +169,153 @@ def select_metric(agg: DataFrame, i: int, bds) -> DataFrame:
         for j, b in enumerate(bds)
     ]
     return agg.filter(F.col("__m") == i).select(*cols, F.col(VALUE_COL))
+
+
+def metric_keys(m: Metric, interval: str) -> tuple[Breakdown, ...]:
+    """A metric's aggregation keys in a view: the bucket column first
+    (unless ``interval`` is "all"), then the metric's breakdowns."""
+    if interval == "all":
+        return m.breakdowns
+    return (Breakdown(BUCKET_COL, BUCKET_COL),) + m.breakdowns
+
+
+def aggregate_metrics(
+    df: DataFrame,
+    metrics: list[Metric],
+    interval: str = "day",
+    time_field: str | None = None,
+    datasource_filter: Any = None,
+    resolver=None,
+    time_after: int | None = None,
+    time_before: int | None = None,
+):
+    """Yield ``(metric, keys, result)`` for each metric, in order: the
+    aggregate ``dn build`` writes and ``dn index-scan`` emits as
+    points. ``keys`` is :func:`metric_keys`; ``result`` has one column
+    per key plus ``value``.
+
+    The raw records pass the datasource filter and, with
+    ``time_after``/``time_before`` (epoch seconds, [after, before)),
+    the record-level time bounds: path pruning alone can admit
+    records of neighbouring intervals from overlapping files. Each
+    record gets its interval's bucket column (unparseable dates
+    dropped); ``resolver`` carries the field access of the raw data
+    (VariantResolver for NDJSON) and the bucket column shadows it via
+    ColumnOverlayResolver.
+
+    One-pass multiplexed aggregation (the reference's S10 fan-out,
+    lib/dragnet.js:330-395): every metric whose filter matches a row
+    emits one (metric_id, key-tuple) record, so N metrics cost ONE
+    read of the raw data and ONE shuffle — not N of each. At 100 TB
+    the N× raw re-read is the difference between a nightly build
+    fitting its window and not. The aggregate is small (unique
+    tuples) and stays persisted while the results are consumed. Only
+    the zero-group total shape (interval "all", no breakdowns) is a
+    plain scan, since its empty-input answer — one 0 row — is not a
+    group-by's.
+    """
+    if interval not in ("hour", "day", "all"):
+        raise ValueError(f"invalid interval: {interval}")
+    if interval != "all" and not time_field:
+        raise ValueError("hour/day intervals require a time_field")
+
+    base = resolver or SchemaResolver(df)
+    src = df
+    if datasource_filter:
+        src = src.filter(compile_predicate(datasource_filter, base.raw))
+    if time_after is not None and time_field:
+        src = src.filter(
+            in_time_bounds(base.date_seconds(time_field), time_after, time_before)
+        )
+    scan_resolver = base
+    if interval != "all":
+        src = src.withColumn(
+            BUCKET_COL,
+            bucket_column(
+                base.raw(time_field), interval, base.dtype(time_field)
+            ),
+        ).filter(F.col(BUCKET_COL).isNotNull())  # drop+warn semantics (P2)
+        scan_resolver = ColumnOverlayResolver(base, [BUCKET_COL])
+
+    keyed = [(m, metric_keys(m, interval)) for m in metrics]
+    fanned = [(m.filter, keys) for m, keys in keyed if keys]
+    agg = (
+        fanout_aggregate(src, fanned, scan_resolver).persist() if fanned else None
+    )
+    try:
+        i = 0
+        for m, keys in keyed:
+            if keys:
+                yield m, keys, select_metric(agg, i, keys)
+                i += 1
+            else:
+                total = QueryConfig(filter=m.filter)
+                yield m, keys, scan(src, total, resolver=scan_resolver)
+    finally:
+        if agg is not None:
+            agg.unpersist()
+
+
+def write_view(
+    out: DataFrame, index_path: str, m: Metric, interval: str,
+    mode: str = "overwrite",
+) -> None:
+    """Write one metric's aggregate under ``index_path/<metric>``.
+
+    Partitioned by bucket, one file per bucket; an overwrite is
+    *dynamic*, so it replaces only the buckets ``out`` holds and every
+    other interval's data survives (bounded rebuilds). Within each
+    file, rows are clustered by the leading breakdowns: sorted runs
+    dictionary/RLE-encode tighter AND give each parquet row group
+    disjoint min/max stats, so a query-path filter on a breakdown
+    (krill → pushed predicate) skips whole row groups at 100 TB
+    instead of decoding them. The sort is per-partition on the
+    already-small aggregate — no extra shuffle (sortWithinPartitions,
+    not orderBy).
+    """
+    path = os.path.join(index_path, m.name)
+    # breakdown names may contain dots (req.caller): backtick-quote
+    # so the sort resolves the literal column, not a struct path
+    sort_cols = [F.col(f"`{b.name}`") for b in m.breakdowns]
+    if interval != "all":
+        # one output file per bucket partition; without this every
+        # shuffle task writes a sliver into every bucket dir
+        (
+            out.repartition(BUCKET_COL)
+            .sortWithinPartitions(F.col(BUCKET_COL), *sort_cols)
+            .write.mode(mode)
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(BUCKET_COL)
+            .parquet(path)
+        )
+    else:
+        sorted_out = (
+            out.coalesce(1).sortWithinPartitions(*sort_cols)
+            if m.breakdowns
+            else out.coalesce(1)
+        )
+        sorted_out.write.mode(mode).parquet(path)
+
+
+def write_index_meta(
+    index_path: str,
+    metrics: list[Metric],
+    interval: str,
+    time_field: str | None,
+    datasource_filter: Any = None,
+) -> None:
+    """The index definition the query path routes by
+    (``_dragnet_index.json``)."""
+    meta = {
+        "version": INDEX_VERSION,
+        "interval": interval,
+        "time_field": time_field,
+        "datasource_filter": datasource_filter,
+        "metrics": [m.to_json() for m in metrics],
+    }
+    os.makedirs(index_path, exist_ok=True)
+    with open(os.path.join(index_path, INDEX_META_FILE), "w") as f:
+        json.dump(meta, f, indent=2)
 
 
 def build_index(
@@ -181,132 +331,22 @@ def build_index(
     time_after: int | None = None,
     time_before: int | None = None,
 ) -> None:
-    """Materialize every metric as a partitioned parquet view.
+    """Materialize every metric as a partitioned parquet view: write
+    each :func:`aggregate_metrics` result with :func:`write_view`,
+    then the index definition.
 
-    ``resolver`` carries the field-access strategy of the raw data
-    (VariantResolver for NDJSON datasources); the injected bucket
-    column shadows it via ColumnOverlayResolver.
-
-    ``time_after``/``time_before`` (epoch seconds, [after, before))
-    bound the build to a time slice — the incremental-rebuild path:
-    records outside the bounds are filtered (path pruning alone can
-    admit partial intervals from overlapping files), and overwrite
-    mode uses *dynamic* partition overwrite, so only the buckets the
-    slice touches are replaced and every other interval's data
-    survives. Rebuilding one late-data day at 100 TB costs one day of
-    input, not the full history.
+    ``time_after``/``time_before`` bound the build to a time slice —
+    the incremental-rebuild path: only the buckets the slice touches
+    are replaced (dynamic partition overwrite). Rebuilding one
+    late-data day at 100 TB costs one day of input, not the full
+    history.
     """
-    if interval not in ("hour", "day", "all"):
-        raise ValueError(f"invalid interval: {interval}")
-    if interval != "all" and not time_field:
-        raise ValueError("hour/day intervals require a time_field")
-
-    from dragnet_spark.scan import ColumnOverlayResolver, SchemaResolver
-
-    base = resolver or SchemaResolver(df)
-    src = df
-    if datasource_filter:
-        from dragnet_spark.krill import compile_predicate
-
-        src = src.filter(compile_predicate(datasource_filter, base.raw))
-    if time_after is not None and time_field:
-        secs = base.date_seconds(time_field)
-        src = src.filter(
-            secs.isNotNull()
-            & (secs >= F.lit(time_after))
-            & (secs < F.lit(time_before))
-        )
-    scan_resolver = base
-    if interval != "all":
-        src = src.withColumn(
-            BUCKET_COL,
-            bucket_column(
-                base.raw(time_field), interval, base.dtype(time_field)
-            ),
-        ).filter(F.col(BUCKET_COL).isNotNull())  # drop+warn semantics (P2)
-        scan_resolver = ColumnOverlayResolver(base, [BUCKET_COL])
-    agg_keys = (
-        [Breakdown(BUCKET_COL, BUCKET_COL)] if interval != "all" else []
-    )
-
-    # One-pass multiplexed build (the reference's S10 fan-out,
-    # lib/dragnet.js:330-395): every metric whose filter matches a row
-    # emits one (metric_id, key-tuple) record, so N metrics cost ONE
-    # read of the raw data and ONE shuffle — not N of each. At 100 TB
-    # the N× raw re-read is the difference between a nightly build
-    # fitting its window and not. Falls back to per-metric scans only
-    # for the zero-group total shape (whose empty-input semantics —
-    # one 0 row — a group-by can't produce).
-    fanout = [
-        m for m in metrics if (tuple(agg_keys) + m.breakdowns)
-    ]
-    looped = [m for m in metrics if not (tuple(agg_keys) + m.breakdowns)]
-
-    def _write(out: DataFrame, m: Metric) -> None:
-        path = os.path.join(index_path, m.name)
-        # cluster rows by the leading breakdowns inside each output
-        # file: sorted runs dictionary/RLE-encode tighter AND give each
-        # parquet row group disjoint min/max stats, so a query-path
-        # filter on a breakdown (krill → pushed predicate) skips whole
-        # row groups at 100 TB instead of decoding them. Sort cost is
-        # per-partition on the already-small aggregate — no extra
-        # shuffle (sortWithinPartitions, not orderBy).
-        # breakdown names may contain dots (req.caller): backtick-quote
-        # so the sort resolves the literal column, not a struct path
-        sort_cols = [F.col(f"`{b.name}`") for b in m.breakdowns]
-        if interval != "all":
-            # one output file per bucket partition; without this every
-            # shuffle task writes a sliver into every bucket dir
-            (
-                out.repartition(BUCKET_COL)
-                .sortWithinPartitions(F.col(BUCKET_COL), *sort_cols)
-                .write.mode(mode)
-                # dynamic: an overwrite replaces only the buckets this
-                # build wrote, so bounded rebuilds keep other intervals
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(BUCKET_COL)
-                .parquet(path)
-            )
-        else:
-            sorted_out = (
-                out.coalesce(1).sortWithinPartitions(*sort_cols)
-                if m.breakdowns
-                else out.coalesce(1)
-            )
-            sorted_out.write.mode(mode).parquet(path)
-
-    if fanout:
-        per_metric_bds = [
-            (m, tuple(agg_keys) + m.breakdowns) for m in fanout
-        ]
-        agg = fanout_aggregate(
-            src, [(m.filter, bds) for m, bds in per_metric_bds], scan_resolver
-        )
-        # the aggregate is small (unique tuples); cache it so the
-        # per-metric writes don't re-run the scan+shuffle N times
-        agg = agg.persist()
-        try:
-            for i, (m, bds) in enumerate(per_metric_bds):
-                _write(select_metric(agg, i, bds), m)
-        finally:
-            agg.unpersist()
-
-    for m in looped:
-        q_with_bucket = QueryConfig(
-            breakdowns=tuple(agg_keys) + m.breakdowns, filter=m.filter
-        )
-        _write(scan(src, q_with_bucket, resolver=scan_resolver), m)
-
-    meta = {
-        "version": INDEX_VERSION,
-        "interval": interval,
-        "time_field": time_field,
-        "datasource_filter": datasource_filter,
-        "metrics": [m.to_json() for m in metrics],
-    }
-    os.makedirs(index_path, exist_ok=True)
-    with open(os.path.join(index_path, INDEX_META_FILE), "w") as f:
-        json.dump(meta, f, indent=2)
+    for m, _keys, out in aggregate_metrics(
+        df, metrics, interval, time_field, datasource_filter, resolver,
+        time_after, time_before,
+    ):
+        write_view(out, index_path, m, interval, mode)
+    write_index_meta(index_path, metrics, interval, time_field, datasource_filter)
 
 
 def compact_index(
@@ -336,8 +376,6 @@ def compact_index(
     on the same filesystem as the index (works on shared storage) and
     is removed afterwards.
     """
-    import shutil
-
     from dragnet_spark.index.query import load_index_meta
 
     meta = load_index_meta(index_path)
@@ -360,32 +398,10 @@ def _compact_index_locked(spark, index_path, meta, interval):
             F.sum("value").cast("long").alias("value")
         )
         # stage first: Spark cannot overwrite the parquet tree it is
-        # currently reading
+        # currently reading; the rewrite keeps the build's layout
         stage = path + ".compact_tmp"
         try:
-            if interval != "all" and BUCKET_COL in df.columns:
-                # keep the build path's row clustering (row-group
-                # stats pruning + RLE) through compaction; names may
-                # contain dots → backtick-quote for literal resolution
-                sort_cols = [
-                    F.col(f"`{c}`") for c in group_cols if c != BUCKET_COL
-                ]
-                compacted.repartition(BUCKET_COL).sortWithinPartitions(
-                    F.col(BUCKET_COL), *sort_cols
-                ).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(stage)
-                (
-                    spark.read.parquet(stage)
-                    .repartition(BUCKET_COL)
-                    .sortWithinPartitions(F.col(BUCKET_COL), *sort_cols)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(BUCKET_COL)
-                    .parquet(path)
-                )
-            else:
-                compacted.coalesce(1).write.mode("overwrite").parquet(stage)
-                spark.read.parquet(stage).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(path)
+            compacted.write.mode("overwrite").parquet(stage)
+            write_view(spark.read.parquet(stage), index_path, m, interval)
         finally:
             shutil.rmtree(stage, ignore_errors=True)

@@ -31,7 +31,7 @@ supply the values:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DataType,
@@ -226,6 +226,84 @@ def breakdown_column(resolver, b: Breakdown) -> Column:
     return resolver.grouped(b.field)
 
 
+def scan_prelude(
+    df: DataFrame,
+    query: QueryConfig,
+    resolver,
+    datasource_filter=None,
+    observations: dict | None = None,
+) -> DataFrame:
+    """The record-level half of :func:`scan`: the datasource and query
+    filters, the time bounds, and the drop of records whose date will
+    not parse or whose bucketized value is not a number. Shared with
+    the windowed streaming scan, which groups the same records on an
+    event-time window instead.
+
+    With ``observations`` (the --counters path) it adds a "datetime"
+    Observation (ninputs/baddate/undef — reference "Datetime parser",
+    lib/stream-synthetic.js counters) before the date-validity drop,
+    and a "timefilter" Observation after the time bounds ("Time
+    filter"). Zero extra jobs — Observations ride the scan's one
+    action.
+    """
+    out = df
+
+    # datasource filter first, right after parse (lib/datasource-file.js:154-166)
+    if datasource_filter:
+        out = out.filter(compile_predicate(datasource_filter, resolver.raw))
+    if query.filter:
+        out = out.filter(compile_predicate(query.filter, resolver.raw))
+
+    has_bounds = query.time_after is not None and query.time_field is not None
+    date_field = (
+        query.time_field
+        if has_bounds
+        else (query.synthetic_dates[0].field if query.synthetic_dates else None)
+    )
+    if observations is not None and date_field is not None:
+        raw = resolver.raw(date_field)
+        secs = resolver.date_seconds(date_field)
+        obs = Observation("datetime")
+        observations["datetime"] = obs
+        out = out.observe(
+            obs,
+            F.count(F.lit(1)).alias("ninputs"),
+            F.sum(raw.isNull().cast("long")).alias("undef"),
+            F.sum((raw.isNotNull() & secs.isNull()).cast("long")).alias(
+                "baddate"
+            ),
+        )
+
+    # synthetic date columns; unparseable/missing dates are dropped
+    # with a warning in the reference (lib/stream-synthetic.js:48-77)
+    if has_bounds:
+        out = out.filter(
+            in_time_bounds(
+                resolver.date_seconds(query.time_field),
+                query.time_after, query.time_before,
+            )
+        )
+        if observations is not None:
+            tobs = Observation("timefilter")
+            observations["timefilter"] = tobs
+            out = out.observe(tobs, F.count(F.lit(1)).alias("noutputs"))
+    for b in query.synthetic_dates:
+        out = out.filter(resolver.date_seconds(b.field).isNotNull())
+    # a bucketized non-date breakdown on a non-numeric/missing value is
+    # dropped with a warning in the reference ("value is not a number",
+    # skinner bucketizer) — not grouped as a null bucket
+    for b in query.breakdowns:
+        if b.bucketized and not b.date:
+            out = out.filter(breakdown_column(resolver, b).isNotNull())
+    return out
+
+
+def in_time_bounds(secs: Column, after: int, before: int) -> Column:
+    """A record's epoch seconds lie in ``[after, before)``; an
+    unparseable date (NULL) is out."""
+    return secs.isNotNull() & (secs >= F.lit(after)) & (secs < F.lit(before))
+
+
 def scan(
     df: DataFrame,
     query: QueryConfig,
@@ -245,68 +323,10 @@ def scan(
     (tests/dn/local/tst.empty.sh.out); with breakdowns, empty input
     yields zero rows.
 
-    Pass a dict as ``observations`` (the --counters path) to
-    piggyback the reference's per-stage counters on the same single
-    pass: a "datetime" Observation (ninputs/baddate/undef — reference
-    "Datetime parser", lib/stream-synthetic.js counters) before the
-    date-validity drop, and a "timefilter" Observation after the time
-    bounds ("Time filter"). Zero extra jobs — Observations ride the
-    scan's one action.
+    ``observations``: see :func:`scan_prelude`.
     """
     resolver = resolver or SchemaResolver(df)
-    out = df
-
-    # datasource filter first, right after parse (lib/datasource-file.js:154-166)
-    if datasource_filter:
-        out = out.filter(compile_predicate(datasource_filter, resolver.raw))
-    if query.filter:
-        out = out.filter(compile_predicate(query.filter, resolver.raw))
-
-    has_bounds = query.time_after is not None and query.time_field is not None
-    date_field = (
-        query.time_field
-        if has_bounds
-        else (query.synthetic_dates[0].field if query.synthetic_dates else None)
-    )
-    if observations is not None and date_field is not None:
-        from pyspark.sql import Observation
-
-        raw = resolver.raw(date_field)
-        secs = resolver.date_seconds(date_field)
-        obs = Observation("datetime")
-        observations["datetime"] = obs
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("ninputs"),
-            F.sum(raw.isNull().cast("long")).alias("undef"),
-            F.sum((raw.isNotNull() & secs.isNull()).cast("long")).alias(
-                "baddate"
-            ),
-        )
-
-    # synthetic date columns; unparseable/missing dates are dropped
-    # with a warning in the reference (lib/stream-synthetic.js:48-77)
-    if has_bounds:
-        ts = resolver.date_seconds(query.time_field)
-        out = out.filter(
-            ts.isNotNull()
-            & (ts >= F.lit(query.time_after))
-            & (ts < F.lit(query.time_before))
-        )
-        if observations is not None:
-            from pyspark.sql import Observation
-
-            tobs = Observation("timefilter")
-            observations["timefilter"] = tobs
-            out = out.observe(tobs, F.count(F.lit(1)).alias("noutputs"))
-    for b in query.synthetic_dates:
-        out = out.filter(resolver.date_seconds(b.field).isNotNull())
-    # a bucketized non-date breakdown on a non-numeric/missing value is
-    # dropped with a warning in the reference ("value is not a number",
-    # skinner bucketizer) — not grouped as a null bucket
-    for b in query.breakdowns:
-        if b.bucketized and not b.date:
-            out = out.filter(breakdown_column(resolver, b).isNotNull())
+    out = scan_prelude(df, query, resolver, datasource_filter, observations)
 
     weight = (
         F.col(value_col).cast("long") if value_col else F.lit(1).cast("long")
@@ -331,20 +351,19 @@ def scan_ndjson(
     """Scan raw NDJSON with full reference semantics (per-record
     null-vs-missing, loose typing, corrupt-line tolerance).
 
-    One pass: text lines → ``try_parse_json`` variant (corrupt lines →
-    NULL, dropped — the reference's parser-warning path) → the standard
-    scan plan over a VariantResolver. The single-pass variant parse
-    replaces schema inference (which would be a second full read of the
-    data — untenable at 100 TB).
+    One pass: text lines → the shared variant parse
+    (sources.ndjson.parse_ndjson; corrupt lines dropped — the
+    reference's parser-warning path) → the standard scan plan over a
+    VariantResolver. The single-pass variant parse replaces schema
+    inference (which would be a second full read of the data —
+    untenable at 100 TB).
     """
+    from dragnet_spark.sources.ndjson import parse_ndjson
+
     txt = spark.read.option("recursiveFileLookup", "true").text(paths)
-    df = (
-        txt.filter(F.trim(F.col("value")) != "")
-        .select(F.try_parse_json(F.col("value")).alias(VARIANT_COL))
-        .filter(F.col(VARIANT_COL).isNotNull())
-    )
     return scan(
-        df, query, datasource_filter=datasource_filter, resolver=VariantResolver()
+        parse_ndjson(txt), query, datasource_filter=datasource_filter,
+        resolver=VariantResolver(),
     )
 
 

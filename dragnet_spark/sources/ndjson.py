@@ -9,17 +9,23 @@
   lib/format-json.js:55-73), used to feed one scan's output into
   another; here it flattens to the fields' columns plus ``value``.
 
-Corrupt-line tolerance uses Spark's DROPMALFORMED mode on the scan
-path (stays in the JVM reader, no post-filter) and PERMISSIVE with an
-explicit ``_corrupt_record`` column when the caller wants to inspect
-bad lines. At scale prefer an explicit schema — inference is an extra
+Raw ``json`` events go through :func:`parse_ndjson`, the one text →
+variant parse every path shares (batch scan, build, index-scan,
+streaming): no schema, no inference pass, corrupt lines dropped and
+counted by Observations on the same pass. The schema'd reader
+(:func:`read_ndjson`, used for skinner points) uses Spark's
+DROPMALFORMED mode, or PERMISSIVE with an explicit
+``_corrupt_record`` column when the caller wants to inspect bad
+lines. At scale prefer an explicit schema — inference is an extra
 full pass over 100 TB of input.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from dragnet_spark.scan import VARIANT_COL
 
 CORRUPT_COL = "_corrupt_record"
 
@@ -59,12 +65,28 @@ def read_ndjson(
     return df
 
 
-def corrupt_line_count(spark: SparkSession, paths: str | list[str]) -> int:
-    """Count unparseable lines (a diagnostic action, not part of the
-    scan plan): non-blank text lines minus parsed records."""
-    txt = spark.read.option("recursiveFileLookup", "true").text(paths)
-    total = txt.filter(F.trim(F.col("value")) != "").count()
-    return total - read_ndjson(spark, paths).count()
+def parse_ndjson(txt: DataFrame, observations: dict | None = None) -> DataFrame:
+    """Text lines (a ``value`` string column, batch or streaming) → one
+    VariantType column: blank lines dropped, each line through
+    ``try_parse_json``, unparseable lines (NULL) dropped.
+
+    Pass a dict as ``observations`` (batch only) to count on the same
+    pass: "json parser" ``ninputs`` (every line, blank ones included)
+    and "adapter" ``noutputs`` (parsed records) — the reference's
+    parser counters; their difference is the invalid-json count.
+    """
+    if observations is not None:
+        obs = observations["json parser"] = Observation("json parser")
+        txt = txt.observe(obs, F.count(F.lit(1)).alias("ninputs"))
+    df = (
+        txt.filter(F.trim(F.col("value")) != "")
+        .select(F.try_parse_json(F.col("value")).alias(VARIANT_COL))
+        .filter(F.col(VARIANT_COL).isNotNull())
+    )
+    if observations is not None:
+        obs = observations["adapter"] = Observation("adapter")
+        df = df.observe(obs, F.count(F.lit(1)).alias("noutputs"))
+    return df
 
 
 def read_skinner(

@@ -5,9 +5,13 @@ incremental story is "rebuild the affected interval" (acknowledged
 future work, lib/datasource-manta.js:258-264). This module is the
 north-star extension: continuous ``dn scan`` / ``dn build`` where new
 NDJSON files landing in the watched tree flow through the *identical*
-filter → breakdown → weighted-count semantics (scan.py is reused
-verbatim — the batch/streaming split is only source/sink wiring,
-SURVEY §7.2 step 8).
+filter → breakdown → weighted-count semantics. The batch code is
+called, not copied: the text → variant parse is
+``sources.ndjson.parse_ndjson``, an unwindowed ``stream_scan`` is
+``scan()`` itself and a windowed one shares its record prelude
+(``scan_prelude``), and the continuous build appends through
+``build_index`` — the batch/streaming split is only source/sink
+wiring (SURVEY §7.2 step 8).
 
 Design for scale:
 
@@ -33,14 +37,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dragnet_spark.krill import compile_predicate
 from dragnet_spark.query import QueryConfig
 from dragnet_spark.scan import (
     VALUE_COL,
     VARIANT_COL,
     VariantResolver,
     breakdown_column,
+    scan,
+    scan_prelude,
 )
+from dragnet_spark.sources.ndjson import parse_ndjson
 
 EVENT_TIME_COL = "__dn_event_time"
 
@@ -80,20 +86,16 @@ def read_ndjson_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Stream raw NDJSON files from a directory tree as a variant
-    column — the streaming twin of scan_ndjson's reader (corrupt lines
-    dropped, no schema inference pass)."""
+    column: the streaming file source feeding the same text → variant
+    parse the batch reader uses (sources.ndjson.parse_ndjson — blank
+    and corrupt lines dropped, no schema inference pass)."""
     reader = (
         spark.readStream.option("recursiveFileLookup", "true")
         .format("text")
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    txt = reader.load(path)
-    return (
-        txt.filter(F.trim(F.col("value")) != "")
-        .select(F.try_parse_json(F.col("value")).alias(VARIANT_COL))
-        .filter(F.col(VARIANT_COL).isNotNull())
-    )
+    return parse_ndjson(reader.load(path))
 
 
 def stream_scan(
@@ -109,53 +111,26 @@ def stream_scan(
     ``scan()`` output (breakdown columns + ``value``). When the query
     has a date breakdown with lquantize (a tumbling window), the
     aggregation is windowed on event time with a watermark — append
-    mode works and state is bounded. Otherwise it is a running global
-    aggregation (complete/update mode).
+    mode works and state is bounded; the records are those of
+    ``scan_prelude``. Otherwise it is ``scan()`` itself, a running
+    global aggregation (complete/update mode).
     """
     resolver = resolver or VariantResolver()
-    out = sdf
-
-    if datasource_filter:
-        out = out.filter(compile_predicate(datasource_filter, resolver.raw))
-    if query.filter:
-        out = out.filter(compile_predicate(query.filter, resolver.raw))
-    # --after/--before bounds, exactly as the batch scan applies them
-    if query.time_after is not None and query.time_field is not None:
-        secs = resolver.date_seconds(query.time_field)
-        out = out.filter(
-            secs.isNotNull()
-            & (secs >= F.lit(query.time_after))
-            & (secs < F.lit(query.time_before))
-        )
-
     # locate a tumbling-window breakdown: date + lquantize
     window_b = next(
         (b for b in query.breakdowns if b.date and b.aggr == "lquantize"), None
     )
-
-    for b in query.synthetic_dates:
-        out = out.filter(resolver.date_seconds(b.field).isNotNull())
-    for b in query.breakdowns:
-        if b.bucketized and not b.date:
-            out = out.filter(breakdown_column(resolver, b).isNotNull())
-
     if window_b is None:
-        keys = [breakdown_column(resolver, b).alias(b.name) for b in query.breakdowns]
-        if not keys:
-            return out.agg(
-                F.coalesce(F.sum(F.lit(1)), F.lit(0)).cast("long").alias(VALUE_COL)
-            )
-        return out.groupBy(*keys).agg(
-            F.sum(F.lit(1)).cast("long").alias(VALUE_COL)
-        )
+        return scan(sdf, query, datasource_filter=datasource_filter,
+                    resolver=resolver)
 
+    out = scan_prelude(sdf, query, resolver, datasource_filter)
     step = window_b.step or 1
     secs = resolver.date_seconds(window_b.field)
-    out = (
-        out.withColumn(EVENT_TIME_COL, F.timestamp_seconds(secs))
-        .filter(F.col(EVENT_TIME_COL).isNotNull())
-        .withWatermark(EVENT_TIME_COL, watermark)
-    )
+    # the prelude already dropped records whose date will not parse
+    out = out.withColumn(
+        EVENT_TIME_COL, F.timestamp_seconds(secs)
+    ).withWatermark(EVENT_TIME_COL, watermark)
     other = [b for b in query.breakdowns if b is not window_b]
     keys = [breakdown_column(resolver, b).alias(b.name) for b in other]
     win = F.window(F.col(EVENT_TIME_COL), f"{step} seconds")
@@ -171,7 +146,8 @@ def stream_scan(
                 F.unix_timestamp(F.col("__dn_window.start")).alias(b.name)
             )
         else:
-            cols.append(F.col(b.name))
+            # names may contain dots (res.statusCode): the literal column
+            cols.append(F.col(f"`{b.name}`"))
     return agg.select(*cols, F.col(VALUE_COL))
 
 

@@ -19,6 +19,17 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def events_tree(tmp_path_factory):
+    """A small seeded NDJSON event tree (FIXTURES.md §1 shape, 28 days
+    under ``%Y/%m-%d``, ~0.1% corrupt lines) written by the benchmark's
+    generator: ``(root, tallies)`` with exact per-group counts."""
+    from perfbench.gen import write_events
+
+    root = str(tmp_path_factory.mktemp("events_tree"))
+    return root, write_events(root, seed=11, n_records=3000)
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
 

@@ -1,0 +1,276 @@
+"""One event pipeline: every path from raw NDJSON to an answer shares
+the parse, the record filters, the metric aggregation and the view
+writer, so the paths agree.
+
+* ``dn scan``, ``dn build`` + ``dn query``, ``dn index-scan |
+  dn index-read`` + ``dn query`` and ``stream_scan`` give equal answers
+  on a seeded tree (perfbench/gen.py, via the ``events_tree`` fixture);
+* a bounded ``index-scan`` applies the record-level time bounds
+  ``dn build`` applies, and ``index-read`` replaces only the buckets it
+  writes, keeping the build's sort;
+* ``scan --warnings`` reports the parser count ``--counters`` reports,
+  from the same pass.
+"""
+
+import glob
+import io
+import json
+import sys
+
+import pytest
+
+from dragnet_spark.cli import main
+from dragnet_spark.fieldspec import parse_breakdowns
+from dragnet_spark.query import QueryConfig
+from dragnet_spark.streaming import read_ndjson_stream, stream_scan
+
+DAY_STATUS = "timestamp[date,field=time,aggr=lquantize,step=86400],res.statusCode"
+HOURLY = "timestamp[date,field=time,aggr=lquantize,step=3600]"
+GET = {"eq": ["req.method", "GET"]}
+
+
+@pytest.fixture
+def cfg(tmp_path, monkeypatch):
+    path = str(tmp_path / "dnconfig.json")
+    monkeypatch.setenv("DRAGNET_CONFIG", path)
+    return path
+
+
+def run(args, cfg_path, stdin=None):
+    out, err = io.StringIO(), io.StringIO()
+    old_err, old_in = sys.stderr, sys.stdin
+    sys.stderr = err
+    if stdin is not None:
+        sys.stdin = io.StringIO(stdin)
+    try:
+        rc = main(args, out=out, config_path=cfg_path)
+    finally:
+        sys.stderr, sys.stdin = old_err, old_in
+    assert rc == 0, err.getvalue()
+    return out.getvalue(), err.getvalue()
+
+
+def points(text, names):
+    """--points output → {(field values in breakdown order, value)}."""
+    got = set()
+    for line in text.splitlines():
+        pt = json.loads(line)
+        got.add((tuple(pt["fields"][n] for n in names), pt["value"]))
+    return got
+
+
+def add_datasource(cfg, name, path, index_path, metrics):
+    run(["datasource-add", name, f"--path={path}", "--time-format=%Y/%m-%d",
+         "--time-field=time", f"--index-path={index_path}"], cfg)
+    for metric, bds, flt in metrics:
+        argv = ["metric-add", name, metric]
+        if bds:
+            argv += ["-b", bds]
+        if flt:
+            argv += ["-f", json.dumps(flt)]
+        run(argv, cfg)
+
+
+# ------------------------------------------------------ four-way equality
+
+QUERIES = [
+    # (breakdowns, filter, after, before)
+    ("host,req.caller", None, None, None),
+    ("latency[aggr=quantize]", GET, None, None),
+    (DAY_STATUS, None, "2014-05-03", "2014-05-06"),
+    ("", None, "2014-05-10", "2014-05-12"),
+]
+
+
+def _argv(bds, flt, after, before):
+    argv = ["--points"]
+    if bds:
+        argv += ["-b", bds]
+    if flt:
+        argv += ["-f", json.dumps(flt)]
+    if after:
+        argv += ["--after", after, "--before", before]
+    return argv
+
+
+def _stream_points(spark, tree, query, name):
+    res = stream_scan(read_ndjson_stream(spark, tree), query)
+    q = (res.writeStream.format("memory").queryName(name)
+         .outputMode("complete").trigger(availableNow=True).start())
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    return {(tuple(r[:-1]), r[-1]) for r in spark.sql(f"select * from {name}").collect()}
+
+
+def test_scan_build_indexread_stream_agree(spark, cfg, tmp_path, events_tree):
+    tree, tallies = events_tree
+    metrics = [
+        ("big", "host,operation,req.caller,req.method,latency[aggr=quantize]", None),
+        ("get", "", GET),
+        ("bycode", DAY_STATUS, None),
+    ]
+    add_datasource(cfg, "built", tree, str(tmp_path / "idx_build"), metrics)
+    add_datasource(cfg, "mapred", tree, str(tmp_path / "idx_mapred"), metrics)
+    run(["build", "built"], cfg)
+    pts, _ = run(["index-scan", "mapred"], cfg)
+    run(["index-read", "mapred"], cfg, stdin=pts)
+
+    for n, (bds, flt, after, before) in enumerate(QUERIES):
+        names = [b.name for b in parse_breakdowns(bds)] if bds else []
+        argv = _argv(bds, flt, after, before)
+        scanned = points(run(["scan", *argv, "built"], cfg)[0], names)
+        assert scanned, bds
+        assert points(run(["query", *argv, "built"], cfg)[0], names) == scanned, bds
+        assert points(run(["query", *argv, "mapred"], cfg)[0], names) == scanned, bds
+        query = QueryConfig.load(breakdowns=bds or None, filter=flt,
+                                 time_after=after, time_before=before,
+                                 time_field="time")
+        assert _stream_points(spark, tree, query, f"pipeline_{n}") == scanned, bds
+
+    # and the shared answer is the generator's exact one
+    host_caller = {}
+    for (host, _op, caller, _m, _lat), c in tallies.big.items():
+        host_caller[(host, caller)] = host_caller.get((host, caller), 0) + c
+    scanned = points(run(["scan", *_argv(*QUERIES[0]), "built"], cfg)[0],
+                     ["host", "req.caller"])
+    assert scanned == set(host_caller.items())
+
+
+# ---------------------------------------------- bounded index-scan / read
+
+def _event(ts, host, latency=5):
+    return json.dumps({"time": ts, "host": host, "latency": str(latency)})
+
+
+@pytest.fixture
+def three_days(tmp_path):
+    """Three days under %Y/%m-%d; the 05-02 file also holds records
+    stamped on 05-01 and 05-03 (late and early data, which path
+    pruning cannot separate), and an odd-lines file sits beside it."""
+    root = tmp_path / "three_days"
+    days = {
+        "05-01": ["2014-05-01T01:00:00Z", "2014-05-01T13:30:00Z"],
+        "05-02": ["2014-05-01T23:50:00Z", "2014-05-02T02:00:00Z",
+                  "2014-05-02T02:10:00Z", "2014-05-02T20:00:00Z",
+                  "2014-05-03T00:10:00Z"],
+        "05-03": ["2014-05-03T04:00:00Z", "2014-05-03T05:00:00Z"],
+    }
+    hosts = ("ralph", "janey", "kearney")
+    for day, stamps in days.items():
+        d = root / "2014" / day
+        d.mkdir(parents=True)
+        lines = [_event(ts, hosts[i % 3], 1 << i) for i, ts in enumerate(stamps)]
+        (d / "a.log").write_text("\n".join(lines) + "\n")
+    odd = ['{bad', '5', '[1,2]', '"str"', '[{"time":"2014-05-02T03:00:00Z"}]', '']
+    (root / "2014" / "05-02" / "odd.log").write_text("\n".join(odd) + "\n")
+    return str(root)
+
+
+METRICS_3D = [
+    ("byhost", "host", None),
+    ("hourly", f"{HOURLY},latency[aggr=quantize]", None),
+]
+
+
+def test_bounded_index_scan_applies_time_bounds(cfg, tmp_path, three_days, spark):
+    add_datasource(cfg, "d", three_days, str(tmp_path / "idx"), METRICS_3D)
+    pts, _ = run(["index-scan", "--after", "2014-05-02", "--before",
+                  "2014-05-03", "d"], cfg)
+    lo, hi = 1398988800, 1399075200  # 2014-05-02, 2014-05-03
+    got = [json.loads(line)["fields"] for line in pts.splitlines()]
+    assert got
+    assert {f["__dn_bucket"] for f in got} == {"2014-05-02"}
+    hours = [f["timestamp"] for f in got if "timestamp" in f]
+    assert hours and all(lo <= h < hi for h in hours)
+
+
+def test_bounded_index_read_matches_bounded_build(cfg, tmp_path, three_days, spark):
+    """A bounded rebuild by map/reduce (index-scan | index-read) leaves
+    the other days in place and answers like a bounded dn build."""
+    import pyarrow.parquet as pq
+
+    bounds = ["--after", "2014-05-02", "--before", "2014-05-03"]
+    add_datasource(cfg, "built", three_days, str(tmp_path / "a"), METRICS_3D)
+    add_datasource(cfg, "mapred", three_days, str(tmp_path / "b"), METRICS_3D)
+    for ds in ("built", "mapred"):
+        run(["build", ds], cfg)
+    run(["build", *bounds, "built"], cfg)
+    pts, _ = run(["index-scan", *bounds, "mapred"], cfg)
+    run(["index-read", "mapred"], cfg, stdin=pts)
+
+    for argv in (["-b", "host"], ["-b", HOURLY], ["-b", "latency[aggr=quantize]"],
+                 ["-b", f"{HOURLY},latency[aggr=quantize]"],
+                 ["--after", "2014-05-01", "--before", "2014-05-02"],
+                 ["--after", "2014-05-03", "--before", "2014-05-04",
+                  "-b", "latency[aggr=quantize]"]):
+        want, _ = run(["query", "--points", *argv, "built"], cfg)
+        got, _ = run(["query", "--points", *argv, "mapred"], cfg)
+        assert want.strip() and got == want, argv
+
+    # the rewritten bucket keeps the build's layout: one file, sorted
+    files = glob.glob(f"{tmp_path}/b/by_day/hourly/__dn_bucket=2014-05-02/*.parquet")
+    assert len(files) == 1
+    t = pq.read_table(files[0])
+    rows = list(zip(t["timestamp"].to_pylist(), t["latency"].to_pylist()))
+    assert rows == sorted(rows)
+
+
+# ------------------------------------------------------------- --warnings
+
+def test_warnings_count_is_the_counters_count(cfg, tmp_path, three_days, spark):
+    """--warnings reads the parser counts of the scan's own pass: the
+    number --counters reports as invalid json, at zero extra jobs."""
+    from perfbench.ledger import Ledger
+
+    run(["datasource-add", "d", f"--path={three_days}"], cfg)
+    _out, err = run(["scan", "--counters", "--warnings", "-b", "host", "d"], cfg)
+    invalid = [ln for ln in err.splitlines() if "invalid json:" in ln]
+    warned = [ln for ln in err.splitlines() if ln.startswith("warn:")]
+    assert len(invalid) == 1 and len(warned) == 1, err
+    n = int(invalid[0].split()[-1])
+    assert n == 2  # '{bad' and the blank line; 5, [1,2] ... are JSON
+    assert warned[0] == "warn: %d unparseable input lines" % n
+
+    ledger = Ledger(spark)
+    jobs = {}
+    for flags in ((), ("--warnings",)):
+        with ledger.scope("scan") as group:
+            run(["scan", *flags, "-b", "host", "d"], cfg)
+        jobs[flags] = ledger.read(group)["jobs"]
+    assert jobs[()] > 0
+    assert jobs[("--warnings",)] == jobs[()]
+
+
+def test_compact_rewrites_with_the_build_writer(spark, tmp_path, three_days):
+    """Compaction of appended partials (the continuous-build shape)
+    keeps every answer and rewrites each bucket as the build writes
+    it: one file, one row per group, sorted."""
+    import pyarrow.parquet as pq
+
+    from dragnet_spark.index.build import Metric, build_index, compact_index
+    from dragnet_spark.index.query import query_index
+    from dragnet_spark.scan import VariantResolver
+    from dragnet_spark.sources.ndjson import parse_ndjson
+
+    raw = parse_ndjson(
+        spark.read.option("recursiveFileLookup", "true").text(three_days))
+    metrics = [Metric.load("hourly", f"{HOURLY},latency[aggr=quantize]")]
+    idx = str(tmp_path / "idx")
+    for _ in range(2):
+        build_index(spark, raw, metrics, idx, interval="day", time_field="time",
+                    mode="append", resolver=VariantResolver())
+    query = QueryConfig.load(f"{HOURLY},latency[aggr=quantize]")
+    before = {tuple(r) for r in query_index(spark, idx, query).collect()}
+    appended = spark.read.parquet(f"{idx}/hourly").count()
+
+    compact_index(spark, idx)
+    assert {tuple(r) for r in query_index(spark, idx, query).collect()} == before
+    assert spark.read.parquet(f"{idx}/hourly").count() * 2 == appended
+    for bucket in glob.glob(f"{idx}/hourly/__dn_bucket=*"):
+        files = glob.glob(f"{bucket}/*.parquet")
+        assert len(files) == 1
+        t = pq.read_table(files[0])
+        rows = list(zip(t["timestamp"].to_pylist(), t["latency"].to_pylist()))
+        assert rows == sorted(rows)
