@@ -57,12 +57,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dragnet_spark.index.lease import ensure_lease, hold_lease
+from dragnet_spark.index.store import read_store, staged_swap
 from dragnet_spark.ops.graph import connected_components
 
 COMP_META = "_components_store.json"
@@ -93,6 +93,10 @@ def build_components_store(
     _write_empty_redirects(spark, path)
     with open(_meta_path(path), "w") as f:
         json.dump({"version": "1.0", "id_col": id_col}, f)
+
+
+def _read_labels(spark: SparkSession, path: str) -> DataFrame:
+    return read_store(spark, path, LABELS_DIR, COMP_META, "components store")
 
 
 def _write_empty_redirects(spark: SparkSession, path: str) -> None:
@@ -155,7 +159,7 @@ def merge_components_batch(
     del meta  # id space is the caller's; nothing else to configure yet
     labels_path = os.path.join(path, LABELS_DIR)
     with hold_lease(path, "components-merge"):
-        labels = spark.read.parquet(labels_path)
+        labels = _read_labels(spark, path)
         red = _flat_redirects(spark, path)
         ends = (
             pairs.select(F.col("id_a").alias("id"))
@@ -212,7 +216,7 @@ def components_store_read(spark: SparkSession, path: str) -> DataFrame:
     """(id, component) with redirects applied — the current
     assignment, identical to a from-scratch closure over every pair
     ever folded."""
-    labels = spark.read.parquet(os.path.join(path, LABELS_DIR))
+    labels = _read_labels(spark, path)
     red = _flat_redirects(spark, path)
     return (
         labels.join(red, labels.component == red.old_label, "left")
@@ -228,31 +232,10 @@ def compact_components_store(spark: SparkSession, path: str) -> None:
     redirect join entirely. The per-batch folds stay O(batch); this
     is the amortized cost, run on the maintenance cadence like every
     other store compaction."""
-    labels_path = os.path.join(path, LABELS_DIR)
     with hold_lease(path, "components-compact"):
-        stage = labels_path + ".compact_tmp"
-        old = labels_path + ".compact_old"
-        shutil.rmtree(stage, ignore_errors=True)
-        # a lone .compact_old from a crash between the two renames is
-        # the only copy of the labels — restore it before reading
-        if os.path.exists(old) and not os.path.exists(labels_path):
-            os.rename(old, labels_path)
-        shutil.rmtree(old, ignore_errors=True)
         resolved = components_store_read(spark, path)
-        try:
-            resolved.write.mode("overwrite").parquet(stage)
-            ensure_lease(path)
-            os.rename(labels_path, old)
-            try:
-                os.rename(stage, labels_path)
-            except BaseException:
-                # roll back the first rename so the store never loses
-                # its labels/ directory (the finally below would
-                # otherwise delete the staged copy too, stranding the
-                # only data in .compact_old)
-                os.rename(old, labels_path)
-                raise
-            shutil.rmtree(old, ignore_errors=True)
-            _write_empty_redirects(spark, path)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+        staged_swap(
+            os.path.join(path, LABELS_DIR),
+            lambda stage: resolved.write.mode("overwrite").parquet(stage),
+        )
+        _write_empty_redirects(spark, path)

@@ -33,7 +33,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dragnet_spark.index.lease import ensure_lease, hold_lease
+from dragnet_spark.index.lease import hold_lease
+from dragnet_spark.index.store import (  # noqa: F401 — LAYOUT_FILE re-exported
+    LAYOUT_FILE,
+    guard_store,
+    layout_token,
+    read_store,
+    rewrite_partitioned,
+    write_layout,
+)
 from dragnet_spark.ops import text as _text
 
 STORE_DIR = "fingerprints"
@@ -43,51 +51,6 @@ FP_META = "_fp_store.json"
 SRP_DIR = "srp_bands"
 SRP_PAIR_DIR = "srp_band_pairs"
 SRP_META = "_srp_store.json"
-#: same crash-detection discipline as index/vector.py: the token lives
-#: in BOTH the meta file and (underscore-prefixed, Spark-invisible)
-#: inside the data directory — any maintenance crash that leaves the
-#: two out of sync is detected loudly at probe/append time instead of
-#: silently answering against mismatched keys
-LAYOUT_FILE = "_dn_layout"
-
-
-def _layout_token(basis: dict) -> str:
-    import hashlib
-
-    return hashlib.sha256(
-        json.dumps(basis, sort_keys=True).encode()
-    ).hexdigest()[:16]
-
-
-def _write_layout(data_dir: str, token: str) -> None:
-    with open(os.path.join(data_dir, LAYOUT_FILE), "w") as f:
-        f.write(token)
-
-
-def _check_layout(path: str, meta_file: str, data_dir: str, what: str) -> None:
-    """Fail loudly when the data directory's layout token disagrees
-    with the meta file's — the signature of a maintenance job (compact,
-    rebuild-with-new-params) that crashed between its directory swap
-    and its meta replace. Back-compat: stores built before tokens
-    existed (either side missing) are accepted unchecked."""
-    meta_path = os.path.join(path, meta_file)
-    tok_path = os.path.join(path, data_dir, LAYOUT_FILE)
-    if not (os.path.exists(meta_path) and os.path.exists(tok_path)):
-        return
-    with open(meta_path) as f:
-        expect = json.load(f).get("layout_token")
-    if not expect:
-        return
-    with open(tok_path) as f:
-        disk = f.read().strip()
-    if disk != expect:
-        raise ContractError(
-            f"{what} layout/meta mismatch (a maintenance job crashed "
-            f"mid-swap?): data dir carries layout {disk!r} but metadata "
-            f"expects {expect!r} — rebuild or re-run the maintenance job"
-        )
-
-
 #: identifies the fingerprint function; bump when ops/text.fingerprint
 #: changes so a probe against a stale store fails loudly instead of
 #: missing every duplicate
@@ -95,7 +58,7 @@ _FP_ALGO = "md5-normalized-v1"
 
 
 def _fp_token() -> str:
-    return _layout_token({"version": "1.0", "algo": _FP_ALGO, "buckets": 256})
+    return layout_token({"version": "1.0", "algo": _FP_ALGO, "buckets": 256})
 
 
 def _check_fp_algo(path: str) -> None:
@@ -103,7 +66,7 @@ def _check_fp_algo(path: str) -> None:
     different fingerprint algorithm (meta token != the CURRENT code's
     :func:`_fp_token`) must fail loudly at probe/append/compact time —
     probing it would silently miss every duplicate.
-    :func:`_check_layout` only compares the two PERSISTED tokens
+    ``store.check_layout`` only compares the two PERSISTED tokens
     (crash detection); this compares persisted vs code (algo drift).
     Back-compat: pre-token stores (no meta token) pass unchecked."""
     meta_path = os.path.join(path, FP_META)
@@ -118,6 +81,20 @@ def _check_fp_algo(path: str) -> None:
             f"{_fp_token()!r}) — probing it would miss every duplicate; "
             "rebuild the store with build_fingerprint_store"
         )
+
+
+def _read_fp(spark: SparkSession, path: str) -> DataFrame:
+    return read_store(spark, path, STORE_DIR, FP_META, "fingerprint store")
+
+
+def _read_bands(spark: SparkSession, path: str) -> DataFrame:
+    return read_store(spark, path, BAND_DIR, BAND_META, "minhash band store")
+
+
+def _read_srp(
+    spark: SparkSession, path: str, data_dir: str = SRP_DIR
+) -> DataFrame:
+    return read_store(spark, path, data_dir, SRP_META, "SRP band store")
 
 
 def build_fingerprint_store(
@@ -139,7 +116,7 @@ def build_fingerprint_store(
         .parquet(os.path.join(path, STORE_DIR))
     )
     tok = _fp_token()
-    _write_layout(os.path.join(path, STORE_DIR), tok)
+    write_layout(os.path.join(path, STORE_DIR), tok)
     with open(os.path.join(path, FP_META), "w") as f:
         json.dump(
             {"version": "1.0", "algo": _FP_ALGO, "layout_token": tok}, f
@@ -161,7 +138,7 @@ def append_fingerprints(
     an append landing mid-compaction would be silently dropped by the
     directory swap."""
     with hold_lease(path, "append-fp"):
-        _check_layout(path, FP_META, STORE_DIR, "fingerprint store")
+        guard_store(path, STORE_DIR, FP_META, "fingerprint store")
         _check_fp_algo(path)
         (
             docs.select(
@@ -211,12 +188,10 @@ def probe_new_documents(
     the join re-evaluate the source independently, so a source that
     changes between jobs could be gated small but join huge.
     """
-    _recover_staged(os.path.join(path, STORE_DIR))
-    _check_layout(path, FP_META, STORE_DIR, "fingerprint store")
-    _check_fp_algo(path)
-    store = _read_store_parquet(spark, path, STORE_DIR).select(
+    store = _read_fp(spark, path).select(
         "fp_bucket", "fp", F.col("doc_id").alias("existing_id")
     )
+    _check_fp_algo(path)
     probes = new_docs.select(
         F.col(id_col).alias("doc_id"),
         _text.fingerprint(text_col).alias("fp"),
@@ -332,10 +307,10 @@ def build_band_store(
     # the token digests every band-key-defining parameter: a rebuild
     # with different banding params that crashes before replacing the
     # meta file leaves keys the old meta would silently mis-probe
-    meta["layout_token"] = _layout_token(
+    meta["layout_token"] = layout_token(
         {k: meta[k] for k in ("version", "num_hashes", "bands", "ngram")}
     )
-    _write_layout(os.path.join(path, BAND_DIR), meta["layout_token"])
+    write_layout(os.path.join(path, BAND_DIR), meta["layout_token"])
     with open(os.path.join(path, BAND_META), "w") as f:
         json.dump(meta, f)
     return meta
@@ -367,7 +342,7 @@ def append_band_keys(
     appending through a maintenance crash window would mix keys from
     two banding layouts. Lease-serialized against compaction."""
     with hold_lease(path, "append-band"):
-        _check_layout(path, BAND_META, BAND_DIR, "minhash band store")
+        guard_store(path, BAND_DIR, BAND_META, "minhash band store")
         meta = load_band_store_meta(path)
         (
             _banded_rows(
@@ -399,15 +374,13 @@ def probe_near_duplicates(
     document or a pre- vs post-compaction store cannot change any
     probe output. That makes every field of this result invariant
     under ``append`` replays and ``compact_band_store``."""
-    _recover_staged(os.path.join(path, BAND_DIR))
-    _check_layout(path, BAND_META, BAND_DIR, "minhash band store")
     meta = load_band_store_meta(path)
     banded = _banded_rows(
         new_docs, meta["text_col"], meta["id_col"],
         meta["num_hashes"], meta["bands"], meta["ngram"],
     )
     ids = new_docs.select(F.col(meta["id_col"]).alias("doc_id"))
-    store = _read_store_parquet(spark, path, BAND_DIR).select(
+    store = _read_bands(spark, path).select(
         "band", "bhash", F.col("doc_id").alias("existing_id")
     )
     hits = (
@@ -466,10 +439,8 @@ def band_store_pairs(
         token_sets,
     )
 
-    _recover_staged(os.path.join(path, BAND_DIR))
-    _check_layout(path, BAND_META, BAND_DIR, "minhash band store")
     meta = load_band_store_meta(path)
-    banded = _read_store_parquet(spark, path, BAND_DIR).select(
+    banded = _read_bands(spark, path).select(
         F.col("doc_id").alias("id"), "band", "bhash"
     )
     # repeated appends of the same document would self-collide into
@@ -773,10 +744,8 @@ def band_store_candidates_bounded(
     whose n·bands collision exchange exceeds local/per-wave disk.
     Pair set is identical to ``_collision_pairs`` over the full store
     (the slices partition the join exactly)."""
-    _recover_staged(os.path.join(path, BAND_DIR))
-    _check_layout(path, BAND_META, BAND_DIR, "minhash band store")
     meta = load_band_store_meta(path)
-    banded = _read_store_parquet(spark, path, BAND_DIR).select(
+    banded = _read_bands(spark, path).select(
         F.col("doc_id").alias("id"), "band", "bhash"
     )
     manifest = {
@@ -799,10 +768,8 @@ def srp_store_candidates_bounded(
     """The SRP twin of :func:`band_store_candidates_bounded`:
     candidate pairs from the persisted (band, bucket) rows, collision
     join sliced on the bucket hash."""
-    _recover_staged(os.path.join(path, SRP_DIR))
-    _check_layout(path, SRP_META, SRP_DIR, "SRP band store")
     meta = load_srp_store_meta(path)
-    banded = _read_store_parquet(spark, path, SRP_DIR).select(
+    banded = _read_srp(spark, path).select(
         F.col("vec_id").alias("__id"), "band", "bucket"
     )
     manifest = {
@@ -841,10 +808,8 @@ def band_store_pairs_bounded(
         token_sets,
     )
 
-    _recover_staged(os.path.join(path, BAND_DIR))
-    _check_layout(path, BAND_META, BAND_DIR, "minhash band store")
     meta = load_band_store_meta(path)
-    banded = _read_store_parquet(spark, path, BAND_DIR).select(
+    banded = _read_bands(spark, path).select(
         F.col("doc_id").alias("id"), "band", "bhash"
     )
     candidates = _collision_pairs(
@@ -890,10 +855,8 @@ def srp_store_pairs_bounded(
         _verify_cosine_pairs,
     )
 
-    _recover_staged(os.path.join(path, SRP_DIR))
-    _check_layout(path, SRP_META, SRP_DIR, "SRP band store")
     meta = load_srp_store_meta(path)
-    banded = _read_store_parquet(spark, path, SRP_DIR).select(
+    banded = _read_srp(spark, path).select(
         F.col("vec_id").alias("__id"), "band", "bucket"
     )
     candidates = _collision_pairs(
@@ -978,14 +941,12 @@ def srp_store_pairs_bucket_verify(
     import numpy as np
     import pandas as pd
 
-    _recover_staged(os.path.join(path, SRP_DIR))
-    _check_layout(path, SRP_META, SRP_DIR, "SRP band store")
     meta = load_srp_store_meta(path)
     vecs = docs.select(
         F.col(meta["id_col"]).alias("__id"),
         F.col(meta["vec_col"]).alias("__vec"),
     )
-    store = _read_store_parquet(spark, path, SRP_DIR)
+    store = _read_srp(spark, path)
 
     def bucket_pairs(key, pdf):
         ids = pdf["__id"].to_numpy(dtype=np.int64)
@@ -1260,15 +1221,15 @@ def build_srp_store(
         "pair_keys": bool(with_pairs),
         "planes_q": [[int(x) for x in row] for row in planes_q],
     }
-    meta["layout_token"] = _layout_token(
+    meta["layout_token"] = layout_token(
         {
             k: meta[k]
             for k in ("version", "bands", "bits_per_band", "seed", "dims")
         }
     )
-    _write_layout(os.path.join(path, SRP_DIR), meta["layout_token"])
+    write_layout(os.path.join(path, SRP_DIR), meta["layout_token"])
     if with_pairs:
-        _write_layout(os.path.join(path, SRP_PAIR_DIR), meta["layout_token"])
+        write_layout(os.path.join(path, SRP_PAIR_DIR), meta["layout_token"])
     with open(os.path.join(path, SRP_META), "w") as f:
         json.dump(meta, f)
     return meta
@@ -1292,9 +1253,9 @@ def append_srp_keys(
     with hold_lease(path, "append-srp"):
         meta = load_srp_store_meta(path)
         has_pairs = meta.get("pair_keys", True)
-        _check_layout(path, SRP_META, SRP_DIR, "SRP band store")
+        guard_store(path, SRP_DIR, SRP_META, "SRP band store")
         if has_pairs:
-            _check_layout(path, SRP_META, SRP_PAIR_DIR, "SRP band store")
+            guard_store(path, SRP_PAIR_DIR, SRP_META, "SRP band store")
         banded = _srp_rows(
             docs, meta["vec_col"], meta["id_col"], meta["planes_q"],
             meta["bands"], meta["bits_per_band"], meta["dims"],
@@ -1333,15 +1294,13 @@ def probe_srp_near_duplicates(
     (:data:`SRP_BITS_PER_BAND`). Hits deduplicate on (vec_id, band,
     bucket, existing_id) before counting, so replayed appends and
     compaction cannot change any probe field."""
-    _recover_staged(os.path.join(path, SRP_DIR))
-    _check_layout(path, SRP_META, SRP_DIR, "SRP band store")
     meta = load_srp_store_meta(path)
     banded = _srp_rows(
         new_docs, meta["vec_col"], meta["id_col"], meta["planes_q"],
         meta["bands"], meta["bits_per_band"], meta["dims"],
     )
     ids = new_docs.select(F.col(meta["id_col"]).alias("vec_id"))
-    store = _read_store_parquet(spark, path, SRP_DIR).select(
+    store = _read_srp(spark, path).select(
         "band", "bucket", F.col("vec_id").alias("existing_id")
     )
     pair_evidence = (
@@ -1395,10 +1354,8 @@ def srp_store_pairs(
         _verify_cosine_pairs,
     )
 
-    _recover_staged(os.path.join(path, SRP_DIR))
-    _check_layout(path, SRP_META, SRP_DIR, "SRP band store")
     meta = load_srp_store_meta(path)
-    banded = _read_store_parquet(spark, path, SRP_DIR).select(
+    banded = _read_srp(spark, path).select(
         F.col("vec_id").alias("__id"), "band", "bucket"
     )
     candidates = _collision_pairs(
@@ -1427,212 +1384,19 @@ def compact_srp_store(
     Lease-serialized against live appenders (lease.py)."""
     with hold_lease(path, "compact-srp", wait_s=wait_s):
         meta = load_srp_store_meta(path)
-        dest = os.path.join(path, SRP_DIR)
-        _recover_staged(dest)
-        _check_layout(path, SRP_META, SRP_DIR, "SRP band store")
-        df = spark.read.parquet(dest)
-        _staged_rewrite(
-            df.select("band", "bucket", "vec_id").distinct(), "band", dest,
-            "bucket", files_per_partition,
-        )
-        if meta.get("layout_token"):
-            _write_layout(dest, meta["layout_token"])
+        dirs = [(SRP_DIR, "band")]
         if meta.get("pair_keys", True):
-            pdest = os.path.join(path, SRP_PAIR_DIR)
-            _recover_staged(pdest)
-            pdf = spark.read.parquet(pdest)
-            _staged_rewrite(
-                pdf.select("pair", "bucket", "vec_id").distinct(), "pair",
-                pdest, "bucket", files_per_partition,
+            dirs.append((SRP_PAIR_DIR, "pair"))
+        for data_dir, part_col in dirs:
+            df = _read_srp(spark, path, data_dir)
+            rewrite_partitioned(
+                df.select(part_col, "bucket", "vec_id").distinct(), part_col,
+                os.path.join(path, data_dir), "bucket", files_per_partition,
+                meta.get("layout_token"),
             )
-            if meta.get("layout_token"):
-                _write_layout(pdest, meta["layout_token"])
 
 
 # ---------------------------------------------------------- compaction
-
-
-#: how long a reader waits out a LIVE compactor's swap window (two
-#: renames — microseconds in practice) before giving up with the
-#: clean retryable StoreBusyError.
-_READER_SWAP_WAIT_S = 5.0
-
-
-def _recover_staged(dest: str) -> None:
-    """Automated recovery for :func:`_staged_rewrite`'s crash window: a
-    compaction that died strictly BETWEEN its two renames leaves the
-    store directory absent with the data alive only in
-    ``<dest>.compact_old`` — rename it back so the next probe/compact
-    proceeds instead of failing path-not-found. Called at the top of
-    every probe and compact; a no-op in the healthy state.
-
-    Reader-vs-maintenance contract (VERDICT r8 #5): the same missing-
-    dir state is also what a probe sees if it lands INSIDE a live
-    compactor's swap window. Repairing then would undo the live
-    swap's first rename and crash the compactor's second. So recovery
-    is lease-aware: when another process's lease is LIVE, a reader
-    waits out the (microseconds-long) window and proceeds against the
-    new directory; if it doesn't close within ``_READER_SWAP_WAIT_S``
-    the reader raises the clean, retryable ``StoreBusyError`` —
-    never a partial read, never a repair under a live holder. Only a
-    dead lease (or our own maintenance hold) repairs."""
-    import time as _time
-
-    old = dest + ".compact_old"
-    if os.path.exists(dest) or not os.path.exists(old):
-        return
-    store_root = os.path.dirname(dest)
-    from dragnet_spark.index.lease import (
-        StoreBusyError,
-        held_by_this_thread,
-        lease_is_live,
-    )
-
-    if not held_by_this_thread(store_root):
-        deadline = _time.monotonic() + _READER_SWAP_WAIT_S
-        while lease_is_live(store_root):
-            if os.path.exists(dest):
-                return  # live maintenance finished its swap
-            if _time.monotonic() >= deadline:
-                raise StoreBusyError(
-                    f"store {store_root!r} is mid-maintenance (a live "
-                    f"job holds its lease and the directory swap "
-                    f"hasn't landed after {_READER_SWAP_WAIT_S:.0f}s); "
-                    f"no data was read or modified — retry the probe "
-                    f"after the maintenance job finishes."
-                )
-            _time.sleep(0.05)
-        if os.path.exists(dest) or not os.path.exists(old):
-            return  # resolved while we watched the lease
-    # crashed compactor (or our own held maintenance): repair. Two
-    # readers can race here — exactly one rename wins; the loser just
-    # needs dest to exist afterwards.
-    try:
-        os.rename(old, dest)
-    except OSError:
-        if not os.path.exists(dest):
-            raise
-
-
-def _is_benign_swap_read_error(e: Exception) -> bool:
-    """True when a plan-time parquet read failed because files it had
-    just listed vanished — the signature of a maintenance directory
-    swap racing the read, never of a wrong answer (no data row was
-    produced). Matched by message because the shape arrives as a
-    py4j-wrapped Java cause chain."""
-    msg = str(e)
-    return (
-        "FileNotFoundException" in msg
-        or "FILE_NOT_EXIST" in msg
-        or "FAILED_READ_FILE" in msg
-        or "PATH_NOT_FOUND" in msg
-    )
-
-
-def _read_store_parquet(spark: SparkSession, store_root: str, data_dir: str):
-    """Plan-time parquet read of a store data dir that keeps the reader
-    contract under concurrent maintenance.
-
-    ``spark.read.parquet`` eagerly lists files and reads footers for
-    schema inference (a distributed job on this Spark) — a compactor
-    swapping the directory between the listing and the footer reads
-    surfaces as a raw FileNotFoundException job failure, which is
-    neither of the two retryable shapes the probe contract documents
-    (typed StoreBusyError, or task-time FAILED_READ_FILE from a plan
-    bound before the swap). Apply :func:`_recover_staged`'s lease
-    discipline to that third, plan-time shape: retry while the LIVE
-    holder's swap settles (the post-swap directory is immediately
-    readable, so one retry normally succeeds), raise the retryable
-    ``StoreBusyError`` if the window won't close, and never mask the
-    error when no maintenance is involved — vanished files with no
-    live lease get exactly one recovery pass (the holder may have
-    finished — or crashed mid-swap, the state ``_recover_staged``
-    repairs) before the original error propagates."""
-    import time as _time
-
-    from dragnet_spark.index.lease import (
-        StoreBusyError,
-        held_by_this_thread,
-        lease_is_live,
-    )
-
-    dest = os.path.join(store_root, data_dir)
-    deadline = _time.monotonic() + _READER_SWAP_WAIT_S
-    retried_quiet = False
-    while True:
-        try:
-            return spark.read.parquet(dest)
-        except Exception as e:  # noqa: BLE001 — filtered just below
-            if not _is_benign_swap_read_error(e):
-                raise
-            if held_by_this_thread(store_root):
-                # our own maintenance read a file that vanished: a real
-                # bug (the holder is the only writer), never a race
-                raise
-            if lease_is_live(store_root):
-                if _time.monotonic() >= deadline:
-                    raise StoreBusyError(
-                        f"store {store_root!r} is mid-maintenance (a "
-                        f"live job holds its lease and its directory "
-                        f"swap kept racing this read for "
-                        f"{_READER_SWAP_WAIT_S:.0f}s); no data was "
-                        f"read — retry the probe after the maintenance "
-                        f"job finishes."
-                    ) from e
-                _time.sleep(0.05)
-                continue
-            if retried_quiet:
-                raise
-            retried_quiet = True
-            _recover_staged(dest)
-
-
-def _staged_rewrite(
-    df,
-    part_col: str,
-    dest: str,
-    key_col: str,
-    files_per_partition: int = 1,
-) -> None:
-    """Stage-then-swap rewrite (index/build.compact_index discipline):
-    Spark cannot overwrite the parquet tree it is reading, so write to
-    ``<dest>.compact_tmp`` beside the store (same filesystem), then
-    swap directories.
-
-    ``files_per_partition`` bounds output files per partition dir by
-    routing each (partition, key-hash slice) to one task. The default
-    1 is right locally and for the 256-bucket fp store; for the 8-way
-    band store at real scale, pass enough slices that a slice is one
-    task's worth of data — one file per band would funnel 1/8 of the
-    store through a single task."""
-    import shutil
-
-    stage = dest + ".compact_tmp"
-    old = dest + ".compact_old"
-    _recover_staged(dest)
-    # a previous compaction that crashed before its first rename can
-    # leave either sibling behind; clear them so the swap cannot fail
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    slice_col = F.pmod(
-        F.xxhash64(F.col(key_col)), F.lit(files_per_partition)
-    )
-    try:
-        (
-            df.repartition(F.col(part_col), slice_col)
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(stage)
-        )
-        # a compactor that stalled past its TTL may have had its lease
-        # stolen by a live appender — fail loudly BEFORE the swap
-        # rather than clobber the thief's appends (lease.py contract)
-        ensure_lease(os.path.dirname(dest))
-        os.rename(dest, old)
-        os.rename(stage, dest)
-        shutil.rmtree(old, ignore_errors=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
 
 def compact_fingerprint_store(
@@ -1659,19 +1423,13 @@ def compact_fingerprint_store(
 def _compact_fingerprint_store_locked(
     spark: SparkSession, path: str, files_per_partition: int
 ) -> None:
-    dest = os.path.join(path, STORE_DIR)
-    _recover_staged(dest)
-    _check_layout(path, FP_META, STORE_DIR, "fingerprint store")
+    df = _read_fp(spark, path)
     _check_fp_algo(path)
-    df = spark.read.parquet(dest)
     compacted = df.groupBy("fp_bucket", "fp").agg(
         F.min("doc_id").alias("doc_id")
     )
-    _staged_rewrite(
-        compacted, "fp_bucket", dest, "fp", files_per_partition
-    )
-    # the rewrite replaced the data directory; the layout is unchanged
-    # (same fingerprints, same buckets) — rewrite the token the checks
+    # the rewrite replaces the data directory; the layout is unchanged
+    # (same fingerprints, same buckets) — it carries the token the checks
     # above VALIDATED from meta (not a freshly computed _fp_token():
     # after an algo bump, writing the new token here while meta kept
     # the old one would manufacture a phantom "maintenance crash").
@@ -1685,7 +1443,10 @@ def _compact_fingerprint_store_locked(
     else:
         meta = {"version": "1.0", "algo": _FP_ALGO}
     tok = meta.get("layout_token") or _fp_token()
-    _write_layout(dest, tok)
+    rewrite_partitioned(
+        compacted, "fp_bucket", os.path.join(path, STORE_DIR), "fp",
+        files_per_partition, tok,
+    )
     if not meta.get("layout_token"):
         meta["layout_token"] = tok
         with open(meta_path, "w") as f:
@@ -1712,14 +1473,10 @@ def compact_band_store(
     the store per task (fine locally, a bottleneck at 100 TB).
     Lease-serialized against live appenders (lease.py)."""
     with hold_lease(path, "compact-band", wait_s=wait_s):
-        dest = os.path.join(path, BAND_DIR)
-        _recover_staged(dest)
-        _check_layout(path, BAND_META, BAND_DIR, "minhash band store")
         meta = load_band_store_meta(path)
-        df = spark.read.parquet(dest)
-        _staged_rewrite(
-            df.select("band", "bhash", "doc_id").distinct(), "band", dest,
-            "bhash", files_per_partition,
+        df = _read_bands(spark, path)
+        rewrite_partitioned(
+            df.select("band", "bhash", "doc_id").distinct(), "band",
+            os.path.join(path, BAND_DIR), "bhash", files_per_partition,
+            meta.get("layout_token"),
         )
-        if meta.get("layout_token"):
-            _write_layout(dest, meta["layout_token"])

@@ -32,12 +32,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dragnet_spark.index.lease import ensure_lease, hold_lease
+from dragnet_spark.index.lease import hold_lease
+from dragnet_spark.index.store import read_store, staged_swap
 from dragnet_spark.ops.sketch import (
     bottom_k,
     estimate_from_sketch,
@@ -56,6 +56,10 @@ def _meta_path(path: str) -> str:
 def load_kmv_meta(path: str) -> dict:
     with open(_meta_path(path)) as f:
         return json.load(f)
+
+
+def _read_sketch(spark: SparkSession, path: str) -> DataFrame:
+    return read_store(spark, path, SKETCH_DIR, KMV_META, "KMV store")
 
 
 def build_kmv_store(
@@ -90,29 +94,22 @@ def merge_kmv_batch(spark: SparkSession, df: DataFrame, path: str) -> None:
     reduced to ≤ k rows per group BEFORE touching the store."""
     meta = load_kmv_meta(path)
     k, gcols, vcol = meta["k"], meta["group_cols"], meta["value_col"]
-    dest = os.path.join(path, SKETCH_DIR)
     with hold_lease(path, "kmv-merge"):
         batch = kmv_sketch_rows(df, vcol, gcols, k)
-        cur = spark.read.parquet(dest).select(*gcols, "h")
+        cur = _read_sketch(spark, path).select(*gcols, "h")
         merged = bottom_k(cur.unionByName(batch), gcols, k)
-        stage, old = dest + ".compact_tmp", dest + ".compact_old"
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        try:
-            merged.coalesce(1).write.mode("overwrite").parquet(stage)
-            ensure_lease(path)
-            os.rename(dest, old)
-            os.rename(stage, dest)
-            shutil.rmtree(old, ignore_errors=True)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+        staged_swap(
+            os.path.join(path, SKETCH_DIR),
+            lambda stage: merged.coalesce(1).write.mode("overwrite")
+            .parquet(stage),
+        )
 
 
 def kmv_store_estimate(spark: SparkSession, path: str) -> DataFrame:
     """(group..., est_distinct) read off the persisted sketch — no
     corpus scan, no shuffle beyond the ≤ groups·k stored rows."""
     meta = load_kmv_meta(path)
-    sk = spark.read.parquet(os.path.join(path, SKETCH_DIR))
+    sk = _read_sketch(spark, path)
     return estimate_from_sketch(sk, meta["group_cols"], meta["k"])
 
 
@@ -126,7 +123,7 @@ def kmv_store_contains(
     (group..., n_probed, n_known_minima)."""
     meta = load_kmv_meta(path)
     gcols, vcol = meta["group_cols"], meta["value_col"]
-    sk = spark.read.parquet(os.path.join(path, SKETCH_DIR))
+    sk = _read_sketch(spark, path)
     rows = (
         df.select(*gcols, kmv_hash(vcol).alias("h"))
         .filter(F.col("h").isNotNull())  # NULL values never enter a sketch

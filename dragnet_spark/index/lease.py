@@ -58,7 +58,7 @@ swap keeps them safe anyway: a probe sees either the old directory
 or the new one, because the swap is two renames and the store is
 never partially written in place. The only observable window is the
 instant BETWEEN the renames (directory absent); staged-state
-recovery (fingerprints._recover_staged) is lease-aware there — under
+recovery (index/store.recover_staged) is lease-aware there — under
 a LIVE lease (:func:`lease_is_live`) a reader waits the microseconds
 the window lasts and proceeds, or raises the clean retryable
 :class:`StoreBusyError`; only a DEAD lease lets a reader repair the

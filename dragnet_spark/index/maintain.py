@@ -39,16 +39,20 @@ loudly rather than waiting forever (callers pick the cadence).
 Discovery prunes at store boundaries (a store's internals are never
 scanned for nested stores) and classifies strictly by marker file:
 
-======================  ====================
-marker file             store kind
-======================  ====================
-``_dragnet_index.json`` ``index`` (metric views, index/build.py)
-``_fp_store.json``      ``fp`` (exact fingerprints)
-``_band_store.json``    ``band`` (minhash LSH bands)
-``_srp_store.json``     ``srp`` (SRP semantic bands)
-``_vector_index.json``  ``vindex`` (IVF ANN index)
-``_dn_sink.json``       ``sink`` (curated streaming sink)
-======================  ====================
+==========================  ==========================================
+marker file                 store kind
+==========================  ==========================================
+``_dragnet_index.json``     ``index`` (metric views, index/build.py)
+``_fp_store.json``          ``fp`` (exact fingerprints)
+``_band_store.json``        ``band`` (minhash LSH bands)
+``_srp_store.json``         ``srp`` (SRP semantic bands)
+``_vector_index.json``      ``vindex`` (IVF ANN index)
+``_dn_sink.json``           ``sink`` (curated streaming sink)
+``_lm_store.json``          ``lm`` (frozen reference LM)
+``_bloom_store.json``       ``bloom`` (frozen benchmark Bloom)
+``_kmv_store.json``         ``kmv`` (KMV sketch, self-compacting)
+``_components_store.json``  ``components`` (connected components)
+==========================  ==========================================
 
 The curated sink's fragmentation unit is the BATCH DIRECTORY (one per
 micro-batch, unbounded over a stream's lifetime); past ``max_files``

@@ -55,7 +55,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from dragnet_spark.index.lease import ensure_lease, hold_lease
+from dragnet_spark.index.lease import hold_lease
+from dragnet_spark.index.store import (
+    guard_store,
+    layout_token,
+    read_store,
+    rewrite_partitioned,
+    staged_swap,
+    write_layout,
+)
 from dragnet_spark.ops.similarity import (
     _dot,
     _nearest_cells_udf,
@@ -65,44 +73,11 @@ from dragnet_spark.ops.similarity import (
 
 META_FILE = "_vector_index.json"
 VECTORS_DIR = "vectors"
-LAYOUT_FILE = "_dn_layout"
+_WHAT = "vector index"
 
 
-def _layout_token(meta: dict) -> str:
-    """Deterministic digest of everything that defines the cell
-    layout: centroids, quantize mode, dims, column names."""
-    import hashlib
-
-    basis = {
-        k: meta[k]
-        for k in ("centroids", "quantized", "dims", "id_col", "vec_col")
-        if k in meta
-    }
-    return hashlib.sha256(
-        json.dumps(basis, sort_keys=True).encode()
-    ).hexdigest()[:16]
-
-
-def _check_layout(path: str, meta: dict) -> None:
-    """Fail loudly when the vectors directory's layout token disagrees
-    with the metadata's — the signature of a recenter that crashed
-    between its vectors swap and its meta replace. Enforced by BOTH
-    the probe and the appender: appending through the crash window
-    would cell-assign new vectors with the wrong centroids, surfacing
-    only later as silently-wrong neighbors. Stores from before tokens
-    existed (either side missing) pass unchecked."""
-    tok_path = os.path.join(path, VECTORS_DIR, LAYOUT_FILE)
-    if not (meta.get("layout_token") and os.path.exists(tok_path)):
-        return
-    with open(tok_path) as tf:
-        disk_tok = tf.read().strip()
-    if disk_tok != meta["layout_token"]:
-        raise ContractError(
-            "vector index layout/meta mismatch (a maintenance job "
-            "crashed mid-swap?): vectors carry layout "
-            f"{disk_tok!r} but metadata expects "
-            f"{meta['layout_token']!r} — re-run recenter_vector_index"
-        )
+def _read_vectors(spark: SparkSession, path: str) -> DataFrame:
+    return read_store(spark, path, VECTORS_DIR, META_FILE, _WHAT)
 
 
 def _cell_rows(
@@ -169,6 +144,21 @@ def build_vector_index(
     ingest keeps its original cells and every probe pays 100× the
     per-cell scan it was designed for.
     """
+    meta = _write_cells(
+        df, os.path.join(path, VECTORS_DIR), id_col, vec_col, n_centroids,
+        seed, quantize, centroids, target_rows_per_cell, files_per_cell,
+    )
+    with open(os.path.join(path, META_FILE), "w") as f:
+        json.dump(meta, f)
+    return meta
+
+
+def _write_cells(
+    df, data_dir, id_col, vec_col, n_centroids, seed, quantize, centroids,
+    target_rows_per_cell, files_per_cell,
+) -> dict:
+    """Write ``df``'s cells and layout token to ``data_dir``; return
+    the metadata the index's meta file persists."""
     cent = (
         np.asarray(centroids, dtype=np.float64)
         if centroids is not None
@@ -185,7 +175,7 @@ def build_vector_index(
     (
         rows.write.mode("overwrite")
         .partitionBy("cell")
-        .parquet(os.path.join(path, VECTORS_DIR))
+        .parquet(data_dir)
     )
     meta = {
         "version": "1.1",
@@ -197,7 +187,10 @@ def build_vector_index(
         "quantized": bool(quantize),
         "centroids": [[float(x) for x in c] for c in cent],
     }
-    meta["layout_token"] = _layout_token(meta)
+    meta["layout_token"] = layout_token({
+        k: meta[k]
+        for k in ("centroids", "quantized", "dims", "id_col", "vec_col")
+    })
     # Spark DDL types of the source columns, persisted OUTSIDE the
     # token basis (an id-type difference is not a layout difference):
     # vindex-ingest builds its readStream schema from these instead of
@@ -218,10 +211,7 @@ def build_vector_index(
     # crash that leaves the two out of sync — e.g. recenter dying
     # between its vectors swap and its meta replace — is detected by
     # the probe instead of silently scoring against the wrong centroids
-    with open(os.path.join(path, VECTORS_DIR, LAYOUT_FILE), "w") as f:
-        f.write(meta["layout_token"])
-    with open(os.path.join(path, META_FILE), "w") as f:
-        json.dump(meta, f)
+    write_layout(data_dir, meta["layout_token"])
     return meta
 
 
@@ -250,8 +240,8 @@ def append_vector_index(
     per batch.
     """
     with hold_lease(path, "append-vectors"):
+        guard_store(path, VECTORS_DIR, META_FILE, _WHAT)
         meta = load_vector_index_meta(path)
-        _check_layout(path, meta)
         cent = np.asarray(meta["centroids"], dtype=np.float64)
         rows = _cell_rows(
             df, cent, meta["id_col"], meta["vec_col"],
@@ -280,7 +270,7 @@ def vector_index_cell_stats(spark: SparkSession, path: str) -> DataFrame:
     recenter decision. A count over the partition column only: parquet
     row-group metadata, not vector payloads."""
     return (
-        spark.read.parquet(os.path.join(path, VECTORS_DIR))
+        _read_vectors(spark, path)
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
     )
@@ -395,7 +385,7 @@ def query_vector_index(
     meta = load_vector_index_meta(path)
     if not str(meta.get("version", "")).startswith("1."):
         raise ContractError(f"unsupported vector index version: {meta.get('version')}")
-    _check_layout(path, meta)
+    store = _read_vectors(spark, path)
     C = np.asarray(meta["centroids"], dtype=np.float64)
     n_probe = min(n_probe, len(C))
 
@@ -427,9 +417,7 @@ def query_vector_index(
     ).select("query_id", "qvec", F.explode("cells").alias("cell"))
 
     cells_needed = sorted({int(c) for row in order for c in row})
-    store = spark.read.parquet(os.path.join(path, VECTORS_DIR)).filter(
-        F.col("cell").isin(cells_needed)
-    )
+    store = store.filter(F.col("cell").isin(cells_needed))
     if meta.get("quantized"):
         # inline dequantize: q*scale, a narrow transform over the int8
         # codes — the scan still reads ~1 byte/dim off disk; floats
@@ -473,20 +461,17 @@ def compact_vector_index(
     """File-count maintenance after appends: rewrite each cell to
     ``files_per_partition`` files, keeping assignments (and the
     centroid matrix) untouched — probe answers are exactly preserved.
-    Delegates to the fingerprint store's ``_staged_rewrite`` (ONE
-    implementation of the crash-safe stage-then-swap); not safe
-    Lease-serialized against appenders (lease.py). The layout token
-    rides along unchanged (assignments didn't change)."""
-    from dragnet_spark.index.fingerprints import _staged_rewrite
-
+    The rewrite is the stores' one crash-safe stage-then-swap
+    (``store.rewrite_partitioned``), lease-serialized against
+    appenders (lease.py). The layout token rides along unchanged
+    (assignments didn't change)."""
     with hold_lease(path, "compact-vectors", wait_s=wait_s):
         meta = load_vector_index_meta(path)
-        dest = os.path.join(path, VECTORS_DIR)
-        df = spark.read.parquet(dest)
-        _staged_rewrite(df, "cell", dest, "vec_id", files_per_partition)
-        if meta.get("layout_token"):
-            with open(os.path.join(dest, LAYOUT_FILE), "w") as f:
-                f.write(meta["layout_token"])
+        rewrite_partitioned(
+            _read_vectors(spark, path), "cell",
+            os.path.join(path, VECTORS_DIR), "vec_id", files_per_partition,
+            meta.get("layout_token"),
+        )
 
 
 def recenter_vector_index(
@@ -507,9 +492,6 @@ def recenter_vector_index(
     growth policy sizes the new layout to the CURRENT row count via
     :func:`auto_cell_count` (so a store that outgrew its build keeps
     per-cell probe cost flat); else the old count carries over."""
-    import shutil
-    import tempfile
-
     with hold_lease(path, "recenter", wait_s=wait_s):
         return _recenter_vector_index_locked(spark, path, n_centroids, seed)
 
@@ -520,11 +502,8 @@ def _recenter_vector_index_locked(
     n_centroids: int | None,
     seed: int | None,
 ) -> dict:
-    import shutil
-    import tempfile
-
     meta = load_vector_index_meta(path)
-    df = spark.read.parquet(os.path.join(path, VECTORS_DIR))
+    df = _read_vectors(spark, path)
     if meta.get("quantized"):
         vecs = df.select(
             F.col("vec_id").alias(meta["id_col"]),
@@ -537,13 +516,6 @@ def _recenter_vector_index_locked(
             F.col("vec_id").alias(meta["id_col"]),
             F.col("embedding").alias(meta["vec_col"]),
         )
-    import glob as _glob
-
-    old = os.path.join(path, VECTORS_DIR + ".recenter_old")
-    shutil.rmtree(old, ignore_errors=True)  # crashed prior recenter
-    for leftover in _glob.glob(os.path.join(path, "vindex_recenter_*")):
-        shutil.rmtree(leftover, ignore_errors=True)
-    stage = tempfile.mkdtemp(prefix="vindex_recenter_", dir=path)
     target = meta.get("target_rows_per_cell")
     if n_centroids is None and target is not None:
         # grow cells with the store (auto_cell_count): a larger sample
@@ -552,28 +524,27 @@ def _recenter_vector_index_locked(
         n_centroids = auto_cell_count(
             vecs.count(), int(meta["n_centroids"]), int(target)
         )
-    # maintenance writes the compacted layout directly (the repo's
-    # files_per_partition=1 norm) so a recenter never needs a
-    # follow-up compact — one rewrite, not two
-    new_meta = build_vector_index(
-        spark,
-        vecs,
-        stage,
-        id_col=meta["id_col"],
-        vec_col=meta["vec_col"],
-        n_centroids=n_centroids or meta["n_centroids"],
-        seed=seed if seed is not None else meta["seed"],
-        quantize=bool(meta.get("quantized")),
-        target_rows_per_cell=target,
-        files_per_cell=1,
-    )
-    # two renames + a replace cannot be atomic together; the layout
-    # token turns the crash window (new vectors + old meta) into a
-    # loud probe-time error instead of silently wrong neighbors
-    ensure_lease(path)  # stolen-lease check before the swap (lease.py)
-    os.rename(os.path.join(path, VECTORS_DIR), old)
-    os.rename(os.path.join(stage, VECTORS_DIR), os.path.join(path, VECTORS_DIR))
-    os.replace(os.path.join(stage, META_FILE), os.path.join(path, META_FILE))
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(stage, ignore_errors=True)
+    new_meta = {}
+
+    def write(stage: str) -> None:
+        # maintenance writes the compacted layout directly (the repo's
+        # files_per_partition=1 norm) so a recenter never needs a
+        # follow-up compact — one rewrite, not two
+        new_meta.update(_write_cells(
+            vecs, stage, meta["id_col"], meta["vec_col"],
+            n_centroids or meta["n_centroids"],
+            seed if seed is not None else meta["seed"],
+            bool(meta.get("quantized")), None, target, 1,
+        ))
+        # the new meta rides inside the stage (underscore-prefixed:
+        # Spark's reader ignores it) so one os.replace publishes it
+        with open(os.path.join(stage, META_FILE), "w") as f:
+            json.dump(new_meta, f)
+
+    dest = os.path.join(path, VECTORS_DIR)
+    staged_swap(dest, write)
+    # the swap and the meta replace cannot be atomic together; the
+    # layout token turns that window (new vectors + old meta) into a
+    # loud error instead of silently wrong neighbors
+    os.replace(os.path.join(dest, META_FILE), os.path.join(path, META_FILE))
     return new_meta

@@ -4,7 +4,8 @@ Local testing runs on ``local[N]``; production is a multi-executor
 cluster. Every knob here is chosen so the same code is correct in
 both: AQE for runtime re-planning (skew joins, partition coalescing),
 UTC session timezone (matches the DuckDB oracle and avoids
-executor-local TZ drift), Arrow for the Pandas-UDF slow path.
+executor-local TZ drift), ANSI mode (overflow raises instead of
+wrapping), Arrow for the Pandas-UDF slow path.
 """
 
 from __future__ import annotations
@@ -52,6 +53,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # overflow is an error, never a silent wrap: the engine's exact
+        # long/decimal sums rely on it, so pin it instead of inheriting
+        # the session default
+        .config("spark.sql.ansi.enabled", "true")
         # the driver's events.parquet carries TIMESTAMP(NANOS); read as
         # long nanos and convert in sources/tables.py
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -177,23 +177,13 @@ def make_batch_appender(
     with every fresh checkpoint; without a checkpoint there is no
     replay, so no ledger is kept.
     """
-    import hashlib
-    import os
-
     from dragnet_spark.index.build import build_index
+    from dragnet_spark.index.store import BatchLedger
 
-    ledger = None
-    if checkpoint:
-        key = hashlib.sha256(checkpoint.encode()).hexdigest()[:12]
-        ledger = os.path.join(index_path, "_dn_batch_ledger", key)
+    ledger = BatchLedger(index_path, checkpoint)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = None
-        if ledger is not None:
-            marker = os.path.join(ledger, f"{batch_id:012d}")
-            if os.path.exists(marker):
-                return  # replayed batch, already appended
-        if batch_df.isEmpty():
+        if ledger.done(batch_id) or batch_df.isEmpty():
             return
         r = resolver
         if r is None and VARIANT_COL in batch_df.columns:
@@ -215,10 +205,7 @@ def make_batch_appender(
                 mode="append",
                 resolver=r,
             )
-        if marker is not None:
-            os.makedirs(ledger, exist_ok=True)
-            with open(marker, "w"):
-                pass
+        ledger.mark(batch_id)
 
     return write_batch
 
@@ -516,9 +503,8 @@ def stream_curate_against_store(
     every micro-batch and folds survivors straight back in, at the
     cost of a per-batch file listing.
     """
-    import os as _os
-
-    from dragnet_spark.index.fingerprints import STORE_DIR
+    from dragnet_spark.index.fingerprints import FP_META, STORE_DIR
+    from dragnet_spark.index.store import read_store
 
     curated = stream_curate(
         sdf,
@@ -530,10 +516,10 @@ def stream_curate_against_store(
         watermark=watermark,
         resolver=resolver,
     )
-    store_fps = (
-        curated.sparkSession.read.parquet(_os.path.join(store_path, STORE_DIR))
-        .select(F.col("fp").alias("__dn_fp"))
-    )
+    store_fps = read_store(
+        curated.sparkSession, store_path, STORE_DIR, FP_META,
+        "fingerprint store",
+    ).select(F.col("fp").alias("__dn_fp"))
     return curated.join(store_fps, "__dn_fp", "left_anti")
 
 
@@ -572,12 +558,12 @@ def stream_curate_against_band_store(
     seen after a query restart. Works identically on a static frame
     (batch twin for stream==batch equivalence tests).
     """
-    import os as _os
-
     from dragnet_spark.index.fingerprints import (
         BAND_DIR,
+        BAND_META,
         load_band_store_meta,
     )
+    from dragnet_spark.index.store import read_store
     from dragnet_spark.ops.dedup import minhash_band_array
 
     curated = stream_curate(
@@ -610,8 +596,9 @@ def stream_curate_against_band_store(
             ngram=meta["ngram"],
         ).alias("__dn_bands"),
     )
-    store = curated.sparkSession.read.parquet(
-        _os.path.join(store_path, BAND_DIR)
+    store = read_store(
+        curated.sparkSession, store_path, BAND_DIR, BAND_META,
+        "minhash band store",
     )
     for i in range(meta["bands"]):
         slice_i = store.filter(F.col("band") == i).select(
@@ -673,13 +660,13 @@ def stream_curate_against_srp_store(
     restart. Works identically on a static frame (the batch twin for
     stream==batch equivalence tests).
     """
-    import os as _os
-
     from dragnet_spark.index.fingerprints import (
         SRP_DIR,
+        SRP_META,
         SRP_PAIR_DIR,
         load_srp_store_meta,
     )
+    from dragnet_spark.index.store import read_store
     from dragnet_spark.ops.dedup import _band_buckets_udf
 
     if min_band_hits not in (1, 2):
@@ -718,8 +705,8 @@ def stream_curate_against_srp_store(
     out = out.select("*", udf(F.col(vec_field)).alias("__dn_srp"))
     bands = meta["bands"]
     if min_band_hits == 1:
-        store = sdf.sparkSession.read.parquet(
-            _os.path.join(store_path, SRP_DIR)
+        store = read_store(
+            sdf.sparkSession, store_path, SRP_DIR, SRP_META, "SRP band store"
         )
         for i in range(bands):
             slice_i = store.filter(F.col("band") == i).select(
@@ -731,8 +718,9 @@ def stream_curate_against_srp_store(
                 "left_anti",
             )
     else:
-        pairs = sdf.sparkSession.read.parquet(
-            _os.path.join(store_path, SRP_PAIR_DIR)
+        pairs = read_store(
+            sdf.sparkSession, store_path, SRP_PAIR_DIR, SRP_META,
+            "SRP band store",
         )
         for i in range(bands):
             for j in range(i + 1, bands):
@@ -794,22 +782,18 @@ def make_live_store_ingester(
     merely tolerates replay double-appends (probes take min doc_id;
     compaction collapses them) — the next compaction erases them.
     """
-    import hashlib
+    import json as _json
     import os as _os
 
-    from dragnet_spark.index.fingerprints import STORE_DIR
+    from dragnet_spark.index.fingerprints import FP_META, STORE_DIR
+    from dragnet_spark.index.lease import hold_lease
+    from dragnet_spark.index.store import BatchLedger, guard_store, read_store
+    from dragnet_spark.streaming.sink import SINK_MARKER
 
-    ckpt_key = hashlib.sha256((checkpoint or "").encode()).hexdigest()[:12]
-    ledger = None
-    if checkpoint:
-        ledger = _os.path.join(store_path, "_dn_batch_ledger", ckpt_key)
+    ledger = BatchLedger(store_path, checkpoint)
     # sink marker: records which store's lease/ledger governs this
     # sink, so maintenance (streaming/sink.compact_sink, dn maintain)
     # and the guarded reader find the store without configuration
-    import json as _json
-
-    from dragnet_spark.streaming.sink import SINK_MARKER
-
     _os.makedirs(sink_path, exist_ok=True)
     _marker_path = _os.path.join(sink_path, SINK_MARKER)
     if not _os.path.exists(_marker_path):
@@ -820,43 +804,37 @@ def make_live_store_ingester(
             )
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        marker = None
-        if ledger is not None:
-            marker = _os.path.join(ledger, f"{batch_id:012d}")
-            if _os.path.exists(marker):
-                return
-        if batch_df.isEmpty():
+        if ledger.done(batch_id) or batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        store_dir = _os.path.join(store_path, STORE_DIR)
         bdir = _os.path.join(sink_path, f"__dn_batch={batch_id}")
-        from dragnet_spark.index.lease import hold_lease
-
         # the whole batch body (store listing + anti-join + fold-in)
         # holds the store lease: compaction's snapshot-and-swap and
         # this append serialize instead of silently losing rows, and
         # the anti-join never reads a directory mid-swap (lease.py)
         with hold_lease(store_path, "live-ingest"):
-            _ingest_locked(spark, batch_df, store_dir, bdir, marker)
+            _ingest_locked(batch_df.sparkSession, batch_df, bdir)
+            ledger.mark(batch_id)
 
-    def _ingest_locked(spark, batch_df, store_dir, bdir, marker):
-        if _sink_committed(bdir, ckpt_key):
+    def _ingest_locked(spark, batch_df, bdir):
+        what = "fingerprint store"
+        if ledger.sink_committed(bdir):
             # replayed batch whose sink write already committed UNDER
             # THIS CHECKPOINT: the directory is the survivor set (see
             # docstring) — only the store fold-in needs to re-run. A
             # dir committed by a DIFFERENT checkpoint (restarted batch
             # ids) fails the sentinel key check and is recomputed.
             survivors = spark.read.parquet(bdir)
+            guard_store(store_path, STORE_DIR, FP_META, what)
         else:
-            store_fps = spark.read.parquet(store_dir).select(
-                F.col("fp").alias("__dn_fp")
-            )
+            store_fps = read_store(
+                spark, store_path, STORE_DIR, FP_META, what
+            ).select(F.col("fp").alias("__dn_fp"))
             survivors = batch_df.join(store_fps, "__dn_fp", "left_anti")
             # one pass over the batch: materialize survivors before the
             # two writes so the anti-join doesn't run twice
             survivors = survivors.localCheckpoint(eager=True)
             survivors.write.mode("overwrite").parquet(bdir)
-            _mark_sink_committed(bdir, ckpt_key)
+            ledger.mark_sink_committed(bdir)
         (
             survivors.select(
                 F.col("__dn_fp").alias("fp"),
@@ -872,63 +850,10 @@ def make_live_store_ingester(
             .repartition(F.col("fp_bucket"))
             .write.mode("append")
             .partitionBy("fp_bucket")
-            .parquet(store_dir)
+            .parquet(_os.path.join(store_path, STORE_DIR))
         )
-        if marker is not None:
-            _os.makedirs(ledger, exist_ok=True)
-            with open(marker, "w"):
-                pass
 
     return ingest
-
-
-#: framework-owned sink-commit sentinel. Spark's _SUCCESS marker is
-#: NOT a reliable commit record: with
-#: mapreduce.fileoutputcommitter.marksuccessfuljobs=false (common on
-#: object stores) no _SUCCESS is ever written, so a replay would
-#: recompute the anti-join against the already-folded store, find zero
-#: survivors, and OVERWRITE the committed batch dir — silent sink data
-#: loss. The sentinel is written by this framework after the sink
-#: write, independent of committer config, and records the checkpoint
-#: key so a committed ``__dn_batch=0`` from a PREVIOUS checkpoint
-#: (fresh checkpoints restart batch ids at 0) is never aliased as this
-#: run's survivor set.
-_COMMIT_SENTINEL = "_dn_committed"
-
-
-def _mark_sink_committed(bdir: str, ckpt_key: str) -> None:
-    import os as _os
-
-    with open(_os.path.join(bdir, _COMMIT_SENTINEL), "w") as f:
-        f.write(ckpt_key)
-
-
-def _sink_committed(bdir: str, ckpt_key: str) -> bool:
-    """True iff ``bdir`` holds a COMPLETE sink write from THIS
-    checkpoint's run — the only case where replay may reuse it.
-
-    Upgrade path: batch dirs committed by the pre-sentinel code carry
-    Spark's ``_SUCCESS`` marker but no ``_dn_committed``. Treating
-    those as uncommitted would recompute the anti-join against the
-    already-folded store, find zero survivors, and OVERWRITE the
-    committed dir — the exact loss the sentinel exists to prevent. So
-    a legacy ``_SUCCESS``-only dir is accepted as committed and the
-    sentinel is stamped on first reuse (one-time in-place migration).
-    The checkpoint-aliasing hazard the key guards against cannot bite
-    here: pre-sentinel dirs were by definition written before this
-    code ran, so within THIS checkpoint's replay they are this run's
-    own survivors, and a fresh checkpoint against an old sink dir is
-    the documented operator error (new checkpoint ⇒ new sink path)."""
-    import os as _os
-
-    p = _os.path.join(bdir, _COMMIT_SENTINEL)
-    if not _os.path.exists(p):
-        if _os.path.exists(_os.path.join(bdir, "_SUCCESS")):
-            _mark_sink_committed(bdir, ckpt_key)
-            return True
-        return False
-    with open(p) as f:
-        return f.read().strip() == ckpt_key
 
 
 def make_live_srp_ingester(
@@ -959,41 +884,34 @@ def make_live_srp_ingester(
 
     Commit records and checkpoint-aliasing protection are identical to
     :func:`make_live_store_ingester` (``_dn_committed`` sentinel keyed
-    by checkpoint hash; see ``_COMMIT_SENTINEL``).
+    by checkpoint hash; see ``index/store.COMMIT_SENTINEL``).
     """
-    import hashlib
     import os as _os
 
     from dragnet_spark.index.fingerprints import (
+        SRP_META,
         SRP_PAIR_DIR,
         append_srp_keys,
         load_srp_store_meta,
     )
+    from dragnet_spark.index.lease import hold_lease
+    from dragnet_spark.index.store import BatchLedger, read_store
     from dragnet_spark.ops.dedup import _band_buckets_udf
 
-    ckpt_key = hashlib.sha256((checkpoint or "").encode()).hexdigest()[:12]
-    ledger = None
-    if checkpoint:
-        ledger = _os.path.join(store_path, "_dn_batch_ledger", ckpt_key)
+    ledger = BatchLedger(store_path, checkpoint)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        marker = None
-        if ledger is not None:
-            marker = _os.path.join(ledger, f"{batch_id:012d}")
-            if _os.path.exists(marker):
-                return
-        if batch_df.isEmpty():
+        if ledger.done(batch_id) or batch_df.isEmpty():
             return
-        from dragnet_spark.index.lease import hold_lease
-
         # whole-batch lease, as in make_live_store_ingester: the pair
         # store listing, the 28 anti-joins, and the fold-in (via
         # append_srp_keys — its own acquire is a reentrant no-op)
         # serialize against compact_srp_store instead of losing rows
         with hold_lease(store_path, "live-srp-ingest"):
-            _ingest_locked(batch_df, batch_id, marker)
+            _ingest_locked(batch_df, batch_id)
+            ledger.mark(batch_id)
 
-    def _ingest_locked(batch_df, batch_id, marker):
+    def _ingest_locked(batch_df, batch_id):
         spark = batch_df.sparkSession
         meta = load_srp_store_meta(store_path)
         if not meta.get("pair_keys", True):
@@ -1004,7 +922,7 @@ def make_live_srp_ingester(
                 "with_pairs=True"
             )
         bdir = _os.path.join(sink_path, f"__dn_batch={batch_id}")
-        if _sink_committed(bdir, ckpt_key):
+        if ledger.sink_committed(bdir):
             survivors = spark.read.parquet(bdir)
         else:
             udf = _band_buckets_udf(
@@ -1013,8 +931,8 @@ def make_live_srp_ingester(
             out = batch_df.select(
                 "*", udf(F.col(vec_field)).alias("__dn_srp")
             )
-            pairs = spark.read.parquet(
-                _os.path.join(store_path, SRP_PAIR_DIR)
+            pairs = read_store(
+                spark, store_path, SRP_PAIR_DIR, SRP_META, "SRP band store"
             )
             bands = meta["bands"]
             for i in range(bands):
@@ -1033,7 +951,7 @@ def make_live_srp_ingester(
                     )
             survivors = out.drop("__dn_srp").localCheckpoint(eager=True)
             survivors.write.mode("overwrite").parquet(bdir)
-            _mark_sink_committed(bdir, ckpt_key)
+            ledger.mark_sink_committed(bdir)
         append_srp_keys(
             spark,
             survivors.select(
@@ -1042,10 +960,6 @@ def make_live_srp_ingester(
             ),
             store_path,
         )
-        if marker is not None:
-            _os.makedirs(ledger, exist_ok=True)
-            with open(marker, "w"):
-                pass
 
     return ingest
 
@@ -1131,35 +1045,22 @@ def make_vindex_appender(
     AFTER the batch's marker commit so a replayed batch never re-pays
     (or double-runs) a recenter.
     """
-    import hashlib
-    import os as _os
-
+    from dragnet_spark.index.store import BatchLedger
     from dragnet_spark.index.vector import (
         append_vector_index,
         maybe_recenter_vector_index,
     )
 
-    ledger = None
-    if checkpoint:
-        key = hashlib.sha256(checkpoint.encode()).hexdigest()[:12]
-        ledger = _os.path.join(index_path, "_dn_batch_ledger", key)
+    ledger = BatchLedger(index_path, checkpoint)
     since_check = {"n": 0}
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = None
-        if ledger is not None:
-            marker = _os.path.join(ledger, f"{batch_id:012d}")
-            if _os.path.exists(marker):
-                return
-        if batch_df.isEmpty():
+        if ledger.done(batch_id) or batch_df.isEmpty():
             return
         append_vector_index(
             batch_df.sparkSession, batch_df, index_path, files_per_cell=1
         )
-        if marker is not None:
-            _os.makedirs(ledger, exist_ok=True)
-            with open(marker, "w"):
-                pass
+        ledger.mark(batch_id)
         if recenter_trigger is not None and recenter_every > 0:
             since_check["n"] += 1
             if since_check["n"] >= recenter_every:
@@ -1322,7 +1223,6 @@ def make_live_components_ingester(
     racing the stream never loses a fold (asserted by
     tools/soak_components_stream.py).
     """
-    import hashlib
     import os as _os
 
     from dragnet_spark.index.components import merge_components_batch
@@ -1330,27 +1230,17 @@ def make_live_components_ingester(
         BAND_DIR,
         BAND_META,
         _banded_rows,
-        _check_layout,
         load_band_store_meta,
     )
     from dragnet_spark.index.lease import hold_lease
+    from dragnet_spark.index.store import BatchLedger, read_store
 
-    ckpt_key = hashlib.sha256((checkpoint or "").encode()).hexdigest()[:12]
-    ledger = None
-    if checkpoint:
-        ledger = _os.path.join(
-            components_path, "_dn_batch_ledger", ckpt_key
-        )
+    ledger = BatchLedger(components_path, checkpoint)
     meta = load_band_store_meta(band_store_path)  # fail at wiring time
     id_col = meta["id_col"]
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        marker = None
-        if ledger is not None:
-            marker = _os.path.join(ledger, f"{batch_id:012d}")
-            if _os.path.exists(marker):
-                return
-        if batch_df.isEmpty():
+        if ledger.done(batch_id) or batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         # the band-store window — listing, candidate join, and the
@@ -1361,9 +1251,6 @@ def make_live_components_ingester(
         # the lease releases; the components fold below then never
         # touches band files.
         with hold_lease(band_store_path, "live-components"):
-            _check_layout(
-                band_store_path, BAND_META, BAND_DIR, "minhash band store"
-            )
             banded = _banded_rows(
                 batch_df, meta["text_col"], meta["id_col"],
                 meta["num_hashes"], meta["bands"], meta["ngram"],
@@ -1372,10 +1259,10 @@ def make_live_components_ingester(
             # bootstrapped from empty) has no files yet, and schema
             # inference over zero files errors instead of yielding
             # the empty frame the first batch needs
-            store = spark.read.schema(
-                "doc_id long, bhash long, band int"
-            ).parquet(
-                _os.path.join(band_store_path, BAND_DIR)
+            store = read_store(
+                spark, band_store_path, BAND_DIR, BAND_META,
+                "minhash band store",
+                schema="doc_id long, bhash long, band int",
             ).select("band", "bhash", F.col("doc_id").alias("id_a"))
             cross = (
                 store.join(
@@ -1413,10 +1300,7 @@ def make_live_components_ingester(
             )
         ids = batch_df.select(F.col(id_col).cast("long").alias("id"))
         merge_components_batch(spark, pairs, components_path, ids=ids)
-        if marker is not None:
-            _os.makedirs(ledger, exist_ok=True)
-            with open(marker, "w"):
-                pass
+        ledger.mark(batch_id)
 
     return ingest
 

@@ -38,8 +38,8 @@ cost grows without limit. This module is the missing maintenance leg:
   ``spark.read.parquet(sink)``. :func:`read_curated_sink` is the
   contract-following reader: it waits out a LIVE compactor's swap
   (store lease + swap marker), repairs a DEAD one, and raises the
-  retryable ``StoreBusyError`` — never a partial read — mirroring
-  the store-side ``_recover_staged`` posture.
+  retryable ``StoreBusyError`` — never a partial read — through the
+  stores' own wait loop (``index/store.wait_out_maintenance``).
 
 Writer concurrency: the whole compaction holds the STORE lease — the
 same lease every live-ingest batch holds — so folding never races a
@@ -56,6 +56,11 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from dragnet_spark.index.lease import hold_lease
+from dragnet_spark.index.store import (
+    batch_marked,
+    sink_commit_key,
+    wait_out_maintenance,
+)
 
 SINK_MARKER = "_dn_sink.json"
 SEGMENT_MANIFEST = "_dn_compacted"
@@ -63,8 +68,6 @@ _STAGE = ".dn_compact_stage"
 _TRASH = ".dn_compact_trash"
 _SWAP = ".dn_compact_swap"
 _BATCH_RE = re.compile(r"^__dn_batch=(-?\d+)$")
-#: how long the guarded reader waits out a live compactor's swap.
-_READER_SWAP_WAIT_S = 5.0
 
 
 def _batch_dirs(sink_path: str) -> dict[int, str]:
@@ -145,7 +148,6 @@ def compact_sink(
     Micro-batch dirs are written in arrival order and can't have this
     layout — compaction is exactly the place clustering is free."""
     store_path = store_path or load_sink_marker(sink_path)["store_path"]
-    ledger_root = os.path.join(store_path, "_dn_batch_ledger")
     with hold_lease(store_path, "compact-sink", wait_s=wait_s):
         _recover_sink(sink_path)
         dirs = _batch_dirs(sink_path)
@@ -153,18 +155,9 @@ def compact_sink(
         if keep_last:
             real = real[: -keep_last or None]
         safe, skipped = [], []
-        from dragnet_spark.streaming.pipeline import _COMMIT_SENTINEL
-
         for i in real:
-            bdir = os.path.join(sink_path, dirs[i])
-            sentinel = os.path.join(bdir, _COMMIT_SENTINEL)
-            try:
-                with open(sentinel) as f:
-                    key = f.read().strip()
-            except OSError:
-                skipped.append(dirs[i])
-                continue
-            if os.path.exists(os.path.join(ledger_root, key, f"{i:012d}")):
+            key = sink_commit_key(os.path.join(sink_path, dirs[i]))
+            if key is not None and batch_marked(store_path, key, i):
                 safe.append(dirs[i])
             else:
                 skipped.append(dirs[i])
@@ -219,34 +212,20 @@ def read_curated_sink(
 ) -> DataFrame:
     """Contract-following sink reader: returns the sink DataFrame,
     never a partial view. A LIVE compactor's swap window (store lease
-    held, ``.dn_compact_swap`` present) is waited out up to
-    ``_READER_SWAP_WAIT_S`` then raises the retryable
-    ``StoreBusyError``; a DEAD compactor's crash state is repaired
-    under the store lease before reading."""
-    import time as _time
-
-    from dragnet_spark.index.lease import (
-        StoreBusyError,
-        lease_is_live,
-    )
-
+    held, ``.dn_compact_swap`` present) is waited out, then raises the
+    retryable ``StoreBusyError``; a DEAD compactor's crash state is
+    repaired under the store lease before reading."""
     swap = os.path.join(sink_path, _SWAP)
     stage = os.path.join(sink_path, _STAGE)
-    if os.path.exists(swap) or os.path.exists(stage):
+
+    def settled() -> bool:
+        return not (os.path.exists(swap) or os.path.exists(stage))
+
+    if not settled():
         store_path = store_path or load_sink_marker(sink_path)["store_path"]
-        deadline = _time.monotonic() + _READER_SWAP_WAIT_S
-        while lease_is_live(store_path):
-            if not (os.path.exists(swap) or os.path.exists(stage)):
-                break  # live maintenance finished its swap
-            if _time.monotonic() >= deadline:
-                raise StoreBusyError(
-                    f"sink {sink_path!r} is mid-compaction (a live job "
-                    f"holds the store lease and the swap hasn't landed "
-                    f"after {_READER_SWAP_WAIT_S:.0f}s); no data was "
-                    f"read — retry after the maintenance job finishes."
-                )
-            _time.sleep(0.05)
-        else:
+        if not wait_out_maintenance(
+            store_path, settled, f"sink {sink_path!r}"
+        ):
             # lease dead with leftover state: crashed compactor —
             # repair before reading (serialized via the lease)
             with hold_lease(store_path, "sink-reader-repair"):

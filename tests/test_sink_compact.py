@@ -178,7 +178,7 @@ def test_reader_busy_during_live_swap(spark, sinkworld):
     import threading
 
     from dragnet_spark.index.lease import StoreBusyError, hold_lease
-    from dragnet_spark.streaming import sink as sinkmod
+    from dragnet_spark.index import store as storemod
 
     store, sink, _ = sinkworld
     with open(os.path.join(sink, ".dn_compact_swap"), "w") as f:
@@ -195,13 +195,13 @@ def test_reader_busy_during_live_swap(spark, sinkworld):
     t = threading.Thread(target=live, daemon=True)
     t.start()
     assert holding.wait(10)
-    old_wait = sinkmod._READER_SWAP_WAIT_S
-    sinkmod._READER_SWAP_WAIT_S = 0.5
+    old_wait = storemod._READER_SWAP_WAIT_S
+    storemod._READER_SWAP_WAIT_S = 0.5
     try:
         with pytest.raises(StoreBusyError):
             read_curated_sink(spark, sink)
     finally:
-        sinkmod._READER_SWAP_WAIT_S = old_wait
+        storemod._READER_SWAP_WAIT_S = old_wait
         done.set()
         t.join(10)
     # dead compactor: the reader repairs and reads

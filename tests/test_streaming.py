@@ -17,28 +17,29 @@ from dragnet_spark.query import QueryConfig
 from dragnet_spark.scan import scan_ndjson
 from dragnet_spark.streaming import read_ndjson_stream, stream_build, stream_scan
 
-REF_DATA = "/root/reference/tests/data"
-
 # multi-minute store/streaming tier: deselected from the default gate
 # (pytest.ini addopts) so the driver's suite run completes; run with
-# `pytest -m slow` (the builder's sessions do).
-pytestmark = [
-    pytest.mark.skipif(
-        not os.path.exists(REF_DATA),
-        reason="reference fixture data not present",
-    ),
-    pytest.mark.slow,
-]
+# `pytest -m slow`.
+pytestmark = pytest.mark.slow
+
+#: days of the seeded event tree the stream replays — the reference
+#: fixture's span (2014/05-01 .. 05-05)
+STREAM_DAYS = 5
 
 
 @pytest.fixture
-def watched_dir(tmp_path):
-    """Reference log files copied flat with chronological mtimes, so
-    the file stream source processes them in event-time order."""
+def watched_dir(tmp_path, events_tree):
+    """The first STREAM_DAYS days of the seeded event tree
+    (``%Y/%m-%d/*.log`` from 2014-05-01), copied flat with
+    chronological mtimes, so the file stream source processes them in
+    event-time order."""
+    root, _tallies = events_tree
     d = tmp_path / "incoming"
     d.mkdir()
     t0 = time.time() - 1000
-    for i, f in enumerate(sorted(glob.glob(f"{REF_DATA}/2014/*/*.log"))):
+    days = sorted(glob.glob(f"{root}/2014/*"))[:STREAM_DAYS]
+    files = sorted(f for day in days for f in glob.glob(f"{day}/*.log"))
+    for i, f in enumerate(files):
         day = os.path.basename(os.path.dirname(f))
         dst = d / f"{day}-{os.path.basename(f)}"
         shutil.copy(f, dst)
@@ -865,10 +866,8 @@ def test_live_store_ingester_legacy_success_dir_not_clobbered(
 
     from dragnet_spark.index.fingerprints import build_fingerprint_store
     from dragnet_spark.ops.text import fingerprint
-    from dragnet_spark.streaming.pipeline import (
-        _COMMIT_SENTINEL,
-        make_live_store_ingester,
-    )
+    from dragnet_spark.index.store import COMMIT_SENTINEL
+    from dragnet_spark.streaming.pipeline import make_live_store_ingester
 
     store = str(tmp_path / "lstore")
     build_fingerprint_store(
@@ -889,13 +888,13 @@ def test_live_store_ingester_legacy_success_dir_not_clobbered(
     bdir = f"{sink}/__dn_batch=0"
     # rewind to the pre-sentinel on-disk state: _SUCCESS present,
     # sentinel absent, ledger lost, store already folded
-    _os.remove(f"{bdir}/{_COMMIT_SENTINEL}")
+    _os.remove(f"{bdir}/{COMMIT_SENTINEL}")
     shutil.rmtree(f"{store}/_dn_batch_ledger")
     ingest(batch, 0)  # replay under the upgraded code
     sunk = spark.read.parquet(sink)
     assert sunk.count() == 1, "replay clobbered a legacy committed dir"
     # one-time migration: the sentinel is stamped on first reuse
-    assert _os.path.exists(f"{bdir}/{_COMMIT_SENTINEL}")
+    assert _os.path.exists(f"{bdir}/{COMMIT_SENTINEL}")
 
 
 def test_stream_curate_against_srp_store_drops_semantic_twins(spark, tmp_path):
