@@ -226,13 +226,16 @@ def components_store_read(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def compact_components_store(spark: SparkSession, path: str) -> None:
+def compact_components_store(
+    spark: SparkSession, path: str, wait_s: float | None = None
+) -> None:
     """Fold the redirect forest into the base table: one full pass
     over labels (stage-then-swap), after which reads skip the
     redirect join entirely. The per-batch folds stay O(batch); this
     is the amortized cost, run on the maintenance cadence like every
-    other store compaction."""
-    with hold_lease(path, "components-compact"):
+    other store compaction. ``wait_s`` bounds the wait for the store
+    lease, as in every other compact (``dn maintain`` passes it)."""
+    with hold_lease(path, "components-compact", wait_s=wait_s):
         resolved = components_store_read(spark, path)
         staged_swap(
             os.path.join(path, LABELS_DIR),

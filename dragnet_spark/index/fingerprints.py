@@ -87,8 +87,15 @@ def _read_fp(spark: SparkSession, path: str) -> DataFrame:
     return read_store(spark, path, STORE_DIR, FP_META, "fingerprint store")
 
 
-def _read_bands(spark: SparkSession, path: str) -> DataFrame:
-    return read_store(spark, path, BAND_DIR, BAND_META, "minhash band store")
+def _read_bands(
+    spark: SparkSession, path: str, may_be_empty: bool = False
+) -> DataFrame:
+    """``may_be_empty`` reads with the explicit row schema: a FRESH
+    store has no files yet, and inference over zero files errors."""
+    return read_store(
+        spark, path, BAND_DIR, BAND_META, "minhash band store",
+        schema="doc_id long, bhash long, band int" if may_be_empty else None,
+    )
 
 
 def _read_srp(
@@ -130,26 +137,62 @@ def append_fingerprints(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> None:
-    """Append a new batch's fingerprints into the same bucket layout.
-    Validates the layout token first (same discipline as the probe):
-    appending into a store left in a maintenance crash window would
-    persist rows a later recovery can't distinguish from good ones.
-    Serialized against compaction via the store lease (lease.py) —
-    an append landing mid-compaction would be silently dropped by the
-    directory swap."""
+    """Append a new batch's fingerprints into the same bucket layout
+    (:func:`append_fingerprint_rows`)."""
+    append_fingerprint_rows(
+        docs.select(
+            _text.fingerprint(text_col).alias("fp"),
+            F.col(id_col).alias("doc_id"),
+        ),
+        path,
+    )
+
+
+def append_fingerprint_rows(rows: DataFrame, path: str) -> None:
+    """The ONE fingerprint writer (batch appends and the live-ingest
+    fold): append ``(fp, doc_id)`` rows, one file per touched bucket.
+    Guarded (an append into a maintenance crash window would persist
+    rows recovery can't tell from good ones), algo-checked, and
+    lease-serialized against compaction, whose swap would drop it.
+    Without the repartition an N-task frame writes up to N files into
+    EVERY touched bucket (a live-store soak hit 49k store files in 7
+    batches); the tiny fp shuffle routes each bucket to one task."""
     with hold_lease(path, "append-fp"):
         guard_store(path, STORE_DIR, FP_META, "fingerprint store")
         _check_fp_algo(path)
         (
-            docs.select(
-                _text.fingerprint(text_col).alias("fp"),
-                F.col(id_col).alias("doc_id"),
-            )
-            .withColumn("fp_bucket", F.substring("fp", 1, 2))
+            rows.withColumn("fp_bucket", F.substring("fp", 1, 2))
+            .repartition(F.col("fp_bucket"))
             .write.mode("append")
             .partitionBy("fp_bucket")
             .parquet(os.path.join(path, STORE_DIR))
         )
+
+
+def fp_miss(df: DataFrame, path: str) -> DataFrame:
+    """Rows of ``df`` (a curated frame) whose ``__dn_fp`` fingerprint
+    the store lacks: one LEFT ANTI join on the store's ``fp`` column,
+    listed when called."""
+    store = _read_fp(df.sparkSession, path).select(
+        F.col("fp").alias("__dn_fp")
+    )
+    return df.join(store, "__dn_fp", "left_anti")
+
+
+def _anti_join_slices(
+    df: DataFrame, store: DataFrame, part_col: str, key_col: str, keys
+) -> DataFrame:
+    """Drop every row of ``df`` colliding with the store in ANY slice:
+    ``keys`` pairs a slice id (a ``part_col`` value, so each slice
+    read partition-prunes) with the row's key expression, and each
+    slice is one LEFT ANTI join on ``key_col``. A NULL key never joins."""
+    for s, key in keys:
+        alias = f"__dn_store_{part_col}_{s}"
+        slice_s = store.filter(F.col(part_col) == s).select(
+            F.col(key_col).alias(alias)
+        )
+        df = df.join(slice_s, key == F.col(alias), "left_anti")
+    return df
 
 
 #: Above this many probe rows the batch is no longer "small": a forced
@@ -342,17 +385,51 @@ def append_band_keys(
     appending through a maintenance crash window would mix keys from
     two banding layouts. Lease-serialized against compaction."""
     with hold_lease(path, "append-band"):
-        guard_store(path, BAND_DIR, BAND_META, "minhash band store")
         meta = load_band_store_meta(path)
-        (
+        _append_band_rows(
             _banded_rows(
                 docs, meta["text_col"], meta["id_col"],
                 meta["num_hashes"], meta["bands"], meta["ngram"],
-            )
-            .write.mode("append")
-            .partitionBy("band")
-            .parquet(os.path.join(path, BAND_DIR))
+            ),
+            path,
         )
+
+
+def _append_band_rows(banded: DataFrame, path: str) -> None:
+    """The ONE band-row writer: append :func:`_banded_rows` output into
+    the band layout, guarded first. The caller holds the store lease."""
+    guard_store(path, BAND_DIR, BAND_META, "minhash band store")
+    (
+        banded.write.mode("append")
+        .partitionBy("band")
+        .parquet(os.path.join(path, BAND_DIR))
+    )
+
+
+def band_miss(df: DataFrame, path: str, text_col: str) -> DataFrame:
+    """Rows of ``df`` whose text ``text_col`` misses every stored band
+    key (minhash-LSH's candidate rule negated). ONE projection computes
+    the band array (the keys :func:`_banded_rows` persists); the
+    per-band anti-joins reference elements of that ATTRIBUTE and
+    cannot re-inline it, so the md5-per-shingle work runs once per
+    row. Rows with no shingles have NULL keys and always survive."""
+    from dragnet_spark.ops.dedup import minhash_band_array
+
+    meta = load_band_store_meta(path)
+    out = df.select(
+        "*",
+        minhash_band_array(
+            F.col(text_col),
+            num_hashes=meta["num_hashes"],
+            bands=meta["bands"],
+            ngram=meta["ngram"],
+        ).alias("__dn_bands"),
+    )
+    arr = F.col("__dn_bands")
+    return _anti_join_slices(
+        out, _read_bands(df.sparkSession, path), "band", "bhash",
+        [(i, arr[i]) for i in range(meta["bands"])],
+    ).drop("__dn_bands")
 
 
 def probe_near_duplicates(
@@ -1123,15 +1200,25 @@ def _pair_rows(banded: DataFrame, bands: int) -> DataFrame:
     b = banded.select(
         "vec_id", F.col("band").alias("b2"), F.col("bucket").alias("k2")
     )
+    pair, bucket = _pair_key(
+        bands, F.col("b1"), F.col("b2"), F.col("k1"), F.col("k2")
+    )
     return (
         a.join(b, "vec_id")
         .filter(F.col("b1") < F.col("b2"))
-        .select(
-            "vec_id",
-            (F.col("b1") * bands + F.col("b2")).alias("pair"),
-            F.concat_ws("|", "k1", "k2").alias("bucket"),
-        )
+        .select("vec_id", pair.alias("pair"), bucket.alias("bucket"))
     )
+
+
+def _pair_key(bands: int, b1, b2, k1, k2):
+    """``(pair id, bucket)`` of band pair ``b1 < b2`` with band buckets
+    ``k1``/``k2`` — the ONE definition of the band-pair key, shared by
+    the stored pair rows and the streaming anti-join: id
+    ``b1·bands + b2``, bucket ``k1|k2``. Band ids are ints or columns;
+    buckets are columns. ``F.concat``, not ``concat_ws`` (which skips
+    NULLs): a NULL band bucket (a vector with no bands) must make the
+    key NULL, so it never joins."""
+    return b1 * bands + b2, F.concat(k1, F.lit("|"), k2)
 
 
 def build_srp_store(
@@ -1272,6 +1359,54 @@ def append_srp_keys(
                 .partitionBy("pair")
                 .parquet(os.path.join(path, SRP_PAIR_DIR))
             )
+
+
+def srp_miss(
+    df: DataFrame, path: str, vec_col: str, min_band_hits: int
+) -> DataFrame:
+    """Rows of ``df`` whose embedding ``vec_col`` shares fewer than
+    ``min_band_hits`` bands with every stored vector, keyed with the
+    store's PERSISTED planes: **1** anti-joins the single-band slices,
+    **2** the band-PAIR slices (≥2 shared bands iff one shared pair
+    key, :func:`_pair_rows`). ONE projection computes the band array,
+    so the matmul runs once per row; NULL or wrong-dims vectors get a
+    NULL array and always survive."""
+    from dragnet_spark.ops.dedup import _band_buckets_udf
+
+    if min_band_hits not in (1, 2):
+        raise ContractError(
+            "the SRP store anti-join supports min_band_hits 1 "
+            "(single-band rule) or 2 (band-pair rule); use "
+            "probe_srp_near_duplicates for higher evidence thresholds, "
+            f"got {min_band_hits}"
+        )
+    meta = load_srp_store_meta(path)
+    if min_band_hits == 2 and not meta.get("pair_keys", True):
+        raise ContractError(
+            "the ≥2-band SRP anti-join (min_band_hits=2, and every live "
+            "SRP ingest) needs the band-PAIR key directory, but the SRP "
+            f"store at {path!r} was built with with_pairs=False (batch "
+            "pair-discovery posture) — rebuild with with_pairs=True or "
+            "use min_band_hits=1"
+        )
+    udf = _band_buckets_udf(
+        meta["planes_q"], meta["bands"], meta["bits_per_band"]
+    )
+    out = df.select("*", udf(F.col(vec_col)).alias("__dn_srp"))
+    arr, bands = F.col("__dn_srp"), meta["bands"]
+    if min_band_hits == 1:
+        store = _read_srp(df.sparkSession, path)
+        part, keys = "band", [(i, arr[i]) for i in range(bands)]
+    else:
+        store = _read_srp(df.sparkSession, path, SRP_PAIR_DIR)
+        part, keys = "pair", [
+            _pair_key(bands, i, j, arr[i], arr[j])
+            for i in range(bands)
+            for j in range(i + 1, bands)
+        ]
+    return _anti_join_slices(out, store, part, "bucket", keys).drop(
+        "__dn_srp"
+    )
 
 
 def probe_srp_near_duplicates(

@@ -30,9 +30,25 @@ Design for scale:
   duplicate group rows across micro-batches merge at read time.
   Compaction = re-aggregate + overwrite, a pure metadata-driven batch
   job.
+
+Live ingest splits along one line: the micro-batch loop is this
+module's, the stores' keys are ``index/fingerprints.py``'s. Every
+ledgered foreachBatch body runs in one replay skeleton
+(:func:`_replay_once`: skip a ledgered or empty batch, optional store
+lease, body, ledger mark), both sink-writing ingesters commit through
+one staged sink commit (:func:`_sink_commit`), and every query starts
+through one ``writeStream`` wiring (:func:`_start`). Which data dir to
+read, how a band or band-pair key is spelled, how a batch anti-joins
+a store slice and how rows are appended are decided only in
+``index/fingerprints.py`` (``fp_miss``, ``band_miss``, ``srp_miss``,
+``append_fingerprint_rows``, ``append_srp_keys``), so stream, store
+and batch keys cannot drift apart.
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -151,6 +167,111 @@ def stream_scan(
     return agg.select(*cols, F.col(VALUE_COL))
 
 
+
+# ------------------------------------------------- live-ingest wiring
+
+
+def _start(sdf: DataFrame, body, checkpoint: str | None = None,
+           trigger_available_now: bool = False):
+    """Start ``sdf`` as a foreachBatch query running ``body`` — the one
+    ``writeStream`` wiring of every continuous build and ingest.
+    Returns the StreamingQuery."""
+    writer = sdf.writeStream.foreachBatch(body).outputMode("append")
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _replay_once(ledger, body, lease: str | None = None):
+    """The micro-batch replay skeleton every ledgered foreachBatch body
+    runs in.
+
+    ``foreachBatch`` is at-least-once: Spark commits a batch to the
+    checkpoint only AFTER the function returns, so a restart replays
+    an in-flight batch. The returned function skips a batch the ledger
+    (``index/store.BatchLedger``) already marked, or an empty one;
+    otherwise it runs ``body(batch_df, batch_id)`` — under the ledger
+    root's store lease when ``lease`` names the holder — then marks
+    the id. It returns whether the body ran, so follow-up work runs
+    strictly after the mark and never for a skipped replay."""
+    from contextlib import nullcontext
+
+    from dragnet_spark.index.lease import hold_lease
+
+    def run(batch_df: DataFrame, batch_id: int) -> bool:
+        if ledger.done(batch_id) or batch_df.isEmpty():
+            return False
+        with hold_lease(ledger.root, lease) if lease else nullcontext():
+            body(batch_df, batch_id)
+            ledger.mark(batch_id)
+        return True
+
+    return run
+
+
+def _sink_commit(ledger, sink_path: str):
+    """The staged sink commit of both live ingesters: exactly-once on
+    the sink. At wiring time it stamps the sink marker with the
+    ledger's store, whose lease and ledger govern the sink — how
+    ``streaming/sink.compact_sink`` and ``dn maintain`` find it.
+
+    ``commit(batch_df, batch_id, misses)`` returns the batch's
+    survivors, which land in their own ``__dn_batch=<id>`` dir. When
+    that dir's ``_dn_committed`` sentinel (``index/store.COMMIT_SENTINEL``,
+    written after the sink write) carries THIS checkpoint's key, the
+    dir IS the survivor set: recomputing would find zero survivors
+    (the first attempt's fold-in already put their keys in the store)
+    and overwriting would erase the sink output. Otherwise —
+    including a dir committed by a DIFFERENT checkpoint, whose batch
+    ids restarted at 0 — ``misses()`` is materialized once (the
+    caller's fold-in reuses it), overwrites the dir, and the sentinel
+    is stamped."""
+    from dragnet_spark.streaming import sink
+
+    os.makedirs(sink_path, exist_ok=True)
+    marker = os.path.join(sink_path, sink.SINK_MARKER)
+    if not os.path.exists(marker):
+        with open(marker, "w") as f:
+            json.dump(
+                {"version": "1.0",
+                 "store_path": os.path.abspath(ledger.root)}, f
+            )
+
+    def commit(batch_df: DataFrame, batch_id: int, misses) -> DataFrame:
+        bdir = os.path.join(sink_path, f"__dn_batch={batch_id}")
+        if ledger.sink_committed(bdir):
+            return batch_df.sparkSession.read.parquet(bdir)
+        survivors = misses().localCheckpoint(eager=True)
+        survivors.write.mode("overwrite").parquet(bdir)
+        ledger.mark_sink_committed(bdir)
+        return survivors
+
+    return commit
+
+
+def _dedup_vectors(sdf: DataFrame, vec_field: str, time_field: str | None,
+                   watermark: str) -> DataFrame:
+    """Exact vector dedup, keyed on the md5 of the vector: within the
+    watermark horizon on a stream with an event-time column (state is
+    one hash per surviving vector), over the whole frame otherwise.
+    Rows with a NULL event time are dropped."""
+    out = sdf
+    if time_field is not None:
+        out = out.filter(F.col(time_field).isNotNull())
+        if out.isStreaming:
+            out = out.withWatermark(time_field, watermark)
+    out = out.withColumn(
+        "__dn_vfp", F.md5(F.to_json(F.struct(F.col(vec_field))))
+    )
+    if out.isStreaming and time_field is not None:
+        out = out.dropDuplicatesWithinWatermark(["__dn_vfp"])
+    else:
+        out = out.dropDuplicates(["__dn_vfp"])
+    return out.drop("__dn_vfp")
+
+
 def make_batch_appender(
     metrics,
     index_path: str,
@@ -163,51 +284,38 @@ def make_batch_appender(
     """The foreachBatch body of :func:`stream_build`, factored out so
     its replay behavior is directly testable.
 
-    ``foreachBatch`` parquet appends are at-least-once: Spark commits
-    a batch to the checkpoint only AFTER the function returns, so a
-    failure between the append and the commit replays the batch on
-    restart and would double-count. The ledger closes the common
-    window: after a successful append, a marker file named by batch id
-    is written under the index; a replayed batch whose marker exists
-    is skipped. (A crash strictly inside build_index can still leave a
-    partial append — closing that too needs a transactional table
-    format; the ledger reduces the exposure from 'any restart with an
-    in-flight batch' to 'crash mid-write'.) The ledger is keyed by a
-    digest of the checkpoint path because batch ids restart from 0
-    with every fresh checkpoint; without a checkpoint there is no
-    replay, so no ledger is kept.
+    A replayed batch would double-count; the ledger under the index
+    (:func:`_replay_once`) skips it. (A crash strictly inside
+    build_index can still leave a partial append — closing that too
+    needs a transactional table format; the ledger reduces the
+    exposure from 'any restart with an in-flight batch' to 'crash
+    mid-write'.)
     """
     from dragnet_spark.index.build import build_index
     from dragnet_spark.index.store import BatchLedger
 
-    ledger = BatchLedger(index_path, checkpoint)
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if ledger.done(batch_id) or batch_df.isEmpty():
-            return
         r = resolver
         if r is None and VARIANT_COL in batch_df.columns:
             r = VariantResolver()
-        from dragnet_spark.index.lease import hold_lease
+        build_index(
+            batch_df.sparkSession,
+            batch_df,
+            metrics,
+            index_path,
+            interval=interval,
+            time_field=time_field,
+            datasource_filter=datasource_filter,
+            mode="append",
+            resolver=r,
+        )
 
-        # serialize against compact_index: an append landing between
-        # its snapshot and a bucket overwrite would be silently
-        # replaced by the stale aggregate (lease.py)
-        with hold_lease(index_path, "append-index"):
-            build_index(
-                batch_df.sparkSession,
-                batch_df,
-                metrics,
-                index_path,
-                interval=interval,
-                time_field=time_field,
-                datasource_filter=datasource_filter,
-                mode="append",
-                resolver=r,
-            )
-        ledger.mark(batch_id)
-
-    return write_batch
+    # the index lease serializes against compact_index: an append
+    # landing between its snapshot and a bucket overwrite would be
+    # silently replaced by the stale aggregate (lease.py)
+    return _replay_once(
+        BatchLedger(index_path, checkpoint), write_batch, lease="append-index"
+    )
 
 
 def stream_build(
@@ -239,12 +347,7 @@ def stream_build(
         resolver=resolver,
         checkpoint=checkpoint,
     )
-    writer = sdf.writeStream.foreachBatch(write_batch).outputMode("append")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(sdf, write_batch, checkpoint, trigger_available_now)
 
 
 def stream_sliding_counts(
@@ -483,13 +586,14 @@ def stream_curate_against_store(
     watermark horizon AND unseen by the persisted corpus.
 
     The store side is static and projects only its fingerprint column
-    — a stream-static LEFT ANTI join, so each micro-batch drops
-    already-ingested documents without any streaming state beyond the
-    horizon dedup, and without ever reading corpus text. This closes
-    the continuous-ingest loop: probe here, then fold survivors into
-    the store with ``append_fingerprints`` at compaction time (the
-    event index's compact discipline). Works identically on a static
-    DataFrame (batch twin for equivalence tests).
+    — a stream-static LEFT ANTI join (``fingerprints.fp_miss``), so
+    each micro-batch drops already-ingested documents without any
+    streaming state beyond the horizon dedup, and without ever reading
+    corpus text. This closes the continuous-ingest loop: probe here,
+    then fold survivors into the store with ``append_fingerprints`` at
+    compaction time (the event index's compact discipline). Works
+    identically on a static DataFrame (batch twin for equivalence
+    tests).
 
     **Store-snapshot contract**: the static side's parquet file
     listing is resolved when the streaming query STARTS, not per
@@ -503,24 +607,11 @@ def stream_curate_against_store(
     every micro-batch and folds survivors straight back in, at the
     cost of a per-batch file listing.
     """
-    from dragnet_spark.index.fingerprints import FP_META, STORE_DIR
-    from dragnet_spark.index.store import read_store
+    from dragnet_spark.index.fingerprints import fp_miss
 
-    curated = stream_curate(
-        sdf,
-        text_field,
-        time_field,
-        fields=fields,
-        min_tokens=min_tokens,
-        max_punct_ratio=max_punct_ratio,
-        watermark=watermark,
-        resolver=resolver,
-    )
-    store_fps = read_store(
-        curated.sparkSession, store_path, STORE_DIR, FP_META,
-        "fingerprint store",
-    ).select(F.col("fp").alias("__dn_fp"))
-    return curated.join(store_fps, "__dn_fp", "left_anti")
+    curated = stream_curate(sdf, text_field, time_field, fields, min_tokens,
+                            max_punct_ratio, watermark, resolver)
+    return fp_miss(curated, store_path)
 
 
 def stream_curate_against_band_store(
@@ -541,75 +632,34 @@ def stream_curate_against_band_store(
     persisted corpus (token-swapped twins, light edits) are dropped
     in-stream, which the exact-fingerprint store cannot do.
 
-    Mechanics: the arriving batch computes its band keys as NARROW
-    per-row expressions (ops/dedup.minhash_band_array — the 56-bit
-    md5-prefix BIGINT batch LSH buckets on, value-identical to the
-    explode+groupBy signature and to band-store v2's persisted keys,
-    so stream, store, and batch agree bit-for-bit), then runs one
-    stream-static LEFT ANTI join per band against that band's store
-    slice. Per-band slices partition-prune (the store is
-    partitionBy(band)); each anti-join ships only 8-byte keys; a doc
-    survives iff every band misses — exactly minhash-LSH's candidate
-    rule. Documents with no shingles have NULL band keys and can
-    never collide, matching batch semantics.
+    Mechanics (``fingerprints.band_miss``): the arriving batch
+    computes its band keys as NARROW per-row expressions
+    (ops/dedup.minhash_band_array — the 56-bit md5-prefix BIGINT batch
+    LSH buckets on, value-identical to the explode+groupBy signature
+    and to band-store v2's persisted keys, so stream, store, and batch
+    agree bit-for-bit), then runs one stream-static LEFT ANTI join per
+    band against that band's store slice. Per-band slices
+    partition-prune (the store is partitioned by band); each anti-join
+    ships only 8-byte keys; a doc survives iff every band misses —
+    exactly minhash-LSH's candidate rule. Documents with no shingles
+    have NULL band keys and can never collide, matching batch
+    semantics.
 
     Same store-snapshot contract as :func:`stream_curate_against_store`:
     keys appended via ``append_band_keys`` while the query runs are
     seen after a query restart. Works identically on a static frame
     (batch twin for stream==batch equivalence tests).
     """
-    from dragnet_spark.index.fingerprints import (
-        BAND_DIR,
-        BAND_META,
-        load_band_store_meta,
-    )
-    from dragnet_spark.index.store import read_store
-    from dragnet_spark.ops.dedup import minhash_band_array
+    from dragnet_spark.index.fingerprints import band_miss
 
-    curated = stream_curate(
-        sdf,
-        text_field,
-        time_field,
-        fields=fields,
-        min_tokens=min_tokens,
-        max_punct_ratio=max_punct_ratio,
-        watermark=watermark,
-        resolver=resolver,
-    )
+    curated = stream_curate(sdf, text_field, time_field, fields, min_tokens,
+                            max_punct_ratio, watermark, resolver)
     if text_field not in curated.columns:
         raise ValueError(
             "stream_curate_against_band_store needs the text field in "
             f"`fields` to band-hash survivors (missing {text_field!r})"
         )
-    meta = load_band_store_meta(store_path)
-    # ONE projection computes the band array per row; the per-band
-    # anti-join conditions then reference elements of the projected
-    # ATTRIBUTE (cheap getItem), not the expression — join conditions
-    # cannot re-inline it, so the md5-per-shingle work runs once per
-    # row no matter how many bands
-    out = curated.select(
-        "*",
-        minhash_band_array(
-            F.col(text_field),
-            num_hashes=meta["num_hashes"],
-            bands=meta["bands"],
-            ngram=meta["ngram"],
-        ).alias("__dn_bands"),
-    )
-    store = read_store(
-        curated.sparkSession, store_path, BAND_DIR, BAND_META,
-        "minhash band store",
-    )
-    for i in range(meta["bands"]):
-        slice_i = store.filter(F.col("band") == i).select(
-            F.col("bhash").alias(f"__dn_store_bh_{i}")
-        )
-        out = out.join(
-            slice_i,
-            F.col("__dn_bands")[i] == F.col(f"__dn_store_bh_{i}"),
-            "left_anti",
-        )
-    return out.drop("__dn_bands")
+    return band_miss(curated, store_path, text_field)
 
 
 def stream_curate_against_srp_store(
@@ -637,9 +687,9 @@ def stream_curate_against_srp_store(
     (ops/dedup._band_buckets_udf — bit-identical to the store keys
     and to batch SRP-LSH, by the quantized integer sign arithmetic),
     (3) one stream-static LEFT ANTI join per key slice against the
-    partition-pruned store. Vectors that are NULL or the wrong
-    dimensionality can never collide and pass through (match the
-    batch probe, which emits no rows for them).
+    partition-pruned store (``fingerprints.srp_miss``). Vectors that
+    are NULL or the wrong dimensionality can never collide and pass
+    through (match the batch probe, which emits no rows for them).
 
     ``min_band_hits`` picks the key space: **1** anti-joins the 8
     single-band slices (SRP-LSH's raw candidate rule — at 16-bit
@@ -660,85 +710,12 @@ def stream_curate_against_srp_store(
     restart. Works identically on a static frame (the batch twin for
     stream==batch equivalence tests).
     """
-    from dragnet_spark.index.fingerprints import (
-        SRP_DIR,
-        SRP_META,
-        SRP_PAIR_DIR,
-        load_srp_store_meta,
-    )
-    from dragnet_spark.index.store import read_store
-    from dragnet_spark.ops.dedup import _band_buckets_udf
+    from dragnet_spark.index.fingerprints import srp_miss
 
-    if min_band_hits not in (1, 2):
-        raise ValueError(
-            "stream_curate_against_srp_store supports min_band_hits 1 "
-            "(single-band rule) or 2 (band-pair rule); use the batch "
-            f"probe for higher evidence thresholds, got {min_band_hits}"
-        )
-    meta = load_srp_store_meta(store_path)
-    if min_band_hits == 2 and not meta.get("pair_keys", True):
-        raise ValueError(
-            "stream_curate_against_srp_store with min_band_hits=2 needs "
-            "the band-PAIR key directory, but this store was built with "
-            "with_pairs=False (batch pair-discovery posture) — rebuild "
-            "with with_pairs=True or use min_band_hits=1"
-        )
-    out = sdf
-    if time_field is not None:
-        out = out.filter(F.col(time_field).isNotNull())
-        if out.isStreaming:
-            out = out.withWatermark(time_field, watermark)
-    vfp = F.md5(F.to_json(F.struct(F.col(vec_field))))
-    out = out.withColumn("__dn_vfp", vfp)
-    if out.isStreaming and time_field is not None:
-        out = out.dropDuplicatesWithinWatermark(["__dn_vfp"])
-    else:
-        out = out.dropDuplicates(["__dn_vfp"])
-    udf = _band_buckets_udf(
-        meta["planes_q"], meta["bands"], meta["bits_per_band"]
+    return srp_miss(
+        _dedup_vectors(sdf, vec_field, time_field, watermark),
+        store_path, vec_field, min_band_hits,
     )
-    # one projected ATTRIBUTE carries the band array; the per-slice
-    # anti-join conditions reference its elements (cheap getItem /
-    # concat) and cannot re-inline the matmul (the band store's cost
-    # discipline). NULL/wrong-dims vectors get a NULL array from the
-    # UDF itself — null keys never equal a store key, so they pass
-    out = out.select("*", udf(F.col(vec_field)).alias("__dn_srp"))
-    bands = meta["bands"]
-    if min_band_hits == 1:
-        store = read_store(
-            sdf.sparkSession, store_path, SRP_DIR, SRP_META, "SRP band store"
-        )
-        for i in range(bands):
-            slice_i = store.filter(F.col("band") == i).select(
-                F.col("bucket").alias(f"__dn_store_bk_{i}")
-            )
-            out = out.join(
-                slice_i,
-                F.col("__dn_srp")[i] == F.col(f"__dn_store_bk_{i}"),
-                "left_anti",
-            )
-    else:
-        pairs = read_store(
-            sdf.sparkSession, store_path, SRP_PAIR_DIR, SRP_META,
-            "SRP band store",
-        )
-        for i in range(bands):
-            for j in range(i + 1, bands):
-                pid = i * bands + j
-                slice_p = pairs.filter(F.col("pair") == pid).select(
-                    F.col("bucket").alias(f"__dn_store_pk_{pid}")
-                )
-                # F.concat, not concat_ws: a NULL band array must make
-                # the key NULL (never joins), not an empty string
-                key = F.concat(
-                    F.col("__dn_srp")[i], F.lit("|"), F.col("__dn_srp")[j]
-                )
-                out = out.join(
-                    slice_p,
-                    key == F.col(f"__dn_store_pk_{pid}"),
-                    "left_anti",
-                )
-    return out.drop("__dn_srp", "__dn_vfp")
 
 
 def make_live_store_ingester(
@@ -760,100 +737,40 @@ def make_live_store_ingester(
     batch probe — already sees them. Replays after a restart are
     skipped via the same batch-id marker ledger as the index build.
 
-    Exactly-once on the SINK: each batch's survivors land in their own
-    ``__dn_batch=<id>`` subdirectory; a framework-owned
-    ``_dn_committed`` sentinel (written after the sink write, carrying
-    the checkpoint key — NOT Spark's ``_SUCCESS``, which is absent
-    under ``marksuccessfuljobs=false``) is the commit record. On
-    replay, if the sentinel exists with THIS checkpoint's key, the
-    anti-join is NOT recomputed — the committed directory IS the
-    survivor set (recomputing would find zero survivors, because the
-    first attempt's fold-in already put their fingerprints in the
-    store, and overwriting would erase the sink output); the replay
-    just re-folds those fingerprints into the store. Without a
-    matching sentinel the partial directory is overwritten by a fresh
-    anti-join (the store was necessarily not folded yet — fold-in runs
-    strictly after the sink commit). A committed dir left by a
-    DIFFERENT checkpoint (fresh checkpoints restart batch ids at 0)
-    fails the key check and is recomputed rather than aliased. Readers
-    (``spark.read.parquet(sink_path)``) therefore see each batch's
-    rows exactly once, plus a discovered ``__dn_batch`` partition
-    column they can ignore. The STORE side stays a plain append and
-    merely tolerates replay double-appends (probes take min doc_id;
-    compaction collapses them) — the next compaction erases them.
+    Exactly-once on the SINK (:func:`_sink_commit`; fold-in runs
+    strictly after the sink commit, so a replay re-folds a committed
+    dir): readers (``spark.read.parquet(sink_path)``) see each batch's
+    rows once, plus a discovered ``__dn_batch`` partition column they
+    can ignore. The STORE side stays a plain append and merely
+    tolerates replay double-appends (probes take min doc_id; the next
+    compaction collapses them).
     """
-    import json as _json
-    import os as _os
-
-    from dragnet_spark.index.fingerprints import FP_META, STORE_DIR
-    from dragnet_spark.index.lease import hold_lease
-    from dragnet_spark.index.store import BatchLedger, guard_store, read_store
-    from dragnet_spark.streaming.sink import SINK_MARKER
+    from dragnet_spark.index.fingerprints import (
+        append_fingerprint_rows,
+        fp_miss,
+    )
+    from dragnet_spark.index.store import BatchLedger
 
     ledger = BatchLedger(store_path, checkpoint)
-    # sink marker: records which store's lease/ledger governs this
-    # sink, so maintenance (streaming/sink.compact_sink, dn maintain)
-    # and the guarded reader find the store without configuration
-    _os.makedirs(sink_path, exist_ok=True)
-    _marker_path = _os.path.join(sink_path, SINK_MARKER)
-    if not _os.path.exists(_marker_path):
-        with open(_marker_path, "w") as f:
-            _json.dump(
-                {"version": "1.0",
-                 "store_path": _os.path.abspath(store_path)}, f
-            )
+    commit = _sink_commit(ledger, sink_path)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if ledger.done(batch_id) or batch_df.isEmpty():
-            return
-        bdir = _os.path.join(sink_path, f"__dn_batch={batch_id}")
-        # the whole batch body (store listing + anti-join + fold-in)
-        # holds the store lease: compaction's snapshot-and-swap and
-        # this append serialize instead of silently losing rows, and
-        # the anti-join never reads a directory mid-swap (lease.py)
-        with hold_lease(store_path, "live-ingest"):
-            _ingest_locked(batch_df.sparkSession, batch_df, bdir)
-            ledger.mark(batch_id)
-
-    def _ingest_locked(spark, batch_df, bdir):
-        what = "fingerprint store"
-        if ledger.sink_committed(bdir):
-            # replayed batch whose sink write already committed UNDER
-            # THIS CHECKPOINT: the directory is the survivor set (see
-            # docstring) — only the store fold-in needs to re-run. A
-            # dir committed by a DIFFERENT checkpoint (restarted batch
-            # ids) fails the sentinel key check and is recomputed.
-            survivors = spark.read.parquet(bdir)
-            guard_store(store_path, STORE_DIR, FP_META, what)
-        else:
-            store_fps = read_store(
-                spark, store_path, STORE_DIR, FP_META, what
-            ).select(F.col("fp").alias("__dn_fp"))
-            survivors = batch_df.join(store_fps, "__dn_fp", "left_anti")
-            # one pass over the batch: materialize survivors before the
-            # two writes so the anti-join doesn't run twice
-            survivors = survivors.localCheckpoint(eager=True)
-            survivors.write.mode("overwrite").parquet(bdir)
-            ledger.mark_sink_committed(bdir)
-        (
+        survivors = commit(
+            batch_df, batch_id, lambda: fp_miss(batch_df, store_path)
+        )
+        append_fingerprint_rows(
             survivors.select(
                 F.col("__dn_fp").alias("fp"),
                 F.col(id_field).cast("long").alias("doc_id"),
-            )
-            .withColumn("fp_bucket", F.substring("fp", 1, 2))
-            # one file per bucket per batch: without this, a partitioned
-            # append from an N-task frame writes up to N files in EVERY
-            # touched bucket — the first livestore soak hit 49k store
-            # files in 7 batches and the per-batch listing cost tripled.
-            # The tiny fp shuffle (tens of bytes/row) routes each bucket
-            # to one task; compaction still owns the long-run bound.
-            .repartition(F.col("fp_bucket"))
-            .write.mode("append")
-            .partitionBy("fp_bucket")
-            .parquet(_os.path.join(store_path, STORE_DIR))
+            ),
+            store_path,
         )
 
-    return ingest
+    # the whole batch body (store listing + anti-join + fold-in) holds
+    # the store lease: compaction's snapshot-and-swap and this append
+    # serialize instead of silently losing rows, and the anti-join
+    # never reads a directory mid-swap (lease.py)
+    return _replay_once(ledger, ingest, lease="live-ingest")
 
 
 def make_live_srp_ingester(
@@ -870,90 +787,33 @@ def make_live_srp_ingester(
     the store's persisted planes, (2) re-read the band-PAIR store's
     CURRENT contents (fresh file listing — within-run freshness) and
     drop every vector sharing ≥2 bands with ONE stored vector (the
-    corroborated-evidence rule, via the 28 pair-key anti-joins), (3)
-    write survivors to their ``__dn_batch=<id>`` staged sink dir —
-    reused verbatim on a replay whose ``_dn_committed`` sentinel
-    carries this checkpoint's key, the exactly-once discipline of the
-    exact-store loop — then (4) fold
-    the survivors' band AND pair keys straight back into the store so
-    the NEXT micro-batch already sees them. A paraphrase arriving ten
-    days after its original is dropped even though no watermark state
-    could span the gap. Survivors of the SAME batch are not checked
-    against each other (parity with the exact loop; the next batch
-    sees them all).
-
-    Commit records and checkpoint-aliasing protection are identical to
-    :func:`make_live_store_ingester` (``_dn_committed`` sentinel keyed
-    by checkpoint hash; see ``index/store.COMMIT_SENTINEL``).
+    corroborated-evidence rule, ``fingerprints.srp_miss``), (3) sink
+    survivors through the exact-store loop's commit
+    (:func:`_sink_commit`), then (4) fold the survivors' band AND pair
+    keys straight back into the store so the NEXT micro-batch already
+    sees them. A paraphrase arriving ten days after its original is
+    dropped even though no watermark state could span the gap.
+    Survivors of the SAME batch are not checked against each other
+    (parity with the exact loop; the next batch sees them all).
     """
-    import os as _os
-
     from dragnet_spark.index.fingerprints import (
-        SRP_META,
-        SRP_PAIR_DIR,
         append_srp_keys,
         load_srp_store_meta,
+        srp_miss,
     )
-    from dragnet_spark.index.lease import hold_lease
-    from dragnet_spark.index.store import BatchLedger, read_store
-    from dragnet_spark.ops.dedup import _band_buckets_udf
+    from dragnet_spark.index.store import BatchLedger
 
     ledger = BatchLedger(store_path, checkpoint)
+    commit = _sink_commit(ledger, sink_path)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if ledger.done(batch_id) or batch_df.isEmpty():
-            return
-        # whole-batch lease, as in make_live_store_ingester: the pair
-        # store listing, the 28 anti-joins, and the fold-in (via
-        # append_srp_keys — its own acquire is a reentrant no-op)
-        # serialize against compact_srp_store instead of losing rows
-        with hold_lease(store_path, "live-srp-ingest"):
-            _ingest_locked(batch_df, batch_id)
-            ledger.mark(batch_id)
-
-    def _ingest_locked(batch_df, batch_id):
-        spark = batch_df.sparkSession
+        survivors = commit(
+            batch_df, batch_id,
+            lambda: srp_miss(batch_df, store_path, vec_field, min_band_hits=2),
+        )
         meta = load_srp_store_meta(store_path)
-        if not meta.get("pair_keys", True):
-            raise ValueError(
-                "live SRP ingest needs the band-PAIR key directory "
-                "(its drop rule is the ≥2-band anti-join), but this "
-                "store was built with with_pairs=False — rebuild with "
-                "with_pairs=True"
-            )
-        bdir = _os.path.join(sink_path, f"__dn_batch={batch_id}")
-        if ledger.sink_committed(bdir):
-            survivors = spark.read.parquet(bdir)
-        else:
-            udf = _band_buckets_udf(
-                meta["planes_q"], meta["bands"], meta["bits_per_band"]
-            )
-            out = batch_df.select(
-                "*", udf(F.col(vec_field)).alias("__dn_srp")
-            )
-            pairs = read_store(
-                spark, store_path, SRP_PAIR_DIR, SRP_META, "SRP band store"
-            )
-            bands = meta["bands"]
-            for i in range(bands):
-                for j in range(i + 1, bands):
-                    pid = i * bands + j
-                    slice_p = pairs.filter(F.col("pair") == pid).select(
-                        F.col("bucket").alias(f"__dn_store_pk_{pid}")
-                    )
-                    key_col = F.concat(
-                        F.col("__dn_srp")[i], F.lit("|"), F.col("__dn_srp")[j]
-                    )
-                    out = out.join(
-                        slice_p,
-                        key_col == F.col(f"__dn_store_pk_{pid}"),
-                        "left_anti",
-                    )
-            survivors = out.drop("__dn_srp").localCheckpoint(eager=True)
-            survivors.write.mode("overwrite").parquet(bdir)
-            ledger.mark_sink_committed(bdir)
         append_srp_keys(
-            spark,
+            batch_df.sparkSession,
             survivors.select(
                 F.col(id_field).alias(meta["id_col"]),
                 F.col(vec_field).alias(meta["vec_col"]),
@@ -961,7 +821,11 @@ def make_live_srp_ingester(
             store_path,
         )
 
-    return ingest
+    # whole-batch lease, as in make_live_store_ingester: the pair store
+    # listing, the 28 anti-joins, and the fold-in (via append_srp_keys
+    # — its own acquire is a reentrant no-op) serialize against
+    # compact_srp_store instead of losing rows
+    return _replay_once(ledger, ingest, lease="live-srp-ingest")
 
 
 def stream_ingest_with_live_srp_store(
@@ -985,26 +849,12 @@ def stream_ingest_with_live_srp_store(
     exactly as :func:`stream_ingest_with_live_store` is for exact
     fingerprints. Returns the started StreamingQuery.
     """
-    out = sdf
-    if time_field is not None:
-        out = out.filter(F.col(time_field).isNotNull())
-        if out.isStreaming:
-            out = out.withWatermark(time_field, watermark)
-    vfp = F.md5(F.to_json(F.struct(F.col(vec_field))))
-    out = out.withColumn("__dn_vfp", vfp)
-    if out.isStreaming and time_field is not None:
-        out = out.dropDuplicatesWithinWatermark(["__dn_vfp"])
-    else:
-        out = out.dropDuplicates(["__dn_vfp"])
-    out = out.drop("__dn_vfp")
     ingest = make_live_srp_ingester(
         store_path, sink_path, id_field, vec_field, checkpoint=checkpoint
     )
-    return (
-        out.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return _start(
+        _dedup_vectors(sdf, vec_field, time_field, watermark),
+        ingest, checkpoint,
     )
 
 
@@ -1051,16 +901,17 @@ def make_vindex_appender(
         maybe_recenter_vector_index,
     )
 
-    ledger = BatchLedger(index_path, checkpoint)
+    append = _replay_once(
+        BatchLedger(index_path, checkpoint),
+        lambda batch_df, _: append_vector_index(
+            batch_df.sparkSession, batch_df, index_path, files_per_cell=1
+        ),
+    )
     since_check = {"n": 0}
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if ledger.done(batch_id) or batch_df.isEmpty():
-            return
-        append_vector_index(
-            batch_df.sparkSession, batch_df, index_path, files_per_cell=1
-        )
-        ledger.mark(batch_id)
+        if not append(batch_df, batch_id):
+            return  # a skipped replay never counts toward recenter_every
         if recenter_trigger is not None and recenter_every > 0:
             since_check["n"] += 1
             if since_check["n"] >= recenter_every:
@@ -1112,21 +963,13 @@ def stream_ingest_vector_index(
         maybe_recenter_vector_index(
             sdf.sparkSession, index_path, skew_trigger=recenter_trigger
         )
-    writer = (
-        sdf.writeStream.foreachBatch(
-            make_vindex_appender(
-                index_path,
-                checkpoint=checkpoint,
-                recenter_trigger=recenter_trigger,
-                recenter_every=recenter_every,
-            )
-        )
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
+    append_batch = make_vindex_appender(
+        index_path,
+        checkpoint=checkpoint,
+        recenter_trigger=recenter_trigger,
+        recenter_every=recenter_every,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(sdf, append_batch, checkpoint, trigger_available_now)
 
 
 def stream_ingest_with_live_store(
@@ -1161,16 +1004,8 @@ def stream_ingest_with_live_store(
 
     Returns the started StreamingQuery.
     """
-    curated = stream_curate(
-        sdf,
-        text_field,
-        time_field,
-        fields=fields,
-        min_tokens=min_tokens,
-        max_punct_ratio=max_punct_ratio,
-        watermark=watermark,
-        resolver=resolver,
-    )
+    curated = stream_curate(sdf, text_field, time_field, fields, min_tokens,
+                            max_punct_ratio, watermark, resolver)
     if id_field not in curated.columns:
         raise ValueError(
             f"stream_ingest_with_live_store needs {id_field!r} in `fields`"
@@ -1178,12 +1013,7 @@ def stream_ingest_with_live_store(
     ingest = make_live_store_ingester(
         store_path, sink_path, id_field, checkpoint=checkpoint
     )
-    return (
-        curated.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
+    return _start(curated, ingest, checkpoint)
 
 
 def make_live_components_ingester(
@@ -1223,25 +1053,20 @@ def make_live_components_ingester(
     racing the stream never loses a fold (asserted by
     tools/soak_components_stream.py).
     """
-    import os as _os
-
     from dragnet_spark.index.components import merge_components_batch
     from dragnet_spark.index.fingerprints import (
-        BAND_DIR,
-        BAND_META,
+        _append_band_rows,
         _banded_rows,
+        _read_bands,
         load_band_store_meta,
     )
     from dragnet_spark.index.lease import hold_lease
-    from dragnet_spark.index.store import BatchLedger, read_store
+    from dragnet_spark.index.store import BatchLedger
 
-    ledger = BatchLedger(components_path, checkpoint)
     meta = load_band_store_meta(band_store_path)  # fail at wiring time
     id_col = meta["id_col"]
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if ledger.done(batch_id) or batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         # the band-store window — listing, candidate join, and the
         # key append — runs under ONE lease hold: compaction's
@@ -1255,14 +1080,10 @@ def make_live_components_ingester(
                 batch_df, meta["text_col"], meta["id_col"],
                 meta["num_hashes"], meta["bands"], meta["ngram"],
             ).localCheckpoint(eager=True)  # one signature pass, 3 uses
-            # explicit schema: a FRESH band store (continuous ingest
-            # bootstrapped from empty) has no files yet, and schema
-            # inference over zero files errors instead of yielding
-            # the empty frame the first batch needs
-            store = read_store(
-                spark, band_store_path, BAND_DIR, BAND_META,
-                "minhash band store",
-                schema="doc_id long, bhash long, band int",
+            # a FRESH band store (continuous ingest bootstrapped from
+            # empty) has no files yet
+            store = _read_bands(
+                spark, band_store_path, may_be_empty=True
             ).select("band", "bhash", F.col("doc_id").alias("id_a"))
             cross = (
                 store.join(
@@ -1293,16 +1114,11 @@ def make_live_components_ingester(
             # append the CHECKPOINTED band rows under the same hold
             # (append_band_keys would re-hash every shingle and
             # re-acquire)
-            (
-                banded.write.mode("append")
-                .partitionBy("band")
-                .parquet(_os.path.join(band_store_path, BAND_DIR))
-            )
+            _append_band_rows(banded, band_store_path)
         ids = batch_df.select(F.col(id_col).cast("long").alias("id"))
         merge_components_batch(spark, pairs, components_path, ids=ids)
-        ledger.mark(batch_id)
 
-    return ingest
+    return _replay_once(BatchLedger(components_path, checkpoint), ingest)
 
 
 def stream_ingest_with_live_components(
@@ -1321,12 +1137,7 @@ def stream_ingest_with_live_components(
     ingest = make_live_components_ingester(
         components_path, band_store_path, checkpoint=checkpoint
     )
-    return (
-        sdf.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
+    return _start(sdf, ingest, checkpoint)
 
 
 def make_kmv_vocab_ingester(

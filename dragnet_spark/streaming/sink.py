@@ -1,26 +1,34 @@
 """Curated-sink compaction: fold committed ``__dn_batch=<id>`` dirs
 into consolidated base segments.
 
+Two live ingesters write curated sinks, both through the one staged
+sink commit (``streaming/pipeline._sink_commit``):
 :func:`dragnet_spark.streaming.pipeline.make_live_store_ingester`
-gives the sink exactly-once semantics by writing each micro-batch's
-survivors into their own ``__dn_batch=<id>`` directory. Correct — and
-unbounded: a year of 1-minute batches is ~500k directories, so every
-full read pays 500k listings and the discovered-partition planning
-cost grows without limit. This module is the missing maintenance leg:
+(exact dedup; its store keys are document fingerprints) and
+:func:`dragnet_spark.streaming.pipeline.make_live_srp_ingester`
+(semantic dedup; its store keys are SRP band and band-pair keys).
+Each gives its sink exactly-once semantics by writing each
+micro-batch's survivors into their own ``__dn_batch=<id>`` directory,
+and stamps the sink's ``_dn_sink.json`` marker with the governing
+store. Correct — and unbounded: a year of 1-minute batches is ~500k
+directories, so every full read pays 500k listings and the
+discovered-partition planning cost grows without limit. This module
+is the missing maintenance leg:
 
 * **what is safe to fold**: a batch dir whose ``_dn_committed``
   sentinel names checkpoint key K *and* whose id appears in the
   store's ``_dn_batch_ledger/<K>/`` ledger. The ledger marker is
   written strictly AFTER the store fold-in, so a ledgered batch's
-  fingerprints are provably in the store — a later replay of that id
-  recomputes its anti-join, finds zero survivors (the store already
-  has them), and writes an empty dir: harmless, the rows live in the
-  base segment. Folding a committed-but-unledgered dir would be a
-  REAL loss window (crash between sink commit and fold-in → replay
-  re-folds from the dir; see ``_ingest_locked``), so those are never
-  touched. Legacy ``_SUCCESS``-only dirs carry no key and are skipped
-  for the same reason (conservative; they fold after their first
-  post-upgrade replay stamps the sentinel).
+  keys (its fingerprints, or its SRP band and pair keys) are provably
+  in the store — a later replay of that id recomputes its anti-join,
+  finds zero survivors (the store already has them), and writes an
+  empty dir: harmless, the rows live in the base segment. Folding a
+  committed-but-unledgered dir would be a REAL loss window (crash
+  between sink commit and fold-in → replay re-folds from the dir; see
+  ``_sink_commit``), so those are never touched. Legacy
+  ``_SUCCESS``-only dirs carry no key and are skipped for the same
+  reason (conservative; they fold after their first post-upgrade
+  replay stamps the sentinel).
 * **where they go**: base segments are NEGATIVE batch ids
   (``__dn_batch=-1``, ``-2``, …) — the same discovered partition
   column, so any existing reader keeps working, and real batch ids
@@ -55,6 +63,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dragnet_spark.errors import ContractError
 from dragnet_spark.index.lease import hold_lease
 from dragnet_spark.index.store import (
     batch_marked,
@@ -85,8 +94,21 @@ def _batch_dirs(sink_path: str) -> dict[int, str]:
 
 
 def load_sink_marker(sink_path: str) -> dict:
-    with open(os.path.join(sink_path, SINK_MARKER)) as f:
-        return json.load(f)
+    """The sink's marker record; its ``store_path`` names the store
+    whose lease and batch ledger govern the sink. A sink without the
+    marker (written before the live ingesters stamped one, or not a
+    curated sink at all) fails loudly: the governing store is then
+    unknown and must be passed as ``store_path``."""
+    marker = os.path.join(sink_path, SINK_MARKER)
+    try:
+        with open(marker) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        raise ContractError(
+            f"no sink marker {SINK_MARKER} in {sink_path!r}: the store "
+            "that governs this sink is unknown — pass store_path (the "
+            "store whose lease and batch ledger its live ingester used)"
+        ) from None
 
 
 def _recover_sink(sink_path: str) -> None:

@@ -766,6 +766,21 @@ def test_sink_compact_cli(cfg, tmp_path, spark):
     assert rc == 0 and "nothing to fold" in out
 
 
+def test_sink_compact_cli_missing_marker_is_one_line(cfg, tmp_path, spark):
+    """A sink without its _dn_sink.json marker (written before the live
+    ingesters stamped one) names the governing store nowhere: dn
+    sink-compact says so in one line and exits 1, no traceback."""
+    sink = tmp_path / "oldsink"
+    spark.createDataFrame([("1", "x")], "id string, text string") \
+        .write.parquet(str(sink / "__dn_batch=0"))
+
+    rc, out, err = run(["sink-compact", str(sink)], cfg)
+    assert rc == 1 and out == ""
+    assert err.startswith("dn: ") and len(err.strip().splitlines()) == 1
+    assert "_dn_sink.json" in err and "store_path" in err
+    assert "Traceback" not in err
+
+
 def test_lm_build_score_cli(cfg, spark, tmp_path):
     """dn lm-build / lm-score: freeze a reference LM, score and gate
     a batch through the CLI."""

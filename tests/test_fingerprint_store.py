@@ -56,6 +56,45 @@ def test_append_extends_the_store(spark, store):
     assert row["is_duplicate"] and row["dup_of"] == 20
 
 
+def test_append_writes_one_file_per_touched_bucket(spark, store):
+    """An append lands as ONE file in every bucket it touches, however
+    many input partitions feed that bucket — the layout the live
+    ingest fold needs (without it every batch adds a file per task to
+    each touched bucket). Answers are unchanged."""
+    import os
+
+    data = os.path.join(store, "fingerprints")
+
+    def files():
+        return {
+            d: len([f for f in os.listdir(os.path.join(data, d))
+                    if f.endswith(".parquet")])
+            for d in os.listdir(data) if d.startswith("fp_bucket=")
+        }
+
+    # ids 0..23 in 4 contiguous range partitions; text i%12 puts every
+    # document (so every touched bucket) in two input partitions
+    docs = spark.range(0, 24, 1, numPartitions=4).select(
+        (F.col("id") + 100).alias("doc_id"),
+        F.concat(F.lit("layout probe document number "),
+                 (F.col("id") % 12).cast("string")).alias("text"),
+    )
+    assert docs.rdd.getNumPartitions() == 4
+    before = files()
+    append_fingerprints(spark, docs, store)
+    after = files()
+    touched = {d for d in after if after[d] != before.get(d, 0)}
+    assert touched
+    assert {d: after[d] - before.get(d, 0) for d in touched} == {
+        d: 1 for d in touched
+    }
+    probe = spark.createDataFrame(
+        [(300, "layout probe document number 3")], "doc_id long, text string"
+    )
+    (row,) = probe_new_documents(spark, store, probe).collect()
+    assert row["is_duplicate"] and row["dup_of"] == 103
+
+
 def test_probe_reads_only_fingerprint_columns(spark, store):
     """The probe plan must scan the store's (fp, doc_id) — never any
     text column — and keep the store side a broadcast-joinable shape."""

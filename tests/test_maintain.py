@@ -242,6 +242,10 @@ def test_components_store_in_fleet_sweep(spark, tmp_path):
     before = {tuple(r) for r in components_store_read(spark, path).collect()}
     done = run_maintenance(spark, root, max_files=2)
     assert done[0]["actions"] == ["compact"]
+    # the compaction actually ran (run_maintenance records a failing
+    # store's exception instead of raising)
+    assert "error" not in done[0], done[0].get("error")
+    assert done[0]["applied"] == ["compact"]
     after = {tuple(r) for r in components_store_read(spark, path).collect()}
     assert after == before
     assert {t[1] for t in after if t[0] in range(6)} == {0}

@@ -10,13 +10,21 @@ pytestmark = __import__("pytest").mark.slow
 import json
 import os
 import shutil
+from collections import namedtuple
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from dragnet_spark.index.fingerprints import build_fingerprint_store
+from dragnet_spark.index.fingerprints import (
+    build_fingerprint_store,
+    build_srp_store,
+)
 from dragnet_spark.ops.text import fingerprint
-from dragnet_spark.streaming.pipeline import make_live_store_ingester
+from dragnet_spark.streaming.pipeline import (
+    make_live_srp_ingester,
+    make_live_store_ingester,
+)
 from dragnet_spark.streaming.sink import (
     _batch_dirs,
     _recover_sink,
@@ -35,29 +43,63 @@ def _mk_batch(spark, i, n=3):
     )
 
 
-@pytest.fixture
-def sinkworld(spark, tmp_path):
+_SRP_SCHEMA = "id long, text string, embedding array<double>"
+
+
+def _mk_srp_batch(spark, i, n=3):
+    # fresh random vectors: no band pair collides with the store
+    vecs = np.random.RandomState(100 + i).standard_normal((n, 16))
+    rows = [(1000 * i + j, f"srp survivor {i} {j}", vecs[j].tolist())
+            for j in range(n)]
+    return spark.createDataFrame(rows, _SRP_SCHEMA)
+
+
+#: a live-ingested sink: ``batch(spark, i)`` makes batch i, ``cols``
+#: are the hashable sink columns compared across folds, ``store_dir``
+#: the store data dir the ingester folds keys into
+Sink = namedtuple("Sink", "store sink ingest batch cols store_dir")
+
+
+@pytest.fixture(params=["fp", "srp"])
+def sinkworld(request, spark, tmp_path):
+    """Six batches live-ingested by either sink-writing ingester: the
+    exact-fingerprint one or the SRP one (whose sink ``compact_sink``
+    and ``dn maintain`` find by the marker alone)."""
     store = str(tmp_path / "store")
-    build_fingerprint_store(
-        spark,
-        spark.createDataFrame(
-            [(1, "previously stored text here ok")], "doc_id long, text string"
-        ),
-        store,
-    )
     sink = str(tmp_path / "sink")
-    ingest = make_live_store_ingester(
-        store, sink, "id", checkpoint=str(tmp_path / "ck")
-    )
+    ck = str(tmp_path / "ck")
+    if request.param == "fp":
+        build_fingerprint_store(
+            spark,
+            spark.createDataFrame(
+                [(1, "previously stored text here ok")],
+                "doc_id long, text string",
+            ),
+            store,
+        )
+        ingest = make_live_store_ingester(store, sink, "id", checkpoint=ck)
+        world = Sink(store, sink, ingest, _mk_batch,
+                     ("id", "text", "__dn_fp"), "fingerprints")
+    else:
+        build_srp_store(
+            spark, _mk_srp_batch(spark, 99, n=1), store,
+            vec_col="embedding", id_col="id", dims=16,
+        )
+        ingest = make_live_srp_ingester(
+            store, sink, "id", "embedding", checkpoint=ck
+        )
+        world = Sink(store, sink, ingest, _mk_srp_batch, ("id", "text"),
+                     "srp_bands")
     for i in range(6):
-        ingest(_mk_batch(spark, i), i)
-    return store, sink, ingest
+        ingest(world.batch(spark, i), i)
+    return world
 
 
 def test_compact_folds_ledgered_dirs_exactly_once(spark, sinkworld):
-    store, sink, ingest = sinkworld
+    store, sink, ingest = sinkworld.store, sinkworld.sink, sinkworld.ingest
+    cols = sinkworld.cols
     before = {tuple(r) for r in spark.read.parquet(sink)
-              .select("id", "text", "__dn_fp").collect()}
+              .select(*cols).collect()}
     assert len(before) == 18
     assert load_sink_marker(sink)["store_path"] == os.path.abspath(store)
 
@@ -69,7 +111,7 @@ def test_compact_folds_ledgered_dirs_exactly_once(spark, sinkworld):
     assert set(dirs) == {-1}
 
     after = {tuple(r) for r in read_curated_sink(spark, sink)
-             .select("id", "text", "__dn_fp").collect()}
+             .select(*cols).collect()}
     assert after == before
 
     # audit manifest rides in the segment
@@ -83,23 +125,24 @@ def test_compact_folds_ledgered_dirs_exactly_once(spark, sinkworld):
 
     # new batches after compaction fold into the NEXT negative segment
     for i in range(6, 9):
-        ingest(_mk_batch(spark, i), i)
+        ingest(sinkworld.batch(spark, i), i)
     report3 = compact_sink(spark, sink)
     assert report3["segment"] == "__dn_batch=-2"
     final = {tuple(r) for r in read_curated_sink(spark, sink)
-             .select("id", "text", "__dn_fp").collect()}
+             .select(*cols).collect()}
     assert len(final) == 27 and before <= final
 
 
 def test_replay_of_folded_batch_is_harmless(spark, sinkworld):
-    store, sink, ingest = sinkworld
+    store, sink, ingest = sinkworld.store, sinkworld.sink, sinkworld.ingest
+    store_dir = f"{store}/{sinkworld.store_dir}"
     compact_sink(spark, sink)
     rows = spark.read.parquet(sink).count()
-    store_rows = spark.read.parquet(f"{store}/fingerprints").count()
+    store_rows = spark.read.parquet(store_dir).count()
     # replay of a folded id: the store ledger short-circuits it
-    ingest(_mk_batch(spark, 2), 2)
+    ingest(sinkworld.batch(spark, 2), 2)
     assert spark.read.parquet(sink).count() == rows
-    assert spark.read.parquet(f"{store}/fingerprints").count() == store_rows
+    assert spark.read.parquet(store_dir).count() == store_rows
 
 
 def test_unledgered_dirs_are_never_folded(spark, tmp_path):
@@ -131,9 +174,9 @@ def test_unledgered_dirs_are_never_folded(spark, tmp_path):
 
 
 def test_crash_recovery_forward_and_rollback(spark, sinkworld):
-    store, sink, _ = sinkworld
+    sink, cols = sinkworld.sink, sinkworld.cols
     before = {tuple(r) for r in spark.read.parquet(sink)
-              .select("id", "__dn_fp").collect()}
+              .select(*cols).collect()}
 
     # ROLLBACK: a stage without the swap marker was never visible
     stage = os.path.join(sink, ".dn_compact_stage")
@@ -142,7 +185,7 @@ def test_crash_recovery_forward_and_rollback(spark, sinkworld):
     _recover_sink(sink)
     assert not os.path.exists(stage)
     assert {tuple(r) for r in spark.read.parquet(sink)
-            .select("id", "__dn_fp").collect()} == before
+            .select(*cols).collect()} == before
 
     # FORWARD: stage + manifest + swap marker, crash before any rename
     sources = [_n for i, _n in sorted(_batch_dirs(sink).items())[:3]]
@@ -157,7 +200,7 @@ def test_crash_recovery_forward_and_rollback(spark, sinkworld):
     assert -1 in _batch_dirs(sink)
     assert all(not os.path.exists(os.path.join(sink, n)) for n in sources)
     assert {tuple(r) for r in read_curated_sink(spark, sink)
-            .select("id", "__dn_fp").collect()} == before
+            .select(*cols).collect()} == before
 
     # FORWARD, mid-rename crash: marker present, stage already shown,
     # one source still visible in the sink and also in trash-limbo —
@@ -180,7 +223,7 @@ def test_reader_busy_during_live_swap(spark, sinkworld):
     from dragnet_spark.index.lease import StoreBusyError, hold_lease
     from dragnet_spark.index import store as storemod
 
-    store, sink, _ = sinkworld
+    store, sink = sinkworld.store, sinkworld.sink
     with open(os.path.join(sink, ".dn_compact_swap"), "w") as f:
         json.dump({"target": "__dn_batch=-1", "sources": []}, f)
 
@@ -215,7 +258,7 @@ def test_ordered_fold_clusters_rowgroups(spark, sinkworld):
     parquet min/max stats become selective for the cluster column."""
     import pyarrow.parquet as pq
 
-    store, sink, _ = sinkworld
+    sink = sinkworld.sink
     before = {tuple(r) for r in spark.read.parquet(sink)
               .select("id", "text").collect()}
     report = compact_sink(spark, sink, files_per_segment=3,
@@ -247,7 +290,7 @@ def test_ordered_fold_clusters_rowgroups(spark, sinkworld):
 def test_maintain_folds_outgrown_sink(spark, sinkworld):
     from dragnet_spark.index.maintain import plan_maintenance, run_maintenance
 
-    store, sink, _ = sinkworld
+    sink = sinkworld.sink
     root = os.path.dirname(sink)
     plan = {r["path"]: r for r in plan_maintenance(spark, root)}
     assert plan[sink]["kind"] == "sink"
