@@ -217,26 +217,26 @@ MAX_GRADE_PASSES = 3
 TRAILING_K = 8
 
 
-def _trailing_medians(sf) -> dict[str, float]:
-    """Per-query median of the last TRAILING_K recorded values at this
-    SF, from BENCH_HISTORY.jsonl. This is the baseline that separates
-    machine load (everything slow at once) from a plan regression (one
-    query slow, history still)."""
+def trailing_medians(history: Path, k: int, sf=None) -> dict[str, float]:
+    """Per-query median of the last ``k`` recorded values in a
+    ``*_HISTORY.jsonl`` file, only over rows at ``sf`` when given. This
+    is the baseline that separates machine load (everything slow at
+    once) from a plan regression (one query slow, history still)."""
     series: dict[str, list[float]] = {}
-    if not HISTORY.exists():
+    if not history.exists():
         return {}
-    for line in HISTORY.read_text().splitlines():
+    for line in history.read_text().splitlines():
         try:
             rec = json.loads(line)
         except json.JSONDecodeError:
             continue
-        if rec.get("sf") != sf:
+        if sf is not None and rec.get("sf") != sf:
             continue
         for q, v in rec.get("queries", {}).items():
             series.setdefault(q, []).append(v)
     out = {}
     for q, vals in series.items():
-        vals = sorted(vals[-TRAILING_K:])
+        vals = sorted(vals[-k:])
         out[q] = vals[len(vals) // 2]
     return out
 
@@ -349,7 +349,7 @@ def main() -> None:
     load_start = _loadavg()
     sf_str = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf = float(sf_str) if sf_str.replace(".", "").isdigit() else sf_str
-    medians = _trailing_medians(sf)
+    medians = trailing_medians(HISTORY, TRAILING_K, sf)
 
     def run_once(e) -> float:
         t0 = time.perf_counter()

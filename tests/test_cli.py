@@ -6,12 +6,31 @@ import io
 import json
 import os
 import sys
+from collections import Counter
+from datetime import datetime, timezone
 
 import pytest
 
 from dragnet_spark.cli import main
+from perfbench.gen import FILES_PER_DAY, START, TIME_FORMAT
 
 REF_DATA = "/root/reference/tests/data"
+# positions in the generator's ``Tallies.big`` key
+OPERATION, METHOD = 1, 3
+
+
+def _day_dir(day: int) -> str:
+    """The generated tree's directory for day ``day`` (0 = START)."""
+    return datetime.fromtimestamp(START + day * 86400, tz=timezone.utc).strftime(
+        TIME_FORMAT)
+
+
+def _per(tallies, pos: int) -> dict:
+    """Valid-record count per value of one ``Tallies.big`` key field."""
+    out = Counter()
+    for key, n in tallies.big.items():
+        out[key[pos]] += n
+    return dict(out)
 
 
 @pytest.fixture
@@ -100,9 +119,10 @@ def test_config_crud_output_parity(cfg):
     assert 'unknown command: "bogus-command"' in err
 
 
-def test_scan_dry_run_lists_pruned_files(cfg):
-    run(["datasource-add", "logs", f"--path={REF_DATA}",
-         "--time-format=%Y/%m-%d", "--time-field=time"], cfg)
+def test_scan_dry_run_lists_pruned_files(cfg, events_tree):
+    tree, _ = events_tree
+    run(["datasource-add", "logs", f"--path={tree}",
+         f"--time-format={TIME_FORMAT}", "--time-field=time"], cfg)
     rc, out, _ = run(
         ["scan", "--dry-run", "--after", "2014-05-01", "--before", "2014-05-03",
          "logs"], cfg
@@ -112,10 +132,8 @@ def test_scan_dry_run_lists_pruned_files(cfg):
     assert lines[0] == "would scan files:"
     got = [ln.strip() for ln in lines[1:]]
     assert got == [
-        f"{REF_DATA}/2014/05-01/one.log",
-        f"{REF_DATA}/2014/05-01/two.log",
-        f"{REF_DATA}/2014/05-02/one.log",
-        f"{REF_DATA}/2014/05-02/two.log",
+        f"{tree}/{_day_dir(d)}/{i}.log"
+        for d in range(2) for i in range(FILES_PER_DAY)
     ]
 
 
@@ -280,18 +298,19 @@ def test_bad_arguments_parity(cfg, tmp_path):
     assert "unsupported data format: junk" in err
 
 
-def test_raw_output_mode(cfg, spark):
+def test_raw_output_mode(cfg, spark, events_tree):
     """--raw emits one JSON array of flattened rows (distinct from
     --points NDJSON; reference dnOutputRaw, bin/dn:972-975)."""
-    run(["datasource-add", "r1", "--path=/root/reference/tests/data/2014/05-01/one.log"], cfg)
+    tree, tallies = events_tree
+    run(["datasource-add", "r1", f"--path={tree}"], cfg)
     rc, out, _ = run(["scan", "--raw", "-b", "req.method", "r1"], cfg)
     assert rc == 0
     got = json.loads(out)
-    assert got == [["DELETE", 74], ["GET", 54], ["HEAD", 61], ["PUT", 61]]
+    assert got == sorted(map(list, _per(tallies, METHOD).items()))
 
     rc, out, _ = run(["scan", "--raw", "r1"], cfg)
     assert rc == 0
-    assert json.loads(out) == [250]
+    assert json.loads(out) == [tallies.valid]
 
 
 @pytest.mark.skipif(not os.path.exists(REF_DATA), reason="no reference data")
@@ -347,17 +366,20 @@ def test_csv_datasource_scan(cfg, spark, tmp_path):
     assert {tuple(ln.split()) for ln in out.splitlines()[1:]} == {("GET", "2")}
 
 
-def test_compact_cli_preserves_answers(cfg, spark, tmp_path):
+def test_compact_cli_preserves_answers(cfg, spark, tmp_path, events_tree):
     """dn build (twice, append via second build) then dn compact: query
     output is identical, the view shrinks."""
+    tree, tallies = events_tree
     idx = str(tmp_path / "cidx")
-    run(["datasource-add", "cm", "--path=/root/reference/tests/data",
+    run(["datasource-add", "cm", f"--path={tree}",
          "--time-field=time", f"--index-path={idx}"], cfg)
     run(["metric-add", "cm", "ops",
          "-b", "operation,timestamp[date,field=time,aggr=lquantize,step=86400]"], cfg)
     assert run(["build", "cm"], cfg)[0] == 0
     rc, before, _ = run(["query", "cm", "-b", "operation"], cfg)
     assert rc == 0
+    got = {ln.split()[0]: int(ln.split()[1]) for ln in before.splitlines()[1:]}
+    assert got == _per(tallies, OPERATION)
     rows_before = spark.read.parquet(f"{idx}/by_day/ops").count()
     assert run(["compact", "cm"], cfg)[0] == 0
     rc, after, _ = run(["query", "cm", "-b", "operation"], cfg)

@@ -13,7 +13,6 @@ CORRECTNESS_FULL.json`` (same code path; also writes the JSON report).
 import json
 import os
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
@@ -25,27 +24,14 @@ OUT = os.path.join(os.path.dirname(os.path.dirname(__file__)), "CORRECTNESS_FULL
 
 
 def test_full_registry_oracle_sweep(spark):
-    import tools.check_correctness as cc
+    from tools.check_correctness import oracle_con, sweep
 
-    cc.SF_DIR = FULL_SF_DIR
-    con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem "
-              "events documents embeddings").split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{FULL_SF_DIR}/{t}.parquet')"
-        )
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    report, bad = {}, []
-    for name, fn in qs.items():
-        rec, detail = cc.check_one(spark, con, name, fn, oracles)
-        report[name] = rec
-        if rec["err"] or (
-            not rec.get("no_oracle")
-            and not (rec["rows_match"] and rec["schema_match"] and rec["hash_match"])
-        ):
-            bad.append((name, rec["err"] or detail))
+    report, bad = sweep(
+        spark, oracle_con(FULL_SF_DIR), FULL_SF_DIR, list(entrymod.queries())
+    )
     with open(OUT, "w") as f:
         json.dump(report, f, indent=2)
-    assert not bad, f"{len(bad)} queries failed the sf0.01 oracle sweep: {bad}"
+    assert not bad, (
+        f"{len(bad)} queries failed the sf0.01 oracle sweep: "
+        f"{[(n, report[n].get('err') or report[n].get('detail')) for n in bad]}"
+    )

@@ -2,12 +2,16 @@
 query corpus answered from raw scan and from the index must agree
 (tests/dn/local/tst.index_file.sh redefines scan as `dn query`)."""
 
+from collections import Counter
+from datetime import datetime, timezone
+
 import pytest
 
 from dragnet_spark.index import Metric, NoMetricError, build_index, find_metric, query_index
 from dragnet_spark.query import QueryConfig
 from dragnet_spark.scan import scan
 from dragnet_spark.sources.tables import load_table
+from perfbench.gen import DAYS, FILES_PER_DAY, START, TIME_FORMAT
 
 from tests.conftest import rows_set
 
@@ -133,7 +137,19 @@ def test_empty_interval_yields_zero(spark, index_path):
     assert rows == []
 
 
-def test_hourly_interval_build_and_query(spark, tmp_path):
+def _ops(tallies) -> set:
+    """(operation, count) rows of the whole generated tree."""
+    out = Counter()
+    for (_, op, *_rest), n in tallies.big.items():
+        out[op] += n
+    return set(out.items())
+
+
+def _label(secs: int, fmt: str) -> str:
+    return datetime.fromtimestamp(secs, tz=timezone.utc).strftime(fmt)
+
+
+def test_hourly_interval_build_and_query(spark, tmp_path, events_tree):
     """interval=hour partitions by YYYY-MM-DDTHH and bounded queries
     prune to the hour (reference by_hour indexes,
     lib/dragnet-impl.js:204-228)."""
@@ -144,7 +160,10 @@ def test_hourly_interval_build_and_query(spark, tmp_path):
     from dragnet_spark.index.build import Metric
     from dragnet_spark.scan import scan_ndjson
 
-    data = "/root/reference/tests/data/2014/05-01/one.log"
+    tree, tallies = events_tree
+    # the first file holds the first 86400/FILES_PER_DAY seconds
+    data = f"{tree}/{_label(START, TIME_FORMAT)}/0.log"
+    span = 86400 // FILES_PER_DAY
     idx = str(tmp_path / "hourly")
     ds = DatasourceConfig(name="i", path=data)
     df, resolver, _ = load_datasource(spark, ds, QueryConfig.load())
@@ -157,7 +176,9 @@ def test_hourly_interval_build_and_query(spark, tmp_path):
         p.split("=")[-1]
         for p in glob.glob(f"{idx}/ops/__dn_bucket=*")
     )
-    assert parts and all("T" in p for p in parts)  # hour-grain partitions
+    assert parts == sorted(
+        _label(h, "%Y-%m-%dT%H") for h in tallies.hour if h < START + span
+    )
 
     q = QueryConfig.load(
         "operation",
@@ -167,10 +188,12 @@ def test_hourly_interval_build_and_query(spark, tmp_path):
     )
     got = {tuple(r) for r in query_index(spark, idx, q).collect()}
     want = {tuple(r) for r in scan_ndjson(spark, data, q).collect()}
-    assert got == want and got
+    assert got == want
+    assert sum(n for _, n in got) == tallies.hour[START + 2 * 3600] > 0
 
 
-def test_bounded_rebuild_replaces_only_touched_buckets(spark, tmp_path):
+def test_bounded_rebuild_replaces_only_touched_buckets(spark, tmp_path,
+                                                       events_tree):
     """Incremental rebuild: a build bounded to one day rewrites only
     that day's bucket (dynamic partition overwrite); every other
     interval survives and query results are unchanged."""
@@ -178,7 +201,7 @@ def test_bounded_rebuild_replaces_only_touched_buckets(spark, tmp_path):
     from dragnet_spark.datasource import load_datasource
     from dragnet_spark.index.build import Metric
 
-    data = "/root/reference/tests/data"
+    data, tallies = events_tree
     idx = str(tmp_path / "incr")
     ds = DatasourceConfig(name="i", path=data)
     metrics = [
@@ -192,6 +215,7 @@ def test_bounded_rebuild_replaces_only_touched_buckets(spark, tmp_path):
                 resolver=resolver)
     q = QueryConfig.load("operation")
     before = {tuple(r) for r in query_index(spark, idx, q).collect()}
+    assert before == _ops(tallies)
 
     # rebuild ONLY 2014-05-02 from its files (pruned datasource load)
     bounds = QueryConfig.load(
@@ -199,7 +223,7 @@ def test_bounded_rebuild_replaces_only_touched_buckets(spark, tmp_path):
         time_before="2014-05-03T00:00:00Z",
         time_field="time",
     )
-    ds2 = DatasourceConfig(name="i", path=data, time_format="%Y/%m-%d",
+    ds2 = DatasourceConfig(name="i", path=data, time_format=TIME_FORMAT,
                            time_field="time")
     df2, resolver2, _ = load_datasource(spark, ds2, bounds)
     build_index(spark, df2, metrics, idx, interval="day", time_field="time",
@@ -214,11 +238,11 @@ def test_bounded_rebuild_replaces_only_touched_buckets(spark, tmp_path):
     days = sorted(
         p.split("=")[-1] for p in glob.glob(f"{idx}/ops/__dn_bucket=*")
     )
-    assert days == ["2014-05-01", "2014-05-02", "2014-05-03", "2014-05-04",
-                    "2014-05-05"]
+    assert days == [_label(START + d * 86400, "%Y-%m-%d") for d in range(DAYS)]
 
 
-def test_bounded_index_query_prunes_partitions(spark, tmp_path, capsys):
+def test_bounded_index_query_prunes_partitions(spark, tmp_path, capsys,
+                                               events_tree):
     """A bounded index query must prune bucket directories
     (PartitionFilters on __dn_bucket) AND push the record-level
     timestamp bounds into the parquet scan — the two layers that make
@@ -228,7 +252,7 @@ def test_bounded_index_query_prunes_partitions(spark, tmp_path, capsys):
     from dragnet_spark.index.build import Metric
 
     idx = str(tmp_path / "prune")
-    ds = DatasourceConfig(name="i", path="/root/reference/tests/data")
+    ds = DatasourceConfig(name="i", path=events_tree[0])
     df, r, _ = load_datasource(spark, ds, QueryConfig.load())
     build_index(
         spark, df,
@@ -244,8 +268,8 @@ def test_bounded_index_query_prunes_partitions(spark, tmp_path, capsys):
     query_index(spark, idx, q).explain("formatted")
     plan = capsys.readouterr().out
     assert "PartitionFilters: [isnotnull(__dn_bucket" in plan
-    assert "GreaterThanOrEqual(timestamp,1398988800)" in plan
-    assert "LessThan(timestamp,1399075200)" in plan
+    assert f"GreaterThanOrEqual(timestamp,{START + 86400})" in plan
+    assert f"LessThan(timestamp,{START + 2 * 86400})" in plan
 
 
 def test_view_files_are_clustered_on_breakdowns(spark, tables, tmp_path):

@@ -61,8 +61,9 @@ def _unresolved(path: str) -> list[str]:
 
 
 def test_tool_files_are_found():
-    files = _files()
-    assert os.path.exists(files[-1]) and len(files) > 30
+    found = {os.path.relpath(p, ROOT) for p in _files() if os.path.exists(p)}
+    assert {"bench.py", "tools/bench_octave.py",
+            "tools/check_correctness.py"} <= found
 
 
 @pytest.mark.parametrize(

@@ -49,6 +49,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from tools.bench_octave import gc_nudge  # noqa: E402
+
 ROOT = Path(__file__).resolve().parent.parent
 
 
@@ -60,14 +62,6 @@ def _du_bytes(path: str) -> int:
         return int(out.split()[0])
     except (IndexError, ValueError):
         return 0
-
-
-def _gc_nudge(spark) -> None:
-    try:
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(3)
-    except Exception:  # pragma: no cover — py4j hiccup
-        pass
 
 
 def _free_bytes(path: str) -> int:
@@ -122,7 +116,7 @@ def run(
         else:
             rec["build_s"] = None  # pre-existing store: build not timed
         rec["store_bytes"] = _du_bytes(path)
-        _gc_nudge(spark)
+        gc_nudge(spark)
 
         load_band_store_meta(path)  # version guard
         banded = spark.read.parquet(os.path.join(path, BAND_DIR)).select(
@@ -132,7 +126,7 @@ def run(
         n_cand = _collision_pairs(banded, "id", ["band", "bhash"]).count()
         rec["cand_s"] = round(time.time() - t0, 1)
         rec["n_candidates"] = n_cand
-        _gc_nudge(spark)
+        gc_nudge(spark)
 
         # verify exchange projection: two joins each shuffling the
         # semi-filtered shingle-set table (collision-family docs ×
@@ -242,7 +236,7 @@ def run(
         else:
             rec["build_s"] = None
         rec["store_bytes"] = _du_bytes(path)
-        _gc_nudge(spark)
+        gc_nudge(spark)
 
         banded = spark.read.parquet(os.path.join(path, SRP_DIR)).select(
             F.col("vec_id").alias("__id"), "band", "bucket"
@@ -251,7 +245,7 @@ def run(
         n_cand = _collision_pairs(banded, "__id", ["band", "bucket"]).count()
         rec["cand_s"] = round(time.time() - t0, 1)
         rec["n_candidates"] = n_cand
-        _gc_nudge(spark)
+        gc_nudge(spark)
 
         # verify projection: join #1's output (pair + one 64-dim
         # double array) shuffles for join #2 — the dominant exchange
