@@ -7,26 +7,21 @@ argument errors), and output formats (fixed-width datasource/metric
 listings, bin/dn:421-489,572-614; scan/query output via
 dragnet_spark.output.format).
 
-Commands:
-  datasource-add|-update|-remove|-list|-show
-  metric-add|-list|-remove
-  scan   — aggregate raw data        (bin/dn:869-896)
-  build  — materialize index views   (bin/dn:640-694)
-  query  — answer from index views   (bin/dn:837-864)
-  index-config — print the effective index definition (bin/dn:729-749)
-  index-scan   — emit the per-metric aggregated points a build would
-                 index, tagged __dn_metric (the distributed map phase,
-                 lib/datasource-manta.js:36-62)
-  index-read   — build index views from pre-aggregated points on stdin
-                 (the distributed reduce phase, lib/datasource-file.js:729-746)
-
-A SparkSession is only created for the commands that touch data;
-config CRUD is instant.
+Each subcommand is a ``cmd_*`` function whose docstring is its usage.
+``@command`` registers it in ``COMMANDS`` with its positional count
+and its option spec, the one place its options, their types and
+defaults are declared. ``main`` parses argv against that spec before
+any SparkSession exists, so an unknown option, a bad value, a missing
+required option or a wrong argument count is a usage error (exit 2),
+and the command receives typed values with defaults applied. A
+SparkSession is only created for the commands that touch data; config
+CRUD is instant.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 from typing import Any
 
@@ -56,114 +51,121 @@ class FatalError(Exception):
 
 # ------------------------------------------------------------ option parsing
 
-# name → (takes_value, default); shorts per the reference option table
-_OPT_DEFS = {
-    "after": True, "assetroot": True, "backend": True, "before": True,
-    "breakdowns": True, "counters": False, "data-format": True,
-    "dry-run": False, "filter": True, "gnuplot": False, "interval": True,
-    "index-config": True, "index-path": True, "path": True, "points": False,
-    "raw": False, "time-field": True, "time-format": True, "verbose": False,
-    "warnings": False,
-    # beyond-reference store subcommands (vindex-*, fp-*)
-    "out": True, "centroids": True, "k": True, "probe": True,
-    "queries": True, "id-field": True, "vec-field": True,
-    "text-field": True, "quantize": False, "hashes": True, "bands": True,
-    "bits": True, "vectors": True, "min-band-hits": True,
-    "stream-dir": True, "checkpoint": True, "no-recenter": False,
-    "target-rows-per-cell": True, "max-files": True,
-    # round-9: sink fold, profiler, LM store
-    "min-batches": True, "keep-last": True, "order-by": True,
-    "format": True, "docs": True, "min-count": True, "lam-pct": True,
-    "min-mean-logp": True, "gram-n": True, "m-bits": True,
-    "max-hit-frac": True, "src-field": True, "attribute": False,
-    # round-9: semdedup + KMV distinct
-    "iterations": True, "threshold": True, "id-col": True,
-    "vec-col": True, "col": True, "group-by": True, "exact": False,
-    "data": True, "glob": True,
-    # round-10: semdedup auto-k (the paper's k ∝ n regime) + graph CLI
-    "target-rows": True, "op": True, "seeds": True, "id-a": True,
-    "id-b": True, "top": True, "ids": True,
-    # round-11: hierarchical (n·√k) SemDeDup assignment
-    "two-level": False,
-    # round-13: store-amortized pair discovery (band-pairs / srp-pairs)
-    "bounded": False, "slices": True, "mode": True,
-    # round-14: corpus-sized auto-width SRP builds from the CLI, and
-    # discovery-only bounded collision joins (the 10^5-tier posture)
-    "seed": True, "dims": True, "no-pair-keys": False,
-    "candidates-only": False,
-}
-_SHORTS = {
+REQUIRED = object()  # spec default of a required string option
+INTERVALS = ("day", "hour", "all")
+_SHORTS = {  # per the reference option table
     "A": "after", "B": "before", "b": "breakdowns", "n": "dry-run",
     "f": "filter", "i": "interval", "v": "verbose",
 }
 
+# name → (function, positional count, {option name: spec default})
+COMMANDS: dict[str, tuple] = {}
 
-def _parse_args(argv: list[str], allowed: list[str]) -> dict:
-    """Minimal dashdash-alike: --opt=v, --opt v, -x v, interspersed
-    positionals collect into ``_args``. Unknown options are usage
-    errors, like the reference's allowUnknown: false."""
-    opts: dict[str, Any] = {"_args": []}
+
+def command(name: str, nargs: int, **spec):
+    """Register the decorated function as ``dn NAME`` taking ``nargs``
+    positionals and the options of ``spec`` (keyword ``_`` is ``-`` in
+    the option name). Each default sets its option's parse: ``False``
+    is a flag that takes no value; an int, float or str default gives
+    that type; ``None`` is an optional string; the type ``int`` or
+    ``float`` an optional number defaulting to None; ``REQUIRED`` a
+    required string; a tuple a choice whose first element is the
+    default. ``breakdowns`` repeats into a list and ``filter`` is
+    decoded as JSON. The function is called as
+    ``fn(cat, out, opts, *args)``, ``opts`` keyed with ``_``."""
+
+    def register(fn):
+        COMMANDS[name] = (
+            fn, nargs, {k.replace("_", "-"): v for k, v in spec.items()}
+        )
+        return fn
+
+    return register
+
+
+def _value(name: str, default, raw: str):
+    """``raw`` parsed as the option whose spec default is ``default``."""
+    if name == "filter":
+        try:
+            return json.loads(raw)
+        except json.JSONDecodeError as e:
+            raise UsageError(f"invalid filter: {e.msg}")
+    typ = (default if isinstance(default, type)
+           else type(default) if isinstance(default, (int, float)) else str)
+    try:
+        val = typ(raw)
+        if isinstance(default, tuple) and val not in default:
+            raise ValueError(raw)
+    except ValueError:
+        raise UsageError(f'bad value for "{name}" ("{raw}")')
+    return val
+
+
+def _missing(name: str) -> UsageError:
+    return UsageError(f'"{name}" option is required')
+
+
+def _parse_args(argv: list[str], nargs: int, spec: dict) -> tuple[list, dict]:
+    """Minimal dashdash-alike: --opt=v, --opt v, -x v; interspersed
+    positionals collect into the first result, and must number
+    ``nargs``. Unknown options are usage errors, like the reference's
+    allowUnknown: false. Returns the positionals and every option of
+    ``spec`` as its typed value or its default."""
+    args: list[str] = []
+    given: dict[str, Any] = {}
     i = 0
     while i < len(argv):
         a = argv[i]
-        name = None
-        inline = None
+        name = inline = None
         if a.startswith("--") and len(a) > 2:
-            body = a[2:]
-            if "=" in body:
-                name, inline = body.split("=", 1)
-            else:
-                name = body
+            name, eq, inline = a[2:].partition("=")
+            inline = inline if eq else None
         elif a.startswith("-") and len(a) > 1 and not a[1:].isdigit():
-            short = a[1:]
-            if short not in _SHORTS:
-                raise UsageError(f'unknown option: "-{short}"')
-            name = _SHORTS[short]
+            if a[1:] not in _SHORTS:
+                raise UsageError(f'unknown option: "{a}"')
+            name = _SHORTS[a[1:]]
         if name is None:
-            opts["_args"].append(a)
+            args.append(a)
             i += 1
             continue
-        if name not in allowed:
+        if name not in spec:
             raise UsageError(f'unknown option: "--{name}"')
-        if _OPT_DEFS[name]:
-            if inline is not None:
-                val = inline
-            else:
-                if i + 1 >= len(argv):
-                    raise UsageError(f'option "--{name}" requires an argument')
-                i += 1
-                val = argv[i]
-            key = name.replace("-", "_")
-            if name == "breakdowns":
-                # comma-splitting is bracket-aware and happens in the
-                # field-spec parser (reference: dnExpandArray → attrsParse)
-                opts.setdefault("breakdowns", []).append(val)
-            else:
-                opts[key] = val
-        else:
+        if spec[name] is False:
             if inline is not None:
                 # '--quantize=false' silently ENABLING quantization is
                 # the worst parse outcome; flags take no value at all
                 raise UsageError(
                     f'option "--{name}" is a flag and takes no value'
                 )
-            opts[name.replace("-", "_")] = True
+            given[name] = True
+        else:
+            if inline is None:
+                if i + 1 >= len(argv):
+                    raise UsageError(f'option "--{name}" requires an argument')
+                i += 1
+                inline = argv[i]
+            val = _value(name, spec[name], inline)
+            if name == "breakdowns":
+                # comma-splitting is bracket-aware and happens in the
+                # field-spec parser (reference: dnExpandArray → attrsParse)
+                given.setdefault(name, []).append(val)
+            else:
+                given[name] = val
         i += 1
-    if "filter" in opts:
-        try:
-            opts["filter"] = json.loads(opts["filter"])
-        except json.JSONDecodeError as e:
-            raise UsageError(f"invalid filter: {e.msg}")
-    return opts
-
-
-def _nargs(opts: dict, n: int) -> list[str]:
-    args = opts["_args"]
-    if len(args) < n:
+    if len(args) < nargs:
         raise UsageError("missing arguments")
-    if len(args) > n:
-        raise UsageError('extra arguments: "%s"' % " ".join(args[n:]))
-    return args
+    if len(args) > nargs:
+        raise UsageError('extra arguments: "%s"' % " ".join(args[nargs:]))
+    opts = {}
+    for name, default in spec.items():
+        if name not in given and default is REQUIRED:
+            raise _missing(name)
+        opts[name.replace("-", "_")] = given.get(
+            name,
+            default[0] if isinstance(default, tuple)
+            else None if isinstance(default, type) else default,
+        )
+    return args, opts
 
 
 # ------------------------------------------------------------- config output
@@ -192,102 +194,84 @@ def _print_datasource(out, name: str, ds: DatasourceConfig, verbose: bool):
 
 # ------------------------------------------------------------ config commands
 
-def _ds_config_from_opts(name: str, opts: dict) -> DatasourceConfig:
-    return DatasourceConfig(
-        name=name,
-        path=opts["path"],
-        backend=opts.get("backend", "file"),
-        data_format=opts.get("data_format", "json"),
-        index_path=opts.get("index_path"),
-        time_format=opts.get("time_format"),
-        time_field=opts.get("time_field"),
-        filter=opts.get("filter"),
-    )
-
-
-def cmd_datasource_add(argv, cat: Catalog, out):
-    opts = _parse_args(argv, ["backend", "data-format", "filter", "path",
-                              "time-field", "time-format", "index-path"])
-    if "path" not in opts:
-        raise UsageError('"path" option is required')
-    (name,) = _nargs(opts, 1)
-    cat.datasource_add(_ds_config_from_opts(name, opts))
+@command("datasource-add", 1, path=REQUIRED, backend="file",
+         data_format="json", filter=None, index_path=None, time_format=None,
+         time_field=None)
+def cmd_datasource_add(cat: Catalog, out, opts, name):
+    """dn datasource-add <name> --path=PATH [--backend=file]
+    [--data-format=json] [-f FILTER] [--index-path=DIR]
+    [--time-format=FMT] [--time-field=FIELD]: add a datasource."""
+    cat.datasource_add(DatasourceConfig(name=name, **opts))
     cat.save()
 
 
-def cmd_datasource_update(argv, cat: Catalog, out):
-    opts = _parse_args(argv, ["backend", "data-format", "filter", "path",
-                              "time-field", "time-format", "index-path"])
-    (name,) = _nargs(opts, 1)
+@command("datasource-update", 1, path=None, backend=None, data_format=None,
+         filter=None, index_path=None, time_format=None, time_field=None)
+def cmd_datasource_update(cat: Catalog, out, opts, name):
+    """dn datasource-update <name> [datasource-add's options]: change
+    the given fields of a datasource; the others keep their values."""
     old = cat.datasource(name)
-    merged = DatasourceConfig(
-        name=name,
-        path=opts.get("path", old.path),
-        backend=opts.get("backend", old.backend),
-        data_format=opts.get("data_format", old.data_format),
-        index_path=opts.get("index_path", old.index_path),
-        time_format=opts.get("time_format", old.time_format),
-        time_field=opts.get("time_field", old.time_field),
-        filter=opts.get("filter", old.filter),
-    )
+    merged = DatasourceConfig(name=name, **{
+        k: getattr(old, k) if v is None else v for k, v in opts.items()
+    })
     cat.datasource_add(merged, update=True)
     cat.save()
 
 
-def cmd_datasource_remove(argv, cat: Catalog, out):
-    opts = _parse_args(argv, [])
-    (name,) = _nargs(opts, 1)
+@command("datasource-remove", 1)
+def cmd_datasource_remove(cat: Catalog, out, opts, name):
+    """dn datasource-remove <name>"""
     cat.datasource_remove(name)
     cat.save()
 
 
-def cmd_datasource_list(argv, cat: Catalog, out):
-    opts = _parse_args(argv, ["verbose"])
-    _nargs(opts, 0)
+@command("datasource-list", 0, verbose=False)
+def cmd_datasource_list(cat: Catalog, out, opts):
+    """dn datasource-list [-v]"""
     out.write("%-20s %-59s\n" % ("DATASOURCE", "LOCATION"))
     for name in cat.datasources:
-        _print_datasource(out, name, cat.datasources[name], opts.get("verbose", False))
+        _print_datasource(out, name, cat.datasources[name], opts["verbose"])
 
 
-def cmd_datasource_show(argv, cat: Catalog, out):
-    opts = _parse_args(argv, ["verbose"])
-    (name,) = _nargs(opts, 1)
+@command("datasource-show", 1, verbose=False)
+def cmd_datasource_show(cat: Catalog, out, opts, name):
+    """dn datasource-show [-v] <name>"""
     ds = cat.datasource(name)
     out.write("%-20s %-59s\n" % ("DATASOURCE", "LOCATION"))
-    _print_datasource(out, name, ds, opts.get("verbose", False))
+    _print_datasource(out, name, ds, opts["verbose"])
 
 
-def cmd_metric_add(argv, cat: Catalog, out):
+@command("metric-add", 2, breakdowns=None, filter=None)
+def cmd_metric_add(cat: Catalog, out, opts, dsname, metname):
+    """dn metric-add <datasource> <metric> [-b BREAKDOWNS]... [-f FILTER]"""
     from dragnet_spark.fieldspec import parse_breakdowns
 
-    opts = _parse_args(argv, ["breakdowns", "filter"])
-    dsname, metname = _nargs(opts, 2)
-    parsed = parse_breakdowns(opts.get("breakdowns", []))
+    parsed = parse_breakdowns(opts["breakdowns"] or [])
     cat.metric_add(
         MetricConfig(
             name=metname,
             datasource=dsname,
             breakdowns=[{"name": b.name, **b.attrs} for b in parsed],
-            filter=opts.get("filter"),
+            filter=opts["filter"],
         )
     )
     cat.save()
 
 
-def cmd_metric_remove(argv, cat: Catalog, out):
-    opts = _parse_args(argv, [])
-    dsname, metname = _nargs(opts, 2)
+@command("metric-remove", 2)
+def cmd_metric_remove(cat: Catalog, out, opts, dsname, metname):
+    """dn metric-remove <datasource> <metric>"""
     cat.metric_remove(dsname, metname)
     cat.save()
 
 
-def cmd_metric_list(argv, cat: Catalog, out):
-    opts = _parse_args(argv, ["verbose"])
-    (dsname,) = _nargs(opts, 1)
+@command("metric-list", 1, verbose=False)
+def cmd_metric_list(cat: Catalog, out, opts, dsname):
+    """dn metric-list [-v] <datasource>"""
     out.write("%-20s %-20s\n" % ("DATASOURCE", "METRIC"))
     for m in cat.metrics_for(dsname):
         out.write("%-20s %-20s\n" % (m.datasource, m.name))
-        if not opts.get("verbose"):
+        if not opts["verbose"]:
             continue
         if m.filter is not None:
             out.write("    %-11s %s\n" % ("filter:", json.dumps(m.filter, separators=(",", ":"))))
@@ -327,38 +311,42 @@ def _query_from_opts(opts: dict, ds: DatasourceConfig) -> QueryConfig:
     return query
 
 
-def _metrics_for_build(cat: Catalog, dsname: str, opts: dict):
+def _metrics_for_build(cat: Catalog, ds: DatasourceConfig, opts: dict):
+    """The metrics an index of ``ds`` at ``--interval`` holds:
+    ``--index-config``'s, else the catalog's."""
     from dragnet_spark.index.build import Metric
 
-    if "index_config" in opts:
+    if opts["interval"] != "all" and not ds.time_field:
+        raise FatalError(
+            f'datasource "{ds.name}" has no time field, which '
+            f'--interval={opts["interval"]} needs (use --interval=all)'
+        )
+    if opts["index_config"] is not None:
         with open(opts["index_config"]) as f:
             cfg = json.load(f)
         return [Metric.from_json(m) for m in cfg.get("metrics", [])]
-    out = [
+    return [
         Metric.load(m.name, [dict(b) for b in m.breakdowns], m.filter)
-        for m in cat.metrics_for(dsname)
+        for m in cat.metrics_for(ds.name)
     ]
-    return out
 
 
 def _index_root(ds: DatasourceConfig, interval: str) -> str:
     """Per-interval index subtree (reference: by_day/ by_hour/ under
     indexPath, lib/dragnet-impl.js:194-236) — day and hour indexes for
     one datasource coexist; --interval selects at query time."""
-    import os
-
+    if not ds.index_path:
+        raise FatalError(f'datasource "{ds.name}" has no index path configured')
     return os.path.join(ds.index_path, f"by_{interval}")
 
 
 def _render_result(df, query, opts, out, title):
     from dragnet_spark.output.format import render
 
-    if opts.get("gnuplot") and len(query.breakdowns) != 1:
-        raise FatalError("--gnuplot can only be used with exactly one breakdown")
     mode = (
-        "points" if opts.get("points")
-        else "raw" if opts.get("raw")
-        else "gnuplot" if opts.get("gnuplot")
+        "points" if opts["points"]
+        else "raw" if opts["raw"]
+        else "gnuplot" if opts["gnuplot"]
         else "table"
     )
     out.write(render(df, query, mode=mode, title=title))
@@ -408,18 +396,21 @@ def _print_counters(observations: dict, noutputs: int) -> None:
     line("Aggregator", "noutputs", noutputs)
 
 
-def cmd_scan(argv, cat: Catalog, out):
+@command("scan", 1, before=None, after=None, filter=None, breakdowns=None,
+         raw=False, points=False, counters=False, warnings=False,
+         gnuplot=False, assetroot=None, dry_run=False)
+def cmd_scan(cat: Catalog, out, opts, dsname):
+    """dn scan <datasource> [-A AFTER] [-B BEFORE] [-f FILTER]
+    [-b BREAKDOWNS]... [--raw|--points|--gnuplot] [--counters]
+    [--warnings] [-n]: aggregate raw data (bin/dn:869-896); --dry-run
+    lists the files the time bounds keep."""
     from dragnet_spark.datasource import list_files, load_datasource, resolve_paths
     from dragnet_spark.scan import scan
 
-    opts = _parse_args(argv, ["before", "after", "filter", "breakdowns", "raw",
-                              "points", "counters", "warnings", "gnuplot",
-                              "assetroot", "dry-run"])
-    (dsname,) = _nargs(opts, 1)
     ds = cat.datasource(dsname)
     query = _query_from_opts(opts, ds)
 
-    if opts.get("dry_run"):
+    if opts["dry_run"]:
         out.write("would scan files:\n")
         for f in list_files(resolve_paths(ds, query)):
             out.write("    %s\n" % f)
@@ -427,7 +418,7 @@ def cmd_scan(argv, cat: Catalog, out):
 
     spark = _get_spark()
     # --warnings reads the parser counts of the scan's own pass
-    want_obs = opts.get("counters") or opts.get("warnings")
+    want_obs = opts["counters"] or opts["warnings"]
     observations = {} if want_obs else None
     df, resolver, value_col = load_datasource(
         spark, ds, query, observations=observations
@@ -440,33 +431,34 @@ def cmd_scan(argv, cat: Catalog, out):
                observations=observations)
     rows = [tuple(r) for r in res.collect()]
     _render_result(rows, query, opts, out, dsname)
-    if opts.get("counters"):
+    if opts["counters"]:
         _print_counters(observations, len(rows))
-    if opts.get("warnings") and "json parser" in observations:
+    if opts["warnings"] and "json parser" in observations:
         n = (observations["json parser"].get["ninputs"]
              - observations["adapter"].get["noutputs"])
         if n:
             sys.stderr.write("warn: %d unparseable input lines\n" % n)
 
 
-def cmd_build(argv, cat: Catalog, out):
+@command("build", 1, after=None, before=None, counters=False, dry_run=False,
+         index_config=None, interval=INTERVALS, warnings=False,
+         assetroot=None)
+def cmd_build(cat: Catalog, out, opts, dsname):
+    """dn build <datasource> [-A AFTER] [-B BEFORE] [-i day|hour|all]
+    [--index-config=FILE] [-n]: materialize index views
+    (bin/dn:640-694)."""
     from dragnet_spark.datasource import load_datasource
     from dragnet_spark.index.build import build_index
 
-    opts = _parse_args(argv, ["after", "before", "counters", "dry-run",
-                              "index-config", "interval", "warnings",
-                              "assetroot"])
-    (dsname,) = _nargs(opts, 1)
     ds = cat.datasource(dsname)
-    if not ds.index_path:
-        raise FatalError(f'datasource "{dsname}" has no index path configured')
-    metrics = _metrics_for_build(cat, dsname, opts)
+    interval = opts["interval"]
+    root = _index_root(ds, interval)
+    metrics = _metrics_for_build(cat, ds, opts)
     if not metrics:
         raise FatalError(f'datasource "{dsname}" has no metrics configured')
-    interval = opts.get("interval", "day")
     query = _query_from_opts(opts, ds)
 
-    if opts.get("dry_run"):
+    if opts["dry_run"]:
         out.write('would build %s index for "%s" (%d metrics)\n'
                   % (interval, dsname, len(metrics)))
         return
@@ -476,7 +468,7 @@ def cmd_build(argv, cat: Catalog, out):
     if df is None:
         raise FatalError("no input files in the requested time range")
     build_index(
-        spark, df, metrics, _index_root(ds, interval), interval=interval,
+        spark, df, metrics, root, interval=interval,
         time_field=ds.time_field, datasource_filter=ds.filter,
         resolver=resolver,
         time_after=query.time_after, time_before=query.time_before,
@@ -484,40 +476,39 @@ def cmd_build(argv, cat: Catalog, out):
     sys.stderr.write('indexes for "%s" built\n' % dsname)
 
 
-def cmd_query(argv, cat: Catalog, out):
+@command("query", 1, before=None, after=None, filter=None, breakdowns=None,
+         raw=False, points=False, counters=False, interval=INTERVALS,
+         gnuplot=False, assetroot=None, dry_run=False)
+def cmd_query(cat: Catalog, out, opts, dsname):
+    """dn query <datasource> [scan's options] [-i day|hour|all]: answer
+    from index views (bin/dn:837-864); --dry-run names the index it
+    would read."""
     from dragnet_spark.index.query import NoMetricError, query_index
 
-    opts = _parse_args(argv, ["before", "after", "filter", "breakdowns", "raw",
-                              "points", "counters", "interval", "gnuplot",
-                              "assetroot", "dry-run"])
-    (dsname,) = _nargs(opts, 1)
     ds = cat.datasource(dsname)
-    if not ds.index_path:
-        raise FatalError(f'datasource "{dsname}" has no index path configured')
-    query = _query_from_opts(opts, ds)
-    import os
-
-    interval = opts.get("interval", "day")
+    interval = opts["interval"]
     idx = _index_root(ds, interval)
+    query = _query_from_opts(opts, ds)
+    missing = f'no index found for "{dsname}" (run "dn build {dsname}" first)'
     if not os.path.exists(idx):
-        raise FatalError(
-            f'no index found for "{dsname}" (run "dn build {dsname}" first)'
-        )
+        raise FatalError(missing)
+    if opts["dry_run"]:
+        out.write('would query %s index for "%s"\n' % (interval, dsname))
+        return
     spark = _get_spark()
     try:
         res = query_index(spark, idx, query)
     except NoMetricError:
         raise FatalError("no metrics available to serve query")
     except FileNotFoundError:
-        raise FatalError(
-            f'no index found for "{dsname}" (run "dn build {dsname}" first)'
-        )
+        raise FatalError(missing)
     _render_result(res, query, opts, out, dsname)
 
 
-def cmd_index_config(argv, cat: Catalog, out):
-    opts = _parse_args(argv, [])
-    (dsname,) = _nargs(opts, 1)
+@command("index-config", 1)
+def cmd_index_config(cat: Catalog, out, opts, dsname):
+    """dn index-config <datasource>: print the effective index
+    definition (bin/dn:729-749)."""
     cat.datasource(dsname)
     metrics = [
         {"name": m.name, "filter": m.filter,
@@ -527,29 +518,29 @@ def cmd_index_config(argv, cat: Catalog, out):
     out.write(json.dumps({"metrics": metrics}, separators=(",", ":")) + "\n")
 
 
-def cmd_index_scan(argv, cat: Catalog, out):
-    """Map phase of a distributed build: emit each metric's aggregated
-    points — the aggregate ``dn build`` writes — tagged with
-    __dn_metric, ready to pipe into index-read."""
+@command("index-scan", 1, before=None, after=None, counters=False,
+         index_config=None, interval=INTERVALS)
+def cmd_index_scan(cat: Catalog, out, opts, dsname):
+    """dn index-scan <datasource> [-A AFTER] [-B BEFORE]
+    [-i day|hour|all] [--index-config=FILE]: map phase of a
+    distributed build (lib/datasource-manta.js:36-62): emit each
+    metric's aggregated points — the aggregate ``dn build`` writes —
+    tagged with __dn_metric, ready to pipe into index-read."""
     from dragnet_spark.datasource import load_datasource
     from dragnet_spark.index.build import aggregate_metrics
     from dragnet_spark.output.format import format_points
 
-    opts = _parse_args(argv, ["before", "after", "filter", "breakdowns",
-                              "counters", "index-config", "interval"])
-    (dsname,) = _nargs(opts, 1)
     ds = cat.datasource(dsname)
-    metrics = _metrics_for_build(cat, dsname, opts)
+    metrics = _metrics_for_build(cat, ds, opts)
     if not metrics:
         raise FatalError(f'datasource "{dsname}" has no metrics configured')
-    interval = opts.get("interval", "day")
     query = _query_from_opts(opts, ds)
     spark = _get_spark()
     df, resolver, _vc = load_datasource(spark, ds, query)
     if df is None:
         return
     results = aggregate_metrics(
-        df, metrics, interval, ds.time_field, ds.filter, resolver,
+        df, metrics, opts["interval"], ds.time_field, ds.filter, resolver,
         query.time_after, query.time_before,
     )
     for i, (_m, keys, res) in enumerate(results):
@@ -560,10 +551,41 @@ def cmd_index_scan(argv, cat: Catalog, out):
             out.write(json.dumps(obj, separators=(",", ":")) + "\n")
 
 
-def cmd_index_read(argv, cat: Catalog, out):
-    """Reduce phase of a distributed build: read tagged points from
-    stdin and write them as the index views, with the build's writer
-    (only the buckets the points hold are replaced)."""
+def _point_row(line: str, metrics, interval: str) -> tuple:
+    """One index-scan point as a (metric id, key strings, value) row of
+    the build's fan-out aggregate, so select_metric restores the typed
+    columns; a number's key string is its JSON text. A ValueError says
+    what is wrong with the point."""
+    from dragnet_spark.index.build import metric_keys
+
+    pt = json.loads(line)
+    if not (isinstance(pt, dict) and isinstance(pt.get("fields"), dict)
+            and "value" in pt):
+        raise ValueError('a point needs "fields" and "value"')
+    fields = pt["fields"]
+    i = fields.pop("__dn_metric", 0)
+    if type(i) is not int or not 0 <= i < len(metrics):
+        raise ValueError(
+            f"__dn_metric {json.dumps(i)} is not one of {len(metrics)} metrics"
+        )
+    if type(pt["value"]) is not int:
+        raise ValueError(f'value {json.dumps(pt["value"])} is not an integer')
+    keys = []
+    for b in metric_keys(metrics[i], interval):
+        if b.name not in fields:
+            raise ValueError(f'missing breakdown "{b.name}"')
+        k = fields[b.name]
+        keys.append(k if isinstance(k, str) else json.dumps(k))
+    return i, keys, pt["value"]
+
+
+@command("index-read", 1, index_config=None, interval=INTERVALS)
+def cmd_index_read(cat: Catalog, out, opts, dsname):
+    """dn index-read <datasource> [-i day|hour|all]
+    [--index-config=FILE] < POINTS: reduce phase of a distributed build
+    (lib/datasource-file.js:729-746): read index-scan's tagged points
+    from stdin and write them as the index views, with the build's
+    writer (only the buckets the points hold are replaced)."""
     from dragnet_spark.index.build import (
         metric_keys,
         select_metric,
@@ -571,31 +593,22 @@ def cmd_index_read(argv, cat: Catalog, out):
         write_view,
     )
 
-    opts = _parse_args(argv, ["index-config", "interval"])
-    (dsname,) = _nargs(opts, 1)
     ds = cat.datasource(dsname)
-    if not ds.index_path:
-        raise FatalError(f'datasource "{dsname}" has no index path configured')
-    metrics = _metrics_for_build(cat, dsname, opts)
-    interval = opts.get("interval", "day")
-    spark = _get_spark()
-
-    # points → the (metric id, key strings, value) rows of the build's
-    # fan-out aggregate, so select_metric restores the typed columns;
-    # a number's key string is its JSON text
-    rows = []
-    for line in sys.stdin:
+    interval = opts["interval"]
+    root = _index_root(ds, interval)
+    metrics = _metrics_for_build(cat, ds, opts)
+    rows = []  # every line is checked before any view is written
+    for n, line in enumerate(sys.stdin, 1):
         if not line.strip():
             continue
-        pt = json.loads(line)
-        fields = pt["fields"]
-        i = int(fields.pop("__dn_metric", 0))
-        keys = [fields[b.name] for b in metric_keys(metrics[i], interval)]
-        rows.append((i, [k if isinstance(k, str) else json.dumps(k) for k in keys],
-                     pt["value"]))
+        try:
+            rows.append(_point_row(line, metrics, interval))
+        except json.JSONDecodeError as e:
+            raise FatalError(f"index-read: line {n}: invalid JSON: {e.msg}")
+        except ValueError as e:
+            raise FatalError(f"index-read: line {n}: {e}")
+    spark = _get_spark()
     points = spark.createDataFrame(rows, "__m int, __k array<string>, value long")
-
-    root = _index_root(ds, interval)
     for i in sorted({r[0] for r in rows}):
         m = metrics[i]
         write_view(select_metric(points, i, metric_keys(m, interval)),
@@ -603,33 +616,30 @@ def cmd_index_read(argv, cat: Catalog, out):
     write_index_meta(root, metrics, interval, ds.time_field, ds.filter)
 
 
-def cmd_compact(argv, cat: Catalog, out):
+@command("compact", 1, interval=INTERVALS, dry_run=False)
+def cmd_compact(cat: Catalog, out, opts, dsname):
     """dn compact <datasource> [--interval=day]: re-aggregate a view
     tree that accumulated appended partials (continuous builds) down to
     one row per group — answers unchanged, file count bounded. Stop
     any continuous build writing this tree first (overwrite-based
     maintenance is not concurrent-writer safe)."""
-    import os
-
     from dragnet_spark.index.build import compact_index
 
-    opts = _parse_args(argv, ["interval", "dry-run"])
-    (dsname,) = _nargs(opts, 1)
     ds = cat.datasource(dsname)
-    if not ds.index_path:
-        raise FatalError(f'datasource "{dsname}" has no index path configured')
-    interval = opts.get("interval", "day")
+    interval = opts["interval"]
     root = _index_root(ds, interval)
     if not os.path.isdir(root):
         raise FatalError(f"no {interval} index at {root}")
-    if opts.get("dry_run"):
+    if opts["dry_run"]:
         out.write('would compact %s index for "%s"\n' % (interval, dsname))
         return
     compact_index(_get_spark(), root)
     out.write('compacted %s index for "%s"\n' % (interval, dsname))
 
 
-def cmd_vindex_build(argv, cat: Catalog, out):
+@command("vindex-build", 1, out=REQUIRED, centroids=16, quantize=False,
+         id_field="vec_id", vec_field="embedding", target_rows_per_cell=int)
+def cmd_vindex_build(cat: Catalog, out, opts, src):
     """dn vindex-build <embeddings.parquet> --out=PATH
     [--centroids=16] [--quantize] [--id-field=vec_id]
     [--vec-field=embedding] [--target-rows-per-cell=N]: materialize
@@ -641,28 +651,16 @@ def cmd_vindex_build(argv, cat: Catalog, out):
     (auto_cell_count) so continuous ingest keeps probe cost flat."""
     from dragnet_spark.index.vector import build_vector_index
 
-    opts = _parse_args(
-        argv,
-        ["out", "centroids", "quantize", "id-field", "vec-field",
-         "target-rows-per-cell"],
-    )
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
     spark = _get_spark()
     meta = build_vector_index(
         spark,
         spark.read.parquet(src),
         opts["out"],
-        id_col=opts.get("id_field", "vec_id"),
-        vec_col=opts.get("vec_field", "embedding"),
-        n_centroids=int(opts.get("centroids", "16")),
-        quantize=bool(opts.get("quantize")),
-        target_rows_per_cell=(
-            int(opts["target_rows_per_cell"])
-            if "target_rows_per_cell" in opts
-            else None
-        ),
+        id_col=opts["id_field"],
+        vec_col=opts["vec_field"],
+        n_centroids=opts["centroids"],
+        quantize=opts["quantize"],
+        target_rows_per_cell=opts["target_rows_per_cell"],
     )
     out.write(
         "built vector index: %d cells, %d dims%s at %s\n"
@@ -675,7 +673,8 @@ def cmd_vindex_build(argv, cat: Catalog, out):
     )
 
 
-def cmd_vindex_append(argv, cat: Catalog, out):
+@command("vindex-append", 1, out=REQUIRED)
+def cmd_vindex_append(cat: Catalog, out, opts, src):
     """dn vindex-append <embeddings.parquet> --out=PATH: append a
     batch into an existing vector index against its PERSISTED
     centroids (index/vector.append_vector_index) — continuous ingest
@@ -683,134 +682,116 @@ def cmd_vindex_append(argv, cat: Catalog, out):
     trigger."""
     from dragnet_spark.index.vector import append_vector_index
 
-    opts = _parse_args(argv, ["out"])
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
     spark = _get_spark()
     append_vector_index(spark, spark.read.parquet(src), opts["out"])
     out.write("appended into vector index at %s\n" % opts["out"])
 
 
-def cmd_vindex_query(argv, cat: Catalog, out):
+@command("vindex-query", 1, queries=REQUIRED, k=5, probe=4,
+         id_field="vec_id", vec_field="embedding")
+def cmd_vindex_query(cat: Catalog, out, opts, idx):
     """dn vindex-query <index-path> --queries=<parquet> [--k=5]
     [--probe=4] [--id-field=vec_id] [--vec-field=embedding]: top-k
     neighbors from the materialized index as NDJSON lines (the
     points-emitter convention)."""
     from dragnet_spark.index.vector import query_vector_index
 
-    opts = _parse_args(
-        argv, ["queries", "k", "probe", "id-field", "vec-field"]
-    )
-    (idx,) = _nargs(opts, 1)
-    if "queries" not in opts:
-        raise UsageError('"queries" option is required')
     spark = _get_spark()
     res = query_vector_index(
         spark,
         idx,
         spark.read.parquet(opts["queries"]),
-        k=int(opts.get("k", "5")),
-        n_probe=int(opts.get("probe", "4")),
-        id_col=opts.get("id_field", "vec_id"),
-        vec_col=opts.get("vec_field", "embedding"),
+        k=opts["k"],
+        n_probe=opts["probe"],
+        id_col=opts["id_field"],
+        vec_col=opts["vec_field"],
     )
     # presentation-layer collect: the final top-k result only
     for line in res.orderBy("query_id", "rank").toJSON().collect():
         out.write(line + "\n")
 
 
-def cmd_fp_build(argv, cat: Catalog, out):
+def _print_probe(out, res, cols, flag: str, summary: str) -> None:
+    """A store probe's result as NDJSON, ordered by ``cols[0]``: the
+    ``cols`` then ``flag`` as a bool; then ``summary`` filled with the
+    flagged and total row counts."""
+    rows = res.orderBy(cols[0]).collect()  # presentation-layer: final result only
+    for r in rows:
+        rec = {c: r[c] for c in cols}
+        rec[flag] = bool(r[flag])
+        out.write(json.dumps(rec) + "\n")
+    out.write(summary % (sum(1 for r in rows if r[flag]), len(rows)))
+
+
+@command("fp-build", 1, out=REQUIRED, id_field="doc_id", text_field="text")
+def cmd_fp_build(cat: Catalog, out, opts, src):
     """dn fp-build <docs.parquet> --out=PATH [--id-field=doc_id]
     [--text-field=text]: materialize the fingerprint store
     (beyond-reference; index/fingerprints.py) for incremental-ingest
     dedup."""
     from dragnet_spark.index.fingerprints import build_fingerprint_store
 
-    opts = _parse_args(argv, ["out", "id-field", "text-field"])
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
     spark = _get_spark()
     build_fingerprint_store(
         spark,
         spark.read.parquet(src),
         opts["out"],
-        text_col=opts.get("text_field", "text"),
-        id_col=opts.get("id_field", "doc_id"),
+        text_col=opts["text_field"],
+        id_col=opts["id_field"],
     )
     out.write("built fingerprint store at %s\n" % opts["out"])
 
 
-def cmd_fp_probe(argv, cat: Catalog, out):
+@command("fp-probe", 1, queries=REQUIRED, id_field="doc_id",
+         text_field="text")
+def cmd_fp_probe(cat: Catalog, out, opts, store):
     """dn fp-probe <store-path> --queries=<parquet>
     [--id-field=doc_id] [--text-field=text]: probe an arriving batch
     against the store; prints per-doc NDJSON (doc_id, dup_of,
     is_duplicate) and a summary line."""
     from dragnet_spark.index.fingerprints import probe_new_documents
 
-    opts = _parse_args(argv, ["queries", "id-field", "text-field"])
-    (store,) = _nargs(opts, 1)
-    if "queries" not in opts:
-        raise UsageError('"queries" option is required')
     spark = _get_spark()
     res = probe_new_documents(
         spark,
         store,
         spark.read.parquet(opts["queries"]),
-        text_col=opts.get("text_field", "text"),
-        id_col=opts.get("id_field", "doc_id"),
-    ).orderBy("doc_id")
-    rows = res.collect()  # presentation-layer: final result only
-    for r in rows:
-        out.write(
-            json.dumps(
-                {
-                    "doc_id": r["doc_id"],
-                    "dup_of": r["dup_of"],
-                    "is_duplicate": bool(r["is_duplicate"]),
-                }
-            )
-            + "\n"
-        )
-    n_dup = sum(1 for r in rows if r["is_duplicate"])
-    out.write("%d of %d already ingested\n" % (n_dup, len(rows)))
+        text_col=opts["text_field"],
+        id_col=opts["id_field"],
+    )
+    _print_probe(out, res, ("doc_id", "dup_of"), "is_duplicate",
+                 "%d of %d already ingested\n")
 
 
-def cmd_fp_compact(argv, cat: Catalog, out):
+@command("fp-compact", 1)
+def cmd_fp_compact(cat: Catalog, out, opts, store):
     """dn fp-compact <store-path>: compact the fingerprint store —
     collapse each fingerprint to its minimum doc_id, one file per
     bucket (answer-preserving; pause appenders first)."""
     from dragnet_spark.index.fingerprints import compact_fingerprint_store
 
-    opts = _parse_args(argv, [])
-    (store,) = _nargs(opts, 1)
     compact_fingerprint_store(_get_spark(), store)
     out.write("compacted fingerprint store at %s\n" % store)
 
 
-def cmd_band_build(argv, cat: Catalog, out):
+@command("band-build", 1, out=REQUIRED, hashes=16, bands=8,
+         id_field="doc_id", text_field="text")
+def cmd_band_build(cat: Catalog, out, opts, src):
     """dn band-build <docs.parquet> --out=PATH [--hashes=16]
     [--bands=8] [--id-field=doc_id] [--text-field=text]: materialize
     the minhash band store (in-stream near-dedup;
     index/fingerprints.build_band_store)."""
     from dragnet_spark.index.fingerprints import build_band_store
 
-    opts = _parse_args(
-        argv, ["out", "hashes", "bands", "id-field", "text-field"]
-    )
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
     spark = _get_spark()
     meta = build_band_store(
         spark,
         spark.read.parquet(src),
         opts["out"],
-        text_col=opts.get("text_field", "text"),
-        id_col=opts.get("id_field", "doc_id"),
-        num_hashes=int(opts.get("hashes", "16")),
-        bands=int(opts.get("bands", "8")),
+        text_col=opts["text_field"],
+        id_col=opts["id_field"],
+        num_hashes=opts["hashes"],
+        bands=opts["bands"],
     )
     out.write(
         "built band store: %d hashes x %d bands at %s\n"
@@ -818,39 +799,24 @@ def cmd_band_build(argv, cat: Catalog, out):
     )
 
 
-def cmd_band_probe(argv, cat: Catalog, out):
+@command("band-probe", 1, queries=REQUIRED)
+def cmd_band_probe(cat: Catalog, out, opts, store):
     """dn band-probe <store-path> --queries=<parquet>: probe an
     arriving batch for NEAR-duplicates of the stored corpus; prints
     per-doc NDJSON (doc_id, n_band_hits, dup_of, is_near_duplicate)
     and a summary line."""
     from dragnet_spark.index.fingerprints import probe_near_duplicates
 
-    opts = _parse_args(argv, ["queries"])
-    (store,) = _nargs(opts, 1)
-    if "queries" not in opts:
-        raise UsageError('"queries" option is required')
     spark = _get_spark()
     res = probe_near_duplicates(
         spark, store, spark.read.parquet(opts["queries"])
-    ).orderBy("doc_id")
-    rows = res.collect()  # presentation-layer: final result only
-    for r in rows:
-        out.write(
-            json.dumps(
-                {
-                    "doc_id": r["doc_id"],
-                    "n_band_hits": r["n_band_hits"],
-                    "dup_of": r["dup_of"],
-                    "is_near_duplicate": bool(r["is_near_duplicate"]),
-                }
-            )
-            + "\n"
-        )
-    n_near = sum(1 for r in rows if r["is_near_duplicate"])
-    out.write("%d of %d near-duplicate the corpus\n" % (n_near, len(rows)))
+    )
+    _print_probe(out, res, ("doc_id", "n_band_hits", "dup_of"),
+                 "is_near_duplicate", "%d of %d near-duplicate the corpus\n")
 
 
-def cmd_band_append(argv, cat: Catalog, out):
+@command("band-append", 1, docs=REQUIRED)
+def cmd_band_append(cat: Catalog, out, opts, store):
     """dn band-append <store-path> --docs=<parquet>: append a new
     batch's band keys with the store's PERSISTED banding params —
     the ingest-loop step that pays the signature stage exactly once
@@ -858,27 +824,25 @@ def cmd_band_append(argv, cat: Catalog, out):
     (the srp-append twin for token-level near-dup)."""
     from dragnet_spark.index.fingerprints import append_band_keys
 
-    opts = _parse_args(argv, ["docs"])
-    (store,) = _nargs(opts, 1)
-    if "docs" not in opts:
-        raise UsageError('"docs" option is required')
     spark = _get_spark()
     append_band_keys(spark, spark.read.parquet(opts["docs"]), store)
     out.write("appended band keys into %s\n" % store)
 
 
-def cmd_band_compact(argv, cat: Catalog, out):
+@command("band-compact", 1)
+def cmd_band_compact(cat: Catalog, out, opts, store):
     """dn band-compact <store-path>: compact the band store to
     distinct (band, bhash, doc_id) rows, one file per band."""
     from dragnet_spark.index.fingerprints import compact_band_store
 
-    opts = _parse_args(argv, [])
-    (store,) = _nargs(opts, 1)
     compact_band_store(_get_spark(), store)
     out.write("compacted band store at %s\n" % store)
 
 
-def cmd_srp_build(argv, cat: Catalog, out):
+@command("srp-build", 1, out=REQUIRED, bands=8, bits="16", seed=42,
+         dims=int, no_pair_keys=False, id_field="vec_id",
+         vec_field="embedding")
+def cmd_srp_build(cat: Catalog, out, opts, src):
     """dn srp-build <embeddings.parquet> --out=PATH [--bands=8]
     [--bits=16|auto] [--seed=42] [--dims=N] [--no-pair-keys]
     [--id-field=vec_id] [--vec-field=embedding]:
@@ -892,24 +856,15 @@ def cmd_srp_build(argv, cat: Catalog, out):
     key dir (pair discovery via srp-pairs does not need it)."""
     from dragnet_spark.index.fingerprints import build_srp_store
 
-    opts = _parse_args(
-        argv,
-        [
-            "out", "bands", "bits", "seed", "dims",
-            "no-pair-keys", "id-field", "vec-field",
-        ],
-    )
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
+    bits = opts["bits"]
+    if bits != "auto":
+        bits = _value("bits", int, bits)
+    bands, seed, dims = opts["bands"], opts["seed"], opts["dims"]
+    vec_col = opts["vec_field"]
     spark = _get_spark()
     df = spark.read.parquet(src)
-    bands = int(opts.get("bands", "8"))
-    seed = int(opts.get("seed", "42"))
-    vec_col = opts.get("vec_field", "embedding")
-    dims = int(opts["dims"]) if "dims" in opts else None
     kwargs = {}
-    if opts.get("bits", "16") == "auto":
+    if bits == "auto":
         from pyspark.sql import functions as F
 
         from dragnet_spark.ops.dedup import auto_srp_width
@@ -928,19 +883,17 @@ def cmd_srp_build(argv, cat: Catalog, out):
             dims = int(first["d"])
         n = df.count()
         bits, kwargs["planes_q"] = auto_srp_width(n, bands, dims, seed)
-    else:
-        bits = int(opts.get("bits", "16"))
     meta = build_srp_store(
         spark,
         df,
         opts["out"],
         vec_col=vec_col,
-        id_col=opts.get("id_field", "vec_id"),
+        id_col=opts["id_field"],
         bands=bands,
         bits_per_band=bits,
         seed=seed,
         dims=dims,
-        with_pairs="no_pair_keys" not in opts,
+        with_pairs=not opts["no_pair_keys"],
         **kwargs,
     )
     out.write(
@@ -949,21 +902,19 @@ def cmd_srp_build(argv, cat: Catalog, out):
     )
 
 
-def cmd_srp_append(argv, cat: Catalog, out):
+@command("srp-append", 1, vectors=REQUIRED)
+def cmd_srp_append(cat: Catalog, out, opts, store):
     """dn srp-append <store-path> --vectors=<parquet>: append a new
     batch's band keys with the store's PERSISTED planes."""
     from dragnet_spark.index.fingerprints import append_srp_keys
 
-    opts = _parse_args(argv, ["vectors"])
-    (store,) = _nargs(opts, 1)
-    if "vectors" not in opts:
-        raise UsageError('"vectors" option is required')
     spark = _get_spark()
     append_srp_keys(spark, spark.read.parquet(opts["vectors"]), store)
     out.write("appended SRP band keys into %s\n" % store)
 
 
-def cmd_srp_probe(argv, cat: Catalog, out):
+@command("srp-probe", 1, queries=REQUIRED, min_band_hits=1)
+def cmd_srp_probe(cat: Catalog, out, opts, store):
     """dn srp-probe <store-path> --queries=<parquet>
     [--min-band-hits=1]: probe an arriving embedding batch for
     SEMANTIC near-duplicates of the stored corpus; prints per-vector
@@ -971,46 +922,32 @@ def cmd_srp_probe(argv, cat: Catalog, out):
     summary line."""
     from dragnet_spark.index.fingerprints import probe_srp_near_duplicates
 
-    opts = _parse_args(argv, ["queries", "min-band-hits"])
-    (store,) = _nargs(opts, 1)
-    if "queries" not in opts:
-        raise UsageError('"queries" option is required')
     spark = _get_spark()
     res = probe_srp_near_duplicates(
         spark,
         store,
         spark.read.parquet(opts["queries"]),
-        min_band_hits=int(opts.get("min_band_hits", "1")),
-    ).orderBy("vec_id")
-    rows = res.collect()  # presentation-layer: final result only
-    for r in rows:
-        out.write(
-            json.dumps(
-                {
-                    "vec_id": r["vec_id"],
-                    "n_band_hits": r["n_band_hits"],
-                    "dup_of": r["dup_of"],
-                    "is_near_duplicate": bool(r["is_near_duplicate"]),
-                }
-            )
-            + "\n"
-        )
-    n_near = sum(1 for r in rows if r["is_near_duplicate"])
-    out.write("%d of %d near-duplicate the corpus\n" % (n_near, len(rows)))
+        min_band_hits=opts["min_band_hits"],
+    )
+    _print_probe(out, res, ("vec_id", "n_band_hits", "dup_of"),
+                 "is_near_duplicate", "%d of %d near-duplicate the corpus\n")
 
 
-def _print_pair_rows(out, rows, score_col: str) -> None:
+def _write_or_print_pairs(spark, out, pairs, sink, score_col: str,
+                          what: str) -> None:
+    """A one-shot pair discovery's result: written to ``sink`` as
+    parquet when given, else printed as (id_a, id_b, score) NDJSON
+    rows (small runs); then the ``N <what>`` summary line."""
+    if sink:
+        pairs.write.mode("overwrite").parquet(sink)
+        n = spark.read.parquet(sink).count()
+        out.write("%d %s at %s\n" % (n, what, sink))
+        return
+    rows = pairs.orderBy("id_a", "id_b").collect()  # presentation-layer
     for r in rows:
-        out.write(
-            json.dumps(
-                {
-                    "id_a": r["id_a"],
-                    "id_b": r["id_b"],
-                    score_col: r[score_col],
-                }
-            )
-            + "\n"
-        )
+        out.write(json.dumps({c: r[c] for c in ("id_a", "id_b", score_col)})
+                  + "\n")
+    out.write("%d %s\n" % (len(rows), what))
 
 
 def _run_candidates_only(fn, store: str, opts: dict, out) -> None:
@@ -1019,9 +956,9 @@ def _run_candidates_only(fn, store: str, opts: dict, out) -> None:
     set is materialized at OUT/pairs (the library collapses
     cross-band duplicates into the sink, so the printed count IS the
     sink's row count); OUT also holds the resume manifest."""
-    if "out" not in opts:
+    if not opts["out"]:
         raise UsageError('"--candidates-only" requires "--out"')
-    slices = int(opts.get("slices", "8"))
+    slices = opts["slices"]
     spark = _get_spark()
     n = fn(spark, store, opts["out"], slices=slices).count()
     out.write(
@@ -1031,7 +968,9 @@ def _run_candidates_only(fn, store: str, opts: dict, out) -> None:
     )
 
 
-def cmd_band_pairs(argv, cat: Catalog, out):
+@command("band-pairs", 1, docs=None, threshold=0.8, out=None, bounded=False,
+         slices=8, candidates_only=False)
+def cmd_band_pairs(cat: Catalog, out, opts, store):
     """dn band-pairs <store-path> --docs=<parquet> [--threshold=0.8]
     [--out=DIR] [--bounded [--slices=8]]: near-duplicate PAIR
     DISCOVERY from the persisted minhash band store — the
@@ -1060,24 +999,18 @@ def cmd_band_pairs(argv, cat: Catalog, out):
         band_store_pairs_bounded,
     )
 
-    opts = _parse_args(
-        argv,
-        ["docs", "threshold", "out", "bounded", "slices",
-         "candidates-only"],
-    )
-    (store,) = _nargs(opts, 1)
-    if opts.get("candidates_only"):
+    if opts["candidates_only"]:
         _run_candidates_only(band_store_candidates_bounded, store, opts, out)
         return
-    if "docs" not in opts:
-        raise UsageError('"docs" option is required')
-    thr = float(opts.get("threshold", "0.8"))
+    if opts["docs"] is None:
+        raise _missing("docs")
+    if opts["bounded"] and not opts["out"]:
+        raise UsageError('"--bounded" requires "--out"')
+    thr = opts["threshold"]
     spark = _get_spark()
     docs = spark.read.parquet(opts["docs"])
-    if opts.get("bounded"):
-        if "out" not in opts:
-            raise UsageError('"--bounded" requires "--out"')
-        slices = int(opts.get("slices", "8"))
+    if opts["bounded"]:
+        slices = opts["slices"]
         pairs = band_store_pairs_bounded(
             spark, store, docs, opts["out"], threshold=thr, slices=slices
         )
@@ -1088,22 +1021,14 @@ def cmd_band_pairs(argv, cat: Catalog, out):
         )
         return
     pairs = band_store_pairs(spark, store, docs, threshold=thr)
-    if "out" in opts:
-        pairs.write.mode("overwrite").parquet(opts["out"])
-        n = spark.read.parquet(opts["out"]).count()
-        out.write(
-            "%d near-duplicate pairs (jaccard >= %g) at %s\n"
-            % (n, thr, opts["out"])
-        )
-        return
-    rows = pairs.orderBy("id_a", "id_b").collect()  # presentation-layer
-    _print_pair_rows(out, rows, "jaccard")
-    out.write(
-        "%d near-duplicate pairs (jaccard >= %g)\n" % (len(rows), thr)
-    )
+    _write_or_print_pairs(spark, out, pairs, opts["out"], "jaccard",
+                          "near-duplicate pairs (jaccard >= %g)" % thr)
 
 
-def cmd_srp_pairs(argv, cat: Catalog, out):
+@command("srp-pairs", 1, vectors=None, threshold=0.9, out=None,
+         mode=("oneshot", "sliced", "bucket"), slices=8,
+         candidates_only=False)
+def cmd_srp_pairs(cat: Catalog, out, opts, store):
     """dn srp-pairs <store-path> --vectors=<parquet> [--threshold=0.9]
     [--out=DIR] [--mode=oneshot|sliced|bucket [--slices=8]]: SEMANTIC
     near-duplicate PAIR DISCOVERY from the persisted SRP band store —
@@ -1127,85 +1052,64 @@ def cmd_srp_pairs(argv, cat: Catalog, out):
         srp_store_pairs_bucket_verify,
     )
 
-    opts = _parse_args(
-        argv,
-        ["vectors", "threshold", "out", "mode", "slices",
-         "candidates-only"],
-    )
-    (store,) = _nargs(opts, 1)
-    if opts.get("candidates_only"):
+    if opts["candidates_only"]:
         _run_candidates_only(srp_store_candidates_bounded, store, opts, out)
         return
-    if "vectors" not in opts:
-        raise UsageError('"vectors" option is required')
-    mode = opts.get("mode", "oneshot")
-    if mode not in ("oneshot", "sliced", "bucket"):
-        raise UsageError(
-            f'unknown mode: "{mode}" (expected oneshot, sliced, or bucket)'
-        )
-    thr = float(opts.get("threshold", "0.9"))
+    if opts["vectors"] is None:
+        raise _missing("vectors")
+    mode = opts["mode"]
+    if mode != "oneshot" and not opts["out"]:
+        raise UsageError(f'mode "{mode}" requires "--out"')
+    thr = opts["threshold"]
     spark = _get_spark()
     vecs = spark.read.parquet(opts["vectors"])
-    if mode != "oneshot":
-        if "out" not in opts:
-            raise UsageError(f'mode "{mode}" requires "--out"')
-        if mode == "sliced":
-            slices = int(opts.get("slices", "8"))
-            pairs = srp_store_pairs_bounded(
-                spark, store, vecs, opts["out"], threshold=thr, slices=slices
-            )
-            shape = "sliced verify, %d slices" % slices
-        else:
-            pairs = srp_store_pairs_bucket_verify(
-                spark, store, vecs, opts["out"], threshold=thr
-            )
-            shape = "bucket-local verify"
-        n = pairs.count()
-        out.write(
-            "%d semantic near-duplicate pairs (cosine >= %g) at %s (%s)\n"
-            % (n, thr, opts["out"], shape)
+    if mode == "oneshot":
+        pairs = srp_store_pairs(spark, store, vecs, threshold=thr)
+        _write_or_print_pairs(
+            spark, out, pairs, opts["out"], "cosine",
+            "semantic near-duplicate pairs (cosine >= %g)" % thr,
         )
         return
-    pairs = srp_store_pairs(spark, store, vecs, threshold=thr)
-    if "out" in opts:
-        pairs.write.mode("overwrite").parquet(opts["out"])
-        n = spark.read.parquet(opts["out"]).count()
-        out.write(
-            "%d semantic near-duplicate pairs (cosine >= %g) at %s\n"
-            % (n, thr, opts["out"])
+    if mode == "sliced":
+        slices = opts["slices"]
+        pairs = srp_store_pairs_bounded(
+            spark, store, vecs, opts["out"], threshold=thr, slices=slices
         )
-        return
-    rows = pairs.orderBy("id_a", "id_b").collect()  # presentation-layer
-    _print_pair_rows(out, rows, "cosine")
+        shape = "sliced verify, %d slices" % slices
+    else:
+        pairs = srp_store_pairs_bucket_verify(
+            spark, store, vecs, opts["out"], threshold=thr
+        )
+        shape = "bucket-local verify"
+    n = pairs.count()
     out.write(
-        "%d semantic near-duplicate pairs (cosine >= %g)\n"
-        % (len(rows), thr)
+        "%d semantic near-duplicate pairs (cosine >= %g) at %s (%s)\n"
+        % (n, thr, opts["out"], shape)
     )
 
 
-def cmd_srp_compact(argv, cat: Catalog, out):
+@command("srp-compact", 1)
+def cmd_srp_compact(cat: Catalog, out, opts, store):
     """dn srp-compact <store-path>: compact the SRP store (band and
     band-pair keys) to distinct rows, one file per slice."""
     from dragnet_spark.index.fingerprints import compact_srp_store
 
-    opts = _parse_args(argv, [])
-    (store,) = _nargs(opts, 1)
     compact_srp_store(_get_spark(), store)
     out.write("compacted SRP store at %s\n" % store)
 
 
-def cmd_vindex_compact(argv, cat: Catalog, out):
+@command("vindex-compact", 1)
+def cmd_vindex_compact(cat: Catalog, out, opts, idx):
     """dn vindex-compact <index-path>: rewrite each cell to one file
     after appends (assignments/centroids untouched)."""
     from dragnet_spark.index.vector import compact_vector_index
 
-    opts = _parse_args(argv, [])
-    (idx,) = _nargs(opts, 1)
     compact_vector_index(_get_spark(), idx)
     out.write("compacted vector index at %s\n" % idx)
 
 
-def cmd_vindex_stats(argv, cat: Catalog, out):
+@command("vindex-stats", 1)
+def cmd_vindex_stats(cat: Catalog, out, opts, idx):
     """dn vindex-stats <index-path>: cell-population stats and the
     recenter recommendation — the operational readout behind the
     documented ~4x max/mean skew trigger."""
@@ -1214,8 +1118,6 @@ def cmd_vindex_stats(argv, cat: Catalog, out):
         vector_index_cell_stats,
     )
 
-    opts = _parse_args(argv, [])
-    (idx,) = _nargs(opts, 1)
     spark = _get_spark()
     meta = load_vector_index_meta(idx)
     rows = sorted(
@@ -1256,7 +1158,9 @@ def cmd_vindex_stats(argv, cat: Catalog, out):
         out.write("recommendation: healthy; no recenter needed\n")
 
 
-def cmd_vindex_ingest(argv, cat: Catalog, out):
+@command("vindex-ingest", 1, stream_dir=REQUIRED, checkpoint=REQUIRED,
+         no_recenter=False)
+def cmd_vindex_ingest(cat: Catalog, out, opts, idx):
     """dn vindex-ingest <index-path> --stream-dir=DIR
     --checkpoint=CKPT [--no-recenter]: drain all pending parquet
     files from DIR into the index via the streaming ingest loop
@@ -1273,11 +1177,6 @@ def cmd_vindex_ingest(argv, cat: Catalog, out):
         stream_ingest_vector_index,
     )
 
-    opts = _parse_args(argv, ["stream-dir", "checkpoint", "no-recenter"])
-    (idx,) = _nargs(opts, 1)
-    for req in ("stream_dir", "checkpoint"):
-        if req not in opts:
-            raise UsageError(f'"{req.replace("_", "-")}" option is required')
     spark = _get_spark()
     meta = load_vector_index_meta(idx)
     # stream schema comes from the types persisted at build time (a
@@ -1295,7 +1194,7 @@ def cmd_vindex_ingest(argv, cat: Catalog, out):
         sdf,
         idx,
         opts["checkpoint"],
-        recenter_trigger=None if "no_recenter" in opts else 4.0,
+        recenter_trigger=None if opts["no_recenter"] else 4.0,
         trigger_available_now=True,
     )
     q.awaitTermination()
@@ -1312,18 +1211,15 @@ def cmd_vindex_ingest(argv, cat: Catalog, out):
     )
 
 
-def cmd_vindex_recenter(argv, cat: Catalog, out):
+@command("vindex-recenter", 1, centroids=int)
+def cmd_vindex_recenter(cat: Catalog, out, opts, idx):
     """dn vindex-recenter <index-path> [--centroids=N]: retrain
     centroids on the current store contents and rebuild in place —
     the recenter action for a drift-skewed index."""
     from dragnet_spark.index.vector import recenter_vector_index
 
-    opts = _parse_args(argv, ["centroids"])
-    (idx,) = _nargs(opts, 1)
     meta = recenter_vector_index(
-        _get_spark(),
-        idx,
-        n_centroids=int(opts["centroids"]) if "centroids" in opts else None,
+        _get_spark(), idx, n_centroids=opts["centroids"]
     )
     out.write(
         "recentered vector index: %d cells at %s\n"
@@ -1331,7 +1227,8 @@ def cmd_vindex_recenter(argv, cat: Catalog, out):
     )
 
 
-def cmd_sink_compact(argv, cat: Catalog, out):
+@command("sink-compact", 1, min_batches=2, keep_last=0, order_by=None)
+def cmd_sink_compact(cat: Catalog, out, opts, sink):
     """dn sink-compact <sink-path> [--min-batches=2] [--keep-last=0]
     [--order-by=COL]: fold the curated sink's committed-and-ledgered
     ``__dn_batch`` directories into a consolidated base segment
@@ -1342,14 +1239,12 @@ def cmd_sink_compact(argv, cat: Catalog, out):
     (streaming/sink.py)."""
     from dragnet_spark.streaming.sink import compact_sink
 
-    opts = _parse_args(argv, ["min-batches", "keep-last", "order-by"])
-    (sink,) = _nargs(opts, 1)
     report = compact_sink(
         _get_spark(),
         sink,
-        min_batches=int(opts.get("min_batches", "2")),
-        keep_last=int(opts.get("keep_last", "0")),
-        order_by=opts.get("order_by"),
+        min_batches=opts["min_batches"],
+        keep_last=opts["keep_last"],
+        order_by=opts["order_by"],
     )
     if report["segment"]:
         out.write(
@@ -1368,25 +1263,23 @@ def cmd_sink_compact(argv, cat: Catalog, out):
         )
 
 
-def cmd_lm_build(argv, cat: Catalog, out):
+@command("lm-build", 1, out=REQUIRED, text_field="text", min_count=2,
+         lam_pct=80)
+def cmd_lm_build(cat: Catalog, out, opts, src):
     """dn lm-build <docs.parquet> --out=PATH [--text-field=text]
     [--min-count=2] [--lam-pct=80]: freeze the reference corpus's
     interpolated bigram-LM counts into an LM store (index/lm.py) for
     ingest gating — the judged data must never shift the judge."""
     from dragnet_spark.index.lm import build_lm_store
 
-    opts = _parse_args(argv, ["out", "text-field", "min-count", "lam-pct"])
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
     spark = _get_spark()
     meta = build_lm_store(
         spark,
         spark.read.parquet(src),
         opts["out"],
-        text_col=opts.get("text_field", "text"),
-        min_count=int(opts.get("min_count", "2")),
-        lam_pct=int(opts.get("lam_pct", "80")),
+        text_col=opts["text_field"],
+        min_count=opts["min_count"],
+        lam_pct=opts["lam_pct"],
     )
     out.write(
         "built LM store at %s: %d tokens, %d vocab, bigrams c2>=%d\n"
@@ -1395,44 +1288,50 @@ def cmd_lm_build(argv, cat: Catalog, out):
     )
 
 
-def cmd_lm_score(argv, cat: Catalog, out):
+def _print_kept(out, docs, kept, id_col: str) -> None:
+    """A gate's kept ids as NDJSON, then ``kept N of M docs``."""
+    n_in, n_out = docs.count(), kept.count()
+    for r in kept.select(id_col).collect():
+        out.write(json.dumps({id_col: r[id_col]}) + "\n")
+    out.write("kept %d of %d docs\n" % (n_out, n_in))
+
+
+def _print_records(out, df, summary: str) -> None:
+    """Each row of ``df`` as NDJSON, then ``summary`` filled with the
+    row count."""
+    rows = df.collect()
+    for r in rows:
+        out.write(json.dumps(r.asDict()) + "\n")
+    out.write(summary % len(rows))
+
+
+@command("lm-score", 1, docs=REQUIRED, id_field="doc_id", text_field="text",
+         min_mean_logp=float)
+def cmd_lm_score(cat: Catalog, out, opts, lm):
     """dn lm-score <lm-path> --docs=<parquet> [--id-field=doc_id]
     [--text-field=text] [--min-mean-logp=X]: score (or, with the
     threshold, gate) a batch under the frozen reference LM; prints
     per-doc NDJSON and a summary line."""
-    import json as _json
-
     from dragnet_spark.index.lm import lm_gate, score_against_lm_store
 
-    opts = _parse_args(
-        argv, ["docs", "id-field", "text-field", "min-mean-logp"]
-    )
-    (lm,) = _nargs(opts, 1)
-    if "docs" not in opts:
-        raise UsageError('"docs" option is required')
     spark = _get_spark()
     docs = spark.read.parquet(opts["docs"])
-    idc = opts.get("id_field", "doc_id")
-    txt = opts.get("text_field", "text")
-    if "min_mean_logp" in opts:
+    idc, txt = opts["id_field"], opts["text_field"]
+    if opts["min_mean_logp"] is not None:
         kept = lm_gate(
-            spark, lm, docs, float(opts["min_mean_logp"]),
+            spark, lm, docs, opts["min_mean_logp"],
             text_col=txt, id_col=idc,
         )
-        n_in, n_out = docs.count(), kept.count()
-        for r in kept.select(idc).collect():
-            out.write(_json.dumps({idc: r[idc]}) + "\n")
-        out.write("kept %d of %d docs\n" % (n_out, n_in))
+        _print_kept(out, docs, kept, idc)
         return
-    rows = score_against_lm_store(
+    _print_records(out, score_against_lm_store(
         spark, lm, docs, text_col=txt, id_col=idc
-    ).collect()
-    for r in rows:
-        out.write(_json.dumps(r.asDict()) + "\n")
-    out.write("scored %d docs\n" % len(rows))
+    ), "scored %d docs\n")
 
 
-def cmd_bloom_build(argv, cat: Catalog, out):
+@command("bloom-build", 1, out=REQUIRED, text_field="text", gram_n=8,
+         m_bits=1 << 20, k=5, src_field=None)
+def cmd_bloom_build(cat: Catalog, out, opts, src):
     """dn bloom-build <bench.parquet> --out=PATH [--text-field=text]
     [--gram-n=8] [--m-bits=1048576] [--k=5] [--src-field=COL]: freeze
     the benchmark corpus's distinct gram hashes into a Bloom store
@@ -1442,22 +1341,16 @@ def cmd_bloom_build(argv, cat: Catalog, out):
     benchmark each gram belongs to (enables bloom-gate --attribute)."""
     from dragnet_spark.index.bloom import build_bloom_store
 
-    opts = _parse_args(
-        argv, ["out", "text-field", "gram-n", "m-bits", "k", "src-field"]
-    )
-    (src,) = _nargs(opts, 1)
-    if "out" not in opts:
-        raise UsageError('"out" option is required')
     spark = _get_spark()
     meta = build_bloom_store(
         spark,
         spark.read.parquet(src),
         opts["out"],
-        text_col=opts.get("text_field", "text"),
-        gram_n=int(opts.get("gram_n", "8")),
-        m_bits=int(opts.get("m_bits", str(1 << 20))),
-        k=int(opts.get("k", "5")),
-        src_col=opts.get("src_field"),
+        text_col=opts["text_field"],
+        gram_n=opts["gram_n"],
+        m_bits=opts["m_bits"],
+        k=opts["k"],
+        src_col=opts["src_field"],
     )
     out.write(
         "built bloom store at %s: %d grams (n=%d), m=%d bits, k=%d%s\n"
@@ -1467,7 +1360,9 @@ def cmd_bloom_build(argv, cat: Catalog, out):
     )
 
 
-def cmd_bloom_gate(argv, cat: Catalog, out):
+@command("bloom-gate", 1, docs=REQUIRED, id_field="doc_id",
+         text_field="text", max_hit_frac=float, attribute=False)
+def cmd_bloom_gate(cat: Catalog, out, opts, store):
     """dn bloom-gate <store-path> --docs=<parquet> [--id-field=doc_id]
     [--text-field=text] [--max-hit-frac=X] [--attribute]: score a
     batch against the frozen benchmark gram store; with
@@ -1475,62 +1370,41 @@ def cmd_bloom_gate(argv, cat: Catalog, out):
     --attribute, print per-(doc, benchmark) leak tallies (requires a
     store built with --src-field); else per-doc NDJSON overlap
     reports."""
-    import json as _json
-
     from dragnet_spark.index.bloom import (
         attribute_against_bloom_store,
         decontam_gate,
         score_against_bloom_store,
     )
 
-    opts = _parse_args(
-        argv, ["docs", "id-field", "text-field", "max-hit-frac",
-               "attribute"]
-    )
-    (store,) = _nargs(opts, 1)
-    if "docs" not in opts:
-        raise UsageError('"docs" option is required')
     spark = _get_spark()
     docs = spark.read.parquet(opts["docs"])
-    idc = opts.get("id_field", "doc_id")
-    txt = opts.get("text_field", "text")
-    if opts.get("attribute"):
-        rows = attribute_against_bloom_store(
+    idc, txt = opts["id_field"], opts["text_field"]
+    if opts["attribute"]:
+        _print_records(out, attribute_against_bloom_store(
             spark, store, docs, text_col=txt, id_col=idc
-        ).collect()
-        for r in rows:
-            out.write(_json.dumps(r.asDict()) + "\n")
-        out.write("attributed %d (doc, benchmark) leaks\n" % len(rows))
+        ), "attributed %d (doc, benchmark) leaks\n")
         return
-    if "max_hit_frac" in opts:
+    if opts["max_hit_frac"] is not None:
         kept = decontam_gate(
-            spark, store, docs, float(opts["max_hit_frac"]),
+            spark, store, docs, opts["max_hit_frac"],
             text_col=txt, id_col=idc,
         )
-        n_in, n_out = docs.count(), kept.count()
-        for r in kept.select(idc).collect():
-            out.write(_json.dumps({idc: r[idc]}) + "\n")
-        out.write("kept %d of %d docs\n" % (n_out, n_in))
+        _print_kept(out, docs, kept, idc)
         return
-    rows = score_against_bloom_store(
+    _print_records(out, score_against_bloom_store(
         spark, store, docs, text_col=txt, id_col=idc
-    ).collect()
-    for r in rows:
-        out.write(_json.dumps(r.asDict()) + "\n")
-    out.write("scored %d docs\n" % len(rows))
+    ), "scored %d docs\n")
 
 
-def cmd_profile(argv, cat: Catalog, out):
+@command("profile", 1, format="parquet")
+def cmd_profile(cat: Catalog, out, opts, path):
     """dn profile <path> [--format=parquet]: one-scan per-column
     profile of a table — null counts, exact distincts, numeric/time
     ranges (epoch micros), string ranges. Single pass regardless of
     column count (ops/profile.py); the collect is one row per column."""
     from dragnet_spark.ops.profile import profile_table
 
-    opts = _parse_args(argv, ["format"])
-    (path,) = _nargs(opts, 1)
-    fmt = opts.get("format", "parquet")
-    df = _get_spark().read.format(fmt).load(path)
+    df = _get_spark().read.format(opts["format"]).load(path)
     rows = profile_table(df).collect()
     out.write(
         "%-16s %12s %10s %10s %22s %22s\n"
@@ -1549,7 +1423,8 @@ def cmd_profile(argv, cat: Catalog, out):
         )
 
 
-def cmd_maintain(argv, cat: Catalog, out):
+@command("maintain", 1, dry_run=False, max_files=4)
+def cmd_maintain(cat: Catalog, out, opts, root):
     """dn maintain <root> [--dry-run] [--max-files=4]: discover every
     dragnet store under <root> (event index, fingerprint/band/SRP
     stores, vector index, curated streaming sink — classified by
@@ -1562,13 +1437,11 @@ def cmd_maintain(argv, cat: Catalog, out):
     continuously-appended stores (index/maintain.py)."""
     from dragnet_spark.index.maintain import run_maintenance
 
-    opts = _parse_args(argv, ["dry-run", "max-files"])
-    (root,) = _nargs(opts, 1)
     plan = run_maintenance(
         _get_spark(),
         root,
-        dry_run=bool(opts.get("dry_run")),
-        max_files=int(opts.get("max_files", "4")),
+        dry_run=opts["dry_run"],
+        max_files=opts["max_files"],
     )
     for rec in plan:
         sig = "max_files/part=%d" % rec["max_files_per_partition"]
@@ -1583,9 +1456,7 @@ def cmd_maintain(argv, cat: Catalog, out):
                     rec["mean_rows_per_cell"],
                     rec["target_rows_per_cell"],
                 )
-        verb = (
-            "would run" if bool(opts.get("dry_run")) else "ran"
-        )
+        verb = "would run" if opts["dry_run"] else "ran"
         what = ",".join(rec["actions"]) if rec["actions"] else "nothing"
         line = "%-7s %s (%s): %s %s" % (
             rec["kind"], rec["path"], sig, verb, what
@@ -1601,7 +1472,10 @@ def cmd_maintain(argv, cat: Catalog, out):
     )
 
 
-def cmd_semdedup(argv, cat: Catalog, out):
+@command("semdedup", 1, k=8, target_rows=int, iterations=3, threshold=0.9,
+         id_col="vec_id", vec_col="embedding", format="parquet", out=None,
+         two_level=False)
+def cmd_semdedup(cat: Catalog, out, opts, path):
     """dn semdedup <vectors> [--k=8 | --target-rows=N] [--iterations=3]
     [--threshold=0.9] [--id-col=vec_id] [--vec-col=embedding]
     [--format=parquet] [--out=PATH]: SemDeDup semantic dedup — exact
@@ -1627,35 +1501,26 @@ def cmd_semdedup(argv, cat: Catalog, out):
         semdedup_prune_pairs,
     )
 
-    opts = _parse_args(
-        argv,
-        ["k", "target-rows", "iterations", "threshold", "id-col",
-         "vec-col", "format", "out", "two-level"],
-    )
-    (path,) = _nargs(opts, 1)
-    k = int(opts.get("k", "8"))
-    target = opts.get("target_rows")
-    iters = int(opts.get("iterations", "3"))
-    thr = float(opts.get("threshold", "0.9"))
-    id_col = opts.get("id_col", "vec_id")
-    vec_col = opts.get("vec_col", "embedding")
+    target, iters, thr = opts["target_rows"], opts["iterations"], opts["threshold"]
+    id_col, vec_col = opts["id_col"], opts["vec_col"]
     spark = _get_spark()
-    df = spark.read.format(opts.get("format", "parquet")).load(path)
-    if opts.get("two_level"):
+    df = spark.read.format(opts["format"]).load(path)
+    if opts["two_level"]:
         assign = kmeans_assign_two_level(
             df, vec_col=vec_col, id_col=id_col, iterations=iters,
-            target_rows_per_cluster=int(target) if target else 250,
+            target_rows_per_cluster=250 if target is None else target,
         )
-    elif target:
+    elif target is not None:
         # self-sizing: flat below k=1024 (lower constants), two-level
         # above (n·√k) — the graded routing boundary (TWO_LEVEL_MIN_K)
         assign = kmeans_assign_auto(
             df, vec_col=vec_col, id_col=id_col, iterations=iters,
-            target_rows_per_cluster=int(target),
+            target_rows_per_cluster=target,
         )
     else:
         assign = kmeans_assign(
-            df, vec_col=vec_col, id_col=id_col, k=k, iterations=iters,
+            df, vec_col=vec_col, id_col=id_col, k=opts["k"],
+            iterations=iters,
         )
     sizes = sorted(
         (r["cluster"], r["n"])
@@ -1675,7 +1540,7 @@ def cmd_semdedup(argv, cat: Catalog, out):
         "semdedup: %d within-cluster pairs >= %.2f, %d docs dropped\n"
         % (n_pairs, thr, n_drop)
     )
-    if opts.get("out"):
+    if opts["out"]:
         survivors = (
             df.select(F.col(id_col).cast("long").alias("id"))
             .join(dropped, "id", "left_anti")
@@ -1685,7 +1550,9 @@ def cmd_semdedup(argv, cat: Catalog, out):
         out.write("survivors -> %s\n" % opts["out"])
 
 
-def cmd_graph(argv, cat: Catalog, out):
+@command("graph", 1, op=None, seeds=None, iterations=4, id_a="id_a",
+         id_b="id_b", format="parquet", out=None, top=20)
+def cmd_graph(cat: Catalog, out, opts, path):
     """dn graph <pairs> --op=pagerank|trustrank|triangles|clustering|components
     [--seeds=PATH] [--iterations=4] [--id-a=id_a] [--id-b=id_b]
     [--format=parquet] [--out=PATH] [--top=20]: graph analytics over a
@@ -1703,22 +1570,15 @@ def cmd_graph(argv, cat: Catalog, out):
         triangle_counts,
     )
 
-    opts = _parse_args(
-        argv,
-        ["op", "seeds", "iterations", "id-a", "id-b", "format", "out",
-         "top"],
-    )
-    (path,) = _nargs(opts, 1)
-    op = opts.get("op")
+    op = opts["op"]
     if op not in ("pagerank", "trustrank", "triangles", "clustering",
                   "components"):
         raise UsageError(
             "--op must be pagerank|trustrank|triangles|clustering|components"
         )
-    ia, ib = opts.get("id_a", "id_a"), opts.get("id_b", "id_b")
-    iters = int(opts.get("iterations", "4"))
+    ia, ib, iters = opts["id_a"], opts["id_b"], opts["iterations"]
     spark = _get_spark()
-    pairs = spark.read.format(opts.get("format", "parquet")).load(path)
+    pairs = spark.read.format(opts["format"]).load(path)
     nodes = (
         pairs.select(F.col(ia).alias("id"))
         .unionByName(pairs.select(F.col(ib).alias("id")))
@@ -1729,7 +1589,7 @@ def cmd_graph(argv, cat: Catalog, out):
                        iterations=iters)
         score = "pagerank"
     elif op == "trustrank":
-        if not opts.get("seeds"):
+        if not opts["seeds"]:
             raise UsageError("--op=trustrank requires --seeds=PATH")
         seeds = spark.read.parquet(opts["seeds"])
         seeds = seeds.select(F.col(seeds.columns[0]).alias("id"))
@@ -1745,18 +1605,19 @@ def cmd_graph(argv, cat: Catalog, out):
     else:
         res = connected_components(nodes, pairs, src_col=ia, dst_col=ib)
         score = "component"
-    top = int(opts.get("top", "20"))
-    rows = res.orderBy(F.desc(score), "id").limit(top).collect()
+    rows = res.orderBy(F.desc(score), "id").limit(opts["top"]).collect()
     cols = res.columns
     out.write("  ".join(cols) + "\n")
     for r in rows:
         out.write("  ".join(str(r[c]) for c in cols) + "\n")
-    if opts.get("out"):
+    if opts["out"]:
         res.write.mode("error").parquet(opts["out"])
         out.write("%s -> %s\n" % (op, opts["out"]))
 
 
-def cmd_distinct(argv, cat: Catalog, out):
+@command("distinct", 1, col=REQUIRED, group_by=None, k=256, exact=False,
+         format="parquet")
+def cmd_distinct(cat: Catalog, out, opts, path):
     """dn distinct <path> --col=C [--group-by=G] [--k=256] [--exact]
     [--format=parquet]: KMV bottom-k estimate of COUNT(DISTINCT C),
     optionally per group (ops/sketch.py — deterministic md5 order
@@ -1767,37 +1628,32 @@ def cmd_distinct(argv, cat: Catalog, out):
 
     from dragnet_spark.ops.sketch import kmv_distinct
 
-    opts = _parse_args(argv, ["col", "group-by", "k", "exact", "format"])
-    (path,) = _nargs(opts, 1)
-    col = opts.get("col")
-    if not col:
-        raise UsageError("--col is required")
-    k = int(opts.get("k", "256"))
-    grp = opts.get("group_by")
+    col, grp = opts["col"], opts["group_by"]
     spark = _get_spark()
-    df = spark.read.format(opts.get("format", "parquet")).load(path)
+    df = spark.read.format(opts["format"]).load(path)
     gcols = [grp] if grp else ["__g"]
     if not grp:
         df = df.withColumn("__g", F.lit("all"))
-    est = kmv_distinct(df, col, gcols, k=k)
-    if opts.get("exact"):
+    est = kmv_distinct(df, col, gcols, k=opts["k"])
+    if opts["exact"]:
         exact = df.groupBy(*gcols).agg(
             F.countDistinct(col).alias("exact_distinct")
         )
         est = est.join(exact, gcols)
     rows = est.orderBy(gcols[0]).collect()
     hdr = "%-24s %14s" % (grp or "group", "est_distinct")
-    if opts.get("exact"):
+    if opts["exact"]:
         hdr += " %14s" % "exact_distinct"
     out.write(hdr + "\n")
     for r in rows:
         line = "%-24s %14d" % (r[gcols[0]], r["est_distinct"])
-        if opts.get("exact"):
+        if opts["exact"]:
             line += " %14d" % r["exact_distinct"]
         out.write(line + "\n")
 
 
-def cmd_media_probe(argv, cat: Catalog, out):
+@command("media-probe", 1, glob=None, verbose=False)
+def cmd_media_probe(cat: Catalog, out, opts, path):
     """dn media-probe <dir> [--glob=*.png] [--verbose]: ingest a
     media directory via the binaryFile source (sources/media.py) and
     run the header-only metadata probe — detected format, dimensions,
@@ -1808,10 +1664,8 @@ def cmd_media_probe(argv, cat: Catalog, out):
     from dragnet_spark.ops.multimodal import probe_media_metadata
     from dragnet_spark.sources.media import read_media_dir
 
-    opts = _parse_args(argv, ["glob", "verbose"])
-    (path,) = _nargs(opts, 1)
     spark = _get_spark()
-    media = read_media_dir(spark, path, glob=opts.get("glob"))
+    media = read_media_dir(spark, path, glob=opts["glob"])
     probed = probe_media_metadata(
         media.select("id", "media_type", "payload")
     ).join(media.select("id", "path"), "id")
@@ -1831,7 +1685,7 @@ def cmd_media_probe(argv, cat: Catalog, out):
             "%-12s %8d %14d %10d\n"
             % (r["detected_format"], r["n"], r["bytes"], r["mismatched"])
         )
-    if opts.get("verbose"):
+    if opts["verbose"]:
         for r in probed.filter(F.col("type_mismatch") == 1).orderBy("path").collect():
             out.write(
                 "MISMATCH %s declared=%s detected=%s\n"
@@ -1851,7 +1705,9 @@ def _kmv_print_estimates(spark, store, out):
         out.write("%-24s %14d\n" % (key, r["est_distinct"]))
 
 
-def cmd_comp_build(argv, cat: Catalog, out):
+@command("comp-build", 1, out=REQUIRED, ids=None, id_a="id_a", id_b="id_b",
+         format="parquet")
+def cmd_comp_build(cat: Catalog, out, opts, path):
     """dn comp-build <pairs> --out=STORE [--ids=PATH] [--id-a=id_a]
     [--id-b=id_b] [--format=parquet]: materialize an incremental
     connected-components store (index/components.py) from an
@@ -1863,15 +1719,11 @@ def cmd_comp_build(argv, cat: Catalog, out):
 
     from dragnet_spark.index.components import build_components_store
 
-    opts = _parse_args(argv, ["out", "ids", "id-a", "id-b", "format"])
-    (path,) = _nargs(opts, 1)
-    if not opts.get("out"):
-        raise UsageError("--out is required")
-    ia, ib = opts.get("id_a", "id_a"), opts.get("id_b", "id_b")
+    ia, ib = opts["id_a"], opts["id_b"]
     spark = _get_spark()
-    pairs = spark.read.format(opts.get("format", "parquet")).load(path)
+    pairs = spark.read.format(opts["format"]).load(path)
     pairs = pairs.select(F.col(ia).alias("id_a"), F.col(ib).alias("id_b"))
-    if opts.get("ids"):
+    if opts["ids"]:
         ids = spark.read.parquet(opts["ids"])
         ids = ids.select(F.col(ids.columns[0]).alias("id"))
     else:
@@ -1884,7 +1736,9 @@ def cmd_comp_build(argv, cat: Catalog, out):
     out.write("built components store at %s\n" % opts["out"])
 
 
-def cmd_comp_merge(argv, cat: Catalog, out):
+@command("comp-merge", 1, data=REQUIRED, id_a="id_a", id_b="id_b",
+         format="parquet")
+def cmd_comp_merge(cat: Catalog, out, opts, store):
     """dn comp-merge <store> --data=PAIRS [--id-a=id_a] [--id-b=id_b]
     [--format=parquet]: fold one arriving batch of pairs into the
     store — work proportional to the batch (endpoint resolve +
@@ -1893,40 +1747,33 @@ def cmd_comp_merge(argv, cat: Catalog, out):
 
     from dragnet_spark.index.components import merge_components_batch
 
-    opts = _parse_args(argv, ["data", "id-a", "id-b", "format"])
-    (store,) = _nargs(opts, 1)
-    if not opts.get("data"):
-        raise UsageError("--data is required")
-    ia, ib = opts.get("id_a", "id_a"), opts.get("id_b", "id_b")
+    ia, ib = opts["id_a"], opts["id_b"]
     spark = _get_spark()
-    pairs = spark.read.format(opts.get("format", "parquet")).load(opts["data"])
+    pairs = spark.read.format(opts["format"]).load(opts["data"])
     pairs = pairs.select(F.col(ia).alias("id_a"), F.col(ib).alias("id_b"))
     merge_components_batch(spark, pairs, store)
     out.write("folded %s into %s\n" % (opts["data"], store))
 
 
-def cmd_comp_read(argv, cat: Catalog, out):
+@command("comp-read", 1, out=None, top=20)
+def cmd_comp_read(cat: Catalog, out, opts, store):
     """dn comp-read <store> [--out=PATH] [--top=20]: current (id,
     component) assignment with redirects applied; --out writes the
     full table as parquet."""
-    from pyspark.sql import functions as F
-
     from dragnet_spark.index.components import components_store_read
 
-    opts = _parse_args(argv, ["out", "top"])
-    (store,) = _nargs(opts, 1)
     spark = _get_spark()
     res = components_store_read(spark, store)
-    for r in res.orderBy("component", "id").limit(
-        int(opts.get("top", "20"))
-    ).collect():
+    for r in res.orderBy("component", "id").limit(opts["top"]).collect():
         out.write("%d  %d\n" % (r["id"], r["component"]))
-    if opts.get("out"):
+    if opts["out"]:
         res.write.mode("error").parquet(opts["out"])
         out.write("assignment -> %s\n" % opts["out"])
 
 
-def cmd_kmv_build(argv, cat: Catalog, out):
+@command("kmv-build", 1, col=REQUIRED, group_by=None, k=256, out=REQUIRED,
+         format="parquet")
+def cmd_kmv_build(cat: Catalog, out, opts, path):
     """dn kmv-build <data> --col=C --out=STORE [--group-by=G]
     [--k=256] [--format=parquet]: materialize a bottom-k KMV
     cardinality sketch (index/kmv.py) — O(groups·k) state a live
@@ -1935,24 +1782,19 @@ def cmd_kmv_build(argv, cat: Catalog, out):
 
     from dragnet_spark.index.kmv import build_kmv_store
 
-    opts = _parse_args(argv, ["col", "group-by", "k", "out", "format"])
-    (path,) = _nargs(opts, 1)
-    if not opts.get("col") or not opts.get("out"):
-        raise UsageError("--col and --out are required")
     spark = _get_spark()
-    df = spark.read.format(opts.get("format", "parquet")).load(path)
-    grp = opts.get("group_by")
+    df = spark.read.format(opts["format"]).load(path)
+    grp = opts["group_by"]
     gcols = [grp] if grp else ["__g"]
     if not grp:
         df = df.withColumn("__g", F.lit("all"))
-    build_kmv_store(
-        spark, df, opts["out"], opts["col"], gcols, k=int(opts.get("k", "256"))
-    )
-    out.write("built KMV sketch (k=%s) at %s\n" % (opts.get("k", "256"), opts["out"]))
+    build_kmv_store(spark, df, opts["out"], opts["col"], gcols, k=opts["k"])
+    out.write("built KMV sketch (k=%d) at %s\n" % (opts["k"], opts["out"]))
     _kmv_print_estimates(spark, opts["out"], out)
 
 
-def cmd_kmv_merge(argv, cat: Catalog, out):
+@command("kmv-merge", 1, data=REQUIRED, format="parquet")
+def cmd_kmv_merge(cat: Catalog, out, opts, store):
     """dn kmv-merge <store> --data=BATCH [--format=parquet]: fold one
     arriving batch into the sketch (lease-guarded stage-then-swap;
     bit-identical to rebuilding over everything ingested so far)."""
@@ -1960,12 +1802,8 @@ def cmd_kmv_merge(argv, cat: Catalog, out):
 
     from dragnet_spark.index.kmv import load_kmv_meta, merge_kmv_batch
 
-    opts = _parse_args(argv, ["data", "format"])
-    (store,) = _nargs(opts, 1)
-    if not opts.get("data"):
-        raise UsageError("--data is required")
     spark = _get_spark()
-    df = spark.read.format(opts.get("format", "parquet")).load(opts["data"])
+    df = spark.read.format(opts["format"]).load(opts["data"])
     if load_kmv_meta(store)["group_cols"] == ["__g"]:
         df = df.withColumn("__g", F.lit("all"))
     merge_kmv_batch(spark, df, store)
@@ -1973,68 +1811,11 @@ def cmd_kmv_merge(argv, cat: Catalog, out):
     _kmv_print_estimates(spark, store, out)
 
 
-def cmd_kmv_est(argv, cat: Catalog, out):
+@command("kmv-est", 1)
+def cmd_kmv_est(cat: Catalog, out, opts, store):
     """dn kmv-est <store>: print the per-group distinct estimates the
     persisted sketch implies — no corpus scan."""
-    opts = _parse_args(argv, [])
-    (store,) = _nargs(opts, 1)
     _kmv_print_estimates(_get_spark(), store, out)
-
-
-COMMANDS = {
-    "datasource-add": cmd_datasource_add,
-    "datasource-list": cmd_datasource_list,
-    "datasource-remove": cmd_datasource_remove,
-    "datasource-update": cmd_datasource_update,
-    "datasource-show": cmd_datasource_show,
-    "metric-add": cmd_metric_add,
-    "metric-list": cmd_metric_list,
-    "metric-remove": cmd_metric_remove,
-    "build": cmd_build,
-    "compact": cmd_compact,
-    "index-config": cmd_index_config,
-    "index-read": cmd_index_read,
-    "index-scan": cmd_index_scan,
-    "query": cmd_query,
-    "scan": cmd_scan,
-    "vindex-build": cmd_vindex_build,
-    "vindex-append": cmd_vindex_append,
-    "vindex-query": cmd_vindex_query,
-    "vindex-compact": cmd_vindex_compact,
-    "vindex-ingest": cmd_vindex_ingest,
-    "vindex-recenter": cmd_vindex_recenter,
-    "maintain": cmd_maintain,
-    "semdedup": cmd_semdedup,
-    "graph": cmd_graph,
-    "distinct": cmd_distinct,
-    "media-probe": cmd_media_probe,
-    "comp-build": cmd_comp_build,
-    "comp-merge": cmd_comp_merge,
-    "comp-read": cmd_comp_read,
-    "kmv-build": cmd_kmv_build,
-    "kmv-merge": cmd_kmv_merge,
-    "kmv-est": cmd_kmv_est,
-    "sink-compact": cmd_sink_compact,
-    "profile": cmd_profile,
-    "lm-build": cmd_lm_build,
-    "lm-score": cmd_lm_score,
-    "bloom-build": cmd_bloom_build,
-    "bloom-gate": cmd_bloom_gate,
-    "vindex-stats": cmd_vindex_stats,
-    "fp-build": cmd_fp_build,
-    "fp-probe": cmd_fp_probe,
-    "fp-compact": cmd_fp_compact,
-    "band-build": cmd_band_build,
-    "band-probe": cmd_band_probe,
-    "band-append": cmd_band_append,
-    "band-compact": cmd_band_compact,
-    "band-pairs": cmd_band_pairs,
-    "srp-pairs": cmd_srp_pairs,
-    "srp-build": cmd_srp_build,
-    "srp-append": cmd_srp_append,
-    "srp-probe": cmd_srp_probe,
-    "srp-compact": cmd_srp_compact,
-}
 
 
 def main(argv: list[str] | None = None, out=None, config_path: str | None = None) -> int:
@@ -2049,8 +1830,10 @@ def main(argv: list[str] | None = None, out=None, config_path: str | None = None
         sys.stderr.write(USAGE + "\n")
         return 2
     cat = Catalog.load(config_path or default_config_path())
+    fn, nargs, spec = COMMANDS[cmdname]
     try:
-        COMMANDS[cmdname](rest, cat, out)
+        args, opts = _parse_args(rest, nargs, spec)
+        fn(cat, out, opts, *args)
         return 0
     except UsageError as e:
         sys.stderr.write("%s: %s\n" % (ARG0, e))

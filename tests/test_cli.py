@@ -5,12 +5,14 @@ and the distributed index-scan → index-read plumbing."""
 import io
 import json
 import os
+import subprocess
 import sys
 from collections import Counter
 from datetime import datetime, timezone
 
 import pytest
 
+from dragnet_spark import cli
 from dragnet_spark.cli import main
 from perfbench.gen import FILES_PER_DAY, START, TIME_FORMAT
 
@@ -1163,7 +1165,7 @@ def test_srp_pairs_cli(cfg, tmp_path, spark):
     rc, _, err = run(
         ["srp-pairs", store, "--vectors", vecs, "--mode", "nope"], cfg
     )
-    assert rc == 2 and 'unknown mode: "nope"' in err
+    assert rc == 2 and 'bad value for "mode" ("nope")' in err
     rc, _, err = run(
         ["srp-pairs", store, "--vectors", vecs, "--mode", "bucket"], cfg
     )
@@ -1360,3 +1362,180 @@ def test_pairs_candidates_only(cfg, tmp_path, spark):
     got = {tuple(r) for r in srows}
     assert {(i, 100 + i) for i in range(4)} <= got
     assert len(srows) == len(got)  # twins collide in EVERY band
+
+
+# ----------------------------------------------------------- option contract
+#
+# Table-driven over cli.COMMANDS, so a new command's declared options
+# are covered as soon as it is registered. Every case fails in argument
+# parsing or in a config check, before a SparkSession exists: the
+# ``no_spark`` fixture turns a started session into a test failure.
+
+def _spec_cases(pred):
+    return [(name, opt) for name, (_fn, _n, spec) in sorted(cli.COMMANDS.items())
+            for opt, default in spec.items() if pred(default)]
+
+
+REQUIRED_CASES = _spec_cases(lambda d: d is cli.REQUIRED)
+NUMBER_CASES = _spec_cases(
+    lambda d: d in (int, float) or type(d) in (int, float)
+) + [("srp-build", "bits")]  # an int or "auto"
+CHOICE_CASES = _spec_cases(lambda d: isinstance(d, tuple))
+
+
+@pytest.fixture
+def no_spark(monkeypatch):
+    def started():
+        raise AssertionError("a SparkSession was started")
+
+    monkeypatch.setattr(cli, "_get_spark", started)
+
+
+def _argv(name, skip=None):
+    """``dn NAME`` with placeholder positionals and every required
+    option except ``skip``."""
+    _fn, nargs, spec = cli.COMMANDS[name]
+    return [name, *["x"] * nargs] + [
+        f"--{opt}=x" for opt, d in spec.items() if d is cli.REQUIRED and opt != skip
+    ]
+
+
+def test_contract_tables_cover_the_cli():
+    assert {("distinct", "k"), ("graph", "iterations"),
+            ("semdedup", "threshold")} <= set(NUMBER_CASES)
+    assert {("kmv-build", "col"), ("kmv-build", "out"), ("comp-build", "out"),
+            ("comp-merge", "data"), ("kmv-merge", "data"),
+            ("distinct", "col")} <= set(REQUIRED_CASES)
+    assert {("build", "interval"), ("srp-pairs", "mode")} <= set(CHOICE_CASES)
+
+
+@pytest.mark.parametrize("name,opt", REQUIRED_CASES)
+def test_required_option_omitted(cfg, no_spark, name, opt):
+    rc, _, err = run(_argv(name, skip=opt), cfg)
+    assert rc == 2
+    assert err.splitlines() == [f'dn: "{opt}" option is required', cli.USAGE]
+
+
+@pytest.mark.parametrize("name,opt", NUMBER_CASES)
+def test_number_option_rejects_non_number(cfg, no_spark, name, opt):
+    rc, _, err = run(_argv(name) + [f"--{opt}=abc"], cfg)
+    assert rc == 2
+    assert err.splitlines() == [f'dn: bad value for "{opt}" ("abc")', cli.USAGE]
+
+
+@pytest.mark.parametrize("name,opt", CHOICE_CASES)
+def test_choice_option_rejects_other_values(cfg, no_spark, name, opt):
+    rc, _, err = run(_argv(name) + [f"--{opt}", "bogus"], cfg)
+    assert rc == 2
+    assert err.splitlines() == [f'dn: bad value for "{opt}" ("bogus")', cli.USAGE]
+
+
+CONFIG_RUNS = [
+    ["datasource-add", "d", "--path=/nonexistent", "--index-path=/nonexistent"],
+    ["datasource-update", "d", "--time-field=time"],
+    ["datasource-show", "-v", "d"],
+    ["datasource-list", "-v"],
+    ["metric-add", "d", "m", "-b", "host"],
+    ["metric-list", "-v", "d"],
+    ["index-config", "d"],
+    ["metric-remove", "d", "m"],
+    ["datasource-remove", "d"],
+]
+
+
+def test_config_commands_start_no_spark(cfg, no_spark):
+    config = {n for n in cli.COMMANDS
+              if n.startswith(("datasource-", "metric-")) or n == "index-config"}
+    assert {argv[0] for argv in CONFIG_RUNS} == config
+    for argv in CONFIG_RUNS:
+        rc, _, err = run(argv, cfg)
+        assert rc == 0, (argv, err)
+
+
+@pytest.fixture
+def indexed(cfg, tmp_path):
+    """Datasources "timed" (timeField "time") and "untimed", each with
+    one metric by host; returns the parent of their index paths."""
+    idx = tmp_path / "idx"
+    for ds, extra in (("timed", ["--time-field=time"]), ("untimed", [])):
+        assert run(["datasource-add", ds, f"--path={tmp_path}",
+                    f"--index-path={idx / ds}", *extra], cfg)[0] == 0
+        assert run(["metric-add", ds, "m", "-b", "host"], cfg)[0] == 0
+    return idx
+
+
+@pytest.mark.parametrize(
+    "verb", ["build", "query", "index-scan", "index-read", "compact"])
+def test_interval_is_day_hour_or_all(cfg, no_spark, indexed, verb):
+    rc, _, err = run([verb, "--interval=week", "timed"], cfg)
+    assert rc == 2
+    assert err.splitlines()[0] == 'dn: bad value for "interval" ("week")'
+    assert not indexed.exists()
+
+
+@pytest.mark.parametrize("interval", ["day", "hour"])
+@pytest.mark.parametrize("verb", ["build", "index-scan", "index-read"])
+def test_time_interval_needs_a_time_field(cfg, no_spark, indexed, verb, interval):
+    rc, _, err = run([verb, "-i", interval, "untimed"], cfg)
+    assert rc == 1
+    assert err == (f'dn: datasource "untimed" has no time field, which '
+                   f'--interval={interval} needs (use --interval=all)\n')
+
+
+@pytest.mark.parametrize("bad,why", [
+    ("{not json", "invalid JSON: Expecting property name"),
+    ("[1]", 'a point needs "fields" and "value"'),
+    ('{"value":1}', 'a point needs "fields" and "value"'),
+    ('{"fields":{"host":"a"}}', 'a point needs "fields" and "value"'),
+    ('{"fields":{},"value":1}', 'missing breakdown "host"'),
+    ('{"fields":{"host":"a","__dn_metric":1},"value":1}',
+     "__dn_metric 1 is not one of 1 metrics"),
+    ('{"fields":{"host":"a","__dn_metric":-1},"value":1}',
+     "__dn_metric -1 is not one of 1 metrics"),
+    ('{"fields":{"host":"a"},"value":"1"}', 'value "1" is not an integer'),
+])
+def test_index_read_rejects_bad_points(cfg, no_spark, indexed, monkeypatch,
+                                       bad, why):
+    """Every input line is checked before a view is written, so a bad
+    point anywhere fails with its line number and writes nothing."""
+    good = '{"fields":{"host":"a","__dn_metric":0},"value":3}'
+    monkeypatch.setattr(sys, "stdin", io.StringIO(f"{good}\n\n{bad}\n{good}\n"))
+    rc, _, err = run(["index-read", "--interval=all", "timed"], cfg)
+    assert rc == 1
+    assert len(err.splitlines()) == 1
+    assert err.startswith(f"dn: index-read: line 3: {why}")
+    assert not indexed.exists()
+
+
+@pytest.mark.parametrize("opt", [["-f", '{"eq":["host","a"]}'], ["-b", "host"],
+                                 ["--filter={}"], ["--breakdowns=host"]])
+def test_index_scan_has_no_filter_or_breakdowns(cfg, no_spark, indexed, opt):
+    """The map phase emits every metric's points unfiltered, so it
+    takes no query filter or breakdowns rather than ignore them."""
+    rc, _, err = run(["index-scan", *opt, "timed"], cfg)
+    assert rc == 2
+    assert "unknown option" in err
+
+
+def test_query_dry_run_starts_no_spark(cfg, no_spark, indexed):
+    (indexed / "timed" / "by_hour").mkdir(parents=True)
+    rc, out, _ = run(["query", "-n", "-i", "hour", "-b", "host", "timed"], cfg)
+    assert rc == 0
+    assert out == 'would query hour index for "timed"\n'
+
+
+@pytest.mark.parametrize("argv,rc,needle", [
+    ([], 2, cli.USAGE),
+    (["nosuch"], 2, 'dn: unknown command: "nosuch"'),
+    (["datasource-list"], 0, ""),
+])
+def test_bin_dn_smoke(tmp_path, argv, rc, needle):
+    dn = os.path.join(os.path.dirname(os.path.dirname(__file__)), "bin", "dn")
+    env = dict(os.environ, DRAGNET_CONFIG=str(tmp_path / "dn.json"))
+    p = subprocess.run([sys.executable, dn, *argv], env=env,
+                       capture_output=True, text=True, timeout=300)
+    assert p.returncode == rc
+    assert "Traceback" not in p.stderr
+    assert needle in p.stderr
+    if rc == 0:
+        assert p.stdout.split() == ["DATASOURCE", "LOCATION"]
