@@ -27,7 +27,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from dragnet_spark.session import get_spark  # noqa: E402
+from dragnet_spark.session import get_spark, session_cpus  # noqa: E402
 from dragnet_spark import registry  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -217,11 +217,30 @@ MAX_GRADE_PASSES = 3
 TRAILING_K = 8
 
 
-def trailing_medians(history: Path, k: int, sf=None) -> dict[str, float]:
+#: The core count of a history line that carries none: every line
+#: written before the lines carried one came from one 32-core host.
+LEGACY_HISTORY_CPUS = 32
+
+
+def history_row_matches(rec: dict, sf, cpus: int) -> bool:
+    """Whether a history line belongs to the run keyed by (``sf``,
+    ``cpus``); ``sf=None`` matches any scale factor (a per-tier history
+    file holds one). A run on N cores is graded only against history
+    from N cores: a 4-core run against 32-core medians reads every
+    query as hot."""
+    return (sf is None or rec.get("sf") == sf) and (
+        rec.get("cpus", LEGACY_HISTORY_CPUS) == cpus
+    )
+
+
+def trailing_medians(
+    history: Path, k: int, sf=None, *, cpus: int
+) -> dict[str, float]:
     """Per-query median of the last ``k`` recorded values in a
-    ``*_HISTORY.jsonl`` file, only over rows at ``sf`` when given. This
-    is the baseline that separates machine load (everything slow at
-    once) from a plan regression (one query slow, history still)."""
+    ``*_HISTORY.jsonl`` file, only over rows keyed by ``cpus`` (and
+    ``sf`` when given). This is the baseline that separates machine
+    load (everything slow at once) from a plan regression (one query
+    slow, history still)."""
     series: dict[str, list[float]] = {}
     if not history.exists():
         return {}
@@ -230,7 +249,7 @@ def trailing_medians(history: Path, k: int, sf=None) -> dict[str, float]:
             rec = json.loads(line)
         except json.JSONDecodeError:
             continue
-        if sf is not None and rec.get("sf") != sf:
+        if not history_row_matches(rec, sf, cpus):
             continue
         for q, v in rec.get("queries", {}).items():
             series.setdefault(q, []).append(v)
@@ -251,12 +270,12 @@ TREND_POINTS = 4
 TREND_MIN_RISE = 0.15
 
 
-def _round_probe_meds(sf) -> dict[int, float]:
+def _round_probe_meds(sf, cpus: int) -> dict[int, float]:
     """Per-ROUND median of the mid-run canary probes (family probes
     excluding the first, which carries JVM warmup) from committed
-    history. This is the machine-speed series: the probe's plan has
-    never changed, so its round-over-round movement measures the BOX,
-    not the code."""
+    history at (``sf``, ``cpus``). This is the machine-speed series:
+    the probe's plan has never changed, so its round-over-round
+    movement measures the BOX, not the code."""
     per_round: dict[int, list[float]] = {}
     if not HISTORY.exists():
         return {}
@@ -265,7 +284,7 @@ def _round_probe_meds(sf) -> dict[int, float]:
             rec = json.loads(line)
         except json.JSONDecodeError:
             continue
-        if rec.get("sf") != sf:
+        if not history_row_matches(rec, sf, cpus):
             continue
         rd, can = rec.get("round"), rec.get("canary")
         if not isinstance(rd, int) or not isinstance(can, dict):
@@ -280,7 +299,7 @@ def _round_probe_meds(sf) -> dict[int, float]:
     }
 
 
-def _machine_trend(sf, probe_med: float) -> dict:
+def _machine_trend(sf, probe_med: float, cpus: int) -> dict:
     """The check the trailing-median band absorbs by construction
     (VERDICT r13 #3): each round's +5% is individually in-band, so a
     slow monotonic trend never flags. Here the canary's round-median
@@ -297,7 +316,8 @@ def _machine_trend(sf, probe_med: float) -> dict:
     # intra-round jitter masquerading as (or masking) a rising round
     this_round = current_round()
     meds = {
-        r: v for r, v in _round_probe_meds(sf).items() if r < this_round
+        r: v for r, v in _round_probe_meds(sf, cpus).items()
+        if r < this_round
     }
     series = [meds[r] for r in sorted(meds)][-(TREND_POINTS - 1):]
     series.append(probe_med)
@@ -343,13 +363,13 @@ def main() -> None:
     from pyspark.sql.functions import col, pandas_udf  # noqa: E402
 
     _warm = pandas_udf(lambda s: s, "long")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = session_cpus()
     spark.range(1024).repartition(cpus).select(_warm(col("id"))).count()
 
     load_start = _loadavg()
     sf_str = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf = float(sf_str) if sf_str.replace(".", "").isdigit() else sf_str
-    medians = trailing_medians(HISTORY, TRAILING_K, sf)
+    medians = trailing_medians(HISTORY, TRAILING_K, sf, cpus=cpus)
 
     def run_once(e) -> float:
         t0 = time.perf_counter()
@@ -469,7 +489,7 @@ def main() -> None:
         if k != "scan" and isinstance(v, float)
     )
     probe_med = mid_probes[len(mid_probes) // 2] if mid_probes else 0.0
-    machine = _machine_trend(sf, probe_med)
+    machine = _machine_trend(sf, probe_med, cpus)
     canary = {
         "mode": "per_query_vs_trailing_median",
         "grade_band": GRADE_BAND,
@@ -535,6 +555,7 @@ def main() -> None:
                 "ts": time.time(),
                 "round": current_round(),
                 "sf": out["sf"],
+                "cpus": cpus,
                 "loadavg": [load_start, load_end],
                 "queries": timings,
                 "canary": canary_samples,

@@ -1566,7 +1566,6 @@ def cmd_graph(cat: Catalog, out, opts, path):
         clustering_coefficients,
         connected_components,
         pagerank,
-        personalized_pagerank,
         triangle_counts,
     )
 
@@ -1576,6 +1575,8 @@ def cmd_graph(cat: Catalog, out, opts, path):
         raise UsageError(
             "--op must be pagerank|trustrank|triangles|clustering|components"
         )
+    if op == "trustrank" and not opts["seeds"]:
+        raise UsageError("--op=trustrank requires --seeds=PATH")
     ia, ib, iters = opts["id_a"], opts["id_b"], opts["iterations"]
     spark = _get_spark()
     pairs = spark.read.format(opts["format"]).load(path)
@@ -1584,18 +1585,15 @@ def cmd_graph(cat: Catalog, out, opts, path):
         .unionByName(pairs.select(F.col(ib).alias("id")))
         .distinct()
     )
-    if op == "pagerank":
-        res = pagerank(nodes, pairs, src_col=ia, dst_col=ib,
-                       iterations=iters)
-        score = "pagerank"
-    elif op == "trustrank":
-        if not opts["seeds"]:
-            raise UsageError("--op=trustrank requires --seeds=PATH")
-        seeds = spark.read.parquet(opts["seeds"])
-        seeds = seeds.select(F.col(seeds.columns[0]).alias("id"))
-        res = personalized_pagerank(nodes, pairs, seeds, src_col=ia,
-                                    dst_col=ib, iterations=iters)
-        score = "trustrank"
+    if op in ("pagerank", "trustrank"):
+        # trustrank is pagerank with the restart at the --seeds ids
+        seeds = None
+        if op == "trustrank":
+            seeds = spark.read.parquet(opts["seeds"])
+            seeds = seeds.select(F.col(seeds.columns[0]).alias("id"))
+        res = pagerank(nodes, pairs, seeds, src_col=ia, dst_col=ib,
+                       iterations=iters).withColumnRenamed("pagerank", op)
+        score = op
     elif op == "triangles":
         res = triangle_counts(pairs, ia, ib, include_zero_nodes=True)
         score = "n_triangles"

@@ -1,4 +1,7 @@
-"""Graph operators: connected components for cluster-level dedup.
+"""Graph operators over a near-dup (or any undirected) edge set:
+connected components and canonical-doc assignment, PageRank and its
+personalized form (TrustRank), per-node triangle counts and local
+clustering coefficients — each with the DuckDB twin that grades it.
 
 Pairwise near-dup detection (minhash/simhash/embedding LSH) emits
 edges; deduplication needs the *transitive* clusters — if A~B and B~C,
@@ -21,8 +24,48 @@ per-round plan shape here is the same building block.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def _symmetric_edges(
+    edges: DataFrame, src_col: str, dst_col: str
+) -> DataFrame:
+    """The persisted directed edge set (s, d) holding both directions
+    of every undirected edge once — the message table of every
+    per-round join in :func:`connected_components` and
+    :func:`pagerank`. The caller unpersists it.
+
+    Each edge EXPLODES into both directions instead of a two-branch
+    self-union: the (possibly expensive — e.g. a full LSH pipeline)
+    edge lineage is referenced exactly once, so no eager
+    pre-materialization pass is needed — the first job that touches
+    the result computes the lineage once and fills the cache, and the
+    edge table is held in memory once. The rows are repartitioned by
+    the per-round join key s BEFORE caching, so every round's join
+    reuses the cached layout and only the (smaller) node side
+    shuffles; the distinct runs AFTER the repartition — hash(s)
+    co-locates every (s, d) duplicate, so the dedup aggregation reuses
+    the same exchange (HashPartitioning(s) satisfies
+    ClusteredDistribution(s, d)): one full-edge exchange, not two."""
+    return (
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col(src_col).alias("s"), F.col(dst_col).alias("d")
+                    ),
+                    F.struct(
+                        F.col(dst_col).alias("s"), F.col(src_col).alias("d")
+                    ),
+                )
+            ).alias("e")
+        )
+        .select("e.s", "e.d")
+        .repartition("s")
+        .distinct()
+        .persist()
+    )
 
 
 def connected_components(
@@ -42,43 +85,7 @@ def connected_components(
     bound, observable — tools/soak_clusters.py graphs it against
     planted chain diameters).
     """
-    # symmetrize by EXPLODING each edge into both directions instead
-    # of a two-branch self-union: the (possibly expensive — e.g. a
-    # full LSH pipeline) edge lineage is referenced exactly ONCE, so
-    # the eager pre-materialization pass the union form required
-    # (edges.persist() + count() so its two branches would not each
-    # recompute the lineage) disappears — the first job that touches
-    # sym computes the edge lineage once and fills the cache, and the
-    # edge table is held in memory once (sym) instead of twice
-    # (edges + sym). Identical row multiset, hence identical labels.
-    # repartition by the join key BEFORE caching: every round's
-    # message join keys on s, and a cache partitioned on (s, d) (the
-    # distinct's layout) would re-exchange the full edge table per
-    # round — this way the per-round join reuses the cached layout
-    # and only the (smaller) label side shuffles (guide: two
-    # operations keyed the same way share one exchange). The distinct
-    # runs AFTER the repartition: hash(s) co-locates every (s, d)
-    # duplicate, so the dedup aggregation reuses the same exchange
-    # (HashPartitioning(s) satisfies ClusteredDistribution(s, d)) —
-    # one full-edge-table exchange instead of two.
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src_col).alias("s"), F.col(dst_col).alias("d")
-                    ),
-                    F.struct(
-                        F.col(dst_col).alias("s"), F.col(src_col).alias("d")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.s", "e.d")
-        .repartition("s")
-        .distinct()
-    )
-    sym.persist()
+    sym = _symmetric_edges(edges, src_col, dst_col)
     # localCheckpoint EVERY round, not just at the end: persist caches
     # the data but the LOGICAL plan still nests one union+join+agg per
     # iteration, and analyzing/compiling that exponentially-deepening
@@ -97,7 +104,6 @@ def connected_components(
     # table with a separate 1-row aggregation every round (and that
     # form had already replaced the r13 changed-row check, which
     # JOINED two node-sized tables per round).
-    from pyspark.sql import Observation
 
     def _sum_obs():
         return Observation(), F.sum(
@@ -141,6 +147,7 @@ def connected_components(
 def pagerank(
     nodes: DataFrame,
     edges: DataFrame,
+    seeds: DataFrame | None = None,
     id_col: str = "id",
     src_col: str = "id_a",
     dst_col: str = "id_b",
@@ -148,22 +155,32 @@ def pagerank(
     damping_pct: int = 85,
     scale: int = 10**12,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over an undirected edge set, in EXACT
-    integer fixed-point arithmetic so every engine computes the same
-    bits. Centrality over the near-dup graph picks the best *cluster
+    """(id, pagerank): fixed-iteration personalized PageRank over an
+    undirected edge set, in EXACT integer fixed-point arithmetic so
+    every engine computes the same bits. The restart and the dangling
+    mass re-enter only at the ``seeds`` set (ids in ``id_col``);
+    ``seeds=None`` seeds every node, which is classic PageRank.
+
+    Classic PageRank over the near-dup graph picks the best *cluster
     representative* (the doc most doc-like among its duplicates —
-    min-id canonical selection keeps an arbitrary one), and is the
-    TrustRank-style quality-propagation primitive over any similarity
-    graph.
+    min-id canonical selection keeps an arbitrary one). With seeds it
+    is TrustRank (Gyöngyi et al. 2004): rank measures proximity to
+    the seeds through the similarity graph — propagate a small
+    human-labeled trusted (or spam) set over the near-dup/link graph
+    to score the unlabeled remainder, find documents "close" to a
+    known-contaminated cluster, expand a seed whitelist. Non-seed
+    nodes unreachable from the seeds stay at exactly 0.
 
     Exactness: floating-point PageRank sums neighbor contributions in
     engine-specific order — unhashable across engines. Here ranks are
-    ``scale``-scaled BIGINTs; one iteration is
+    ``scale``-scaled BIGINTs; with seed set S (|S| counts distinct
+    seeds), d = ``damping_pct`` and dang = Σ_{deg(u)=0} r(u):
 
-        r'(v) = ((100-d)*scale) div (100*n)
-                + (d * (Σ_{u→v} (r(u) div deg(u)) + dangling div n)) div 100
+        r0(v) = scale div |S|                          if v ∈ S else 0
+        r'(v) = [((100-d)·scale) div (100·|S|)         if v ∈ S]
+                + (d·(Σ_{u→v} r(u) div deg(u)
+                      [+ dang div |S|                  if v ∈ S])) div 100
 
-    with ``d = damping_pct`` and ``dangling = Σ_{deg(u)=0} r(u)``.
     Every operation is integer (truncating ``div`` == floor on these
     non-negative values in both Spark and DuckDB), every sum is a sum
     of integers (order-independent), so K iterations are bit-identical
@@ -171,95 +188,97 @@ def pagerank(
     a deterministic definition, not an approximation to grade against.
     Final ``pagerank`` is r/scale: int64→double conversion and one
     power-of-ten divide, IEEE-identical in both engines (r ≤ scale
-    < 2^53). Headroom: 100*scale*... the widest intermediate is
-    d*(contrib+dangling/n) ≤ 85*scale = 8.5e13 « 2^63.
+    < 2^53). Headroom: the widest intermediate is
+    d·(contrib + dang div |S|) ≤ 85·scale = 8.5e13 « 2^63. DuckDB
+    twins: :func:`pagerank_sql` (every node seeded) and
+    :func:`personalized_pagerank_sql`.
 
-    Scale shape: per iteration one edge⋈rank join (src-key shuffle),
-    then the contributions UNION the carried rank rows into ONE
-    id-keyed aggregation (map-side partial combine) that rebuilds the
-    rank table directly — no separate contribution aggregation and no
-    rank⋈contrib join-back — plus a 1-row broadcast for the dangling
-    mass. localCheckpoint every round keeps the logical plan depth
-    bounded (the connected_components lesson). Driver state: none —
-    n and dangling ride 1-row broadcasts."""
+    Raises ``ValueError`` for ``damping_pct`` outside (0, 100) and for
+    a ``seeds`` frame with no rows; zero nodes and ``seeds=None``
+    return zero rows.
+
+    Scale shape: one setup pass (the eager checkpoint of the static
+    per-node state), then per iteration one edge⋈rank join (src-key
+    shuffle) whose messages UNION the carried rank rows into ONE
+    id-keyed aggregation that rebuilds the rank table — no separate
+    contribution aggregation, no rank⋈contrib join-back.
+    localCheckpoint every round keeps the logical plan depth bounded
+    (the connected_components lesson). The dangling mass is a
+    driver-side integer recurrence, so no per-round aggregate."""
     if not (0 < damping_pct < 100):
         raise ValueError("damping_pct must be in (0, 100)")
-    # symmetrize by EXPLODING each edge into both directions (the
-    # connected_components discipline): one reference to the edge
-    # lineage, so the eager pre-materialization pass the two-branch
-    # union form required disappears — the initial-checkpoint job
-    # computes the edge lineage once and fills sym's cache, and the
-    # edge table is held once (sym), not twice (edges + sym).
-    # Partitioned by the per-round join key s before caching — the
-    # contrib join then reuses the cached layout every round instead
-    # of re-exchanging the full edge table; distinct AFTER the
-    # repartition dedups inside the same exchange (hash(s) co-locates
-    # every (s, d) duplicate), so the prep pays one full-edge
-    # exchange, not two
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src_col).alias("s"), F.col(dst_col).alias("d")
-                    ),
-                    F.struct(
-                        F.col(dst_col).alias("s"), F.col(src_col).alias("d")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.s", "e.d")
-        .repartition("s")
-        .distinct()
-        .persist()
-    )
-    ids = nodes.select(F.col(id_col).alias("id"))
-    deg = sym.groupBy(F.col("s").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    S = F.lit(scale)
-    # the static per-node state (id, deg — deg NULL ⟺ dangling) is
-    # joined ONCE and carried through every checkpointed rank row:
-    # the per-round shares join against deg and the per-round
-    # left-anti dangling join (two node-keyed shuffle joins per
-    # iteration) collapse into a filter on the rank table itself
-    # The dangling mass is a DRIVER-side integer recurrence, not a
-    # per-round aggregate: dangling nodes (deg NULL ⟺ no edges)
-    # receive no messages (message targets are edge endpoints, which
-    # always have deg ≥ 1), so after any round every dangling node
-    # holds the identical rank base + (d·(0 + dang div n)) div 100 —
-    # hence dang_{t+1} = n_dang · that value, computable exactly in
-    # Python ints. This removes the old per-round 1-row dangling
-    # aggregate + its broadcast, i.e. one full scan of the rank table
-    # per iteration; the arithmetic is the same integers bit for bit.
-    # n AND n_dang ride the initial checkpoint as observed metrics
-    # (count(*) over the left join ≡ the old ids.count() — deg's ids
-    # are unique, so the join preserves row count): no separate
-    # count job, and no separate edge-materialization job — the
-    # checkpoint job is the ONLY setup pass. The initial rank value
-    # scale div n is a constant, so it is attached as a lazy literal
-    # projection AFTER the checkpoint instead of being stored in it.
-    from pyspark.sql import Observation
+    d = damping_pct
+    # the static per-node state (id[, __seed], deg — deg NULL ⟺
+    # dangling) is joined ONCE and carried through every checkpointed
+    # rank row, so the per-round deg join and dangling join collapse
+    # into filters on the rank table itself. Classic PageRank carries
+    # no seed flag: every node takes the seed term.
+    flags = [("deg", "long")]
+    n_seeds, is_seed = F.count(F.lit(1)), F.lit(True)
 
-    obs = Observation()
-    state = (
-        ids.join(deg, "id", "left")
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.col("deg").isNull(), 1)).alias("nd"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    n = int(obs.get["n"])
-    n_dang = int(obs.get["nd"])
-    ranks = state.select(
-        "id", "deg", F.lit(scale // n if n else 0).alias("r")
-    )
-    base = ((100 - damping_pct) * scale) // (100 * n) if n else 0
-    dang = n_dang * (scale // n) if n else 0
+    def by_seed(seed_term, nonseed_term):
+        if seeds is None:
+            return seed_term
+        return F.when(F.col("__seed"), seed_term).otherwise(nonseed_term)
+
+    sym = _symmetric_edges(edges, src_col, dst_col)
     try:
+        deg = sym.groupBy(F.col("s").alias("id")).agg(
+            F.count(F.lit(1)).alias("deg")
+        )
+        # deg's ids are unique, so the left join keeps one row per node
+        state = nodes.select(F.col(id_col).alias("id")).join(
+            deg, "id", "left"
+        )
+        if seeds is not None:
+            # a FULL join, so the setup observation counts every
+            # distinct seed, node or not (|S| as the SQL twin defines
+            # it); the non-node seed rows are dropped right after the
+            # checkpoint. Joined AFTER deg: both inputs are already
+            # hash-partitioned on id (the deg join, the distinct), so
+            # it adds no exchange on the node side unless AQE
+            # broadcasts deg (small graphs). A broadcast LEFT join with
+            # |S| observed on the seed side is no alternative: Spark
+            # prunes an empty seed side, observation included
+            sd = seeds.select(F.col(id_col).alias("id")).distinct()
+            state = state.withColumn("__node", F.lit(True)).join(
+                sd.withColumn("__seed", F.lit(True)), "id", "full"
+            )
+            flags = [("__seed", "boolean")] + flags
+            n_seeds = F.count("__seed")
+            is_seed = F.col("__node") & F.col("__seed")
+        cols = ["id"] + [c for c, _ in flags]
+        # |S| and the dangling-seed count ride the setup checkpoint as
+        # observed metrics: the checkpoint job is the ONLY setup pass,
+        # and it also fills sym's cache
+        obs = Observation()
+        state = state.observe(
+            obs,
+            n_seeds.alias("ns"),
+            F.count(F.when(is_seed & F.col("deg").isNull(), 1)).alias("nd"),
+        ).localCheckpoint(eager=True)
+        ns, n_dang = int(obs.get["ns"]), int(obs.get["nd"])
+        if seeds is not None:
+            if ns == 0:
+                raise ValueError("pagerank: seeds is given but holds no seed")
+            state = state.where("__node")
+        # the initial rank is a constant, attached as a lazy literal
+        # projection AFTER the checkpoint instead of stored in it
+        ranks = state.select(
+            *cols,
+            by_seed(
+                F.lit(scale // ns if ns else 0), F.lit(0).cast("long")
+            ).alias("r"),
+        )
+        base = ((100 - d) * scale) // (100 * ns) if ns else 0
+        # The dangling mass is a DRIVER-side integer recurrence, not a
+        # per-round aggregate: dangling nodes (deg NULL ⟺ no edges)
+        # receive no messages (message targets are edge endpoints,
+        # which always have deg ≥ 1), so after any round every
+        # dangling non-seed holds 0 and every dangling seed the
+        # identical base + (d·(0 + dang div |S|)) div 100 — hence
+        # dang_{t+1} = n_dang · that value, exact in Python ints.
+        dang = n_dang * (scale // ns) if ns else 0
         for _ in range(iterations):
             shares = ranks.filter(F.col("deg").isNotNull()).select(
                 "id", F.expr("r div deg").alias("c")
@@ -267,43 +286,40 @@ def pagerank(
             # contributions ride a UNION into the same id-keyed
             # aggregation that rebuilds the rank table (the
             # connected_components round shape): every node
-            # contributes one base row (its static deg, c=0), every
-            # edge message one (id, null, share) row, and ONE
-            # exchange + groupBy reduces both — no separate contrib
-            # aggregation and no rank⋈contrib join-back (each a
-            # node-table-sized exchange per iteration at corpus
-            # scale). max(deg) recovers the static deg (base row
-            # only; message rows carry null), and Σ c over {0} ∪
-            # shares is the old coalesce(contrib, 0) exactly —
-            # integer sums are order-independent, so the arithmetic
-            # is bit-identical.
+            # contributes one base row (its static state, c=0), every
+            # edge message one (id, null…, share) row, and ONE
+            # exchange + groupBy reduces both. max() over {value,
+            # null…} recovers the static state; Σ c over {0} ∪ shares
+            # is coalesce(contrib, 0) — integer sums are
+            # order-independent, so the arithmetic is exact.
             msgs = sym.join(shares, sym.s == shares.id).select(
                 F.col("d").alias("id"),
-                F.lit(None).cast("long").alias("deg"),
+                *[F.lit(None).cast(t).alias(c) for c, t in flags],
                 "c",
             )
-            dang_term = dang // n if n else 0
+            dang_term = dang // ns if ns else 0
             ranks = (
-                ranks.select("id", "deg", F.lit(0).cast("long").alias("c"))
+                ranks.select(*cols, F.lit(0).cast("long").alias("c"))
                 .union(msgs)
                 .groupBy("id")
-                .agg(F.max("deg").alias("deg"), F.sum("c").alias("c"))
+                .agg(
+                    *[F.max(c).alias(c) for c in cols[1:]],
+                    F.sum("c").alias("c"),
+                )
                 .select(
-                    "id",
-                    "deg",
-                    (
+                    *cols,
+                    by_seed(
                         F.lit(base)
-                        + F.expr(f"({damping_pct} * (coalesce(c, 0)"
-                                 f" + {dang_term})) div 100")
+                        + F.expr(f"({d} * (coalesce(c, 0)"
+                                 f" + {dang_term})) div 100"),
+                        F.expr(f"({d} * coalesce(c, 0)) div 100"),
                     ).alias("r"),
                 )
                 .localCheckpoint(eager=True)
             )
-            # every dangling node's new rank, hence the next round's
-            # dangling mass (c = 0 for all of them)
-            dang = n_dang * (base + (damping_pct * dang_term) // 100)
+            dang = n_dang * (base + (d * dang_term) // 100)
         return ranks.select(
-            "id", (F.col("r").cast("double") / S).alias("pagerank")
+            "id", (F.col("r").cast("double") / F.lit(scale)).alias("pagerank")
         )
     finally:
         sym.unpersist()
@@ -353,178 +369,6 @@ def pagerank_sql(
         + f"\nSELECT id, CAST(r AS DOUBLE) / {S} AS pagerank"
         f" FROM r{iterations}"
     )
-
-
-def personalized_pagerank(
-    nodes: DataFrame,
-    edges: DataFrame,
-    seeds: DataFrame,
-    id_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    iterations: int = 4,
-    damping_pct: int = 85,
-    scale: int = 10**12,
-) -> DataFrame:
-    """Personalized PageRank (TrustRank, Gyöngyi et al. 2004) over an
-    undirected edge set, in the same exact integer fixed-point
-    discipline as :func:`pagerank`: the restart mass goes ONLY to the
-    ``seeds`` set, so rank measures proximity to the seeds through the
-    similarity graph. The canonical curation uses: propagate a small
-    human-labeled trusted (or spam) set over the near-dup/link graph
-    to score the unlabeled remainder; find documents "close" to a
-    known-contaminated cluster; expand a seed whitelist.
-
-    Semantics (integer form, seed set S, d = damping_pct):
-
-        r0(v)  = scale div |S| if v ∈ S else 0
-        r'(v)  = [((100-d)·scale) div (100·|S|)           if v ∈ S]
-                 + (d·(Σ_{u→v} r(u) div deg(u)
-                        [+ dang div |S| if v ∈ S])) div 100
-
-    i.e. both the restart and the dangling mass re-enter at the seeds
-    (the standard PPR formulation), every operation integer, so K
-    iterations are bit-identical in any engine — value-hash gradable
-    like :func:`pagerank` (twin: :func:`personalized_pagerank_sql`).
-    Non-seed nodes unreachable from S stay at exactly 0.
-
-    Scale shape identical to :func:`pagerank`: per iteration one
-    edge⋈rank join, then one id-keyed union-aggregation that rebuilds
-    the rank table (the seed/deg flags ride the carried rank rows —
-    no contrib join-back), a 1-row broadcast for the dangling mass,
-    localCheckpoint per round to bound plan depth."""
-    if not (0 < damping_pct < 100):
-        raise ValueError("damping_pct must be in (0, 100)")
-    # explode-symmetrize (the pagerank/components discipline): one
-    # reference to the edge lineage, so no eager pre-materialization
-    # pass; partitioned by the per-round join key s before caching,
-    # distinct after the repartition so the dedup shares that
-    # exchange — one full-edge exchange
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src_col).alias("s"), F.col(dst_col).alias("d")
-                    ),
-                    F.struct(
-                        F.col(dst_col).alias("s"), F.col(src_col).alias("d")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.s", "e.d")
-        .repartition("s")
-        .distinct()
-        .persist()
-    )
-    ids = nodes.select(F.col(id_col).alias("id"))
-    sd = seeds.select(F.col(id_col).alias("id")).distinct()
-    # |S| is a driver scalar (the old code already paid this count as
-    # ns_df.first(); reusing the value as a literal removes the
-    # per-round ns broadcast whose subplan re-executed under every
-    # eager checkpoint)
-    ns = sd.count()
-    if ns == 0:
-        raise ValueError("personalized_pagerank requires >= 1 seed")
-    deg = sym.groupBy(F.col("s").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    d = damping_pct
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    # static per-node state (id, __seed, deg) joined ONCE and carried
-    # through every checkpointed rank row — the per-round deg join
-    # and dangling left-anti join collapse into filters on the rank
-    # table itself (the pagerank rework, plus the seed flag)
-    ranks = (
-        ids.join(sd.withColumn("__seed", F.lit(True)), "id", "left")
-        .select(
-            "id",
-            F.coalesce(F.col("__seed"), F.lit(False)).alias("__seed"),
-        )
-        .join(deg, "id", "left")
-        .select(
-            "id",
-            "__seed",
-            "deg",
-            F.when(F.col("__seed"), F.lit(scale // ns))
-            .otherwise(F.lit(0).cast("long"))
-            .alias("r"),
-        )
-        .observe(
-            obs,
-            F.count(
-                F.when(F.col("__seed") & F.col("deg").isNull(), 1)
-            ).alias("nd"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    # driver-side dangling recurrence (see pagerank): dangling nodes
-    # get no messages, dangling NON-seeds hold rank 0 after any round
-    # and dangling seeds all hold the identical seed_term with c = 0,
-    # so dang_{t+1} = n_dang_seed · that value — exact Python ints,
-    # replacing the per-round 1-row aggregate + broadcast (one full
-    # rank-table scan per iteration). n_dang_seed (the same set the
-    # old aggregate summed) rides the initial checkpoint as an
-    # observed metric — no separate count job.
-    n_dang_seed = int(obs.get["nd"])
-    base_s = ((100 - d) * scale) // (100 * ns)
-    dang = n_dang_seed * (scale // ns)
-    try:
-        for _ in range(iterations):
-            shares = ranks.filter(F.col("deg").isNotNull()).select(
-                "id", F.expr("r div deg").alias("c")
-            )
-            # union-into-one-aggregation round (see pagerank): base
-            # rows carry the static (__seed, deg) state with c=0,
-            # edge messages carry null state with the share; one
-            # exchange + groupBy replaces the contrib aggregation
-            # and the rank⋈contrib join-back. max() over {value,
-            # null…} recovers the static flags; Σ c equals the old
-            # coalesce(contrib, 0) bit for bit.
-            msgs = sym.join(shares, sym.s == shares.id).select(
-                F.col("d").alias("id"),
-                F.lit(None).cast("boolean").alias("__seed"),
-                F.lit(None).cast("long").alias("deg"),
-                "c",
-            )
-            dang_term = dang // ns
-            seed_term = (
-                F.lit(base_s)
-                + F.expr(f"({d} * (coalesce(c, 0) + {dang_term})) div 100")
-            )
-            nonseed_term = F.expr(f"({d} * coalesce(c, 0)) div 100")
-            ranks = (
-                ranks.select(
-                    "id", "__seed", "deg",
-                    F.lit(0).cast("long").alias("c"),
-                )
-                .union(msgs)
-                .groupBy("id")
-                .agg(
-                    F.max("__seed").alias("__seed"),
-                    F.max("deg").alias("deg"),
-                    F.sum("c").alias("c"),
-                )
-                .select(
-                    "id",
-                    "__seed",
-                    "deg",
-                    F.when(F.col("__seed"), seed_term)
-                    .otherwise(nonseed_term)
-                    .alias("r"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            dang = n_dang_seed * (base_s + (d * dang_term) // 100)
-        return ranks.select(
-            "id",
-            (F.col("r").cast("double") / F.lit(scale)).alias("trustrank"),
-        )
-    finally:
-        sym.unpersist()
 
 
 def personalized_pagerank_sql(

@@ -332,6 +332,45 @@ def _chunked_argmin(Q, C, chunk_elems: int = LEVEL2_CHUNK_ELEMS):
     return a, dmin
 
 
+def _level2_lloyd(sup, ids, Q, target, iterations, chunk_elems):
+    """Level-2 Lloyd over ONE super-cluster's rows (``ids``, quantized
+    ``Q``): k₂ = ceil(m / target) sub-clusters seeded in (md5(id), id)
+    order (the global rule), ``iterations`` truncating-div centroid
+    updates, then the final :func:`_chunked_argmin` — ``(a, dmin)``,
+    the sub-cluster and squared distance of every row. ``sup`` only
+    names the group in the packed-id overflow error."""
+    import hashlib
+
+    import numpy as np
+
+    m = len(ids)
+    k2 = max(1, (m + target - 1) // target)
+    if k2 >= ARGMIN_PACK:
+        raise ContractError(
+            f"super-cluster {sup} needs k2={k2} sub-clusters "
+            f">= SUBCLUSTER_STRIDE={ARGMIN_PACK}: the packed cluster "
+            f"id would overflow into the super id. A group this "
+            f"size ({m} rows) means level 1 collapsed — raise "
+            f"target_rows_per_cluster or iterations"
+        )
+    hs = np.array([hashlib.md5(str(i).encode()).hexdigest() for i in ids])
+    order = np.lexsort((ids, hs))
+    C = Q[order[:k2]].copy()
+    for _ in range(iterations):
+        a, _dmin = _chunked_argmin(Q, C, chunk_elems)
+        for c in range(k2):
+            mask = a == c
+            if mask.any():  # empty cluster keeps its centroid
+                # TRUNCATING division toward zero — Spark `div` and
+                # DuckDB `//` truncate; numpy's `//` floors (−7//2 = −4
+                # vs −3), which with negative coordinate sums would put
+                # level 2 one quantum off the module's declared
+                # centroid discipline and break SQL-twin bit parity
+                s = Q[mask].sum(axis=0)
+                C[c] = np.sign(s) * (np.abs(s) // mask.sum())
+    return _chunked_argmin(Q, C, chunk_elems)
+
+
 def kmeans_assign_two_level(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -406,38 +445,7 @@ def kmeans_assign_two_level(
             sup = int(key[0])
             ids = pdf["id"].to_numpy(dtype=np.int64)
             Q = np.asarray(list(pdf["q"]), dtype=np.int64)
-            m = len(ids)
-            k2 = max(1, (m + target - 1) // target)
-            if k2 >= stride:
-                raise ContractError(
-                    f"super-cluster {sup} needs k2={k2} sub-clusters "
-                    f">= SUBCLUSTER_STRIDE={stride}: the packed cluster "
-                    f"id would overflow into the super id. A group this "
-                    f"size ({m} rows) means level 1 collapsed — raise "
-                    f"target_rows_per_cluster or iterations"
-                )
-            # deterministic seed order: (md5(id), id), the global rule
-            import hashlib
-
-            hs = np.array(
-                [hashlib.md5(str(i).encode()).hexdigest() for i in ids]
-            )
-            order = np.lexsort((ids, hs))
-            C = Q[order[:k2]].copy()
-            for _ in range(iters):
-                a, _dmin = _chunked_argmin(Q, C, chunk)
-                for c in range(k2):
-                    mask = a == c
-                    if mask.any():  # empty cluster keeps its centroid
-                        # TRUNCATING division toward zero — Spark `div`
-                        # and DuckDB `//` truncate; numpy's `//` floors
-                        # (−7//2 = −4 vs −3), which with negative
-                        # coordinate sums would put level 2 one quantum
-                        # off the module's declared centroid discipline
-                        # and break SQL-twin bit parity
-                        s = Q[mask].sum(axis=0)
-                        C[c] = np.sign(s) * (np.abs(s) // mask.sum())
-            a, dmin = _chunked_argmin(Q, C, chunk)
+            a, dmin = _level2_lloyd(sup, ids, Q, target, iters, chunk)
             return pd.DataFrame(
                 {
                     "id": ids,
@@ -544,6 +552,40 @@ def _cluster_pairs_np(ids, M, threshold: float):
     )
 
 
+def _cluster_pairs_frame(groups, threshold, max_cluster_rows):
+    """The (cluster, kept_id, dropped_id, cosine) frame of every
+    ``(cluster, ids, M)`` group in ``groups``, from
+    :func:`_cluster_pairs_np` after the size guard: a cluster above
+    ``max_cluster_rows`` raises instead of running its O(n_c²) pair
+    search. The groups' arrays are concatenated into ONE frame, so a
+    task holding many (mostly pair-free) clusters builds no
+    per-cluster pandas frame."""
+    import numpy as np
+    import pandas as pd
+
+    out = {
+        "cluster": [np.array([], np.int64)],
+        "kept_id": [np.array([], np.int64)],
+        "dropped_id": [np.array([], np.int64)],
+        "cosine": [np.array([], np.float64)],
+    }
+    for cluster, ids, M in groups:
+        if len(ids) > max_cluster_rows:
+            raise ContractError(
+                f"cluster {cluster} holds {len(ids)} rows > "
+                f"max_cluster_rows={max_cluster_rows}: k is pinned far "
+                f"too small for this corpus — rerun kmeans_assign with "
+                f"target_rows_per_cluster (auto-k keeps clusters "
+                f"bounded), or raise max_cluster_rows knowingly"
+            )
+        kept, dropped, cos = _cluster_pairs_np(ids, M, threshold)
+        out["cluster"].append(np.full(len(kept), cluster, np.int64))
+        out["kept_id"].append(kept)
+        out["dropped_id"].append(dropped)
+        out["cosine"].append(cos)
+    return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+
+
 def semdedup_prune_pairs(
     df: DataFrame,
     assign: DataFrame,
@@ -569,32 +611,20 @@ def semdedup_prune_pairs(
     result engine-exact). This replaces the earlier merge-join form
     whose interpreted HOF dot made Σ C(n_c,2) pairs the wall."""
     import numpy as np
-    import pandas as pd
 
     v = df.select(F.col(id_col).cast("long").alias("id"), F.col(vec_col)).join(
         assign.select("id", "cluster"), "id"
     )
 
     def pairs(key, pdf):
-        cluster = int(key[0])
-        if len(pdf) > max_cluster_rows:
-            raise ContractError(
-                f"cluster {cluster} holds {len(pdf)} rows > "
-                f"max_cluster_rows={max_cluster_rows}: k is pinned far "
-                f"too small for this corpus — rerun kmeans_assign with "
-                f"target_rows_per_cluster (auto-k keeps clusters "
-                f"bounded), or raise max_cluster_rows knowingly"
-            )
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        M = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-        kept, dropped, cos = _cluster_pairs_np(ids, M, threshold)
-        return pd.DataFrame(
-            {
-                "cluster": np.full(len(kept), cluster, dtype=np.int64),
-                "kept_id": kept,
-                "dropped_id": dropped,
-                "cosine": cos,
-            }
+        return _cluster_pairs_frame(
+            [(
+                int(key[0]),
+                pdf["id"].to_numpy(dtype=np.int64),
+                np.asarray(list(pdf[vec_col]), dtype=np.float64),
+            )],
+            threshold,
+            max_cluster_rows,
         )
 
     # cluster is LONG: two-level ids are super·2²⁰ + sub, which
@@ -717,7 +747,6 @@ def semdedup_prune_fused(
     import math
 
     import numpy as np
-    import pandas as pd
 
     empty_schema = "cluster long, kept_id long, dropped_id long, cosine double"
     qv = quantize_vectors(df, vec_col, id_col, scale).persist()
@@ -733,25 +762,14 @@ def semdedup_prune_fused(
             assigned = _assign_carry(df, cents, vec_col, id_col, scale)
 
             def pairs(key, pdf):
-                cluster = int(key[0])
-                if len(pdf) > max_cluster_rows:
-                    raise ContractError(
-                        f"cluster {cluster} holds {len(pdf)} rows > "
-                        f"max_cluster_rows={max_cluster_rows}: k is pinned far "
-                        f"too small for this corpus — rerun kmeans_assign with "
-                        f"target_rows_per_cluster (auto-k keeps clusters "
-                        f"bounded), or raise max_cluster_rows knowingly"
-                    )
-                ids = pdf["id"].to_numpy(dtype=np.int64)
-                M = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-                kept, dropped, cos = _cluster_pairs_np(ids, M, threshold)
-                return pd.DataFrame(
-                    {
-                        "cluster": np.full(len(kept), cluster, dtype=np.int64),
-                        "kept_id": kept,
-                        "dropped_id": dropped,
-                        "cosine": cos,
-                    }
+                return _cluster_pairs_frame(
+                    [(
+                        int(key[0]),
+                        pdf["id"].to_numpy(dtype=np.int64),
+                        np.asarray(list(pdf[vec_col]), dtype=np.float64),
+                    )],
+                    threshold,
+                    max_cluster_rows,
                 )
 
             return (
@@ -777,69 +795,14 @@ def semdedup_prune_fused(
             sup = int(key[0])
             ids = pdf["id"].to_numpy(dtype=np.int64)
             Q = np.asarray(list(pdf["q"]), dtype=np.int64)
-            m = len(ids)
-            k2 = max(1, (m + target - 1) // target)
-            if k2 >= stride:
-                raise ContractError(
-                    f"super-cluster {sup} needs k2={k2} sub-clusters "
-                    f">= SUBCLUSTER_STRIDE={stride}: the packed cluster "
-                    f"id would overflow into the super id. A group this "
-                    f"size ({m} rows) means level 1 collapsed — raise "
-                    f"target_rows_per_cluster or iterations"
-                )
-            # deterministic seed order: (md5(id), id), the global rule
-            import hashlib
-
-            hs = np.array(
-                [hashlib.md5(str(i).encode()).hexdigest() for i in ids]
-            )
-            order = np.lexsort((ids, hs))
-            C = Q[order[:k2]].copy()
-            for _ in range(iters):
-                a, _dmin = _chunked_argmin(Q, C, chunk)
-                for c in range(k2):
-                    mask = a == c
-                    if mask.any():  # empty cluster keeps its centroid
-                        # TRUNCATING division toward zero (see
-                        # kmeans_assign_two_level.sub)
-                        s = Q[mask].sum(axis=0)
-                        C[c] = np.sign(s) * (np.abs(s) // mask.sum())
-            a, _dmin = _chunked_argmin(Q, C, chunk)
+            a, _dmin = _level2_lloyd(sup, ids, Q, target, iters, chunk)
             V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            frames = []
-            for c in np.unique(a):
-                mask = a == c
-                packed = sup * stride + int(c)
-                if mask.sum() > max_cluster_rows:
-                    raise ContractError(
-                        f"cluster {packed} holds {int(mask.sum())} rows > "
-                        f"max_cluster_rows={max_cluster_rows}: k is pinned far "
-                        f"too small for this corpus — rerun kmeans_assign with "
-                        f"target_rows_per_cluster (auto-k keeps clusters "
-                        f"bounded), or raise max_cluster_rows knowingly"
-                    )
-                kept, dropped, cos = _cluster_pairs_np(
-                    ids[mask], V[mask], threshold
-                )
-                if len(kept):
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "cluster": np.full(
-                                    len(kept), packed, dtype=np.int64
-                                ),
-                                "kept_id": kept,
-                                "dropped_id": dropped,
-                                "cosine": cos,
-                            }
-                        )
-                    )
-            if not frames:
-                return pd.DataFrame(
-                    {"cluster": [], "kept_id": [], "dropped_id": [],
-                     "cosine": []}
-                )
-            return pd.concat(frames, ignore_index=True)
+            masks = ((int(c), a == c) for c in np.unique(a))
+            return _cluster_pairs_frame(
+                ((sup * stride + c, ids[m], V[m]) for c, m in masks),
+                threshold,
+                max_cluster_rows,
+            )
 
         return (
             level1.where(F.col("id").isNotNull())

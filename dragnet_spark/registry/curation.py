@@ -336,16 +336,16 @@ def _trustrank_oracle() -> str:
     "engines); unreachable non-seeds sit at exactly 0",
 )
 def docs_neardup_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dragnet_spark.ops.graph import personalized_pagerank
+    from dragnet_spark.ops.graph import pagerank
 
     docs = _t(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(
         docs, "text", "doc_id", threshold=_JACCARD_T, ngram=_NGRAM
     )
     seeds = docs.filter(F.col("doc_id") % 17 == 0).select("doc_id")
-    return personalized_pagerank(
-        docs, pairs, seeds, id_col="doc_id"
-    ).select(F.col("id").alias("doc_id"), "trustrank")
+    return pagerank(docs, pairs, seeds, id_col="doc_id").select(
+        F.col("id").alias("doc_id"), F.col("pagerank").alias("trustrank")
+    )
 
 
 def _jaccard_oracle_strings(threshold: float, ngram: int = _NGRAM) -> str:

@@ -14,6 +14,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Local cores a session runs on when ``SPARK_GRAFT_CPUS`` is unset.
+DEFAULT_CPUS = 32
+
+
+def session_cpus() -> int:
+    """The local core count :func:`get_spark` sizes a session by
+    (``SPARK_GRAFT_CPUS``, else :data:`DEFAULT_CPUS`)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", str(DEFAULT_CPUS)))
+
 
 def get_spark(
     app_name: str = "dragnet_spark",
@@ -39,7 +48,7 @@ def get_spark(
             repo_root + (os.pathsep + pp if pp else "")
         )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = session_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -1043,6 +1043,36 @@ def test_graph_cli(cfg, tmp_path, spark):
     assert rc != 0
 
 
+def test_graph_cli_trustrank_output_bytes(cfg, tmp_path, spark):
+    """dn graph --op=trustrank prints exactly these bytes: header, then
+    rows by (score desc, id). Seed 99 is in no pair; it still counts
+    in |S| (the restart mass splits three ways), as in the DuckDB
+    twin personalized_pagerank_sql."""
+    pairs = [(0, 1), (0, 2), (0, 3), (1, 2), (3, 4), (5, 6), (6, 7),
+             (8, 9), (2, 8)]
+    src = str(tmp_path / "pairs.parquet")
+    spark.createDataFrame(pairs, "id_a long, id_b long").write.parquet(src)
+    seeds = str(tmp_path / "seeds.parquet")
+    spark.createDataFrame([(0,), (6,), (99,)], "id long").write.parquet(seeds)
+    rc, out, _ = run(
+        ["graph", src, "--op", "trustrank", "--seeds", seeds], cfg
+    )
+    assert rc == 0
+    assert out == (
+        "id  trustrank\n"
+        "6  0.260127083332\n"
+        "0  0.129616229421\n"
+        "2  0.057148726849\n"
+        "1  0.045917271088\n"
+        "5  0.036603125\n"
+        "7  0.036603125\n"
+        "4  0.033410050153\n"
+        "8  0.03042379115\n"
+        "3  0.030277970677\n"
+        "9  0.00653929398\n"
+    )
+
+
 def test_components_store_cli(cfg, tmp_path, spark):
     """comp-build + comp-merge + comp-read: fold == batch through the
     CLI; maintain compacts it (kind=components)."""

@@ -16,6 +16,7 @@ import json
 import pytest
 
 import __spark_entry__ as entrymod
+from dragnet_spark.session import session_cpus
 from tools import check_correctness
 from tools.bench_octave import TIERS, run_tier
 
@@ -55,6 +56,8 @@ def test_run_tier_writes_artifact_and_one_history_line(keep_conf, sf_dir,
     lines = (tmp_path / "BENCH_T_HISTORY.jsonl").read_text().splitlines()
     assert len(lines) == 1
     assert json.loads(lines[0])["queries"] == art["queries"]
+    # history is keyed by core count, like bench.py's
+    assert json.loads(lines[0])["cpus"] == art["cpus"] == session_cpus()
 
     no_prev = dataclasses.replace(tier, prev=None, bench=("dedup_exact",))
     assert run_tier(no_prev, tmp_path / "B2.json", sf_dir=sf_dir) == 0

@@ -334,6 +334,8 @@ def _seed_history_if_absent(history: Path, out: Path) -> None:
     """First banded run: seed per-query history from the artifact
     already at ``out``, so grading starts from measured history
     instead of an empty band."""
+    import bench
+
     if history.exists() or not out.exists():
         return
     try:
@@ -347,6 +349,7 @@ def _seed_history_if_absent(history: Path, out: Path) -> None:
             "ts": None,
             "round": rec.get("round"),
             "seeded_from": f"{out.name} (committed run)",
+            "cpus": rec.get("cpus", bench.LEGACY_HISTORY_CPUS),
             "queries": rec["queries"],
         }) + "\n")
 
@@ -391,7 +394,7 @@ def run_tier(
     history line; return the exit code."""
     import bench
     from dragnet_spark import registry
-    from dragnet_spark.session import get_spark
+    from dragnet_spark.session import get_spark, session_cpus
 
     if tier.driver_mem:
         os.environ.setdefault("DRAGNET_DRIVER_MEM", tier.driver_mem)
@@ -403,7 +406,8 @@ def run_tier(
     meta_p = Path(sf_dir) / "_gen_meta.json"
     meta = json.loads(meta_p.read_text()) if meta_p.exists() else {}
     _seed_history_if_absent(history, out)
-    medians = bench.trailing_medians(history, TRAILING_K)
+    cpus = session_cpus()
+    medians = bench.trailing_medians(history, TRAILING_K, cpus=cpus)
     prev = _prev_rows(tier.prev)
     spark = get_spark(app_name="bench_octave")
     qs = registry.queries()
@@ -467,6 +471,7 @@ def run_tier(
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "round": rnd,
+        "cpus": cpus,
         "queries": timings,
     }
     if tier.prev:
@@ -509,6 +514,7 @@ def run_tier(
             f.write(json.dumps({
                 "ts": time.time(),
                 "round": rnd,
+                "cpus": cpus,
                 "queries": timings,
                 "n_over_band": len(over_band),
             }) + "\n")

@@ -12,10 +12,11 @@ from __future__ import annotations
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from dragnet_spark.session import get_spark  # noqa: E402
+from dragnet_spark.session import get_spark, session_cpus  # noqa: E402
 from dragnet_spark import registry  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -33,7 +34,7 @@ def main() -> None:
     from pyspark.sql.functions import col, pandas_udf
 
     _warm = pandas_udf(lambda s: s, "long")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = session_cpus()
     spark.range(1024).repartition(cpus).select(_warm(col("id"))).count()
 
     for name in args:
