@@ -1485,53 +1485,40 @@ def cmd_semdedup(cat: Catalog, out, opts, path):
     paper's k ∝ n regime, keeping cluster size (and the pair stage)
     bounded as the corpus grows; prefer it over --k for any corpus
     whose size you don't control. It SELF-SIZES the assignment too
-    (ops/kmeans.kmeans_assign_auto): flat Lloyd below k=1024, the
-    hierarchical two-level form above it — the n·√k posture past
-    ~10⁶ vectors that retired the 1000×-tier assignment wall.
-    --two-level forces the hierarchical form at any size (uses
+    (ops/kmeans.semdedup_prune_fused, mode "auto"): flat Lloyd below
+    k=1024, the hierarchical two-level form above it — the n·√k
+    posture past ~10⁶ vectors that retired the 1000×-tier assignment
+    wall. --two-level forces the hierarchical form at any size (uses
     --target-rows, default 250). Prints cluster sizes and the
     pairs found; --out writes the SURVIVOR ids (corpus minus every
     dropped_id) as parquet."""
     from pyspark.sql import functions as F
 
-    from dragnet_spark.ops.kmeans import (
-        kmeans_assign,
-        kmeans_assign_auto,
-        kmeans_assign_two_level,
-        semdedup_prune_pairs,
-    )
+    from dragnet_spark.ops.kmeans import semdedup_prune_fused
 
-    target, iters, thr = opts["target_rows"], opts["iterations"], opts["threshold"]
-    id_col, vec_col = opts["id_col"], opts["vec_col"]
-    spark = _get_spark()
-    df = spark.read.format(opts["format"]).load(path)
+    target, thr = opts["target_rows"], opts["threshold"]
+    id_col = opts["id_col"]
     if opts["two_level"]:
-        assign = kmeans_assign_two_level(
-            df, vec_col=vec_col, id_col=id_col, iterations=iters,
+        sizing = dict(
+            mode="two_level",
             target_rows_per_cluster=250 if target is None else target,
         )
     elif target is not None:
-        # self-sizing: flat below k=1024 (lower constants), two-level
-        # above (n·√k) — the graded routing boundary (TWO_LEVEL_MIN_K)
-        assign = kmeans_assign_auto(
-            df, vec_col=vec_col, id_col=id_col, iterations=iters,
-            target_rows_per_cluster=target,
-        )
+        sizing = dict(target_rows_per_cluster=target)
     else:
-        assign = kmeans_assign(
-            df, vec_col=vec_col, id_col=id_col, k=opts["k"],
-            iterations=iters,
-        )
-    sizes = sorted(
-        (r["cluster"], r["n"])
-        for r in assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
+        sizing = dict(k=opts["k"])
+    df = _get_spark().read.format(opts["format"]).load(path)
+    pairs, sizes = semdedup_prune_fused(
+        df, vec_col=opts["vec_col"], id_col=id_col,
+        iterations=opts["iterations"], threshold=thr, **sizing,
     )
+    # one pass computes the pairs and fills the sizes; the counts and
+    # the survivors write read the checkpoint
+    pairs = pairs.localCheckpoint(eager=True)
+    sizes = sorted(sizes().items())
     out.write(
         "k-means: %d vectors -> %d clusters (sizes %s)\n"
         % (sum(n for _, n in sizes), len(sizes), ",".join(str(n) for _, n in sizes))
-    )
-    pairs = semdedup_prune_pairs(
-        df, assign, vec_col=vec_col, id_col=id_col, threshold=thr
     )
     dropped = pairs.select(F.col("dropped_id").alias("id")).distinct()
     n_pairs = pairs.count()

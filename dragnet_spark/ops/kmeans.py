@@ -51,12 +51,25 @@ brief's dedup family).
 
 from __future__ import annotations
 
+import math
+from collections.abc import Callable
+
 from dragnet_spark.errors import ContractError
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 DEFAULT_SCALE = 1_000_000
+
+
+def _quantized(vec_col: str, scale: int) -> Column:
+    """BIGINT floor(x·scale) of every coordinate of ``vec_col``: one
+    double multiply + floor per element — bit-identical in any IEEE
+    engine, after which k-means never touches a float again."""
+    return F.transform(
+        F.col(vec_col),
+        lambda x: F.floor(x.cast("double") * F.lit(float(scale))).cast("long"),
+    )
 
 
 def quantize_vectors(
@@ -65,60 +78,106 @@ def quantize_vectors(
     id_col: str = "vec_id",
     scale: int = DEFAULT_SCALE,
 ) -> DataFrame:
-    """(id, q): each float coordinate → BIGINT floor(x·scale). One
-    double multiply + floor per element — bit-identical in any IEEE
-    engine, after which k-means never touches a float again."""
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * F.lit(float(scale))).cast("long"),
+    """(id, q): the id cast to long and the :func:`_quantized`
+    vector."""
+    return df.select(
+        F.col(id_col).cast("long").alias("id"),
+        _quantized(vec_col, scale).alias("q"),
     )
-    return df.select(F.col(id_col).cast("long").alias("id"), q.alias("q"))
+
+
+#: per-task cap, in int64 ELEMENTS, on one distance block (rows ×
+#: centroids slice): 16M elements = 128 MB. The full m×k₂ level-2
+#: matrix at the stated 10⁸-vector regime (groups ≈158k rows, k₂≈632)
+#: is ~800 MB per task per Lloyd pass — workable on 128 GiB local[32],
+#: a cliff on 8-16 GB cluster executors (VERDICT r11 #3). Argmin is
+#: row-independent, so computing the matrix in row blocks is exact.
+LEVEL2_CHUNK_ELEMS = 16_000_000
+
+
+def _chunked_argmin(Q, C, chunk_elems: int = LEVEL2_CHUNK_ELEMS):
+    """(argmin, min-dist) of the squared-L2 distance matrix between
+    int64 rows ``Q`` (m × dims) and centroids ``C`` (k × dims) — the
+    one distance kernel of every assignment in this module. The
+    expanded form ‖q‖² − 2q·C + ‖c‖² is exact in int64 (see the
+    overflow headroom above) and `argmin` takes the first (lowest-id)
+    minimum, so the result equals the lexicographic (dist, cluster)
+    rule of the SQL twins. The matrix is computed in row blocks of ≤
+    ``chunk_elems`` elements — bit-identical to the full-matrix form
+    (each row's argmin depends on that row alone), with per-task peak
+    memory
+
+        8·(chunk_elems + m·dims + k·dims) bytes + temporaries
+
+    instead of 8·m·k. At the defaults that is ~128 MB of distance
+    block for ANY group size, so a level-2 task fits an 8 GB executor
+    even at the 10⁸-vector regime's group shapes."""
+    import numpy as np
+
+    m = len(Q)
+    k = len(C)
+    rows = max(1, chunk_elems // max(k, 1))
+    a = np.empty(m, dtype=np.int64)
+    dmin = np.empty(m, dtype=np.int64)
+    cc = (C * C).sum(axis=1)
+    for lo in range(0, m, rows):
+        hi = min(lo + rows, m)
+        d = (
+            (Q[lo:hi] * Q[lo:hi]).sum(axis=1)[:, None]
+            - 2 * (Q[lo:hi] @ C.T)
+            + cc[None, :]
+        )
+        idx = d.argmin(axis=1)
+        a[lo:hi] = idx
+        dmin[lo:hi] = d[np.arange(hi - lo), idx]
+    return a, dmin
 
 
 def _assign(
-    qv: DataFrame, cents: list[list[int]], keep_q: bool = False
+    src: DataFrame, cents: list[list[int]], keep_q: bool = False
 ) -> DataFrame:
-    """(id, cluster, dist): nearest centroid per row, ties to the
-    lower cluster id. One Arrow-batched numpy pass (mapInPandas) —
-    int64 arithmetic is exact and `np.argmin` takes the first
-    (lowest-id) minimum, so the result is bit-identical to the
-    integer-expression form but vectorized (Spark's higher-order
-    array folds are interpreted per element; the numpy form is
-    ~50× faster at any corpus size). No shuffle; centroids ride the
-    closure (k×dims ints). ``keep_q`` carries the quantized vector
-    through so the centroid update needs no join back to the
-    source."""
+    """(id, cluster, dist[, q], …): the nearest centroid of every row
+    of ``src`` — (id, q, …) — by :func:`_chunked_argmin`, ties to the
+    lower cluster id, with every further column of ``src`` carried
+    through unchanged. One Arrow-batched numpy pass (mapInPandas):
+    Spark's higher-order array folds are interpreted per element, the
+    numpy form is ~50× faster at any corpus size. No shuffle;
+    centroids ride the closure (k×dims ints). ``keep_q`` also carries
+    the quantized vector, for a level-2 pass that re-clusters it.
+    Carrying the payload (the float vector, for the prune) puts the
+    placement decision next to the payload, so a per-cluster consumer
+    needs no join back to the source."""
     import numpy as np
-    import pandas as pd
+
+    from pyspark.sql.types import (
+        IntegerType,
+        LongType,
+        StructField,
+        StructType,
+    )
 
     C = np.asarray(cents, dtype=np.int64)  # k × dims
+    cols = ["id", "cluster", "dist"] + (["q"] if keep_q else [])
+    cols += [c for c in src.columns if c not in ("id", "q")]
 
     def run(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            Q = np.asarray(list(pdf["q"]), dtype=np.int64)  # n × dims
-            # n × k × dims diffs would be fine at these dims, but the
-            # expanded form ||q||² - 2q·C + ||c||² stays O(n·k) memory
-            d = (
-                (Q * Q).sum(axis=1)[:, None]
-                - 2 * (Q @ C.T)
-                + (C * C).sum(axis=1)[None, :]
+            a, dmin = _chunked_argmin(
+                np.asarray(list(pdf["q"]), dtype=np.int64), C
             )
-            best = d.argmin(axis=1)  # first min → lowest cluster id
-            out = {
-                "id": pdf["id"].to_numpy(),
-                "cluster": best.astype(np.int32),
-                "dist": d[np.arange(len(best)), best],
-            }
-            if keep_q:
-                out["q"] = pdf["q"]
-            yield pd.DataFrame(out)
+            yield pdf.assign(cluster=a.astype(np.int32), dist=dmin)[cols]
 
-    schema = "id long, cluster int, dist long"
-    if keep_q:
-        schema += ", q array<bigint>"
-    return qv.mapInPandas(run, schema=schema)
+    schema = StructType(
+        [
+            src.schema["id"],
+            StructField("cluster", IntegerType()),
+            StructField("dist", LongType()),
+        ]
+        + [src.schema[c] for c in cols[3:]]
+    )
+    return src.mapInPandas(run, schema=schema)
 
 
 def _update_partials(qv: DataFrame, cents: list[list[int]]) -> DataFrame:
@@ -126,19 +185,17 @@ def _update_partials(qv: DataFrame, cents: list[list[int]]) -> DataFrame:
     (cluster, dim, s, n) where ``s`` is the int64 sum of the quantized
     coordinate over this task's rows assigned to ``cluster`` and ``n``
     that cluster's task-local row count (repeated per dim). Assignment
-    is the exact :func:`_assign` arithmetic (same expanded-distance
-    expression, same first-minimum argmin), but the per-dimension sums
-    are accumulated in numpy INSIDE the same pass — each task emits at
-    most k·dims rows instead of feeding n·dims exploded rows through a
-    hash aggregate. Integer addition is order-independent, so
-    ``sum(s) div sum(n)`` downstream equals the exploded form's
-    ``sum(val) div count(1)`` bit for bit."""
+    is :func:`_chunked_argmin`, as in :func:`_assign`, but the
+    per-dimension sums are accumulated in numpy INSIDE the same pass —
+    each task emits at most k·dims rows instead of feeding n·dims
+    exploded rows through a hash aggregate. Integer addition is
+    order-independent, so ``sum(s) div sum(n)`` downstream equals the
+    exploded form's ``sum(val) div count(1)`` bit for bit."""
     import numpy as np
     import pandas as pd
 
     C = np.asarray(cents, dtype=np.int64)  # k × dims
     k, dims = C.shape
-    cc = (C * C).sum(axis=1)
 
     def run(batches):
         sums = np.zeros((k, dims), dtype=np.int64)
@@ -147,12 +204,7 @@ def _update_partials(qv: DataFrame, cents: list[list[int]]) -> DataFrame:
             if not len(pdf):
                 continue
             Q = np.asarray(list(pdf["q"]), dtype=np.int64)  # n × dims
-            d = (
-                (Q * Q).sum(axis=1)[:, None]
-                - 2 * (Q @ C.T)
-                + cc[None, :]
-            )
-            best = d.argmin(axis=1)  # first min → lowest cluster id
+            best, _dmin = _chunked_argmin(Q, C)
             # segment-sum by cluster: sort once, reduceat per segment
             order = np.argsort(best, kind="stable")
             bs = best[order]
@@ -234,6 +286,53 @@ def auto_k(n: int, target_rows_per_cluster: int) -> int:
     return max(1, (n + target_rows_per_cluster - 1) // target_rows_per_cluster)
 
 
+#: auto-k count at or above which :func:`semdedup_prune_fused`'s
+#: ``mode="auto"`` runs the hierarchical two-level form (≈2·n·√k·dims)
+#: instead of flat assignment (n·k·dims — the 4-tier-graded reference
+#: form). Flat's constant factors win while k is small (sf0.1, k=8:
+#: flat ≈1.5 s vs two-level ≈5 s); the measured regime boundary is
+#: between k=800 (100×: flat 45.8 s, fine) and k=8000 (1000×: flat
+#: 1263.7 s, factor 27.6 — the wall). 1024 splits the measured-good
+#: from the measured-bad octave.
+TWO_LEVEL_MIN_K = 1024
+
+
+def _fit(
+    qv: DataFrame,
+    k: int | None,
+    target_rows_per_cluster: int | None,
+    iterations: int,
+    mode: str = "flat",
+    two_level_min_k: int = TWO_LEVEL_MIN_K,
+) -> tuple[str, list[list[int]]]:
+    """The level-1 centroids over the persisted quantized vectors
+    ``qv`` and the form they serve: ``(mode, cents)``, with ``cents``
+    empty on an empty corpus. A pinned ``k`` runs flat Lloyd at k;
+    ``k=None`` sizes k = :func:`auto_k` from one count over ``qv``,
+    and ``mode="auto"`` then routes at ``two_level_min_k``. The
+    two-level form seeds k₁ = ⌈√k⌉ super-clusters. Either form then
+    runs ``iterations`` Lloyd rounds."""
+    if (k is not None and k < 1) or iterations < 0:
+        raise ContractError("k >= 1 and iterations >= 0 required")
+    if mode not in ("auto", "flat", "two_level"):
+        raise ContractError(f"mode must be auto|flat|two_level, not {mode!r}")
+    if k is None:
+        k = auto_k(qv.count(), target_rows_per_cluster)
+        if mode == "auto":
+            mode = "flat" if k < two_level_min_k else "two_level"
+    elif mode == "two_level":
+        raise ContractError(
+            "a pinned k runs flat Lloyd: the two-level form sizes itself "
+            "from target_rows_per_cluster"
+        )
+    else:
+        mode = "flat"
+    if mode == "two_level":
+        k = max(1, math.ceil(math.sqrt(k)))
+    cents = kmeans_seeds(qv, k)
+    return mode, (_lloyd_rounds(qv, cents, iterations) if cents else [])
+
+
 def kmeans_assign(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -258,22 +357,18 @@ def kmeans_assign(
     accumulates per-cluster coordinate sums in numpy, emitting at most
     k·dims partial rows; those aggregate to k·dims rows and the
     centroid ints ride the driver (the MLlib/SemDeDup posture —
-    centroid state is O(k), corpora are O(10¹⁰) rows). The returned assignment is eagerly
-    localCheckpoint-ed (3 ints per row — the PageRank lineage
-    discipline) so the quantized-vector cache can be released before
-    returning instead of leaking for the session."""
-    if k < 1 or iterations < 0:
-        raise ContractError("k >= 1 and iterations >= 0 required")
+    centroid state is O(k), corpora are O(10¹⁰) rows). The returned
+    assignment is eagerly localCheckpoint-ed (3 ints per row — the
+    PageRank lineage discipline) so the quantized-vector cache can be
+    released before returning instead of leaking for the session."""
     qv = quantize_vectors(df, vec_col, id_col, scale).persist()
     try:
-        if target_rows_per_cluster is not None:
-            k = auto_k(qv.count(), target_rows_per_cluster)
-        cents = kmeans_seeds(qv, k)
+        pinned = k if target_rows_per_cluster is None else None
+        _, cents = _fit(qv, pinned, target_rows_per_cluster, iterations)
         if not cents:  # empty corpus: nothing to assign
             return qv.sparkSession.createDataFrame(
                 [], "id long, cluster int, dist long"
             )
-        cents = _lloyd_rounds(qv, cents, iterations)
         # eager checkpoint: materializes (id, cluster, dist) — linear,
         # small — and truncates lineage off qv so the finally-block
         # unpersist can't force a recompute later
@@ -288,48 +383,6 @@ def kmeans_assign(
 #: instead of OOMing an executor. 2M rows × 64-dim float64 ≈ 1 GB of
 #: group payload plus the (chunked) sim rows.
 MAX_CLUSTER_ROWS = 2_000_000
-
-#: per-task cap, in int64 ELEMENTS, on one level-2 distance block
-#: (m-rows × k₂ slice): 16M elements = 128 MB. The full m×k₂ matrix
-#: at the stated 10⁸-vector regime (groups ≈158k rows, k₂≈632) is
-#: ~800 MB per task per Lloyd pass — workable on 128 GiB local[32],
-#: a cliff on 8-16 GB cluster executors (VERDICT r11 #3). Argmin is
-#: row-independent, so computing the matrix in row blocks is exact.
-LEVEL2_CHUNK_ELEMS = 16_000_000
-
-
-def _chunked_argmin(Q, C, chunk_elems: int = LEVEL2_CHUNK_ELEMS):
-    """(argmin, min-dist) of the squared-L2 distance matrix between
-    int64 rows ``Q`` (m × dims) and centroids ``C`` (k₂ × dims),
-    computed in row blocks of ≤ ``chunk_elems`` matrix elements —
-    bit-identical to the full-matrix form (each row's argmin depends
-    on that row alone; first-minimum tie rule is argmin's on any
-    block split), with per-task peak memory
-
-        8·(chunk_elems + m·dims + k₂·dims) bytes + temporaries
-
-    instead of 8·m·k₂. At the defaults that is ~128 MB of distance
-    block for ANY group size, so a level-2 task fits an 8 GB executor
-    even at the 10⁸-vector regime's group shapes."""
-    import numpy as np
-
-    m = len(Q)
-    k2 = len(C)
-    rows = max(1, chunk_elems // max(k2, 1))
-    a = np.empty(m, dtype=np.int64)
-    dmin = np.empty(m, dtype=np.int64)
-    cc = (C * C).sum(axis=1)
-    for lo in range(0, m, rows):
-        hi = min(lo + rows, m)
-        d = (
-            (Q[lo:hi] * Q[lo:hi]).sum(axis=1)[:, None]
-            - 2 * (Q[lo:hi] @ C.T)
-            + cc[None, :]
-        )
-        idx = d.argmin(axis=1)
-        a[lo:hi] = idx
-        dmin[lo:hi] = d[np.arange(hi - lo), idx]
-    return a, dmin
 
 
 def _level2_lloyd(sup, ids, Q, target, iterations, chunk_elems):
@@ -371,6 +424,32 @@ def _level2_lloyd(sup, ids, Q, target, iterations, chunk_elems):
     return _chunked_argmin(Q, C, chunk_elems)
 
 
+def _two_level(src, cents, target, iterations, chunk_elems, body, schema):
+    """The two-level form past its level-1 centroids ``cents`` (from
+    :func:`_fit`), written once for every caller: one :func:`_assign`
+    pass over ``src`` (id, q, payload…) picks each row's
+    super-cluster, one shuffle groups the rows by it, and each group
+    runs :func:`_level2_lloyd` and returns ``body(sup, pdf, a,
+    dmin)`` — the caller's ``schema`` frame built from the group's
+    rows, their sub-cluster ids and their distances."""
+    import numpy as np
+
+    def run(key, pdf):
+        sup = int(key[0])
+        a, dmin = _level2_lloyd(
+            sup, pdf["id"].to_numpy(dtype=np.int64),
+            np.asarray(list(pdf["q"]), dtype=np.int64),
+            target, iterations, chunk_elems,
+        )
+        return body(sup, pdf, a, dmin)
+
+    return (
+        _assign(src, cents, keep_q=True)
+        .groupBy("cluster")
+        .applyInPandas(run, schema=schema)
+    )
+
+
 def kmeans_assign_two_level(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -399,8 +478,9 @@ def kmeans_assign_two_level(
     ``super · SUBCLUSTER_STRIDE + sub`` (globally unique, stride
     2²⁰ = :data:`ARGMIN_PACK`), ``dist`` the squared quantized L2 to
     the final sub-centroid. Cluster sizes stay bounded by ≈
-    ``target_rows_per_cluster`` exactly as the flat auto-k form, so
-    :func:`semdedup_prune_pairs` consumes this output unchanged.
+    ``target_rows_per_cluster`` exactly as the flat auto-k form;
+    :func:`semdedup_prune_fused` runs the same two-level form
+    (:func:`_two_level`) with the pair search inside each group.
     Level-2 groups ride one shuffle on the super-cluster id; a
     super-cluster's rows fit one task by construction (n/√k rows —
     for 10⁸ vectors at target 250, √k ≈ 632, groups ≈ 158k rows).
@@ -415,96 +495,30 @@ def kmeans_assign_two_level(
     Oracle-graded: :func:`kmeans_two_level_sql` is the unrolled
     DuckDB twin (level 2 is the same integer Lloyd chain with every
     join/group additionally keyed by the super-cluster id), and the
-    `semdedup_prune_two_level` registry entry grades the composed
+    `semdedup_prune_two_level` registry entry grades the
     assignment+prune pipeline; the tests additionally pin
     determinism, bounded cluster size, blob cohesion, and the
     prune-stage contract."""
-    import numpy as np
     import pandas as pd
 
-    import math
-
+    schema = "id long, cluster long, dist long"
     qv = quantize_vectors(df, vec_col, id_col, scale).persist()
     try:
-        n = qv.count()
-        if n == 0:
-            return qv.sparkSession.createDataFrame(
-                [], "id long, cluster long, dist long"
-            )
-        k = auto_k(n, target_rows_per_cluster)
-        k1 = max(1, math.ceil(math.sqrt(k)))
-        cents = kmeans_seeds(qv, k1)
-        cents = _lloyd_rounds(qv, cents, iterations)
-        level1 = _assign(qv, cents, keep_q=True)
         target = target_rows_per_cluster
-        iters = iterations
-        stride = ARGMIN_PACK
-        chunk = chunk_elems
+        _, cents = _fit(qv, None, target, iterations, "two_level")
+        if not cents:
+            return qv.sparkSession.createDataFrame([], schema)
 
-        def sub(key, pdf):
-            sup = int(key[0])
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            Q = np.asarray(list(pdf["q"]), dtype=np.int64)
-            a, dmin = _level2_lloyd(sup, ids, Q, target, iters, chunk)
+        def body(sup, pdf, a, dmin):
             return pd.DataFrame(
-                {
-                    "id": ids,
-                    "cluster": sup * stride + a.astype(np.int64),
-                    "dist": dmin,
-                }
+                {"id": pdf["id"], "cluster": sup * ARGMIN_PACK + a, "dist": dmin}
             )
 
-        return (
-            level1.select("id", "cluster", "q")
-            .groupBy("cluster")
-            .applyInPandas(sub, schema="id long, cluster long, dist long")
-            .localCheckpoint(eager=True)
-        )
+        return _two_level(
+            qv, cents, target, iterations, chunk_elems, body, schema
+        ).localCheckpoint(eager=True)
     finally:
         qv.unpersist()
-
-
-#: auto-k count above which :func:`kmeans_assign_auto` switches from
-#: flat assignment (n·k·dims — the 4-tier-graded reference form) to
-#: the hierarchical two-level form (≈2·n·√k·dims). Flat's constant
-#: factors win while k is small (sf0.1, k=8: flat ≈1.5 s vs two-level
-#:  ≈5 s); the measured regime boundary is between k=800 (100×: flat
-#: 45.8 s, fine) and k=8000 (1000×: flat 1263.7 s, factor 27.6 — the
-#: wall). 1024 splits the measured-good from the measured-bad octave.
-TWO_LEVEL_MIN_K = 1024
-
-
-def kmeans_assign_auto(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    iterations: int = 3,
-    scale: int = DEFAULT_SCALE,
-    target_rows_per_cluster: int = 250,
-    two_level_min_k: int = TWO_LEVEL_MIN_K,
-) -> DataFrame:
-    """SemDeDup assignment that SIZES ITSELF: one count picks
-    k = auto_k(n, target), then delegates to flat
-    :func:`kmeans_assign` below ``two_level_min_k`` clusters (the
-    graded reference form — lower constants, int cluster ids) and to
-    :func:`kmeans_assign_two_level` at or above it (n·√k — the form
-    that retired the 1000× tier's 27.6× assignment wall). Both
-    branches are oracle-graded (`semdedup_prune` /
-    `semdedup_prune_two_level`); output feeds
-    :func:`semdedup_prune_pairs` unchanged either way (cluster ids
-    are int below the switch, packed long above — both bounded near
-    ``target_rows_per_cluster`` rows per cluster)."""
-    n = df.count()
-    k = auto_k(n, target_rows_per_cluster)
-    if k < two_level_min_k:
-        return kmeans_assign(
-            df, vec_col=vec_col, id_col=id_col, k=k,
-            iterations=iterations, scale=scale,
-        )
-    return kmeans_assign_two_level(
-        df, vec_col=vec_col, id_col=id_col, iterations=iterations,
-        scale=scale, target_rows_per_cluster=target_rows_per_cluster,
-    )
 
 
 def _cluster_pairs_np(ids, M, threshold: float):
@@ -512,8 +526,7 @@ def _cluster_pairs_np(ids, M, threshold: float):
     pair with HALF_UP-rounded cosine >= threshold, lower id kept.
     ``ids`` is the cluster's int64 id vector, ``M`` its float64 row
     matrix. Rows are sorted by id HERE, so emission never depends on
-    the caller's row order (join output vs mask extraction produce
-    identical results). Chunked matmul bounds peak memory at
+    the caller's row order. Chunked matmul bounds peak memory at
     O(chunk x n_c) exactly as the pre-r15 inline form did."""
     import numpy as np
 
@@ -538,8 +551,6 @@ def _cluster_pairs_np(ids, M, threshold: float):
             out_b.append(ids[bi])
             out_c.append(sims[ai, bi])
     if not out_a:
-        import numpy as np
-
         return (
             np.array([], dtype=np.int64),
             np.array([], dtype=np.int64),
@@ -552,161 +563,57 @@ def _cluster_pairs_np(ids, M, threshold: float):
     )
 
 
-def _cluster_pairs_frame(groups, threshold, max_cluster_rows):
-    """The (cluster, kept_id, dropped_id, cosine) frame of every
-    ``(cluster, ids, M)`` group in ``groups``, from
-    :func:`_cluster_pairs_np` after the size guard: a cluster above
-    ``max_cluster_rows`` raises instead of running its O(n_c²) pair
-    search. The groups' arrays are concatenated into ONE frame, so a
-    task holding many (mostly pair-free) clusters builds no
-    per-cluster pandas frame."""
+def _cluster_pairs_frame(cl, pdf, vec_col, threshold, max_cluster_rows):
+    """The pair stage's rows for one group ``pdf`` (id, …,
+    ``vec_col``) whose row i sits in cluster ``cl[i]``: (cluster,
+    kept_id, dropped_id, cosine, n) — one SIZE row per cluster, with
+    ``n`` its row count (null ids included) and the pair columns 0,
+    then every within-cluster pair from :func:`_cluster_pairs_np`,
+    with ``n`` 0. Null ids (a ``cast('long')`` miss) emit no pairs. A
+    cluster holding more than ``max_cluster_rows`` ids raises instead
+    of running its O(n_c²) pair search. All clusters' arrays are
+    concatenated into ONE frame, so a task holding many (mostly
+    pair-free) clusters builds no per-cluster pandas frame."""
     import numpy as np
     import pandas as pd
 
+    live = pdf["id"].notna().to_numpy()
+    V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
+    clusters, sizes = np.unique(cl, return_counts=True)
+    zero = np.zeros(len(clusters), np.int64)
     out = {
-        "cluster": [np.array([], np.int64)],
-        "kept_id": [np.array([], np.int64)],
-        "dropped_id": [np.array([], np.int64)],
-        "cosine": [np.array([], np.float64)],
+        "cluster": [clusters],
+        "kept_id": [zero],
+        "dropped_id": [zero],
+        "cosine": [zero.astype(np.float64)],
+        "n": [sizes.astype(np.int64)],
     }
-    for cluster, ids, M in groups:
+    for c in clusters:
+        m = (cl == c) & live
+        ids = pdf["id"][m].to_numpy(dtype=np.int64)
         if len(ids) > max_cluster_rows:
             raise ContractError(
-                f"cluster {cluster} holds {len(ids)} rows > "
+                f"cluster {c} holds {len(ids)} rows > "
                 f"max_cluster_rows={max_cluster_rows}: k is pinned far "
-                f"too small for this corpus — rerun kmeans_assign with "
-                f"target_rows_per_cluster (auto-k keeps clusters "
-                f"bounded), or raise max_cluster_rows knowingly"
+                f"too small for this corpus — size k with "
+                f"target_rows_per_cluster (`dn semdedup --target-rows`; "
+                f"auto-k keeps clusters bounded), or raise "
+                f"max_cluster_rows knowingly"
             )
-        kept, dropped, cos = _cluster_pairs_np(ids, M, threshold)
-        out["cluster"].append(np.full(len(kept), cluster, np.int64))
+        kept, dropped, cos = _cluster_pairs_np(ids, V[m], threshold)
+        out["cluster"].append(np.full(len(kept), c, np.int64))
         out["kept_id"].append(kept)
         out["dropped_id"].append(dropped)
         out["cosine"].append(cos)
+        out["n"].append(np.zeros(len(kept), np.int64))
     return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
-
-
-def semdedup_prune_pairs(
-    df: DataFrame,
-    assign: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    max_cluster_rows: int = MAX_CLUSTER_ROWS,
-) -> DataFrame:
-    """Within-cluster near-duplicate pairs: (cluster, kept_id,
-    dropped_id, cosine) for every same-cluster pair with
-    round(cosine, 6) >= threshold, keeping the lower id. ``assign``
-    is :func:`kmeans_assign` output (id, cluster). Restricting pairs
-    to cluster mates bounds pair volume at Σ_c C(n_c, 2) — SemDeDup's
-    point: k independent (n/k)² searches instead of one n²; with
-    :func:`auto_k` sizing (k ∝ n) cluster size is a CONSTANT, so the
-    whole stage is linear in the corpus.
-
-    Physical shape: one shuffle on ``cluster`` (applyInPandas), then
-    each cluster's pairs come from one BLAS matmul over its own
-    vectors — the same chunked-matmul discipline as
-    ``embedding_near_dup_pairs`` (row-chunks bound peak memory at
-    O(chunk × n_c); HALF_UP rounding before the threshold keeps the
-    result engine-exact). This replaces the earlier merge-join form
-    whose interpreted HOF dot made Σ C(n_c,2) pairs the wall."""
-    import numpy as np
-
-    v = df.select(F.col(id_col).cast("long").alias("id"), F.col(vec_col)).join(
-        assign.select("id", "cluster"), "id"
-    )
-
-    def pairs(key, pdf):
-        return _cluster_pairs_frame(
-            [(
-                int(key[0]),
-                pdf["id"].to_numpy(dtype=np.int64),
-                np.asarray(list(pdf[vec_col]), dtype=np.float64),
-            )],
-            threshold,
-            max_cluster_rows,
-        )
-
-    # cluster is LONG: two-level ids are super·2²⁰ + sub, which
-    # overflows int32 past ~2k super-clusters
-    return v.groupBy("cluster").applyInPandas(
-        pairs, schema="cluster long, kept_id long, dropped_id long, cosine double"
-    )
-
-
-def _assign_carry(
-    df: DataFrame,
-    cents: list[list[int]],
-    vec_col: str,
-    id_col: str,
-    scale: int,
-    keep_q: bool = False,
-) -> DataFrame:
-    """One mapInPandas pass over the SOURCE table that assigns and
-    carries the raw vector through: (id, cluster[, q], <vec_col>).
-    The quantized coordinates ride the same JVM column expression as
-    :func:`quantize_vectors` (bit-parity by construction — no numpy
-    re-derivation of Spark's cast semantics), the assignment is the
-    exact :func:`_assign` arithmetic, and the float vector never
-    leaves the row — so a downstream per-cluster consumer needs NO
-    join back to the source and exactly ONE vector-sized exchange
-    (the cluster key), where the join form pays two id-keyed
-    vector-sized exchanges plus the regroup at corpus scale."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    C = np.asarray(cents, dtype=np.int64)  # k × dims
-    cc = (C * C).sum(axis=1)
-
-    q = F.transform(
-        F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * F.lit(float(scale))).cast("long"),
-    )
-    src = df.select(
-        F.col(id_col).cast("long").alias("id"),
-        q.alias("q"),
-        F.col(vec_col),
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.asarray(list(pdf["q"]), dtype=np.int64)  # n × dims
-            d = (
-                (Q * Q).sum(axis=1)[:, None]
-                - 2 * (Q @ C.T)
-                + cc[None, :]
-            )
-            best = d.argmin(axis=1)  # first min → lowest cluster id
-            out = {"id": pdf["id"], "cluster": best.astype(np.int32)}
-            if keep_q:
-                out["q"] = pdf["q"]
-            out[vec_col] = pdf[vec_col]
-            yield pd.DataFrame(out)
-
-    fields = [
-        StructField("id", LongType()),
-        StructField("cluster", IntegerType()),
-    ]
-    if keep_q:
-        fields.append(StructField("q", ArrayType(LongType())))
-    fields.append(StructField(vec_col, df.schema[vec_col].dataType))
-    return src.mapInPandas(run, schema=StructType(fields))
 
 
 def semdedup_prune_fused(
     df: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
+    k: int | None = None,
     iterations: int = 3,
     scale: int = DEFAULT_SCALE,
     target_rows_per_cluster: int = 250,
@@ -715,100 +622,89 @@ def semdedup_prune_fused(
     two_level_min_k: int = TWO_LEVEL_MIN_K,
     max_cluster_rows: int = MAX_CLUSTER_ROWS,
     chunk_elems: int = LEVEL2_CHUNK_ELEMS,
-) -> DataFrame:
-    """assign + :func:`semdedup_prune_pairs` fused into ONE pass over
-    the source vectors — result-identical to composing the two (the
-    same seeds/Lloyd arithmetic produces the same centroids; the same
-    per-cluster pair math runs over the same row groups), with the
-    re-attach join gone:
+) -> tuple[DataFrame, Callable[[], dict[int, int]]]:
+    """SemDeDup prune: exact fixed-point k-means over the embeddings,
+    then the near-duplicate pair search restricted to cluster mates.
+    Returns ``(pairs, sizes)``. ``pairs`` is (cluster, kept_id,
+    dropped_id, cosine): every same-cluster pair with
+    round(cosine, 6) >= threshold, keeping the lower id. Restricting
+    pairs to cluster mates bounds pair volume at Σ_c C(n_c, 2) —
+    SemDeDup's point: k independent (n/k)² searches instead of one
+    n²; with :func:`auto_k` sizing (k ∝ n) cluster size is a
+    CONSTANT, so the whole stage is linear in the corpus. ``sizes()``
+    returns {cluster: rows} (null ids included) once an action has
+    read the whole of ``pairs`` — the size rows ride the pair stage
+    and an ``Observation`` collects them, so they cost no extra pass;
+    on an empty corpus it returns {} at once. Before any action on a
+    non-empty ``pairs`` it blocks.
 
-    * composed form, at corpus scale: Lloyd over the persisted
-      quantized vectors, an ASSIGNMENT pass + eager checkpoint, a
-      parquet RE-SCAN of the vectors, an id-keyed sort-merge join
-      (two vector-sized exchanges) to glue (id, cluster) back onto
-      the embeddings, then the cluster-key regroup (a third
-      vector-sized exchange) for the pair stage;
-    * fused form: Lloyd unchanged (centroids are O(k·dims) driver
-      ints either way), then ONE pass (:func:`_assign_carry`) that
-      assigns and carries the vector, and ONE cluster-key exchange
-      into the pair stage. The guide-§8 rule applied to SemDeDup:
-      the placement decision (cluster id) is computed next to the
-      payload instead of joined back onto it.
+    ``k`` pins flat Lloyd at k (the :func:`kmeans_assign` run);
+    otherwise k = :func:`auto_k` from one count and ``mode`` picks the
+    assignment: ``"flat"`` (auto-k flat Lloyd, the assignment
+    :func:`kmeans_assign` returns), ``"two_level"`` (the
+    :func:`kmeans_assign_two_level` assignment — level 2 AND the pair
+    search both run inside the per-super-cluster task), or ``"auto"``
+    (flat below ``two_level_min_k``, two-level at or above it).
 
-    ``mode``: ``"flat"`` (auto-k flat Lloyd), ``"two_level"``
-    (hierarchical — level 2 AND the pair search both run inside the
-    per-super-cluster task, so the packed-cluster regroup exchange
-    disappears too), or ``"auto"`` (k routes at ``two_level_min_k``,
-    the :func:`kmeans_assign_auto` rule, decided from the same count).
+    Physical shape: Lloyd over the persisted quantized vectors
+    (centroids are O(k·dims) driver ints), then ONE pass
+    (:func:`_assign`) over the source that assigns each row and
+    carries its vector, and ONE cluster-key exchange into the pair
+    stage, where each cluster's pairs come from one BLAS matmul over
+    its own vectors (row-chunks bound peak memory at O(chunk × n_c);
+    HALF_UP rounding before the threshold keeps the result
+    engine-exact). The cluster id is computed next to the vector, so
+    no id-keyed join re-attaches it.
 
     Null ids (a ``cast('long')`` miss) assign normally — they feed
-    seeds/auto-k exactly as the composed form — but emit no pairs,
-    mirroring the composed form's inner join on id."""
-    import math
-
+    seeds, auto-k and the cluster sizes — but emit no pairs."""
     import numpy as np
 
-    empty_schema = "cluster long, kept_id long, dropped_id long, cosine double"
+    schema = "cluster long, kept_id long, dropped_id long, cosine double"
     qv = quantize_vectors(df, vec_col, id_col, scale).persist()
     try:
-        n = qv.count()
-        if n == 0:
-            return df.sparkSession.createDataFrame([], empty_schema)
-        k = auto_k(n, target_rows_per_cluster)
-        if mode == "auto":
-            mode = "flat" if k < two_level_min_k else "two_level"
-        if mode == "flat":
-            cents = _lloyd_rounds(qv, kmeans_seeds(qv, k), iterations)
-            assigned = _assign_carry(df, cents, vec_col, id_col, scale)
-
-            def pairs(key, pdf):
-                return _cluster_pairs_frame(
-                    [(
-                        int(key[0]),
-                        pdf["id"].to_numpy(dtype=np.int64),
-                        np.asarray(list(pdf[vec_col]), dtype=np.float64),
-                    )],
-                    threshold,
-                    max_cluster_rows,
-                )
-
-            return (
-                assigned.where(F.col("id").isNotNull())
-                .groupBy("cluster")
-                .applyInPandas(pairs, schema=empty_schema)
-            )
-
-        # two-level: level 1 assigns super-clusters in the same carry
-        # pass; level 2's Lloyd AND the within-sub-cluster pair search
-        # run inside the per-super-cluster task (the level-2 shuffle
-        # already co-located every packed cluster's rows — regrouping
-        # by packed id was a pure re-exchange of the vectors)
-        k1 = max(1, math.ceil(math.sqrt(k)))
-        cents = _lloyd_rounds(qv, kmeans_seeds(qv, k1), iterations)
-        level1 = _assign_carry(df, cents, vec_col, id_col, scale, keep_q=True)
         target = target_rows_per_cluster
-        iters = iterations
-        stride = ARGMIN_PACK
-        chunk = chunk_elems
+        mode, cents = _fit(qv, k, target, iterations, mode, two_level_min_k)
+        if not cents:
+            return df.sparkSession.createDataFrame([], schema), lambda: {}
+        src = df.select(
+            F.col(id_col).cast("long").alias("id"),
+            _quantized(vec_col, scale).alias("q"),
+            F.col(vec_col),
+        )
 
-        def sub_pairs(key, pdf):
-            sup = int(key[0])
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            Q = np.asarray(list(pdf["q"]), dtype=np.int64)
-            a, _dmin = _level2_lloyd(sup, ids, Q, target, iters, chunk)
-            V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            masks = ((int(c), a == c) for c in np.unique(a))
+        def frame(cl, pdf):
             return _cluster_pairs_frame(
-                ((sup * stride + c, ids[m], V[m]) for c, m in masks),
-                threshold,
-                max_cluster_rows,
+                cl, pdf, vec_col, threshold, max_cluster_rows
             )
 
-        return (
-            level1.where(F.col("id").isNotNull())
-            .groupBy("cluster")
-            .applyInPandas(sub_pairs, schema=empty_schema)
+        staged_schema = schema + ", n long"
+        if mode == "flat":
+            staged = (
+                _assign(src, cents)
+                .groupBy("cluster")
+                .applyInPandas(
+                    lambda key, pdf: frame(
+                        np.full(len(pdf), key[0], np.int64), pdf
+                    ),
+                    schema=staged_schema,
+                )
+            )
+        else:
+            staged = _two_level(
+                src, cents, target, iterations, chunk_elems,
+                lambda sup, pdf, a, _dmin: frame(sup * ARGMIN_PACK + a, pdf),
+                staged_schema,
+            )
+        obs = Observation()
+        staged = staged.observe(
+            obs,
+            F.collect_list(
+                F.when(F.col("n") > 0, F.struct("cluster", "n"))
+            ).alias("sizes"),
         )
+        pairs = staged.where(F.col("n") == 0).drop("n")
+        return pairs, lambda: {r["cluster"]: r["n"] for r in obs.get["sizes"]}
     finally:
         qv.unpersist()
 

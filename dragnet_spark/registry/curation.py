@@ -1459,15 +1459,13 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dragnet_spark.ops.kmeans import semdedup_prune_fused
 
     emb = _t(spark, sf_dir, "embeddings")
-    # r15: assignment+prune fused — result-identical to
-    # kmeans_assign(...) + semdedup_prune_pairs(...) (pinned by
-    # test_semdedup_prune_fused_matches_composed), with the id-keyed
-    # re-attach join and the assignment checkpoint pass removed
+    # the pairs of kmeans_assign's auto-k clusters (pinned against a
+    # brute-force search by test_semdedup_prune_fused_matches_composed)
     return semdedup_prune_fused(
         emb, iterations=_KM_ITERS,
         target_rows_per_cluster=_KM_TARGET, threshold=_EMB_T,
         mode="flat",
-    )
+    )[0]
 
 
 def _semdedup_prune_two_level_oracle(threshold: float) -> str:
@@ -1502,32 +1500,33 @@ def _semdedup_prune_two_level_oracle(threshold: float) -> str:
     "applyInPandas pass (Σ m_g·k₂ ≈ n·√k) — total 2·n·√k, every step "
     "the same exact integer discipline, so the unrolled two-level "
     "DuckDB twin (kmeans_two_level_sql) grades it bit-for-bit. "
-    "Cluster ids pack as super·2²⁰+sub; semdedup_prune_pairs "
-    "consumes them unchanged, same bounded-cluster linear pair stage",
+    "Cluster ids pack as super·2²⁰+sub; the pair search runs inside "
+    "each super-cluster task, same bounded-cluster linear pair stage",
 )
 def semdedup_prune_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dragnet_spark.ops.kmeans import semdedup_prune_fused
 
     emb = _t(spark, sf_dir, "embeddings")
-    # r15: fused — level-2 Lloyd AND the pair search run inside the
-    # per-super-cluster task (one vector-sized exchange total);
-    # result-identical to kmeans_assign_two_level + prune_pairs
-    # (pinned by test_semdedup_prune_fused_matches_composed)
+    # level-2 Lloyd AND the pair search run inside the
+    # per-super-cluster task (one vector-sized exchange total); the
+    # pairs of kmeans_assign_two_level's clusters (pinned by
+    # test_semdedup_prune_fused_matches_composed)
     return semdedup_prune_fused(
         emb, iterations=_KM_ITERS,
         target_rows_per_cluster=_KM_TARGET, threshold=_EMB_T,
         mode="two_level",
-    )
+    )[0]
 
 
 def _semdedup_prune_auto_oracle(threshold: float) -> str:
-    """One static SQL that grades kmeans_assign_auto's ROUTING: both
-    branch pipelines appear, each reading from a source guarded by the
-    router's own k-condition (k = ceil(n/target) vs TWO_LEVEL_MIN_K —
-    the exact integer expression auto_k computes), so at any tier
-    exactly one branch sees rows and the other's entire Lloyd chain
-    runs over empty tables (cheap by construction — the guard lives in
-    the deepest scan, not an outer WHERE an optimizer might not push).
+    """One static SQL that grades semdedup_prune_fused's mode="auto"
+    ROUTING: both branch pipelines appear, each reading from a source
+    guarded by the router's own k-condition (k = ceil(n/target) vs
+    TWO_LEVEL_MIN_K — the exact integer expression auto_k computes),
+    so at any tier exactly one branch sees rows and the other's entire
+    Lloyd chain runs over empty tables (cheap by construction — the
+    guard lives in the deepest scan, not an outer WHERE an optimizer
+    might not push).
     """
     from dragnet_spark.ops.kmeans import (
         TWO_LEVEL_MIN_K,
@@ -1580,10 +1579,10 @@ def _semdedup_prune_auto_oracle(threshold: float) -> str:
     "semdedup_prune_auto",
     _semdedup_prune_auto_oracle(_EMB_T),
     "SemDeDup pruning through the PRODUCTION entry point "
-    "(kmeans_assign_auto — `dn semdedup`'s router): one count sizes "
-    "k = ceil(n/250) and routes flat assignment below k=1024 (lower "
-    "constants, the measured-good regime to the 100x tier) or "
-    "two-level at/above it (the n*sqrt(k) form that retired the "
+    "(semdedup_prune_fused mode=auto — `dn semdedup --target-rows`): "
+    "one count sizes k = ceil(n/250) and routes flat assignment below "
+    "k=1024 (lower constants, the measured-good regime to the 100x "
+    "tier) or two-level at/above it (the n*sqrt(k) form that retired the "
     "1000x tier's factor-27.6 wall). The oracle grades the ROUTING "
     "itself: both branch pipelines are present, each source-guarded "
     "by the router's own integer k-condition, so exactly one branch "
@@ -1594,14 +1593,12 @@ def semdedup_prune_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dragnet_spark.ops.kmeans import semdedup_prune_fused
 
     emb = _t(spark, sf_dir, "embeddings")
-    # r15: fused — same k-routing rule (auto_k vs TWO_LEVEL_MIN_K,
-    # decided from the same count), join-free prune either way;
-    # result-identical to kmeans_assign_auto + prune_pairs
+    # k routes at TWO_LEVEL_MIN_K from the fused prune's own count
     return semdedup_prune_fused(
         emb, iterations=_KM_ITERS,
         target_rows_per_cluster=_KM_TARGET, threshold=_EMB_T,
         mode="auto",
-    )
+    )[0]
 
 
 _ANN_ORACLE = """

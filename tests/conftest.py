@@ -19,6 +19,33 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def job_count(spark):
+    """``job_count(fn)``: the Spark jobs ``fn()`` issues, counted
+    through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+
+    def count(fn) -> int:
+        saved = {k: sc.getLocalProperty(k) for k in keys}
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+        # job events reach the status store through the asynchronous
+        # listener bus; drain it so the last job is counted
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture(scope="session")
 def events_tree(tmp_path_factory):
     """A small seeded NDJSON event tree (FIXTURES.md §1 shape, 28 days
     under ``%Y/%m-%d``, ~0.1% corrupt lines) written by the benchmark's

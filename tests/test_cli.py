@@ -913,10 +913,9 @@ def test_orc_datasource_scan(cfg, spark, tmp_path):
     assert {tuple(ln.split()) for ln in out.splitlines()[1:]} == {("GET", "2")}
 
 
-def test_semdedup_cli(cfg, tmp_path, spark):
-    """dn semdedup: k-means + within-cluster prune + survivor output.
-    Two exact-duplicate pairs among well-separated vectors must each
-    drop one member; survivors parquet excludes exactly the dropped."""
+def _semdedup_fixture(spark, tmp_path):
+    """Six well-separated 16-dim vectors plus exact duplicates of 0
+    (id 100) and 3 (id 101), as a parquet path."""
     import numpy as np
 
     rng = np.random.RandomState(7)
@@ -928,36 +927,63 @@ def test_semdedup_cli(cfg, tmp_path, spark):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<double>"
     ).write.parquet(src)
-    outp = str(tmp_path / "kept.parquet")
-    rc, out, _ = run(
-        ["semdedup", src, "--k", "2", "--iterations", "2",
-         "--threshold", "0.99", "--out", outp],
-        cfg,
-    )
-    assert rc == 0
-    assert "8 vectors -> 2 clusters" in out
-    assert "2 within-cluster pairs >= 0.99, 2 docs dropped" in out
-    kept = {r["vec_id"] for r in spark.read.parquet(outp).collect()}
-    assert kept == {0, 1, 2, 3, 4, 5}  # lower ids win
-    # auto-k: --target-rows picks k = ceil(8/4) = 2, same clustering
-    rc, out, _ = run(
-        ["semdedup", src, "--target-rows", "4", "--iterations", "2",
-         "--threshold", "0.99"],
-        cfg,
-    )
-    assert rc == 0
-    assert "8 vectors -> 2 clusters" in out
-    assert "2 within-cluster pairs >= 0.99, 2 docs dropped" in out
-    # --two-level: hierarchical assignment still finds both dup pairs
-    # (cluster ids differ — packed super·2^20+sub — but the prune
-    # contract is unchanged)
-    rc, out, _ = run(
-        ["semdedup", src, "--two-level", "--target-rows", "4",
-         "--iterations", "2", "--threshold", "0.99"],
-        cfg,
-    )
-    assert rc == 0
-    assert "2 within-cluster pairs >= 0.99, 2 docs dropped" in out
+    return src
+
+
+#: the three ways `dn semdedup` sizes its k-means: pinned k, auto-k
+#: (ceil(8/4) = 2, flat below the two-level switch) and forced two-level
+SEMDEDUP_MODES = {
+    "k": ["--k", "2"],
+    "target": ["--target-rows", "4"],
+    "two_level": ["--two-level", "--target-rows", "4"],
+}
+
+
+def test_semdedup_cli(cfg, tmp_path, spark):
+    """dn semdedup: k-means + within-cluster prune + survivor output,
+    every stdout line pinned in each mode. The two exact-duplicate
+    pairs must each drop one member (the higher id); survivors parquet
+    excludes exactly the dropped. The two-level form's cluster ids
+    differ (packed super·2^20+sub) but its sizes and pairs do not."""
+    src = _semdedup_fixture(spark, tmp_path)
+    for mode, flags in SEMDEDUP_MODES.items():
+        outp = str(tmp_path / f"kept_{mode}.parquet")
+        rc, out, _ = run(
+            ["semdedup", src, *flags, "--iterations", "2",
+             "--threshold", "0.99", "--out", outp],
+            cfg,
+        )
+        assert rc == 0, mode
+        assert out.splitlines() == [
+            "k-means: 8 vectors -> 2 clusters (sizes 4,4)",
+            "semdedup: 2 within-cluster pairs >= 0.99, 2 docs dropped",
+            f"survivors -> {outp}",
+        ], mode
+        kept = {r["vec_id"] for r in spark.read.parquet(outp).collect()}
+        assert kept == {0, 1, 2, 3, 4, 5}, mode  # lower ids win
+
+
+def test_semdedup_cli_job_budget(cfg, tmp_path, spark, job_count):
+    """`dn semdedup --out` is one fused prune call, one checkpoint of
+    its pairs (which also fills the cluster sizes), two counts and the
+    survivors write. Spark jobs on the 8-row fixture at --iterations 2,
+    measured on a 4-core machine with 8 shuffle partitions under
+    local[8] (the test session), local[4] and local[2] alike: --k 16,
+    --target-rows 19, --two-level 19. The
+    composed path this replaced (assignment, a sizes aggregate, then a
+    prune that joined the clusters back onto the vectors and ran once
+    per action) issued 23 / 25 / 27."""
+    src = _semdedup_fixture(spark, tmp_path)
+
+    def jobs(mode):
+        outp = str(tmp_path / f"jobs_{mode}.parquet")
+        argv = ["semdedup", src, *SEMDEDUP_MODES[mode], "--iterations", "2",
+                "--threshold", "0.99", "--out", outp]
+        return job_count(lambda: run(argv, cfg))
+
+    assert {m: jobs(m) for m in SEMDEDUP_MODES} == {
+        "k": 16, "target": 19, "two_level": 19,
+    }
 
 
 def test_distinct_cli(cfg, tmp_path, spark):

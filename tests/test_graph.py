@@ -260,28 +260,7 @@ def test_pagerank_zero_nodes_returns_zero_rows(spark):
     assert pagerank(nodes, e).collect() == []
 
 
-def _job_count(spark, fn) -> int:
-    """Spark jobs issued by ``fn()``, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    keys = ("spark.jobGroup.id", "spark.job.description",
-            "spark.job.interruptOnCancel")
-    saved = {k: sc.getLocalProperty(k) for k in keys}
-    group = f"graph-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        for k, v in saved.items():
-            sc.setLocalProperty(k, v)
-    # job events reach the status store through the asynchronous
-    # listener bus; drain it so the last job is counted
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_pagerank_job_budget_seeded_and_classic(spark):
+def test_pagerank_job_budget_seeded_and_classic(spark, job_count):
     """One rank loop for both forms, pinned by Spark job counts (the
     ranking call plus its collect) on the 11-node graph, measured on 4
     cores (also 2 and 8) with 8 shuffle partitions:
@@ -306,9 +285,8 @@ def test_pagerank_job_budget_seeded_and_classic(spark):
 
     def jobs(seeded: bool, iterations: int) -> int:
         s = seeds if seeded else None
-        return _job_count(
-            spark,
-            lambda: pagerank(nodes, e, s, iterations=iterations).collect(),
+        return job_count(
+            lambda: pagerank(nodes, e, s, iterations=iterations).collect()
         )
 
     classic = {k: jobs(False, k) for k in (0, 1, 4)}

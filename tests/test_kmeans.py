@@ -20,6 +20,33 @@ def _emb(spark, rows):
     )
 
 
+def _brute_pairs(rows, clusters, threshold):
+    """Every same-cluster pair with HALF_UP-rounded cosine >= threshold,
+    lower id kept, by a pure-Python search over ``rows`` (id, vector)
+    and an assignment ``clusters`` (id -> cluster)."""
+    import itertools
+    import math
+
+    by_id = dict(rows)
+    want = set()
+    for a, b in itertools.combinations(sorted(by_id), 2):
+        if clusters[a] != clusters[b]:
+            continue
+        va, vb = by_id[a], by_id[b]
+        dot = sum(x * y for x, y in zip(va, vb))
+        na = math.sqrt(sum(x * x for x in va)) or 1.0
+        nb = math.sqrt(sum(x * x for x in vb)) or 1.0
+        c = dot / (na * nb)
+        c = math.copysign(math.floor(abs(c) * 1e6 + 0.5) / 1e6, c)
+        if c >= threshold:
+            want.add((clusters[a], a, b, c))
+    return want
+
+
+def _clusters(assign):
+    return {r["id"]: r["cluster"] for r in assign.collect()}
+
+
 def test_quantize_floors_negatives(spark):
     df = _emb(spark, [(0, [0.5, -0.5, -0.0000005, 0.0])])
     q = quantize_vectors(df).collect()[0]["q"]
@@ -135,11 +162,9 @@ def test_auto_k_sql_twin_parity(spark):
 def test_prune_pairs_matches_brute_force(spark):
     """The applyInPandas per-cluster matmul must emit exactly the
     within-cluster pairs >= threshold that a brute-force cross-check
-    finds (HALF_UP-rounded cosine, lower id kept)."""
-    import itertools
-    import math
-
-    from dragnet_spark.ops.kmeans import semdedup_prune_pairs
+    finds over kmeans_assign's clusters at the same pinned k
+    (HALF_UP-rounded cosine, lower id kept)."""
+    from dragnet_spark.ops.kmeans import semdedup_prune_fused
 
     rows = [
         (i, [((i * 31 + d * 13) % 17 - 8) / 9.0 for d in range(5)])
@@ -148,26 +173,35 @@ def test_prune_pairs_matches_brute_force(spark):
     # duplicate a few vectors so high-cosine pairs exist
     rows += [(100 + i, list(rows[i][1])) for i in range(5)]
     df = _emb(spark, rows)
-    assign = kmeans_assign(df, k=3, iterations=2)
-    got = {
-        (r["cluster"], r["kept_id"], r["dropped_id"], r["cosine"])
-        for r in semdedup_prune_pairs(df, assign, threshold=0.8).collect()
-    }
-    cl = {r["id"]: r["cluster"] for r in assign.collect()}
-    by_id = dict(rows)
-    want = set()
-    for a, b in itertools.combinations(sorted(by_id), 2):
-        if cl[a] != cl[b]:
-            continue
-        va, vb = by_id[a], by_id[b]
-        dot = sum(x * y for x, y in zip(va, vb))
-        na = math.sqrt(sum(x * x for x in va)) or 1.0
-        nb = math.sqrt(sum(x * x for x in vb)) or 1.0
-        c = dot / (na * nb)
-        c = math.copysign(math.floor(abs(c) * 1e6 + 0.5) / 1e6, c)
-        if c >= 0.8:
-            want.add((cl[a], a, b, c))
+    pairs, _sizes = semdedup_prune_fused(df, k=3, iterations=2, threshold=0.8)
+    got = set(map(tuple, pairs.collect()))
+    want = _brute_pairs(
+        rows, _clusters(kmeans_assign(df, k=3, iterations=2)), 0.8
+    )
     assert got == want and len(want) >= 5
+
+
+def test_kmeans_assign_job_budget(spark, job_count):
+    """kmeans_assign's Spark jobs (the call plus its collect) on the
+    40-row parity fixture, measured on a 4-core machine with 8
+    shuffle partitions under local[8] (the test session), local[4]
+    and local[2] alike: pinned k=4 costs 3 / 5 / 9 jobs at 0 / 1 / 3
+    iterations, and auto-k (target 10) 6 / 8 / 12 — a Lloyd round is
+    2 jobs either way."""
+    rows = [
+        (i, [((i * 37 + d * 11) % 19 - 9) / 10.0 for d in range(8)])
+        for i in range(40)
+    ]
+    df = _emb(spark, rows)
+
+    def jobs(**kw):
+        return {
+            it: job_count(lambda: kmeans_assign(df, iterations=it, **kw).collect())
+            for it in (0, 1, 3)
+        }
+
+    assert jobs(k=4) == {0: 3, 1: 5, 3: 9}
+    assert jobs(target_rows_per_cluster=10) == {0: 6, 1: 8, 3: 12}
 
 
 def test_kmeans_assign_releases_cache(spark):
@@ -195,15 +229,20 @@ def test_kmeans_assign_releases_cache(spark):
 
 def test_prune_pairs_giant_cluster_guard(spark):
     """A cluster bigger than max_cluster_rows must fail loudly naming
-    auto-k, not OOM an executor."""
-    from dragnet_spark.ops.kmeans import semdedup_prune_pairs
+    auto-k (the library option and the CLI flag), not OOM an
+    executor."""
+    from dragnet_spark.ops.kmeans import semdedup_prune_fused
 
     rows = [(i, [float(i), 1.0]) for i in range(50)]
-    df = _emb(spark, rows)
-    assign = kmeans_assign(df, k=1, iterations=0)
-    out = semdedup_prune_pairs(df, assign, threshold=0.5, max_cluster_rows=10)
-    with pytest.raises(Exception, match="target_rows_per_cluster"):
-        out.collect()
+    pairs, _sizes = semdedup_prune_fused(
+        _emb(spark, rows), k=1, iterations=0, threshold=0.5,
+        max_cluster_rows=10,
+    )
+    with pytest.raises(
+        Exception,
+        match=r"target_rows_per_cluster \(`dn semdedup --target-rows`",
+    ):
+        pairs.collect()
 
 
 @pytest.mark.parametrize("iters", [1, 2])
@@ -271,15 +310,17 @@ def test_kmeans_sql_pinned_k_pack_guard():
         kmeans_sql(k=ARGMIN_PACK)
 
 
-def test_kmeans_assign_auto_routes_by_k(spark):
-    """kmeans_assign_auto: below the switch it runs the flat form
-    (identical output to kmeans_assign at the same auto-k); at or
-    above it, the two-level form (identical to
-    kmeans_assign_two_level). Both verified by exact tuple
-    equality against the direct calls."""
+def test_semdedup_prune_auto_routes_by_k(spark):
+    """mode="auto": below two_level_min_k the fused prune runs the
+    flat assignment (kmeans_assign at the same auto-k); at or above
+    it, the two-level one (kmeans_assign_two_level). At threshold -1
+    the pairs are every same-cluster pair, so pairs and sizes
+    together pin the routed assignment's cluster ids and members."""
+    from collections import Counter
+
     from dragnet_spark.ops.kmeans import (
-        kmeans_assign_auto,
         kmeans_assign_two_level,
+        semdedup_prune_fused,
     )
 
     rows = [
@@ -287,24 +328,29 @@ def test_kmeans_assign_auto_routes_by_k(spark):
         for i in range(60)
     ]
     df = _emb(spark, rows)
+
+    def routed(min_k):
+        pairs, sizes = semdedup_prune_fused(
+            df, iterations=2, target_rows_per_cluster=10, threshold=-1.0,
+            two_level_min_k=min_k,
+        )
+        return set(map(tuple, pairs.collect())), sizes()
+
+    def expected(assign):
+        cl = _clusters(assign)
+        return _brute_pairs(rows, cl, -1.0), dict(Counter(cl.values()))
+
     # 60 rows / target 10 -> k = 6 < min_k -> flat
-    flat = sorted(map(tuple, kmeans_assign_auto(
-        df, iterations=2, target_rows_per_cluster=10,
-        two_level_min_k=1000,
-    ).collect()))
-    want_flat = sorted(map(tuple, kmeans_assign(
-        df, iterations=2, target_rows_per_cluster=10,
-    ).collect()))
-    assert flat == want_flat
+    flat = routed(1000)
+    assert flat == expected(
+        kmeans_assign(df, iterations=2, target_rows_per_cluster=10)
+    )
     # force the two-level branch with min_k=2
-    two = sorted(map(tuple, kmeans_assign_auto(
-        df, iterations=2, target_rows_per_cluster=10,
-        two_level_min_k=2,
-    ).collect()))
-    want_two = sorted(map(tuple, kmeans_assign_two_level(
-        df, iterations=2, target_rows_per_cluster=10,
-    ).collect()))
-    assert two == want_two and two != flat
+    two = routed(2)
+    assert two == expected(
+        kmeans_assign_two_level(df, iterations=2, target_rows_per_cluster=10)
+    )
+    assert two != flat
 
 
 def test_round6_parity_numpy_spark_duckdb(spark):
@@ -368,7 +414,7 @@ def test_two_level_assign_bounded_deterministic(spark):
 
     from dragnet_spark.ops.kmeans import (
         kmeans_assign_two_level,
-        semdedup_prune_pairs,
+        semdedup_prune_fused,
     )
 
     rng = np.random.RandomState(11)
@@ -400,11 +446,11 @@ def test_two_level_assign_bounded_deterministic(spark):
     # identical, so every distance comparison is identical)
     for i in range(5):
         assert by_id[500 + i] == by_id[i]
-    # prune over the two-level assignment finds the planted dups
-    assign = kmeans_assign_two_level(
-        df, iterations=2, target_rows_per_cluster=20
-    ).withColumnRenamed("cluster", "cluster")
-    pairs = semdedup_prune_pairs(df, assign, threshold=0.999)
+    # the two-level prune finds the planted dups
+    pairs, _sizes = semdedup_prune_fused(
+        df, iterations=2, target_rows_per_cluster=20, threshold=0.999,
+        mode="two_level",
+    )
     got = {(r["kept_id"], r["dropped_id"]) for r in pairs.collect()}
     assert {(i, 500 + i) for i in range(5)} <= got
 
@@ -527,18 +573,17 @@ def test_update_partials_empty_partitions(spark):
 
 @pytest.mark.parametrize("mode", ["flat", "two_level", "auto"])
 def test_semdedup_prune_fused_matches_composed(spark, mode):
-    """semdedup_prune_fused must reproduce the composed
-    assign + semdedup_prune_pairs pipeline EXACTLY (same pairs, same
-    HALF_UP cosine, same packed cluster ids) in every mode — the r15
-    fusion removes the re-attach join, never changes a row. 60 rows /
-    target 8 forces multi-cluster groups; duplicated+near vectors
-    force pairs above and below the threshold."""
+    """semdedup_prune_fused must emit exactly the pairs (same HALF_UP
+    cosine, same packed cluster ids) that a brute-force search finds
+    over the assignment its mode names: kmeans_assign (flat),
+    kmeans_assign_two_level (two_level); auto at two_level_min_k=4
+    must equal the forced two-level run, and at the default switch
+    the forced flat run. 60 rows / target 8 forces multi-cluster
+    groups; duplicated+near vectors force pairs above and below the
+    threshold."""
     from dragnet_spark.ops.kmeans import (
-        kmeans_assign,
-        kmeans_assign_auto,
         kmeans_assign_two_level,
         semdedup_prune_fused,
-        semdedup_prune_pairs,
     )
 
     rows = []
@@ -549,70 +594,97 @@ def test_semdedup_prune_fused_matches_composed(spark, mode):
         rows.append((i, [base[0] + (i % 7) * 0.01, base[1] - (i % 5) * 0.01]))
     df = _emb(spark, rows)
     target, iters, thr = 8, 2, 0.9
+
+    def fused(mode, **kw):
+        pairs, _sizes = semdedup_prune_fused(
+            df, iterations=iters, target_rows_per_cluster=target,
+            threshold=thr, mode=mode, **kw,
+        )
+        return set(map(tuple, pairs.collect()))
+
+    if mode == "auto":
+        assert fused("auto", two_level_min_k=4) == fused("two_level")
+        assert fused("auto") == fused("flat")
+        return
     if mode == "flat":
         assign = kmeans_assign(
             df, iterations=iters, target_rows_per_cluster=target
         )
-    elif mode == "two_level":
+    else:
         assign = kmeans_assign_two_level(
             df, iterations=iters, target_rows_per_cluster=target
         )
-    else:
-        assign = kmeans_assign_auto(
-            df, iterations=iters, target_rows_per_cluster=target,
-            two_level_min_k=4,  # force the two-level branch at n=60
-        )
-    want = sorted(
-        map(tuple, semdedup_prune_pairs(df, assign, threshold=thr).collect())
-    )
-    got = sorted(
-        map(
-            tuple,
-            semdedup_prune_fused(
-                df, iterations=iters, target_rows_per_cluster=target,
-                threshold=thr, mode=mode, two_level_min_k=4,
-            ).collect(),
-        )
-    )
+    want = _brute_pairs(rows, _clusters(assign), thr)
     assert len(want) > 0  # the fixture must actually exercise pairs
-    assert got == want
+    assert fused(mode) == want
 
 
 def test_semdedup_prune_fused_null_ids_mirror_join(spark):
-    """A null id (cast miss) must feed seeds/auto-k exactly as the
-    composed form (it counts) but emit no pairs (the composed form's
-    inner join drops it)."""
-    from dragnet_spark.ops.kmeans import (
-        kmeans_assign,
-        semdedup_prune_fused,
-        semdedup_prune_pairs,
-    )
+    """A null id (cast miss) must feed seeds/auto-k and the cluster
+    sizes (it counts) but emit no pairs."""
+    from dragnet_spark.ops.kmeans import semdedup_prune_fused
 
     rows = [(i, [1.0 + i * 0.001, 0.5]) for i in range(12)]
     df = spark.createDataFrame(
         [(i, v) for i, v in rows] + [(None, [1.0, 0.5])],
         "vec_id long, embedding array<float>",
     )
-    assign = kmeans_assign(df, iterations=2, target_rows_per_cluster=5)
-    want = sorted(
-        map(tuple, semdedup_prune_pairs(df, assign, threshold=0.9).collect())
+    cl = _clusters(kmeans_assign(df, iterations=2, target_rows_per_cluster=5))
+    want = _brute_pairs(rows, cl, 0.9)
+    pairs, _sizes = semdedup_prune_fused(
+        df, iterations=2, target_rows_per_cluster=5, threshold=0.9,
+        mode="flat",
     )
-    got = sorted(
-        map(
-            tuple,
-            semdedup_prune_fused(
-                df, iterations=2, target_rows_per_cluster=5,
-                threshold=0.9, mode="flat",
-            ).collect(),
-        )
-    )
+    got = set(map(tuple, pairs.collect()))
     assert len(want) > 0
     assert got == want
     assert all(r[1] is not None and r[2] is not None for r in got)
 
 
+@pytest.mark.parametrize("mode", ["k", "flat", "two_level", "auto"])
+def test_semdedup_prune_fused_sizes(spark, mode):
+    """sizes() equals groupBy("cluster").count() of the assignment the
+    mode runs — a null id included — once the pairs have been acted
+    on."""
+    from pyspark.sql import functions as F
+
+    from dragnet_spark.ops.kmeans import (
+        kmeans_assign_two_level,
+        semdedup_prune_fused,
+    )
+
+    rows = [
+        (i, [((i * 29 + d * 13) % 19 - 9) / 10.0 for d in range(6)])
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(
+        rows + [(None, [0.3] * 6)], "vec_id long, embedding array<float>"
+    )
+    kw = dict(iterations=2, target_rows_per_cluster=10)
+    if mode == "k":
+        assign = kmeans_assign(df, k=5, iterations=2)
+        pairs, sizes = semdedup_prune_fused(df, k=5, iterations=2)
+    elif mode == "two_level":
+        assign = kmeans_assign_two_level(df, **kw)
+        pairs, sizes = semdedup_prune_fused(df, mode=mode, **kw)
+    else:
+        assign = kmeans_assign(df, **kw)
+        pairs, sizes = semdedup_prune_fused(df, mode=mode, **kw)
+    pairs.collect()
+    want = {
+        r["cluster"]: r["n"]
+        for r in assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert sizes() == want and sum(want.values()) == 61
+
+
 def test_semdedup_prune_fused_empty(spark):
+    """An empty corpus yields no pairs and empty sizes in every mode,
+    and sizes() returns without any action on the pairs."""
     from dragnet_spark.ops.kmeans import semdedup_prune_fused
 
     df = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    assert semdedup_prune_fused(df, mode="auto").collect() == []
+    for kw in ({"mode": "auto"}, {"mode": "two_level"}, {"k": 8}):
+        pairs, sizes = semdedup_prune_fused(df, **kw)
+        assert sizes() == {}
+        assert pairs.collect() == []
