@@ -585,7 +585,10 @@ def cmd_index_read(cat: Catalog, out, opts, dsname):
     [--index-config=FILE] < POINTS: reduce phase of a distributed build
     (lib/datasource-file.js:729-746): read index-scan's tagged points
     from stdin and write them as the index views, with the build's
-    writer (only the buckets the points hold are replaced)."""
+    writer (only the buckets the points hold are replaced). Every
+    metric gets its view, as in ``dn build``: a metric without points
+    gets an empty one, which at a day or hour interval replaces no
+    bucket."""
     from dragnet_spark.index.build import (
         metric_keys,
         select_metric,
@@ -609,8 +612,7 @@ def cmd_index_read(cat: Catalog, out, opts, dsname):
             raise FatalError(f"index-read: line {n}: {e}")
     spark = _get_spark()
     points = spark.createDataFrame(rows, "__m int, __k array<string>, value long")
-    for i in sorted({r[0] for r in rows}):
-        m = metrics[i]
+    for i, m in enumerate(metrics):
         write_view(select_metric(points, i, metric_keys(m, interval)),
                    root, m, interval)
     write_index_meta(root, metrics, interval, ds.time_field, ds.filter)

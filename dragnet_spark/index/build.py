@@ -30,6 +30,13 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DataType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from dragnet_spark.fieldspec import Breakdown, parse_breakdowns
 from dragnet_spark.index.lease import hold_lease
@@ -159,13 +166,17 @@ def fanout_aggregate(src, per_metric, resolver) -> DataFrame:
     )
 
 
+def _key_type(b: Breakdown) -> DataType:
+    """A view key column's type: long for a bucketized or date
+    breakdown, string for any other (the bucket column included)."""
+    return LongType() if (b.bucketized or b.date) else StringType()
+
+
 def select_metric(agg: DataFrame, i: int, bds) -> DataFrame:
     """Project metric ``i``'s typed result out of a fanout_aggregate:
-    key strings cast back to long for bucketized/date breakdowns."""
+    key strings cast back to each key's :func:`_key_type`."""
     cols = [
-        F.col("__k")[j]
-        .cast("long" if (b.bucketized or b.date) else "string")
-        .alias(b.name)
+        F.col("__k")[j].cast(_key_type(b)).alias(b.name)
         for j, b in enumerate(bds)
     ]
     return agg.filter(F.col("__m") == i).select(*cols, F.col(VALUE_COL))
@@ -177,6 +188,20 @@ def metric_keys(m: Metric, interval: str) -> tuple[Breakdown, ...]:
     if interval == "all":
         return m.breakdowns
     return (Breakdown(BUCKET_COL, BUCKET_COL),) + m.breakdowns
+
+
+def view_schema(m: Metric, interval: str) -> StructType:
+    """The schema of ``m``'s view as a read returns it: each breakdown
+    typed by :func:`_key_type`, then ``value``, then the bucket
+    partition column unless ``interval`` is "all". Reading with it
+    skips the footer read and the partition-value typing an inferring
+    read runs, and an empty view reads as zero rows. Field names are
+    literal, so dotted names (req.caller) need no quoting."""
+    fields = [StructField(b.name, _key_type(b)) for b in m.breakdowns]
+    fields.append(StructField(VALUE_COL, LongType()))
+    if interval != "all":
+        fields.append(StructField(BUCKET_COL, StringType()))
+    return StructType(fields)
 
 
 def aggregate_metrics(
@@ -392,16 +417,18 @@ def _compact_index_locked(spark, index_path, meta, interval):
     for m in (Metric.from_json(j) for j in meta["metrics"]):
         ensure_lease(index_path)  # stolen-lease check (lease.py)
         path = os.path.join(index_path, m.name)
-        df = spark.read.parquet(path)
-        group_cols = [c for c in df.columns if c != "value"]
+        schema = view_schema(m, interval)
+        df = spark.read.schema(schema).parquet(path)
+        group_cols = [F.col(f"`{c}`") for c in df.columns if c != VALUE_COL]
         compacted = df.groupBy(*group_cols).agg(
-            F.sum("value").cast("long").alias("value")
+            F.sum(VALUE_COL).cast("long").alias(VALUE_COL)
         )
         # stage first: Spark cannot overwrite the parquet tree it is
         # currently reading; the rewrite keeps the build's layout
         stage = path + ".compact_tmp"
         try:
             compacted.write.mode("overwrite").parquet(stage)
-            write_view(spark.read.parquet(stage), index_path, m, interval)
+            write_view(spark.read.schema(schema).parquet(stage), index_path,
+                       m, interval)
         finally:
             shutil.rmtree(stage, ignore_errors=True)

@@ -22,6 +22,13 @@ column replaces the reference's filename-pattern path enumerator
 (lib/path-enum.js), and the per-file SQLite SUM + merge re-aggregation
 (A6/A7, lib/datasource-file.js:609-618) collapses into the single
 distributed aggregate.
+
+The view is read with the schema its metric definition fixes
+(build.view_schema), as the reference opens each interval's table
+with the layout its metric definition fixes
+(lib/datasource-file.js:573-618): no job reads a parquet footer and
+no pass types the bucket directories, so a query is the rollup's
+jobs alone, and an empty view answers as empty input does.
 """
 
 from __future__ import annotations
@@ -35,7 +42,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dragnet_spark.fieldspec import Breakdown
-from dragnet_spark.index.build import BUCKET_COL, INDEX_META_FILE, Metric
+from dragnet_spark.index.build import (
+    BUCKET_COL,
+    INDEX_META_FILE,
+    Metric,
+    view_schema,
+)
 from dragnet_spark.krill import compile_predicate, predicate_fields
 from dragnet_spark.query import QueryConfig
 from dragnet_spark.scan import VALUE_COL
@@ -124,6 +136,12 @@ def query_index(
     minimum, so an ``after`` falling mid-bucket excludes that whole
     partial bucket (the index has no finer data to answer with). Use
     ``dn scan`` when bounds must be record-exact.
+
+    The view is read with :func:`~dragnet_spark.index.build.view_schema`
+    of the routed metric, never an inferred schema: no footer read, no
+    partition-value typing (the bucket column is the string its
+    directory names), and an empty view is zero rows, so a count
+    answers 0 and a grouped query no rows, as ``dn scan`` does.
     """
     meta = meta or load_index_meta(index_path)
     if not str(meta.get("version", "")).startswith("2."):
@@ -132,7 +150,9 @@ def query_index(
     metric, ignore_filter = find_metric(query, metrics)
     interval = meta.get("interval", "day")
 
-    df = spark.read.parquet(os.path.join(index_path, metric.name))
+    df = spark.read.schema(view_schema(metric, interval)).parquet(
+        os.path.join(index_path, metric.name)
+    )
 
     # partition pruning: bucket-name string bounds match the directory
     # layout, so only intervals overlapping [after, before) are read

@@ -18,8 +18,9 @@ and from then on everything is integer arithmetic:
 * update    = per-dimension ``Σ q_vd div n_c`` — truncating integer
   division (Spark ``div`` and DuckDB ``//`` both truncate toward
   zero, verified including negatives);
-* seeds     = the k rows with the smallest ``(md5(id), id)`` — a
-  deterministic pseudo-random draw both engines order identically.
+* seeds     = the k rows with the smallest ``(md5(id), id)``, nulls
+  last — a deterministic pseudo-random draw both engines order
+  identically (each names the null order; their defaults differ).
 
 Every step is therefore bit-identical between Spark and the DuckDB
 oracle for any iteration count, which is what lets an *iterative
@@ -260,15 +261,16 @@ def _lloyd_rounds(
 def kmeans_seeds(
     qv: DataFrame, k: int, id_col: str = "id"
 ) -> list[list[int]]:
-    """The k quantized vectors with the smallest (md5(id), id) — a
-    deterministic draw with no global sort (TakeOrdered top-k merge,
-    never a single-partition window). Driver payload: k·dims ints."""
+    """The k quantized vectors with the smallest (md5(id), id), a null
+    id last as in :func:`kmeans_sql` — a deterministic draw with no
+    global sort (TakeOrdered top-k merge, never a single-partition
+    window). Driver payload: k·dims ints."""
     rows = (
         qv.select(
             "q", F.md5(F.col(id_col).cast("string").cast("binary")).alias("h"),
             F.col(id_col).alias("i"),
         )
-        .orderBy("h", "i")
+        .orderBy(F.col("h").asc_nulls_last(), F.col("i").asc_nulls_last())
         .limit(k)
         .collect()
     )
@@ -744,7 +746,7 @@ def kmeans_sql(
     the difference between 1.6e8 and 1e10 rows at the 100× tier with
     auto-k — and the argmin is a streaming ``min()`` over a
     HUGEINT-packed (dist, c) key (:data:`ARGMIN_PACK`), not a window
-    sort. The centroid UPDATE still uses the (id, dim, val) explode —
+    sort. The centroid UPDATE still uses the (rk, dim, val) explode —
     that one is n·dims rows once per iteration, integer-exact
     truncating division, unchanged."""
     if target_rows_per_cluster is not None:
@@ -797,26 +799,29 @@ def _flat_lloyd_parts(
     :func:`kmeans_two_level_sql`'s level 1: quantize (``qv``), norm
     cache (``qn``), dim explode (``ex``), seed centroids (``cl0``),
     one (assign ``a{t}``, update ``nl{t}``/``cl{t}``) round per
-    iteration, and the final assignment ``af`` (id, mk) where ``mk``
-    is the HUGEINT-packed (dist, cluster) argmin key."""
+    iteration, and the final assignment ``af`` (rk, id, mk) where
+    ``mk`` is the HUGEINT-packed (dist, cluster) argmin key. Rows are
+    keyed by ``rk``, a row number of the materialized ``qv``, not by
+    id, so a null id joins and groups as its own row, as every row
+    does on the Spark side."""
     P = ARGMIN_PACK
     dist = (
         "CAST(n.qq - 2 * list_dot_product(n.qd, c.cvd) + c.cc AS HUGEINT)"
     )
     parts = [
         f"""qv AS (
-      SELECT vec_id AS id,
+      SELECT vec_id AS id, row_number() OVER () AS rk,
              list_transform(embedding,
                x -> CAST(floor(CAST(x AS DOUBLE) * {float(scale)}) AS BIGINT)) AS q
       FROM ({source})
     )""",
         """qn AS (
-      SELECT id, q, CAST(q AS DOUBLE[]) AS qd,
+      SELECT rk, id, q, CAST(q AS DOUBLE[]) AS qd,
              list_dot_product(CAST(q AS DOUBLE[]), CAST(q AS DOUBLE[])) AS qq
       FROM qv
     )""",
         """ex AS (
-      SELECT id, CAST(t.i AS INT) AS dim, q[t.i + 1] AS val
+      SELECT rk, CAST(t.i AS INT) AS dim, q[t.i + 1] AS val
       FROM qv, UNNEST(range(len(q))) t(i)
     )""",
         f"""cl0 AS (
@@ -824,7 +829,9 @@ def _flat_lloyd_parts(
              CAST(s.q AS DOUBLE[]) AS cvd,
              list_dot_product(CAST(s.q AS DOUBLE[]), CAST(s.q AS DOUBLE[])) AS cc
       FROM (
-        SELECT q, row_number() OVER (ORDER BY md5(CAST(id AS STRING)), id) AS rn
+        SELECT q, row_number() OVER (
+          ORDER BY md5(CAST(id AS STRING)) NULLS LAST, id NULLS LAST
+        ) AS rn
         FROM qv
       ) s
       WHERE s.rn <= {k_sql}
@@ -838,16 +845,16 @@ def _flat_lloyd_parts(
         p = t - 1
         parts.append(
             f"""a{t} AS (
-      SELECT n.id,
+      SELECT n.rk,
              CAST(min({dist} * {P} + c.c) % {P} AS BIGINT) AS c
-      FROM qn n, cl{p} c GROUP BY n.id
+      FROM qn n, cl{p} c GROUP BY n.rk
     )"""
         )
         parts.append(
             f"""nl{t} AS (
       SELECT c, list(val ORDER BY dim) AS cv FROM (
         SELECT a.c, e.dim, SUM(e.val) // COUNT(*) AS val
-        FROM a{t} a JOIN ex e USING (id) GROUP BY a.c, e.dim
+        FROM a{t} a JOIN ex e USING (rk) GROUP BY a.c, e.dim
       ) GROUP BY c
     )"""
         )
@@ -863,8 +870,8 @@ def _flat_lloyd_parts(
         )
     parts.append(
         f"""af AS (
-      SELECT n.id, min({dist} * {P} + c.c) AS mk
-      FROM qn n, cl{iterations} c GROUP BY n.id
+      SELECT n.rk, n.id, min({dist} * {P} + c.c) AS mk
+      FROM qn n, cl{iterations} c GROUP BY n.rk, n.id
     )"""
     )
     return parts
@@ -912,8 +919,8 @@ def kmeans_two_level_sql(
     # level-2 working set: each row keeps its super-cluster from af
     parts.append(
         f"""qs AS (
-      SELECT n.id, CAST(a.mk % {P} AS BIGINT) AS sup, n.q, n.qd, n.qq
-      FROM qn n JOIN af a USING (id)
+      SELECT n.rk, n.id, CAST(a.mk % {P} AS BIGINT) AS sup, n.q, n.qd, n.qq
+      FROM qn n JOIN af a USING (rk)
     )"""
     )
     parts.append(
@@ -935,7 +942,8 @@ def kmeans_two_level_sql(
       FROM (
         SELECT sup, q,
                row_number() OVER (
-                 PARTITION BY sup ORDER BY md5(CAST(id AS STRING)), id
+                 PARTITION BY sup
+                 ORDER BY md5(CAST(id AS STRING)) NULLS LAST, id NULLS LAST
                ) AS rn
         FROM qs
       ) r JOIN k2t USING (sup)
@@ -946,16 +954,16 @@ def kmeans_two_level_sql(
         p = t - 1
         parts.append(
             f"""b{t} AS (
-      SELECT n.id, n.sup,
+      SELECT n.rk, n.sup,
              CAST(min({dist2} * {P} + c.c) % {P} AS BIGINT) AS c
-      FROM qs n JOIN s{p} c ON n.sup = c.sup GROUP BY n.id, n.sup
+      FROM qs n JOIN s{p} c ON n.sup = c.sup GROUP BY n.rk, n.sup
     )"""
         )
         parts.append(
             f"""m{t} AS (
       SELECT sup, c, list(val ORDER BY dim) AS cv FROM (
         SELECT b.sup, b.c, e.dim, SUM(e.val) // COUNT(*) AS val
-        FROM b{t} b JOIN ex e USING (id) GROUP BY b.sup, b.c, e.dim
+        FROM b{t} b JOIN ex e USING (rk) GROUP BY b.sup, b.c, e.dim
       ) GROUP BY sup, c
     )"""
         )
@@ -972,7 +980,8 @@ def kmeans_two_level_sql(
     parts.append(
         f"""bf AS (
       SELECT n.id, n.sup, min({dist2} * {P} + c.c) AS mk
-      FROM qs n JOIN s{iterations} c ON n.sup = c.sup GROUP BY n.id, n.sup
+      FROM qs n JOIN s{iterations} c ON n.sup = c.sup
+      GROUP BY n.rk, n.id, n.sup
     )"""
     )
     body = ",\n    ".join(parts)

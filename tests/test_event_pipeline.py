@@ -9,7 +9,10 @@ writer, so the paths agree.
   ``dn build`` applies, and ``index-read`` replaces only the buckets it
   writes, keeping the build's sort;
 * ``scan --warnings`` reports the parser count ``--counters`` reports,
-  from the same pass.
+  from the same pass;
+* empty and missing views, hour and unbucketed views, a value-only
+  view and dotted and quantized breakdowns answer what ``dn scan``
+  answers, and ``dn build`` and ``dn query`` keep their job budgets.
 """
 
 import glob
@@ -274,3 +277,133 @@ def test_compact_rewrites_with_the_build_writer(spark, tmp_path, three_days):
         t = pq.read_table(files[0])
         rows = list(zip(t["timestamp"].to_pylist(), t["latency"].to_pylist()))
         assert rows == sorted(rows)
+
+
+# ------------------------------------------------- empty and missing views
+
+NOPE = {"eq": ["req.method", "NOPE"]}  # matches no record
+EMPTY_METRICS = [("get", "host", GET), ("nope", "host", NOPE)]
+NOPE_QUERIES = (["-f", json.dumps(NOPE)], ["-f", json.dumps(NOPE), "-b", "host"])
+
+
+def _answers_like_scan(cfg, ds, argvs):
+    """Each ``dn query`` prints the bytes ``dn scan`` prints, in the
+    table and the --points form."""
+    for argv in argvs:
+        for mode in ([], ["--points"]):
+            want, _ = run(["scan", *mode, *argv, ds], cfg)
+            got, _ = run(["query", *mode, *argv, ds], cfg)
+            assert got == want, (mode, argv)
+
+
+def test_empty_view_answers_like_scan(cfg, tmp_path, events_tree, spark):
+    """A metric whose filter matches nothing gets an empty view (a
+    bucket-partitioned write of no rows leaves no data file): a count
+    answers 0 and a grouped query nothing, as dn scan does."""
+    add_datasource(cfg, "d", events_tree[0], str(tmp_path / "idx"),
+                   EMPTY_METRICS)
+    run(["build", "d"], cfg)
+    assert not glob.glob(f"{tmp_path}/idx/by_day/nope/**/*.parquet",
+                         recursive=True)
+    _answers_like_scan(cfg, "d", NOPE_QUERIES)
+    assert run(["scan", *NOPE_QUERIES[0], "d"], cfg)[0] == "VALUE\n    0\n"
+
+
+def test_index_read_writes_every_view(cfg, tmp_path, events_tree, spark):
+    """index-read writes a view for every defined metric, as dn build
+    does, so a query routed to a metric without points answers like
+    dn scan instead of finding no view directory."""
+    add_datasource(cfg, "d", events_tree[0], str(tmp_path / "idx"),
+                   EMPTY_METRICS)
+    pts, _ = run(["index-scan", "d"], cfg)
+    assert {json.loads(p)["fields"]["__dn_metric"] for p in pts.splitlines()} == {0}
+    run(["index-read", "d"], cfg, stdin=pts)
+    _answers_like_scan(cfg, "d", NOPE_QUERIES)
+
+
+def test_compact_empty_and_dotted_views(cfg, tmp_path, events_tree, spark):
+    """dn compact passes over an empty view and groups a dotted
+    breakdown name (req.caller) as the literal column, and every
+    answer after it is still dn scan's."""
+    add_datasource(cfg, "d", events_tree[0], str(tmp_path / "idx"),
+                   [*EMPTY_METRICS, ("callers", "req.caller", None)])
+    run(["build", "d"], cfg)
+    out, _ = run(["compact", "d"], cfg)
+    assert out == 'compacted day index for "d"\n'
+    _answers_like_scan(cfg, "d", [*NOPE_QUERIES, ["-b", "req.caller"],
+                                  ["-f", json.dumps(GET), "-b", "host"]])
+
+
+# ------------------------------------------------------ view shapes
+
+VIEW_SHAPES = {
+    # interval: (metrics, query argvs); each metric is a (name,
+    # breakdowns, filter) row; the argvs take the dotted breakdown
+    # req.caller and the quantized latency through each shape
+    "hour": (
+        [("h", f"{HOURLY},req.caller,latency[aggr=quantize]", None)],
+        [[], ["-b", "req.caller"], ["-b", f"{HOURLY},latency[aggr=quantize]"],
+         ["-b", "latency[aggr=quantize]", "-f", '{"eq":["req.caller","poseidon"]}'],
+         ["-b", "req.caller", "--after", "2014-05-02T05:00:00",
+          "--before", "2014-05-02T09:00:00"]],
+    ),
+    "all": (
+        [("total", "", None),
+         ("callers", "req.caller,latency[aggr=quantize]", None)],
+        [[], ["-b", "req.caller"], ["-b", "latency[aggr=quantize],req.caller"],
+         ["-f", '{"eq":["req.caller","poseidon"]}']],
+    ),
+}
+
+
+@pytest.mark.parametrize("interval", sorted(VIEW_SHAPES))
+def test_view_shapes_answer_like_scan(cfg, tmp_path, events_tree, spark,
+                                      interval):
+    """Hour-bucketed and unbucketed (--interval=all) views, a
+    zero-breakdown view holding only ``value``, the dotted breakdown
+    name and the quantized breakdown all answer what dn scan answers."""
+    metrics, argvs = VIEW_SHAPES[interval]
+    add_datasource(cfg, "d", events_tree[0], str(tmp_path / "idx"), metrics)
+    run(["build", f"--interval={interval}", "d"], cfg)
+    if interval == "all":
+        t = spark.read.parquet(f"{tmp_path}/idx/by_all/total")
+        assert t.columns == ["value"]
+    for argv in argvs:
+        want, _ = run(["scan", "--points", *argv, "d"], cfg)
+        got, _ = run(["query", f"--interval={interval}", "--points", *argv,
+                      "d"], cfg)
+        assert want.strip(), argv
+        assert sorted(got.splitlines()) == sorted(want.splitlines()), argv
+
+
+# ---------------------------------------------------------- job budgets
+
+FIXTURE_METRICS = [  # FIXTURES.md §3, bycode's filter as a metric filter
+    ("big_metric", "host,operation,req.caller,req.method,latency[aggr=quantize]",
+     None),
+    ("filtered_metric", "", GET),
+    ("bycode", "res.statusCode", GET),
+    ("requests_bystatus",
+     "timestamp[field=time,date,aggr=lquantize,step=60],res.statusCode", None),
+]
+
+
+def test_build_and_query_job_budget(cfg, tmp_path, events_tree, spark,
+                                    job_count):
+    """dn build of the four FIXTURES.md §3 metrics is 10 Spark jobs,
+    and each dn query is 2: the rollup's shuffle and its result, with
+    no job to infer the view's schema (which made 3). Measured on a
+    4-core machine with 8 shuffle partitions, under local[8] (the test
+    session) and local[4] alike."""
+    add_datasource(cfg, "d", events_tree[0], str(tmp_path / "idx"),
+                   FIXTURE_METRICS)
+    assert job_count(lambda: run(["build", "d"], cfg)) == 10
+    queries = {
+        "count": [],
+        "grouped": ["-b", "host,req.method"],
+        "filtered metric": ["-b", "res.statusCode", "-f", json.dumps(GET)],
+        "time-bounded": ["--after", "2014-05-03", "--before", "2014-05-06"],
+    }
+    jobs = {name: job_count(lambda: run(["query", *argv, "d"], cfg))
+            for name, argv in queries.items()}
+    assert jobs == dict.fromkeys(queries, 2)

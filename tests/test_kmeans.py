@@ -117,6 +117,26 @@ def test_sql_twin_bit_parity(spark, iters):
     assert got == want
 
 
+def test_sql_twin_null_id_seeds_last(spark):
+    """A null id draws last in the (md5(id), id) seed order on both
+    engines (Spark sorts nulls first by default, DuckDB last) and its
+    row feeds the centroid update on both, so the Spark assignment
+    equals the DuckDB twin's."""
+    rows = [(i, [float(i % 4), float(i // 4)]) for i in range(8)]
+    rows.append((None, [9.0, -9.0]))
+    df = _emb(spark, rows)
+    got = {
+        (r["id"], r["cluster"], r["dist"])
+        for r in kmeans_assign(df, k=2, iterations=1).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+    want = {tuple(r) for r in con.execute(kmeans_sql(k=2, iterations=1)).fetchall()}
+    assert len(got) == 9
+    assert got == want
+
+
 def test_auto_k_formula():
     from dragnet_spark.ops.kmeans import auto_k
 
