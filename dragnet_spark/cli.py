@@ -539,16 +539,16 @@ def cmd_index_scan(cat: Catalog, out, opts, dsname):
     df, resolver, _vc = load_datasource(spark, ds, query)
     if df is None:
         return
-    results = aggregate_metrics(
+    with aggregate_metrics(
         df, metrics, opts["interval"], ds.time_field, ds.filter, resolver,
         query.time_after, query.time_before,
-    )
-    for i, (_m, keys, res) in enumerate(results):
-        rows = [tuple(x) for x in res.collect()]
-        for line in format_points(rows, QueryConfig(breakdowns=keys)):
-            obj = json.loads(line)
-            obj["fields"]["__dn_metric"] = i
-            out.write(json.dumps(obj, separators=(",", ":")) + "\n")
+    ) as (_agg, views):
+        for i, (_m, keys, res) in enumerate(views):
+            rows = [tuple(x) for x in res.collect()]
+            for line in format_points(rows, QueryConfig(breakdowns=keys)):
+                obj = json.loads(line)
+                obj["fields"]["__dn_metric"] = i
+                out.write(json.dumps(obj, separators=(",", ":")) + "\n")
 
 
 def _point_row(line: str, metrics, interval: str) -> tuple:
@@ -585,15 +585,17 @@ def cmd_index_read(cat: Catalog, out, opts, dsname):
     [--index-config=FILE] < POINTS: reduce phase of a distributed build
     (lib/datasource-file.js:729-746): read index-scan's tagged points
     from stdin and write them as the index views, with the build's
-    writer (only the buckets the points hold are replaced). Every
+    bucket-clustered, concurrent writer (only the buckets the points
+    hold are replaced). Every
     metric gets its view, as in ``dn build``: a metric without points
     gets an empty one, which at a day or hour interval replaces no
     bucket."""
     from dragnet_spark.index.build import (
+        clustered,
         metric_keys,
         select_metric,
         write_index_meta,
-        write_view,
+        write_views,
     )
 
     ds = cat.datasource(dsname)
@@ -612,9 +614,12 @@ def cmd_index_read(cat: Catalog, out, opts, dsname):
             raise FatalError(f"index-read: line {n}: {e}")
     spark = _get_spark()
     points = spark.createDataFrame(rows, "__m int, __k array<string>, value long")
-    for i, m in enumerate(metrics):
-        write_view(select_metric(points, i, metric_keys(m, interval)),
-                   root, m, interval)
+    with clustered(points, interval) as agg:
+        views = []
+        for i, m in enumerate(metrics):
+            keys = metric_keys(m, interval)
+            views.append((m, keys, select_metric(agg, i, keys)))
+        write_views(spark, agg, views, root, interval)
     write_index_meta(root, metrics, interval, ds.time_field, ds.filter)
 
 

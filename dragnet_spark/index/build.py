@@ -4,30 +4,39 @@ The reference's ``dn build`` (lib/dragnet.js:330-395,
 lib/datasource-file.js:307-433) scans raw data once and writes one
 SQLite file per time interval, each holding one table per metric
 (lib/index-sink.js:121-163), with hand-built fan-out/multiplex/barrier
-plumbing. Here each metric is one DataFrame plan:
+plumbing. Here every metric shares one fan-out aggregate, and each
+metric's view is one write of its slice:
 
-    raw.filter(metric.filter)
-       .groupBy(bucket, *breakdowns).sum(1)
-       .write.partitionBy(bucket).parquet(index_path/metric)
+    agg = fanout_aggregate(raw, metrics)    # one read, one groupBy
+            .repartition(__k[0]).persist()  # one exchange by bucket
+    for each metric, concurrently:
+        select_metric(agg, i).sortWithinPartitions(bucket, ...)
+            .write.partitionBy(bucket).parquet(index_path/metric)
 
 Spark's partitioned-parquet layout replaces the reference's
 one-SQLite-per-interval multiplexing (S9/S10) — and gives the query
 path automatic partition pruning, which the reference implements by
 hand with a filename-pattern enumerator (S5, lib/path-enum.js).
 
-Scale notes: the per-bucket repartition bounds output files to one
-per interval per metric (small-file protection at thousands of
-buckets); the groupBy does map-side partial aggregation so the
-shuffle carries unique tuples, not raw rows.
+Scale notes: the groupBy does map-side partial aggregation so its
+shuffle carries unique tuples, not raw rows. The one bucket exchange
+clusters every metric's rows by bucket (the bucket is the first key of
+every metric), so each view write is a shuffle-free job of many tasks
+that still writes one file per bucket (small-file protection at
+thousands of buckets); the writes run concurrently from a driver
+thread pool, so N metrics cost one write phase, not N serial ones.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor, as_completed
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -204,6 +213,27 @@ def view_schema(m: Metric, interval: str) -> StructType:
     return StructType(fields)
 
 
+@contextmanager
+def clustered(agg: DataFrame | None, interval: str):
+    """Persist a fan-out aggregate (``__m``, ``__k``, ``value``) for
+    the block, clustered by bucket unless ``interval`` is "all": one
+    exchange on ``__k[0]``, the first key of every metric at a day or
+    hour interval, puts all of a bucket's rows of every metric in one
+    partition, which :func:`write_view` requires. Yields the persisted
+    frame (None passes through) and unpersists it on exit."""
+    if agg is None:
+        yield None
+        return
+    if interval != "all":
+        agg = agg.repartition(F.col("__k")[0])
+    agg = agg.persist()
+    try:
+        yield agg
+    finally:
+        agg.unpersist()
+
+
+@contextmanager
 def aggregate_metrics(
     df: DataFrame,
     metrics: list[Metric],
@@ -214,10 +244,13 @@ def aggregate_metrics(
     time_after: int | None = None,
     time_before: int | None = None,
 ):
-    """Yield ``(metric, keys, result)`` for each metric, in order: the
-    aggregate ``dn build`` writes and ``dn index-scan`` emits as
-    points. ``keys`` is :func:`metric_keys`; ``result`` has one column
-    per key plus ``value``.
+    """Yield ``(agg, views)``: ``views`` holds ``(metric, keys,
+    result)`` for each metric, in order — the aggregate ``dn build``
+    writes and ``dn index-scan`` emits as points. ``keys`` is
+    :func:`metric_keys`; ``result`` has one column per key plus
+    ``value``. ``agg`` is the persisted fan-out aggregate the results
+    read (None when no metric has keys); it stays persisted, clustered
+    by bucket (:func:`clustered`), until the block exits.
 
     The raw records pass the datasource filter and, with
     ``time_after``/``time_before`` (epoch seconds, [after, before)),
@@ -234,10 +267,9 @@ def aggregate_metrics(
     read of the raw data and ONE shuffle — not N of each. At 100 TB
     the N× raw re-read is the difference between a nightly build
     fitting its window and not. The aggregate is small (unique
-    tuples) and stays persisted while the results are consumed. Only
-    the zero-group total shape (interval "all", no breakdowns) is a
-    plain scan, since its empty-input answer — one 0 row — is not a
-    group-by's.
+    tuples). Only the zero-group total shape (interval "all", no
+    breakdowns) is a plain scan, since its empty-input answer — one 0
+    row — is not a group-by's.
     """
     if interval not in ("hour", "day", "all"):
         raise ValueError(f"invalid interval: {interval}")
@@ -264,21 +296,18 @@ def aggregate_metrics(
 
     keyed = [(m, metric_keys(m, interval)) for m in metrics]
     fanned = [(m.filter, keys) for m, keys in keyed if keys]
-    agg = (
-        fanout_aggregate(src, fanned, scan_resolver).persist() if fanned else None
-    )
-    try:
-        i = 0
+    fan = fanout_aggregate(src, fanned, scan_resolver) if fanned else None
+    with clustered(fan, interval) as agg:
+        views, i = [], 0
         for m, keys in keyed:
             if keys:
-                yield m, keys, select_metric(agg, i, keys)
+                views.append((m, keys, select_metric(agg, i, keys)))
                 i += 1
             else:
                 total = QueryConfig(filter=m.filter)
-                yield m, keys, scan(src, total, resolver=scan_resolver)
-    finally:
-        if agg is not None:
-            agg.unpersist()
+                res = scan(src, total, resolver=scan_resolver)
+                views.append((m, keys, res))
+        yield agg, views
 
 
 def write_view(
@@ -287,27 +316,27 @@ def write_view(
 ) -> None:
     """Write one metric's aggregate under ``index_path/<metric>``.
 
-    Partitioned by bucket, one file per bucket; an overwrite is
-    *dynamic*, so it replaces only the buckets ``out`` holds and every
-    other interval's data survives (bounded rebuilds). Within each
-    file, rows are clustered by the leading breakdowns: sorted runs
-    dictionary/RLE-encode tighter AND give each parquet row group
-    disjoint min/max stats, so a query-path filter on a breakdown
-    (krill → pushed predicate) skips whole row groups at 100 TB
-    instead of decoding them. The sort is per-partition on the
-    already-small aggregate — no extra shuffle (sortWithinPartitions,
-    not orderBy).
+    At a day or hour interval ``out`` must be clustered by bucket
+    (every row of a bucket in one partition, as :func:`clustered`
+    leaves it): the write then needs no shuffle, runs one task per
+    partition, and still writes one file per bucket. Partitioned by
+    bucket; an overwrite is *dynamic*, so it replaces only the buckets
+    ``out`` holds and every other interval's data survives (bounded
+    rebuilds). Within each file, rows are clustered by the leading
+    breakdowns: sorted runs dictionary/RLE-encode tighter AND give
+    each parquet row group disjoint min/max stats, so a query-path
+    filter on a breakdown (krill → pushed predicate) skips whole row
+    groups at 100 TB instead of decoding them. The sort is
+    per-partition (sortWithinPartitions, not orderBy). At interval
+    "all" the view is one file.
     """
     path = os.path.join(index_path, m.name)
     # breakdown names may contain dots (req.caller): backtick-quote
     # so the sort resolves the literal column, not a struct path
     sort_cols = [F.col(f"`{b.name}`") for b in m.breakdowns]
     if interval != "all":
-        # one output file per bucket partition; without this every
-        # shuffle task writes a sliver into every bucket dir
         (
-            out.repartition(BUCKET_COL)
-            .sortWithinPartitions(F.col(BUCKET_COL), *sort_cols)
+            out.sortWithinPartitions(F.col(BUCKET_COL), *sort_cols)
             .write.mode(mode)
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(BUCKET_COL)
@@ -320,6 +349,49 @@ def write_view(
             else out.coalesce(1)
         )
         sorted_out.write.mode(mode).parquet(path)
+
+
+def write_views(
+    spark: SparkSession,
+    agg: DataFrame | None,
+    views: list,
+    index_path: str,
+    interval: str,
+    mode: str = "overwrite",
+) -> None:
+    """Write every ``(metric, keys, result)`` of ``views`` with
+    :func:`write_view`, concurrently. ``agg`` is the persisted
+    aggregate the results read (see :func:`clustered`); one no-op
+    write materializes it first (the cheapest action: no exchange and
+    no result rows), so the raw data is read once and no write
+    recomputes it. The writes then run from a driver pool of at most
+    min(#views, defaultParallelism) threads; each thread carries the
+    caller's job group, local properties and session tags, so the
+    writes' jobs are attributed and cancelled with the caller's. The
+    first failure is re-raised once every started write has ended;
+    writes not yet started are dropped. The caller unpersists ``agg``
+    after this returns."""
+    if not views:
+        return
+    if agg is not None:
+        agg.write.format("noop").mode("overwrite").save()
+    workers = min(len(views), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        # one wrapper per write: each copies the caller's local
+        # properties, and the writes must not share one Properties
+        # object (each SQL execution sets its id in it)
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(write_view),
+                        out, index_path, m, interval, mode)
+            for m, _keys, out in views
+        ]
+        try:
+            for f in as_completed(futures):
+                f.result()
+        except BaseException:
+            for f in futures:
+                f.cancel()
+            raise
 
 
 def write_index_meta(
@@ -356,9 +428,10 @@ def build_index(
     time_after: int | None = None,
     time_before: int | None = None,
 ) -> None:
-    """Materialize every metric as a partitioned parquet view: write
-    each :func:`aggregate_metrics` result with :func:`write_view`,
-    then the index definition.
+    """Materialize every metric as a partitioned parquet view: one
+    :func:`aggregate_metrics` pass, every view written concurrently by
+    :func:`write_views`, then the index definition. The aggregate
+    stays persisted until every write has ended.
 
     ``time_after``/``time_before`` bound the build to a time slice —
     the incremental-rebuild path: only the buckets the slice touches
@@ -366,11 +439,11 @@ def build_index(
     late-data day at 100 TB costs one day of input, not the full
     history.
     """
-    for m, _keys, out in aggregate_metrics(
+    with aggregate_metrics(
         df, metrics, interval, time_field, datasource_filter, resolver,
         time_after, time_before,
-    ):
-        write_view(out, index_path, m, interval, mode)
+    ) as (agg, views):
+        write_views(spark, agg, views, index_path, interval, mode)
     write_index_meta(index_path, metrics, interval, time_field, datasource_filter)
 
 
@@ -428,7 +501,9 @@ def _compact_index_locked(spark, index_path, meta, interval):
         stage = path + ".compact_tmp"
         try:
             compacted.write.mode("overwrite").parquet(stage)
-            write_view(spark.read.schema(schema).parquet(stage), index_path,
-                       m, interval)
+            staged = spark.read.schema(schema).parquet(stage)
+            if interval != "all":
+                staged = staged.repartition(BUCKET_COL)  # write_view's input
+            write_view(staged, index_path, m, interval)
         finally:
             shutil.rmtree(stage, ignore_errors=True)

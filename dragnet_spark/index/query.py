@@ -17,9 +17,10 @@ serve", lib/index-query.js:178-188) and are preserved here:
 5. first match wins; no match → NoMetricError.
 
 The rollup itself is one groupBy().sum(value) over the partitioned
-parquet view — Spark's partition pruning on the bucket directory
-column replaces the reference's filename-pattern path enumerator
-(lib/path-enum.js), and the per-file SQLite SUM + merge re-aggregation
+parquet view. A time-bounded query reads only the bucket directories
+its bounds keep, picked by name from one driver-side listing, as the
+reference's filename-pattern path enumerator picks interval files
+(lib/path-enum.js); the per-file SQLite SUM + merge re-aggregation
 (A6/A7, lib/datasource-file.js:609-618) collapses into the single
 distributed aggregate.
 
@@ -123,6 +124,28 @@ def _bucket_bounds(epoch: int, interval: str) -> str:
     return dt.strftime("%Y-%m-%d" if interval == "day" else "%Y-%m-%dT%H")
 
 
+def _bucket_dirs(
+    spark: SparkSession, path: str, lo: str, hi: str
+) -> list[str]:
+    """The bucket directories of the view at ``path`` whose bucket
+    lies in [lo, hi], from one driver-side listing of the view
+    directory. Handing the file index only these keeps a bounded query
+    of a many-bucket view (672 hourly buckets in 28 days) from a Spark
+    listing job: the file index lists its paths on the driver up to
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    paths, and with a job past that."""
+    hadoop = spark._jvm.org.apache.hadoop.fs
+    hpath = hadoop.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    paths = hadoop.FileUtil.stat2Paths(fs.listStatus(hpath))
+    names = [p.getName() for p in paths]
+    prefix = BUCKET_COL + "="
+    return [
+        os.path.join(path, n) for n in names
+        if n.startswith(prefix) and lo <= n[len(prefix):] <= hi
+    ]
+
+
 def query_index(
     spark: SparkSession,
     index_path: str,
@@ -150,16 +173,23 @@ def query_index(
     metric, ignore_filter = find_metric(query, metrics)
     interval = meta.get("interval", "day")
 
-    df = spark.read.schema(view_schema(metric, interval)).parquet(
-        os.path.join(index_path, metric.name)
-    )
-
-    # partition pruning: bucket-name string bounds match the directory
-    # layout, so only intervals overlapping [after, before) are read
+    schema = view_schema(metric, interval)
+    path = os.path.join(index_path, metric.name)
     if query.time_after is not None and interval != "all":
+        # partition pruning: bucket-name string bounds match the
+        # directory layout, so only intervals overlapping [after,
+        # before) are listed and read
         lo = _bucket_bounds(query.time_after, interval)
         hi = _bucket_bounds(query.time_before, interval)
+        kept = _bucket_dirs(spark, path, lo, hi)
+        if kept:
+            df = (spark.read.schema(schema).option("basePath", path)
+                  .parquet(*kept))
+        else:
+            df = spark.createDataFrame([], schema)
         df = df.filter((F.col(BUCKET_COL) >= lo) & (F.col(BUCKET_COL) <= hi))
+    else:
+        df = spark.read.schema(schema).parquet(path)
 
     # view columns are breakdown NAMES, which may contain dots
     # (req.caller) — quote them so Spark doesn't parse struct access

@@ -34,7 +34,7 @@ coordinate sum is ≤ 10⁶·n_c, fine to ~10¹² members per cluster.
 Scale shape (the MLlib posture): centroids are k×dims driver state —
 bounded by k, never the corpus — shipped in the assignment closure,
 so assignment is one narrow Arrow-batched int64 matmul pass over the
-vectors (mapInPandas, no shuffle; exact — np.argmin's first-minimum
+vectors (mapInArrow, no shuffle; exact — np.argmin's first-minimum
 matches the lexicographic tie-break). The centroid update rides the
 SAME pass: each task accumulates its per-cluster coordinate sums in
 numpy and emits at most k·dims partial rows (no n·dims explode ever
@@ -140,15 +140,20 @@ def _assign(
     """(id, cluster, dist[, q], …): the nearest centroid of every row
     of ``src`` — (id, q, …) — by :func:`_chunked_argmin`, ties to the
     lower cluster id, with every further column of ``src`` carried
-    through unchanged. One Arrow-batched numpy pass (mapInPandas):
+    through unchanged. One Arrow-batched numpy pass (mapInArrow):
     Spark's higher-order array folds are interpreted per element, the
-    numpy form is ~50× faster at any corpus size. No shuffle;
-    centroids ride the closure (k×dims ints). ``keep_q`` also carries
-    the quantized vector, for a level-2 pass that re-clusters it.
-    Carrying the payload (the float vector, for the prune) puts the
-    placement decision next to the payload, so a per-cluster consumer
-    needs no join back to the source."""
+    numpy form is ~50× faster at any corpus size. Only ``q`` is
+    converted; ``id`` and the payload columns pass through as the
+    Arrow arrays they arrive as, so a batch holding a null id keeps
+    its other ids exact (pandas would make the column float64 and
+    round ids above 2⁵³). No shuffle; centroids ride the closure
+    (k×dims ints). ``keep_q`` also carries the quantized vector, for a
+    level-2 pass that re-clusters it. Carrying the payload (the float
+    vector, for the prune) puts the placement decision next to the
+    payload, so a per-cluster consumer needs no join back to the
+    source."""
     import numpy as np
+    import pyarrow as pa
 
     from pyspark.sql.types import (
         IntegerType,
@@ -162,13 +167,19 @@ def _assign(
     cols += [c for c in src.columns if c not in ("id", "q")]
 
     def run(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
                 continue
-            a, dmin = _chunked_argmin(
-                np.asarray(list(pdf["q"]), dtype=np.int64), C
+            flat = batch.column("q").flatten().to_numpy(zero_copy_only=False)
+            Q = flat.astype(np.int64, copy=False).reshape(n, len(flat) // n)
+            a, dmin = _chunked_argmin(Q, C)
+            made = {"cluster": pa.array(a.astype(np.int32)),
+                    "dist": pa.array(dmin)}
+            yield pa.RecordBatch.from_arrays(
+                [made[c] if c in made else batch.column(c) for c in cols],
+                names=cols,
             )
-            yield pdf.assign(cluster=a.astype(np.int32), dist=dmin)[cols]
 
     schema = StructType(
         [
@@ -178,7 +189,7 @@ def _assign(
         ]
         + [src.schema[c] for c in cols[3:]]
     )
-    return src.mapInPandas(run, schema=schema)
+    return src.mapInArrow(run, schema=schema)
 
 
 def _update_partials(qv: DataFrame, cents: list[list[int]]) -> DataFrame:

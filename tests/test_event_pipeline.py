@@ -12,7 +12,10 @@ writer, so the paths agree.
   from the same pass;
 * empty and missing views, hour and unbucketed views, a value-only
   view and dotted and quantized breakdowns answer what ``dn scan``
-  answers, and ``dn build`` and ``dn query`` keep their job budgets.
+  answers, and ``dn build`` and ``dn query`` keep their job budgets;
+* every view write of ``dn build`` leaves one file per bucket, runs
+  under the caller's job group and tags, and a failed one is the
+  build's error, with nothing left persisted or running.
 """
 
 import glob
@@ -388,16 +391,29 @@ FIXTURE_METRICS = [  # FIXTURES.md §3, bycode's filter as a metric filter
 ]
 
 
+def _one_file_per_bucket(root):
+    """Every ``__dn_bucket=*`` dir of every view under ``root`` holds
+    exactly one parquet file; returns the number of bucket dirs."""
+    buckets = glob.glob(f"{root}/*/__dn_bucket=*")
+    for b in buckets:
+        assert len(glob.glob(f"{b}/*.parquet")) == 1, b
+    return len(buckets)
+
+
 def test_build_and_query_job_budget(cfg, tmp_path, events_tree, spark,
                                     job_count):
-    """dn build of the four FIXTURES.md §3 metrics is 10 Spark jobs,
-    and each dn query is 2: the rollup's shuffle and its result, with
-    no job to infer the view's schema (which made 3). Measured on a
-    4-core machine with 8 shuffle partitions, under local[8] (the test
-    session) and local[4] alike."""
+    """dn build of the four FIXTURES.md §3 metrics is 8 Spark jobs: the
+    fan-out aggregate's shuffle, its one bucket exchange, the two that
+    materialize it, and one shuffle-free write per metric. Each dn
+    query is 2: the rollup's shuffle and its result, with no job to
+    infer the view's schema (which made 3). Every bucket dir holds one
+    file. Measured on a 4-core machine with 8 shuffle partitions,
+    under local[8] (the test session) and local[4] alike."""
     add_datasource(cfg, "d", events_tree[0], str(tmp_path / "idx"),
                    FIXTURE_METRICS)
-    assert job_count(lambda: run(["build", "d"], cfg)) == 10
+    assert job_count(lambda: run(["build", "d"], cfg)) == 8
+    buckets = _one_file_per_bucket(f"{tmp_path}/idx/by_day")
+    assert buckets == 28 * len(FIXTURE_METRICS)
     queries = {
         "count": [],
         "grouped": ["-b", "host,req.method"],
@@ -407,3 +423,87 @@ def test_build_and_query_job_budget(cfg, tmp_path, events_tree, spark,
     jobs = {name: job_count(lambda: run(["query", *argv, "d"], cfg))
             for name, argv in queries.items()}
     assert jobs == dict.fromkeys(queries, 2)
+
+
+def test_hourly_build_and_bounded_query(cfg, tmp_path, events_tree, spark,
+                                        job_count):
+    """An hourly build of the 28-day tree writes one file per bucket,
+    and a 1-day bounded hourly query lists only the bucket dirs its
+    bounds keep, on the driver: 2 jobs, as at a day interval, where
+    handing the whole view (672 bucket dirs, past Spark's parallel
+    listing threshold of 32) to the file index adds a listing job.
+    Its answer is dn scan's."""
+    add_datasource(cfg, "d", events_tree[0], str(tmp_path / "idx"),
+                   FIXTURE_METRICS)
+    run(["build", "--interval=hour", "d"], cfg)
+    assert _one_file_per_bucket(f"{tmp_path}/idx/by_hour") > 3 * 32
+    argv = ["--points", "-b", "res.statusCode", "--after", "2014-05-03",
+            "--before", "2014-05-04"]
+    want, _ = run(["scan", *argv, "d"], cfg)
+    got = []
+    jobs = job_count(lambda: got.append(
+        run(["query", "--interval=hour", *argv, "d"], cfg)[0]))
+    assert jobs == 2
+    assert want.strip()
+    assert sorted(got[0].splitlines()) == sorted(want.splitlines())
+
+
+def _persisted_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_failed_view_write_surfaces_and_cleans_up(cfg, tmp_path, three_days,
+                                                  spark):
+    """A view write that fails (a file stands where the view's
+    directory goes) is dn build's error, raised once every other
+    write has ended: the persisted aggregate is released and no writer
+    thread is left."""
+    import threading
+
+    add_datasource(cfg, "d", three_days, str(tmp_path / "idx"),
+                   [*METRICS_3D, ("bymethod", "host,latency", None)])
+    (tmp_path / "idx" / "by_day").mkdir(parents=True)
+    (tmp_path / "idx" / "by_day" / "byhost").write_text("not a view\n")
+    threads, persisted = set(threading.enumerate()), _persisted_rdds(spark)
+    with pytest.raises(Exception):
+        main(["build", "d"], out=io.StringIO(), config_path=cfg)
+    assert _persisted_rdds(spark) == persisted
+    assert set(threading.enumerate()) <= threads
+    # the other views were written whole
+    assert _one_file_per_bucket(f"{tmp_path}/idx/by_day") == 2 * 3
+
+
+def test_build_jobs_carry_callers_group_and_tag(cfg, tmp_path, three_days,
+                                                spark):
+    """Every job of dn build, the concurrent view writes included,
+    carries the caller's job group and a job tag the caller set on the
+    session, so a ledger, a job count or a cancellation by either
+    reaches all of them."""
+    import uuid
+
+    add_datasource(cfg, "d", three_days, str(tmp_path / "idx"), METRICS_3D)
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(None)
+        return {j.jobId(): j for j in map(jobs.apply, range(jobs.size()))}
+
+    before = set(job_ids())
+    group, tag = f"g-{uuid.uuid4().hex}", f"t-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    spark.addTag(tag)
+    try:
+        run(["build", "d"], cfg)
+    finally:
+        spark.removeTag(tag)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    new = {i: j for i, j in job_ids().items() if i not in before}
+    assert len(new) > len(METRICS_3D)
+    for job in new.values():
+        assert job.jobGroup().get() == group
+        tags = job.jobTags()
+        assert any(tags.apply(k).endswith("-" + tag)
+                   for k in range(tags.size())), job.jobId()

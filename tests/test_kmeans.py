@@ -137,6 +137,17 @@ def test_sql_twin_null_id_seeds_last(spark):
     assert got == want
 
 
+def test_assign_keeps_ids_above_2_53_beside_a_null(spark):
+    """A null id in an assignment batch leaves the batch's other ids
+    exact: 2⁵³+1 is not a float64, so a pandas float conversion of the
+    id column would return it as 2⁵³."""
+    big = 2**53 + 1
+    rows = [(big, [1.0, 0.0]), (None, [0.0, 1.0]), (5, [1.0, 1.0])]
+    df = _emb(spark, rows).coalesce(1)  # one partition, one Arrow batch
+    got = {r["id"] for r in kmeans_assign(df, k=2, iterations=1).collect()}
+    assert got == {big, None, 5}
+
+
 def test_auto_k_formula():
     from dragnet_spark.ops.kmeans import auto_k
 
