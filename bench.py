@@ -3,41 +3,54 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and print ONE COMPACT JSON line:
 
-    {"metric": "...", "value": N, "unit": "sec",
-     "queries": {<family>: total_sec, ...}, "sf": ...,
-     "n_over_band": 0, "detail": "BENCH_DETAIL.json"}
+    {"metric": "headline_queries_total", "value": N, "unit": "sec",
+     "sf": 0.1, "n_queries": 81, "queries": {<family>: total_sec, ...},
+     "cpus": 4, "master": "local[4]", "default_parallelism": 4,
+     "detail": "BENCH_DETAIL.json"}
 
+plus ``"errors"`` and ``"incomplete": true`` when a query failed.
 The driver records a bounded TAIL of stdout, so the printed line
 carries per-FAMILY totals (~½ KB, survives any tail window); the
-complete per-query map, canary, and load-grading detail go to the
-committed BENCH_DETAIL.json sidecar and BENCH_HISTORY.jsonl.
+per-query seconds, Spark jobs and shuffle-read bytes go to the
+committed BENCH_DETAIL.json sidecar, and one line per run is appended
+to BENCH_HISTORY.jsonl.
 
-Each query is fully executed (collected) but results are discarded;
-the first query's timing excludes JVM/session spin-up because the
-session is created before the clock starts.
+    python bench.py NAME... [--runs N]
+
+times only the named registry entries, N runs each (default 3), and
+prints per entry its min/median seconds and the Spark jobs and
+shuffle-read bytes of its last run. It writes nothing.
+
+Each query is fully executed through the noop sink (no column-pruning
+shortcut, nothing shipped to the driver) and runs under its own job
+group of ``perfbench/ledger.Ledger``, whose counters come from the
+status store at zero extra jobs. A query's time is the min of its
+runs: run 1 also pays one-time Catalyst analysis and codegen
+compilation (amortized to zero on a long-lived cluster). The session
+is created and warmed before the clock starts.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+ROOT = Path(__file__).resolve().parent
+sys.path.insert(0, str(ROOT))
 
 from dragnet_spark.session import get_spark, session_cpus  # noqa: E402
 from dragnet_spark import registry  # noqa: E402
+from perfbench.ledger import Ledger  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # headline set: every family the engine implements, weighted toward
 # the shapes that dominate at 100 TB (scans, star joins, windows).
-# Grouped into named families so the in-run load canary (a scan_count
-# probe BETWEEN families) can attribute machine-load noise to the
-# family it actually hit — r4's committed run ramped loadavg 4.5→12.9
-# mid-run and the start-only probe couldn't see it.
+# The compact line reports one total per family.
 BENCH_FAMILIES = [
     ("scan", [
         "scan_count",
@@ -142,9 +155,8 @@ BENCH_FAMILIES = [
         "dedup_embedding_lsh_autobits_store",
         "semdedup_prune_auto",
     ]),
-    # decode-path regressions must trip the trailing-median grading
-    # like every other family (VERDICT r6 #4) — multimodal throughput
-    # previously lived only in soak tables
+    # decode paths are timed like every other family (VERDICT r6 #4)
+    # — multimodal throughput previously lived only in soak tables
     ("multimodal", [
         "multimodal_features",
         "multimodal_dhash_dedup",
@@ -174,7 +186,8 @@ STORE_BACKED_PROBE_ONLY = [
 ]
 
 
-HISTORY = Path(__file__).resolve().parent / "BENCH_HISTORY.jsonl"
+HISTORY = ROOT / "BENCH_HISTORY.jsonl"
+DETAIL = ROOT / "BENCH_DETAIL.json"
 
 
 def current_round() -> int:
@@ -187,429 +200,174 @@ def current_round() -> int:
     env = os.environ.get("SPARK_GRAFT_ROUND")
     if env and env.isdigit():
         return int(env)
-    root = Path(__file__).resolve().parent
     rounds = [0]
-    for p in root.glob("BENCH_r*.json"):
+    for p in ROOT.glob("BENCH_r*.json"):
         suffix = p.stem[len("BENCH_r"):]
         if suffix.isdigit():
             rounds.append(int(suffix))
     return max(rounds) + 1
 
 
-def _loadavg():
-    try:
-        return round(os.getloadavg()[0], 2)
-    except OSError:  # pragma: no cover — non-POSIX
-        return None
+#: The headline's runs per query (min taken).
+HEADLINE_RUNS = 2
+#: The ledger counters recorded per query.
+RECORDED = ("jobs", "shuffle_read_bytes")
 
 
-#: A query is "hot" (load-suspect) above this multiple of its trailing
-#: median; hot queries are re-run after a cooldown until they cool or
-#: attempts run out. 1.2 is the judge's committed-artifact band — the
-#: 1.5 rerun trigger alone let 1.2–1.5x load noise through in r3–r5.
-GRADE_BAND = 1.2
-#: How many cooldown+rerun passes to spend chasing hot queries before
-#: annotating the survivors as load_retried.
-MAX_GRADE_PASSES = 3
-#: Trailing window: medians over the last K history lines per query, so
-#: a plan improvement shifts the baseline within a round or two instead
-#: of being anchored to round-1 numbers forever.
-TRAILING_K = 8
-
-
-#: The core count of a history line that carries none: every line
-#: written before the lines carried one came from one 32-core host.
-LEGACY_HISTORY_CPUS = 32
-
-
-def history_row_matches(rec: dict, sf, cpus: int) -> bool:
-    """Whether a history line belongs to the run keyed by (``sf``,
-    ``cpus``); ``sf=None`` matches any scale factor (a per-tier history
-    file holds one). A run on N cores is graded only against history
-    from N cores: a 4-core run against 32-core medians reads every
-    query as hot."""
-    return (sf is None or rec.get("sf") == sf) and (
-        rec.get("cpus", LEGACY_HISTORY_CPUS) == cpus
-    )
-
-
-def trailing_medians(
-    history: Path, k: int, sf=None, *, cpus: int
-) -> dict[str, float]:
-    """Per-query median of the last ``k`` recorded values in a
-    ``*_HISTORY.jsonl`` file, only over rows keyed by ``cpus`` (and
-    ``sf`` when given). This is the baseline that separates machine
-    load (everything slow at once) from a plan regression (one query
-    slow, history still)."""
-    series: dict[str, list[float]] = {}
-    if not history.exists():
-        return {}
-    for line in history.read_text().splitlines():
-        try:
-            rec = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        if not history_row_matches(rec, sf, cpus):
-            continue
-        for q, v in rec.get("queries", {}).items():
-            series.setdefault(q, []).append(v)
-    out = {}
-    for q, vals in series.items():
-        vals = sorted(vals[-k:])
-        out[q] = vals[len(vals) // 2]
-    return out
-
-
-#: consecutive strictly-rising round-median canary points (including
-#: the current run) that trip the machine-trend alarm — 3 prior
-#: rounds + now, matching the r11→r13 riser that motivated this
-TREND_POINTS = 4
-#: cumulative rise over the window below which a monotonic run of
-#: points is still called noise (the canary's run-to-run jitter is
-#: ~±15% on an idle box; see BASELINE.md "bench riser root cause")
-TREND_MIN_RISE = 0.15
-
-
-def _round_probe_meds(sf, cpus: int) -> dict[int, float]:
-    """Per-ROUND median of the mid-run canary probes (family probes
-    excluding the first, which carries JVM warmup) from committed
-    history at (``sf``, ``cpus``). This is the machine-speed series:
-    the probe's plan has never changed, so its round-over-round
-    movement measures the BOX, not the code."""
-    per_round: dict[int, list[float]] = {}
-    if not HISTORY.exists():
-        return {}
-    for line in HISTORY.read_text().splitlines():
-        try:
-            rec = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        if not history_row_matches(rec, sf, cpus):
-            continue
-        rd, can = rec.get("round"), rec.get("canary")
-        if not isinstance(rd, int) or not isinstance(can, dict):
-            continue
-        probes = [
-            v for k, v in can.items()
-            if k != "scan" and isinstance(v, (int, float))
-        ]
-        per_round.setdefault(rd, []).extend(probes)
-    return {
-        rd: sorted(v)[len(v) // 2] for rd, v in per_round.items() if v
-    }
-
-
-def _machine_trend(sf, probe_med: float, cpus: int) -> dict:
-    """The check the trailing-median band absorbs by construction
-    (VERDICT r13 #3): each round's +5% is individually in-band, so a
-    slow monotonic trend never flags. Here the canary's round-median
-    series (plan unchanged since r4 ⇒ box speed) plus the current
-    run's probe median is tested directly for a sustained rise; the
-    returned ``machine_speed_factor`` (current ÷ window minimum)
-    normalizes the headline total so a code regression stays visible
-    UNDER an environmental slowdown — the r12-vs-r14 interleaved
-    cold-start A/B (BASELINE.md) measured identical per-query times
-    on both HEADs, attributing the r11→r13 riser to box epoch."""
-    # exclude the CURRENT round's earlier runs: rounds routinely get
-    # several bench runs, and letting run 1 of round N into the
-    # history side would put two same-round points in the series —
-    # intra-round jitter masquerading as (or masking) a rising round
-    this_round = current_round()
-    meds = {
-        r: v for r, v in _round_probe_meds(sf, cpus).items()
-        if r < this_round
-    }
-    series = [meds[r] for r in sorted(meds)][-(TREND_POINTS - 1):]
-    series.append(probe_med)
-    rising = len(series) == TREND_POINTS and all(
-        a < b for a, b in zip(series, series[1:])
-    )
-    rise = series[-1] / min(series) - 1.0 if series and min(series) else 0.0
-    factor = round(series[-1] / min(series), 3) if min(series) else 1.0
-    return {
-        "probe_med_by_round": {r: meds[r] for r in sorted(meds)},
-        "probe_med_now": probe_med,
-        "machine_speed_factor": factor,
-        "trend_alarm": bool(rising and rise >= TREND_MIN_RISE),
-        "note": (
-            "canary plan unchanged; factor>1 = box slower than the "
-            "window's fastest round — divide the headline total by it "
-            "before calling a riser a code regression"
-        ),
-    }
-
-
-def _cooldown(cpus: int, max_wait: float = 45.0) -> float:
-    """Wait for the 1-minute loadavg to drop below half the core count
-    (bounded). Returns the seconds actually waited. Re-running a hot
-    query while the box is still busy just re-measures the load."""
-    waited = 0.0
-    while waited < max_wait:
-        la = _loadavg()
-        if la is None or la < cpus * 0.5:
-            break
-        time.sleep(3.0)
-        waited += 3.0
-    return waited
-
-
-def main() -> None:
+def _session():
+    """The bench session, warmed: a trivial action starts the JVM and
+    a no-op pandas UDF across all cores forks the Python workers
+    (first-use fork + pandas import would otherwise bill the first UDF
+    query ~6 s of local-only cold start)."""
     spark = get_spark(app_name="dragnet_bench")
-    # warm the JVM with a trivial action, and the Python UDF workers
-    # with a no-op pandas UDF across all cores (first-use worker fork +
-    # pandas import would otherwise bill the first UDF query ~6s of
-    # local-only cold start; a long-lived cluster has none)
     spark.range(1).count()
-    from pyspark.sql.functions import col, pandas_udf  # noqa: E402
+    from pyspark.sql.functions import col, pandas_udf
 
     _warm = pandas_udf(lambda s: s, "long")
-    cpus = session_cpus()
-    spark.range(1024).repartition(cpus).select(_warm(col("id"))).count()
+    spark.range(1024).repartition(session_cpus()).select(
+        _warm(col("id"))
+    ).count()
+    return spark
 
-    load_start = _loadavg()
+
+def time_query(spark, ledger: Ledger, name: str, runs: int):
+    """(seconds of each run, counters of the last run) of registry
+    entry ``name`` through the noop sink. The last run's counters are
+    the recurring cost: run 1 may also build an entry's cached store
+    (STORE_BACKED_PROBE_ONLY)."""
+    e = registry.REGISTRY[name]
+    secs = []
+    for _ in range(runs):
+        with ledger.scope(name) as group:
+            t0 = time.perf_counter()
+            e.spark(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            secs.append(time.perf_counter() - t0)
+    c = ledger.read(group)
+    return secs, {k: c[k] for k in RECORDED}
+
+
+def time_named(spark, names: list[str], runs: int) -> None:
+    """Print min/median seconds and the ledger counters of each named
+    entry; record nothing."""
+    ledger = Ledger(spark)
+    for name in names:
+        if name not in registry.REGISTRY:
+            print(f"{name}: UNKNOWN")
+            continue
+        secs, c = time_query(spark, ledger, name, runs)
+        s = sorted(secs)
+        print(
+            f"{name}: min={s[0]:.3f} med={s[len(s) // 2]:.3f} "
+            f"all={[round(t, 3) for t in secs]} jobs={c['jobs']} "
+            f"shuffle_read_bytes={c['shuffle_read_bytes']}"
+        )
+
+
+def headline(spark) -> dict:
+    """Time every BENCH_FAMILIES query; write BENCH_DETAIL.json, append
+    one BENCH_HISTORY.jsonl line and return the compact line. One
+    broken query must not zero the whole bench: failures are recorded
+    per query and the line is always returned."""
+    ledger = Ledger(spark)
+    timings: dict[str, float] = {}
+    counters: dict[str, dict] = {}
+    errors: dict[str, str] = {}
+    for _fam, names in BENCH_FAMILIES:
+        for name in names:
+            try:
+                secs, counters[name] = time_query(
+                    spark, ledger, name, HEADLINE_RUNS
+                )
+            except Exception as exc:  # noqa: BLE001 — degrade, don't die
+                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+                print(f"bench: {name} failed: {errors[name]}", file=sys.stderr)
+                continue
+            timings[name] = round(min(secs), 3)
+
     sf_str = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf = float(sf_str) if sf_str.replace(".", "").isdigit() else sf_str
-    medians = trailing_medians(HISTORY, TRAILING_K, sf, cpus=cpus)
-
-    def run_once(e) -> float:
-        t0 = time.perf_counter()
-        df = e.spark(spark, SF_DIR)
-        # noop sink executes the full plan (no column pruning
-        # shortcut, nothing shipped to the driver)
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    retried: list[str] = []
-    canary_entry = registry.REGISTRY["scan_count"]
-
-    def run_query(name: str) -> None:
-        e = registry.REGISTRY.get(name)
-        if e is None:
-            return
-        # steady-state: min of 2 runs; a 3rd only when the first two
-        # disagree by >25% (load noise). Run 1 pays one-time Catalyst
-        # analysis + whole-stage codegen compilation (amortized to zero
-        # on a long-lived cluster); later runs are the recurring cost.
-        # Data is re-read each time — only compilation is warm.
-        # One broken query must not zero the whole bench: failures are
-        # recorded per-query and the JSON line is always emitted.
-        try:
-            runs = [run_once(e), run_once(e)]
-            if max(runs) > 1.25 * min(runs):
-                runs.append(run_once(e))
-            best = min(runs)
-            # load gate: a trivial query far above its trailing median
-            # means the box is busy, not that the plan regressed —
-            # retry instead of recording a number that muddies the
-            # round-over-round signal
-            med = medians.get(name)
-            if med and best > 2 * med:
-                if name not in retried:
-                    retried.append(name)
-                runs.append(run_once(e))
-                best = min(runs)
-        except Exception as exc:  # noqa: BLE001 — degrade, don't die
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"bench: {name} failed: {errors[name]}", file=sys.stderr)
-            return
-        timings[name] = round(min(best, timings.get(name, best)), 3)
-
-    # main pass, with a scan_count probe before each family (recorded
-    # for context; the authoritative load gate is the per-query grading
-    # pass below — r3–r5 all committed load-inflated headline numbers
-    # that family-level probes failed to attribute)
-    canary_samples: dict[str, float] = {}
-    for fam, qnames in BENCH_FAMILIES:
-        canary_samples[fam] = round(run_once(canary_entry), 3)
-        for name in qnames:
-            run_query(name)
-
-    # per-query grading vs the trailing-median baseline: any query
-    # above GRADE_BAND x its own history median is load-suspect — wait
-    # for the box to cool, re-run it (min folds into timings), repeat
-    # up to MAX_GRADE_PASSES. Whatever stays hot is annotated as
-    # load_retried with its final factor, so a committed artifact is
-    # either within the band or explicit about what isn't.
-    grade_reruns: dict[str, int] = {}
-
-    def _hot() -> list[str]:
-        return [
-            q for q, t in timings.items()
-            if medians.get(q) and t > GRADE_BAND * medians[q]
-        ]
-
-    for pass_no in range(MAX_GRADE_PASSES):
-        hot = _hot()
-        if not hot:
-            break
-        waited = _cooldown(cpus)
-        print(
-            f"bench: grade pass {pass_no + 1}: {len(hot)} queries over "
-            f"{GRADE_BAND}x trailing median (cooled {waited:.0f}s): "
-            f"{','.join(hot)}",
-            file=sys.stderr,
-        )
-        for name in hot:
-            grade_reruns[name] = grade_reruns.get(name, 0) + 1
-            run_query(name)
-
-    # history-less queries (this round's NEW entries) are invisible to
-    # every median gate above, and their first recorded time becomes
-    # their future baseline — a loaded first run would anchor the
-    # trailing median high and mask real regressions later. Give each
-    # one a post-cooldown rerun so the seeded history line is a
-    # quiet-machine number.
-    fresh = [q for q in timings if q not in medians]
-    if fresh:
-        _cooldown(cpus)
-        print(
-            f"bench: seeding history for {len(fresh)} new queries "
-            f"(post-cooldown rerun): {','.join(fresh)}",
-            file=sys.stderr,
-        )
-        for name in fresh:
-            run_query(name)
-    load_retried = {
-        q: {
-            "factor": round(timings[q] / medians[q], 2),
-            "reruns": grade_reruns.get(q, 0),
-        }
-        for q in _hot()
-    }
-
-    factors = {
-        q: round(timings[q] / medians[q], 2)
-        for q in timings
-        if medians.get(q)
-    }
-    mid_probes = sorted(
-        v for k, v in canary_samples.items()
-        if k != "scan" and isinstance(v, float)
-    )
-    probe_med = mid_probes[len(mid_probes) // 2] if mid_probes else 0.0
-    machine = _machine_trend(sf, probe_med, cpus)
-    canary = {
-        "mode": "per_query_vs_trailing_median",
-        "grade_band": GRADE_BAND,
-        "trailing_window": TRAILING_K,
-        "per_query_factor": factors,
-        "n_with_history": len(factors),
-        "n_over_band": len(load_retried),
-        "max_factor": max(factors.values()) if factors else None,
-        "family_probes_sec": canary_samples,
-        "machine": machine,
-    }
-
+    cpus = session_cpus()
+    sc = spark.sparkContext
     total = round(sum(timings.values()), 3)
-    load_end = _loadavg()
-    note = (
-        f"loadavg start={load_start} end={load_end} (cpus={cpus}); "
-        f"{len(factors)} queries graded vs trailing medians, "
-        f"{len(load_retried)} over {GRADE_BAND}x after "
-        f"{sum(grade_reruns.values())} reruns"
-    )
-    if retried:
-        note += f"; in-run retried: {','.join(retried)}"
-    # the full per-query record: written to BENCH_DETAIL.json and
-    # BENCH_HISTORY.jsonl (committed, judge-readable). NOT printed —
-    # stdout gets only the compact summary line at the end (see below).
-    out = {
+    detail = {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "counters": counters,
         "sf": sf,
         "cpus": cpus,
-        "master": spark.sparkContext.master,
-        "default_parallelism": spark.sparkContext.defaultParallelism,
-        "load_note": note,
-        "n_over_band": len(load_retried),
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
         "store_backed_probe_only": [
             q for q in STORE_BACKED_PROBE_ONLY if q in timings
         ],
     }
-    if load_retried:
-        out["load_retried"] = {
-            q: v["factor"] for q, v in load_retried.items()
-        }
     if errors:
         # the headline total excludes the failed queries' time, so it
         # is NOT comparable against a clean run or BASELINE.md — say so
-        out["errors"] = errors
-        out["incomplete"] = True
-    detail = dict(out)
-    detail["canary"] = canary
-    detail["load_retried_detail"] = load_retried
+        detail["errors"] = errors
+        detail["incomplete"] = True
     try:
-        with (Path(__file__).resolve().parent / "BENCH_DETAIL.json").open(
-            "w"
-        ) as f:
+        with DETAIL.open("w") as f:
             json.dump(detail, f, indent=1)
-    except OSError as exc:  # pragma: no cover — read-only checkout
-        print(f"bench: detail write failed: {exc}", file=sys.stderr)
-    try:
         with HISTORY.open("a") as f:
             f.write(json.dumps({
                 "ts": time.time(),
                 "round": current_round(),
-                "sf": out["sf"],
+                "sf": sf,
                 "cpus": cpus,
-                "loadavg": [load_start, load_end],
                 "queries": timings,
-                "canary": canary_samples,
-                "n_over_band": len(load_retried),
+                "jobs": {q: c["jobs"] for q, c in counters.items()},
             }) + "\n")
     except OSError as exc:  # pragma: no cover — read-only checkout
-        print(f"bench: history append failed: {exc}", file=sys.stderr)
-    # stdout gets ONE COMPACT line (VERDICT r8 #6): the driver records
-    # a bounded TAIL of stdout as BENCH_rN.json, and even the
-    # trimmed-down full line (2.4 KB at 62 queries) got head-clipped
-    # into unparseable artifacts two rounds running. Family totals +
-    # the grading verdict fit in ~½ KB and survive any plausible tail
-    # window; the complete per-query map, canary, and load detail are
-    # in the committed BENCH_DETAIL.json sidecar and BENCH_HISTORY.
-    fam_totals = {
-        fam: round(sum(timings[q] for q in qs if q in timings), 3)
-        for fam, qs in BENCH_FAMILIES
-    }
-    probes = [s for s in canary_samples.values() if isinstance(s, float)]
+        print(f"bench: record write failed: {exc}", file=sys.stderr)
+    # the compact line (VERDICT r8 #6): a full per-query line got
+    # head-clipped by a bounded stdout tail two rounds running.
+    # cpus/master/default_parallelism echo the live context
+    # (VERDICT r14 #1/#2), so a core-count wiring bug shows as a
+    # mismatch with $SPARK_GRAFT_CPUS
     compact = {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
         "sf": sf,
         "n_queries": len(timings),
-        "queries": fam_totals,  # per-FAMILY totals; per-query → detail
-        # scaling-contract echo (VERDICT r14 #1/#2): the driver's
-        # 8-vs-32-core companion run needs to SEE the effective core
-        # count in the output — without it, a flat 8-vs-32 ratio at a
-        # tiny SF (fixed-job-overhead floor) is indistinguishable
-        # from "the env var was ignored". master/default_parallelism
-        # come from the live context, not the env, so a wiring bug
-        # would show here as a mismatch with $SPARK_GRAFT_CPUS.
+        "queries": {
+            fam: round(sum(timings[q] for q in qs if q in timings), 3)
+            for fam, qs in BENCH_FAMILIES
+        },
         "cpus": cpus,
-        "master": spark.sparkContext.master,
-        "default_parallelism": spark.sparkContext.defaultParallelism,
-        "n_over_band": len(load_retried),
-        "canary_probe_minmax": (
-            [round(min(probes), 3), round(max(probes), 3)] if probes else None
-        ),
-        # headline total divided by the canary-measured machine-speed
-        # factor: compare THIS across rounds before calling a riser a
-        # code regression — the raw total moves with the box
-        "value_machine_normalized": round(
-            total / machine["machine_speed_factor"], 3
-        ),
-        "machine_speed_factor": machine["machine_speed_factor"],
-        "trend_alarm": machine["trend_alarm"],
-        "detail": "BENCH_DETAIL.json",
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "detail": DETAIL.name,
     }
     if errors:
         compact["errors"] = sorted(errors)
         compact["incomplete"] = True
-    print(json.dumps(compact))
+    return compact
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(
+        description="Registry benchmark (see the module docstring)."
+    )
+    ap.add_argument(
+        "names", nargs="*",
+        help="time only these registry entries and write nothing",
+    )
+    ap.add_argument(
+        "--runs", type=int,
+        help="runs per named entry (default 3; the headline runs 2)",
+    )
+    args = ap.parse_args(argv)
+    if args.runs is not None and (args.runs < 1 or not args.names):
+        ap.error("--runs takes a count >= 1 and times named entries only")
+    spark = _session()
+    if args.names:
+        time_named(spark, args.names, args.runs or 3)
+    else:
+        print(json.dumps(headline(spark)))
 
 
 if __name__ == "__main__":

@@ -352,24 +352,40 @@ def _render_result(df, query, opts, out, title):
     out.write(render(df, query, mode=mode, title=title))
 
 
+def _counter_line(name: str, label: str, value) -> None:
+    lbl = label + ":"
+    sys.stderr.write("%-19s%s%s\n" % (name, lbl, str(value).rjust(21 - len(lbl))))
+
+
+def _print_parser_counters(observations: dict) -> None:
+    """The "json parser" block of the counters: every input line, the
+    parsed records and their difference as invalid json. Nothing for a
+    source without a JSON parse."""
+    parser = observations.get("json parser")
+    if not parser:
+        return
+    ninputs = parser.get.get("ninputs", 0)
+    nparsed = observations["adapter"].get.get("noutputs", 0)
+    _counter_line("json parser", "ninputs", ninputs)
+    _counter_line("json parser", "noutputs", nparsed)
+    if ninputs > nparsed:
+        _counter_line("json parser", "invalid json", ninputs - nparsed)
+
+
+def _warn_unparseable(observations: dict) -> None:
+    """--warnings: the count of input lines the JSON parse dropped."""
+    if "json parser" in observations:
+        n = (observations["json parser"].get["ninputs"]
+             - observations["adapter"].get["noutputs"])
+        if n:
+            sys.stderr.write("warn: %d unparseable input lines\n" % n)
+
+
 def _print_counters(observations: dict, noutputs: int) -> None:
     """Per-stage counters to stderr (reference: vsDumpCounters shape,
     'NAME<pad19>label:<right-pad to 21> N'). Observations piggyback on
     the scan's single pass — no extra jobs."""
-
-    def line(name, label, value):
-        lbl = label + ":"
-        sys.stderr.write("%-19s%s%s\n" % (name, lbl, str(value).rjust(21 - len(lbl))))
-
-    parser = observations.get("json parser")
-    adapter = observations.get("adapter")
-    ninputs = parser.get.get("ninputs", 0) if parser else 0
-    nparsed = adapter.get.get("noutputs", 0) if adapter else 0
-    if parser:
-        line("json parser", "ninputs", ninputs)
-        line("json parser", "noutputs", nparsed)
-        if ninputs > nparsed:
-            line("json parser", "invalid json", ninputs - nparsed)
+    _print_parser_counters(observations)
     dt = observations.get("datetime")
     dt_out = None
     if dt is not None:
@@ -381,19 +397,19 @@ def _print_counters(observations: dict, noutputs: int) -> None:
         # reference prints counters alphabetically (vsDumpCounters);
         # baddate/undef exist only once incremented
         if baddate:
-            line("Datetime parser", "baddate", baddate)
-        line("Datetime parser", "ninputs", dt_in)
-        line("Datetime parser", "noutputs", dt_out)
+            _counter_line("Datetime parser", "baddate", baddate)
+        _counter_line("Datetime parser", "ninputs", dt_in)
+        _counter_line("Datetime parser", "noutputs", dt_out)
         if undef:
-            line("Datetime parser", "undef", undef)
+            _counter_line("Datetime parser", "undef", undef)
     tf = observations.get("timefilter")
     if tf is not None and dt_out is not None:
         tf_out = tf.get.get("noutputs", 0)
         if dt_out > tf_out:
-            line("Time filter", "nfilteredout", dt_out - tf_out)
-        line("Time filter", "ninputs", dt_out)
-        line("Time filter", "noutputs", tf_out)
-    line("Aggregator", "noutputs", noutputs)
+            _counter_line("Time filter", "nfilteredout", dt_out - tf_out)
+        _counter_line("Time filter", "ninputs", dt_out)
+        _counter_line("Time filter", "noutputs", tf_out)
+    _counter_line("Aggregator", "noutputs", noutputs)
 
 
 @command("scan", 1, before=None, after=None, filter=None, breakdowns=None,
@@ -433,11 +449,8 @@ def cmd_scan(cat: Catalog, out, opts, dsname):
     _render_result(rows, query, opts, out, dsname)
     if opts["counters"]:
         _print_counters(observations, len(rows))
-    if opts["warnings"] and "json parser" in observations:
-        n = (observations["json parser"].get["ninputs"]
-             - observations["adapter"].get["noutputs"])
-        if n:
-            sys.stderr.write("warn: %d unparseable input lines\n" % n)
+    if opts["warnings"]:
+        _warn_unparseable(observations)
 
 
 @command("build", 1, after=None, before=None, counters=False, dry_run=False,
@@ -445,8 +458,9 @@ def cmd_scan(cat: Catalog, out, opts, dsname):
          assetroot=None)
 def cmd_build(cat: Catalog, out, opts, dsname):
     """dn build <datasource> [-A AFTER] [-B BEFORE] [-i day|hour|all]
-    [--index-config=FILE] [-n]: materialize index views
-    (bin/dn:640-694)."""
+    [--index-config=FILE] [--counters] [--warnings] [-n]: materialize
+    index views (bin/dn:640-694); --counters and --warnings report the
+    parse counts of the build's one read of the raw data."""
     from dragnet_spark.datasource import load_datasource
     from dragnet_spark.index.build import build_index
 
@@ -464,7 +478,10 @@ def cmd_build(cat: Catalog, out, opts, dsname):
         return
 
     spark = _get_spark()
-    df, resolver, _vc = load_datasource(spark, ds, query)
+    observations = {} if opts["counters"] or opts["warnings"] else None
+    df, resolver, _vc = load_datasource(
+        spark, ds, query, observations=observations
+    )
     if df is None:
         raise FatalError("no input files in the requested time range")
     build_index(
@@ -473,6 +490,10 @@ def cmd_build(cat: Catalog, out, opts, dsname):
         resolver=resolver,
         time_after=query.time_after, time_before=query.time_before,
     )
+    if opts["counters"]:
+        _print_parser_counters(observations)
+    if opts["warnings"]:
+        _warn_unparseable(observations)
     sys.stderr.write('indexes for "%s" built\n' % dsname)
 
 
@@ -522,7 +543,7 @@ def cmd_index_config(cat: Catalog, out, opts, dsname):
          index_config=None, interval=INTERVALS)
 def cmd_index_scan(cat: Catalog, out, opts, dsname):
     """dn index-scan <datasource> [-A AFTER] [-B BEFORE]
-    [-i day|hour|all] [--index-config=FILE]: map phase of a
+    [-i day|hour|all] [--index-config=FILE] [--counters]: map phase of a
     distributed build (lib/datasource-manta.js:36-62): emit each
     metric's aggregated points — the aggregate ``dn build`` writes —
     tagged with __dn_metric, ready to pipe into index-read."""
@@ -536,7 +557,10 @@ def cmd_index_scan(cat: Catalog, out, opts, dsname):
         raise FatalError(f'datasource "{dsname}" has no metrics configured')
     query = _query_from_opts(opts, ds)
     spark = _get_spark()
-    df, resolver, _vc = load_datasource(spark, ds, query)
+    observations = {} if opts["counters"] else None
+    df, resolver, _vc = load_datasource(
+        spark, ds, query, observations=observations
+    )
     if df is None:
         return
     with aggregate_metrics(
@@ -549,6 +573,8 @@ def cmd_index_scan(cat: Catalog, out, opts, dsname):
                 obj = json.loads(line)
                 obj["fields"]["__dn_metric"] = i
                 out.write(json.dumps(obj, separators=(",", ":")) + "\n")
+    if opts["counters"]:
+        _print_parser_counters(observations)
 
 
 def _point_row(line: str, metrics, interval: str) -> tuple:

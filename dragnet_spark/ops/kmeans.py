@@ -134,6 +134,28 @@ def _chunked_argmin(Q, C, chunk_elems: int = LEVEL2_CHUNK_ELEMS):
     return a, dmin
 
 
+def _matrix(col, dtype):
+    """The n × dims numpy matrix of an Arrow list column ``col`` of n
+    equal-length vectors."""
+    import pyarrow.compute as pc
+
+    flat = pc.list_flatten(col).to_numpy(zero_copy_only=False)
+    n = len(col)
+    return flat.astype(dtype, copy=False).reshape(n, len(flat) // n)
+
+
+def _ids(col):
+    """(ids, null): an Arrow int64 id column as an exact int64 array
+    (a null id reads 0) and its null mask. Arrow's own conversion would
+    make a column holding a null float64 and round ids above 2⁵³."""
+    import pyarrow.compute as pc
+
+    return (
+        pc.fill_null(col, 0).to_numpy(),
+        col.is_null().to_numpy(zero_copy_only=False),
+    )
+
+
 def _assign(
     src: DataFrame, cents: list[list[int]], keep_q: bool = False
 ) -> DataFrame:
@@ -171,9 +193,7 @@ def _assign(
             n = batch.num_rows
             if not n:
                 continue
-            flat = batch.column("q").flatten().to_numpy(zero_copy_only=False)
-            Q = flat.astype(np.int64, copy=False).reshape(n, len(flat) // n)
-            a, dmin = _chunked_argmin(Q, C)
+            a, dmin = _chunked_argmin(_matrix(batch.column("q"), np.int64), C)
             made = {"cluster": pa.array(a.astype(np.int32)),
                     "dist": pa.array(dmin)}
             yield pa.RecordBatch.from_arrays(
@@ -390,7 +410,7 @@ def kmeans_assign(
         qv.unpersist()
 
 
-#: loudness guard for the per-cluster pair stage: one applyInPandas
+#: loudness guard for the per-cluster pair stage: one applyInArrow
 #: group holds a whole cluster, so a cluster this large (rows) means
 #: k was pinned far too small for the corpus — fail with the fix named
 #: instead of OOMing an executor. 2M rows × 64-dim float64 ≈ 1 GB of
@@ -399,9 +419,10 @@ MAX_CLUSTER_ROWS = 2_000_000
 
 
 def _level2_lloyd(sup, ids, Q, target, iterations, chunk_elems):
-    """Level-2 Lloyd over ONE super-cluster's rows (``ids``, quantized
-    ``Q``): k₂ = ceil(m / target) sub-clusters seeded in (md5(id), id)
-    order (the global rule), ``iterations`` truncating-div centroid
+    """Level-2 Lloyd over ONE super-cluster's rows (Arrow int64
+    ``ids``, quantized ``Q``): k₂ = ceil(m / target) sub-clusters
+    seeded in (md5(id), id) order, a null id last (the global rule),
+    ``iterations`` truncating-div centroid
     updates, then the final :func:`_chunked_argmin` — ``(a, dmin)``,
     the sub-cluster and squared distance of every row. ``sup`` only
     names the group in the packed-id overflow error."""
@@ -419,8 +440,9 @@ def _level2_lloyd(sup, ids, Q, target, iterations, chunk_elems):
             f"size ({m} rows) means level 1 collapsed — raise "
             f"target_rows_per_cluster or iterations"
         )
+    ids, null = _ids(ids)
     hs = np.array([hashlib.md5(str(i).encode()).hexdigest() for i in ids])
-    order = np.lexsort((ids, hs))
+    order = np.lexsort((ids, hs, null))
     C = Q[order[:k2]].copy()
     for _ in range(iterations):
         a, _dmin = _chunked_argmin(Q, C, chunk_elems)
@@ -442,24 +464,25 @@ def _two_level(src, cents, target, iterations, chunk_elems, body, schema):
     :func:`_fit`), written once for every caller: one :func:`_assign`
     pass over ``src`` (id, q, payload…) picks each row's
     super-cluster, one shuffle groups the rows by it, and each group
-    runs :func:`_level2_lloyd` and returns ``body(sup, pdf, a,
-    dmin)`` — the caller's ``schema`` frame built from the group's
-    rows, their sub-cluster ids and their distances."""
+    runs :func:`_level2_lloyd` and returns ``body(sup, table, a,
+    dmin)`` — the caller's ``schema`` Arrow table built from the
+    group's rows, their sub-cluster ids and their distances. Groups
+    arrive as Arrow tables (applyInArrow), so ids stay exact int64
+    beside a null id."""
     import numpy as np
 
-    def run(key, pdf):
-        sup = int(key[0])
+    def run(key, table):
+        sup = key[0].as_py()
         a, dmin = _level2_lloyd(
-            sup, pdf["id"].to_numpy(dtype=np.int64),
-            np.asarray(list(pdf["q"]), dtype=np.int64),
+            sup, table.column("id"), _matrix(table.column("q"), np.int64),
             target, iterations, chunk_elems,
         )
-        return body(sup, pdf, a, dmin)
+        return body(sup, table, a, dmin)
 
     return (
         _assign(src, cents, keep_q=True)
         .groupBy("cluster")
-        .applyInPandas(run, schema=schema)
+        .applyInArrow(run, schema=schema)
     )
 
 
@@ -479,7 +502,7 @@ def kmeans_assign_two_level(
     data at the 1000× tier. Here the corpus is first clustered into
     k₁ = ceil(√k) SUPER-clusters (one flat pass, n·√k), then each
     super-cluster is Lloyd-clustered independently into its own
-    auto-k sub-clusters via one ``applyInPandas`` pass (per-group
+    auto-k sub-clusters via one ``applyInArrow`` pass (per-group
     cost |group|·k₂·dims with k₂ ≈ |group|/target) — total ≈ 2·n·√k
     instead of n·k: the √ win, with every step still exact integer
     arithmetic (quantize → int64 matmul → first-minimum argmin →
@@ -512,7 +535,7 @@ def kmeans_assign_two_level(
     assignment+prune pipeline; the tests additionally pin
     determinism, bounded cluster size, blob cohesion, and the
     prune-stage contract."""
-    import pandas as pd
+    import pyarrow as pa
 
     schema = "id long, cluster long, dist long"
     qv = quantize_vectors(df, vec_col, id_col, scale).persist()
@@ -522,9 +545,10 @@ def kmeans_assign_two_level(
         if not cents:
             return qv.sparkSession.createDataFrame([], schema)
 
-        def body(sup, pdf, a, dmin):
-            return pd.DataFrame(
-                {"id": pdf["id"], "cluster": sup * ARGMIN_PACK + a, "dist": dmin}
+        def body(sup, table, a, dmin):
+            return pa.table(
+                {"id": table.column("id"), "cluster": sup * ARGMIN_PACK + a,
+                 "dist": dmin}
             )
 
         return _two_level(
@@ -576,22 +600,22 @@ def _cluster_pairs_np(ids, M, threshold: float):
     )
 
 
-def _cluster_pairs_frame(cl, pdf, vec_col, threshold, max_cluster_rows):
-    """The pair stage's rows for one group ``pdf`` (id, …,
-    ``vec_col``) whose row i sits in cluster ``cl[i]``: (cluster,
+def _cluster_pairs_frame(cl, table, vec_col, threshold, max_cluster_rows):
+    """The pair stage's rows for one group, the Arrow ``table`` (id,
+    …, ``vec_col``) whose row i sits in cluster ``cl[i]``: (cluster,
     kept_id, dropped_id, cosine, n) — one SIZE row per cluster, with
     ``n`` its row count (null ids included) and the pair columns 0,
     then every within-cluster pair from :func:`_cluster_pairs_np`,
     with ``n`` 0. Null ids (a ``cast('long')`` miss) emit no pairs. A
     cluster holding more than ``max_cluster_rows`` ids raises instead
     of running its O(n_c²) pair search. All clusters' arrays are
-    concatenated into ONE frame, so a task holding many (mostly
-    pair-free) clusters builds no per-cluster pandas frame."""
+    concatenated into ONE table, so a task holding many (mostly
+    pair-free) clusters builds no per-cluster table."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    live = pdf["id"].notna().to_numpy()
-    V = np.asarray(list(pdf[vec_col]), dtype=np.float64)
+    idv, null = _ids(table.column("id"))
+    V = _matrix(table.column(vec_col), np.float64)
     clusters, sizes = np.unique(cl, return_counts=True)
     zero = np.zeros(len(clusters), np.int64)
     out = {
@@ -602,8 +626,8 @@ def _cluster_pairs_frame(cl, pdf, vec_col, threshold, max_cluster_rows):
         "n": [sizes.astype(np.int64)],
     }
     for c in clusters:
-        m = (cl == c) & live
-        ids = pdf["id"][m].to_numpy(dtype=np.int64)
+        m = (cl == c) & ~null
+        ids = idv[m]
         if len(ids) > max_cluster_rows:
             raise ContractError(
                 f"cluster {c} holds {len(ids)} rows > "
@@ -619,7 +643,7 @@ def _cluster_pairs_frame(cl, pdf, vec_col, threshold, max_cluster_rows):
         out["dropped_id"].append(dropped)
         out["cosine"].append(cos)
         out["n"].append(np.zeros(len(kept), np.int64))
-    return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+    return pa.table({c: np.concatenate(v) for c, v in out.items()})
 
 
 def semdedup_prune_fused(
@@ -686,9 +710,9 @@ def semdedup_prune_fused(
             F.col(vec_col),
         )
 
-        def frame(cl, pdf):
+        def frame(cl, table):
             return _cluster_pairs_frame(
-                cl, pdf, vec_col, threshold, max_cluster_rows
+                cl, table, vec_col, threshold, max_cluster_rows
             )
 
         staged_schema = schema + ", n long"
@@ -696,9 +720,10 @@ def semdedup_prune_fused(
             staged = (
                 _assign(src, cents)
                 .groupBy("cluster")
-                .applyInPandas(
-                    lambda key, pdf: frame(
-                        np.full(len(pdf), key[0], np.int64), pdf
+                .applyInArrow(
+                    lambda key, table: frame(
+                        np.full(table.num_rows, key[0].as_py(), np.int64),
+                        table,
                     ),
                     schema=staged_schema,
                 )
@@ -706,7 +731,9 @@ def semdedup_prune_fused(
         else:
             staged = _two_level(
                 src, cents, target, iterations, chunk_elems,
-                lambda sup, pdf, a, _dmin: frame(sup * ARGMIN_PACK + a, pdf),
+                lambda sup, table, a, _dmin: frame(
+                    sup * ARGMIN_PACK + a, table
+                ),
                 staged_schema,
             )
         obs = Observation()

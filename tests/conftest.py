@@ -18,6 +18,15 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def keep_conf(spark):
+    """The bench tools open their session through ``get_spark``, which
+    re-applies its settings to the shared test session."""
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    yield spark
+    spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
 @pytest.fixture(scope="session")
 def job_count(spark):
     """``job_count(fn)``: the Spark jobs ``fn()`` issues, counted

@@ -9,7 +9,8 @@ writer, so the paths agree.
   ``dn build`` applies, and ``index-read`` replaces only the buckets it
   writes, keeping the build's sort;
 * ``scan --warnings`` reports the parser count ``--counters`` reports,
-  from the same pass;
+  from the same pass, and ``build`` and ``index-scan`` report it from
+  their one read at no extra job;
 * empty and missing views, hour and unbucketed views, a value-only
   view and dotted and quantized breakdowns answer what ``dn scan``
   answers, and ``dn build`` and ``dn query`` keep their job budgets;
@@ -247,6 +248,34 @@ def test_warnings_count_is_the_counters_count(cfg, tmp_path, three_days, spark):
         jobs[flags] = ledger.read(group)["jobs"]
     assert jobs[()] > 0
     assert jobs[("--warnings",)] == jobs[()]
+
+
+def test_build_and_index_scan_counters_ride_the_aggregate(cfg, tmp_path,
+                                                        three_days, job_count):
+    """dn build --counters/--warnings and dn index-scan --counters
+    report the parse counts dn scan --counters reports, observed on
+    the persisted aggregate's one read of the raw data: each flag
+    leaves the job count unchanged."""
+    add_datasource(cfg, "d", three_days, str(tmp_path / "idx"), METRICS_3D)
+    _out, err = run(["scan", "--counters", "d"], cfg)
+    parser = [ln for ln in err.splitlines() if ln.startswith("json parser")]
+    assert len(parser) == 3, err  # ninputs, noutputs, invalid json
+
+    def counted(argv):
+        errs = []
+        n = job_count(lambda: errs.append(run(argv, cfg)[1]))
+        return n, errs[0]
+
+    base = counted(["build", "d"])[0]
+    jobs, err = counted(["build", "--counters", "d"])
+    assert jobs == base and [ln for ln in err.splitlines()
+                             if ln.startswith("json parser")] == parser
+    jobs, err = counted(["build", "--warnings", "d"])
+    assert jobs == base and "warn: 2 unparseable input lines" in err
+
+    base = counted(["index-scan", "d"])[0]
+    jobs, err = counted(["index-scan", "--counters", "d"])
+    assert jobs == base and err.splitlines() == parser
 
 
 def test_compact_rewrites_with_the_build_writer(spark, tmp_path, three_days):

@@ -672,6 +672,26 @@ def test_semdedup_prune_fused_null_ids_mirror_join(spark):
     assert all(r[1] is not None and r[2] is not None for r in got)
 
 
+@pytest.mark.parametrize("mode", ["flat", "two_level"])
+def test_semdedup_prune_fused_keeps_ids_above_2_53_beside_a_null(spark, mode):
+    """A null id in a cluster's group leaves the group's other ids
+    exact in the pairs: 2⁵³+1 and 2⁵³+3 are not float64s, so a pandas
+    conversion of the id column would return them as 2⁵³ and 2⁵³+4."""
+    from dragnet_spark.ops.kmeans import semdedup_prune_fused
+
+    big = 2**53 + 1
+    rows = [(big, [1.0, 0.0]), (big + 2, [1.0, 0.001]),
+            (None, [1.0, 0.002]), (5, [0.0, 1.0])]
+    df = _emb(spark, rows).coalesce(1)
+    pairs, sizes = semdedup_prune_fused(
+        df, iterations=1, target_rows_per_cluster=10, threshold=0.9,
+        mode=mode,
+    )
+    got = [tuple(r)[1:3] for r in pairs.collect()]
+    assert got == [(9007199254740993, 9007199254740995)]
+    assert sum(sizes().values()) == 4
+
+
 @pytest.mark.parametrize("mode", ["k", "flat", "two_level", "auto"])
 def test_semdedup_prune_fused_sizes(spark, mode):
     """sizes() equals groupBy("cluster").count() of the assignment the

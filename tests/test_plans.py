@@ -197,9 +197,10 @@ def test_weighted_sample_is_takeordered_no_global_sort(spark, sf_dir):
     assert "Exchange" not in plan, "weighted sample shuffled the corpus"
 
 
-# Cartesian/BNLJ ban across the WHOLE registry. Sanctioned exceptions
-# are 1-row-by-construction scalar broadcasts (a BNLJ against one row
-# is a constant fold, not a scale risk) — each whitelisted entry is
+# Cartesian/BNLJ ban and same-table re-scan net across the WHOLE
+# registry, on one plan per entry. Sanctioned cross joins are
+# 1-row-by-construction scalar broadcasts (a BNLJ against one row is a
+# constant fold, not a scale risk) — each whitelisted entry is
 # re-asserted to still HAVE its scalar join so the list cannot rot.
 _SCALAR_CROSS_JOIN_OK = {
     # 1-row scalar broadcasts (constant fold, zero scale risk)
@@ -222,10 +223,51 @@ _SCALAR_CROSS_JOIN_OK = {
 }
 
 
+# Parquet tables an entry's plan scans at least RESCAN_MIN times: a
+# re-embedded lineage (Catalyst re-executing a subplan per reference)
+# unless the repeat is deliberate. Multi-TABLE scans (joins) are
+# expected. Derived at the test tables' scale; each entry is
+# re-asserted to still scan its tables that often.
+RESCAN_MIN = 3
+_RESCAN_OK = {
+    # store-backed probes: the probe side is read for the probe join,
+    # for the dynamic-pruning subquery on the store and for the join
+    # back to the text or vectors
+    "dedup_incremental_probe": {"documents.parquet"},
+    "dedup_incremental_near_probe": {"documents.parquet"},
+    "dedup_probe_after_compact": {"documents.parquet"},
+    "decontam_near_probe": {"documents.parquet"},
+    "dedup_embedding_lsh_autobits_store": {"embeddings.parquet"},
+    # the prefix-filter semi path: shingle frequencies, the prefix
+    # candidates and the exact verify each read the corpus
+    "dedup_jaccard_prefix": {"documents.parquet"},
+    # two synthetic corpus versions plus the added docs, all derived
+    # from one table
+    "corpus_version_diff": {"documents.parquet"},
+}
+
+
+def _rescanned_tables(plan: str) -> set[str]:
+    """Basenames of the parquet files ``plan`` scans RESCAN_MIN or more
+    times (one ``Location: …[path, …]`` per file scan node)."""
+    import collections
+    import os
+
+    paths = _re.findall(r"Location: [^\[\n]*\[([^,\]\n]*)", plan)
+    n = collections.Counter(os.path.basename(p.rstrip("/")) for p in paths)
+    return {t for t, c in n.items() if c >= RESCAN_MIN}
+
+
 @_pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_no_unsanctioned_cartesian_or_bnlj(name, spark, sf_dir):
     plan = REGISTRY[name].spark(spark, sf_dir)._jdf.queryExecution(
     ).executedPlan().toString()
+    rescanned = _rescanned_tables(plan)
+    assert rescanned == _RESCAN_OK.get(name, set()), (
+        f"{name} scans {sorted(rescanned)} >= {RESCAN_MIN} times each; "
+        "a subplan re-executes per reference — checkpoint or restructure "
+        "it, or whitelist a deliberate repeat"
+    )
     has_nlj = (
         "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
     )

@@ -2,9 +2,10 @@
 
 * every tier's bench and graded subsets name registry entries, and
   every graded entry has an oracle;
-* ``run_tier`` writes the artifact, with the factor block against the
-  previous tier's committed artifact, and appends exactly one line to
-  the history derived from the artifact's path;
+* ``run_tier`` writes the artifact, with each query's Spark jobs and
+  shuffle-read bytes and the factor block against the previous tier's
+  committed artifact, and appends exactly one line to the history
+  derived from the artifact's path;
 * a ``CHECK_ONLY`` re-grade merges into an existing tier report (by
   default ``CORRECTNESS_<TIER>.json`` at the repo root): the other
   records stay, the fresh one is stamped, ``_meta`` is recomputed.
@@ -19,15 +20,6 @@ import __spark_entry__ as entrymod
 from dragnet_spark.session import session_cpus
 from tools import check_correctness
 from tools.bench_octave import TIERS, run_tier
-
-
-@pytest.fixture
-def keep_conf(spark):
-    """The tools open their session through ``get_spark``, which
-    re-applies its settings to the shared test session."""
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    yield spark
-    spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
 def test_tier_subsets_are_oracle_graded_registry_entries():
@@ -53,9 +45,16 @@ def test_run_tier_writes_artifact_and_one_history_line(keep_conf, sf_dir,
     # text_token_stats has a committed sf100 row; dedup_exact has none
     assert set(art["factor_vs_sf100_bench"]) == {"text_token_stats"}
     assert art["banned_plan_shapes"] == [] and "errors" not in art
+    assert set(art["counters"]) == set(art["queries"])
+    for c in art["counters"].values():
+        assert c["jobs"] >= 1 and c["shuffle_read_bytes"] >= 0
+    assert "grading" not in art
     lines = (tmp_path / "BENCH_T_HISTORY.jsonl").read_text().splitlines()
     assert len(lines) == 1
     assert json.loads(lines[0])["queries"] == art["queries"]
+    assert json.loads(lines[0])["jobs"] == {
+        q: c["jobs"] for q, c in art["counters"].items()
+    }
     # history is keyed by core count, like bench.py's
     assert json.loads(lines[0])["cpus"] == art["cpus"] == session_cpus()
 

@@ -1,17 +1,18 @@
 #!/usr/bin/env python
 """The one octave-tier bench runner: every big tier (sf100, sf1000,
-the 10⁴ tier) runs the same loop — per-query trailing-median bands
-over a tier-local history file, cost-shape factors against the
-previous octave's committed artifact, executed-plan audits
-(BNLJ/cartesian banned), and a self-describing JSON artifact.
+the 10⁴ tier) runs the same loop — each query once through
+``count()`` under its own ``perfbench/ledger.Ledger`` job group
+(seconds, Spark jobs and shuffle-read bytes per query), cost-shape
+factors against the previous octave's committed artifact,
+executed-plan audits (BNLJ/cartesian banned), and a self-describing
+JSON artifact.
 
   python tools/bench_octave.py TIER [--sf-dir DIR] [--out PATH] [--skip SPEC]
 
 TIER is a row of ``TIERS`` (sf100, sf1000, sf10000). ``--out``
 defaults to ``BENCH_<TIER>.json`` at the repo root; the history file
 is derived from it as ``<stem>_HISTORY.jsonl`` (so a run to a scratch
-directory never touches the committed history). A first run seeds the
-history from the artifact at ``--out`` when one exists.
+directory never touches the committed history).
 
 Skips are DECLARED, never silent: ``--skip '{"name": "reason", ...}'``
 (or the legacy ``name=reason;...``) excludes a subset row from a run
@@ -38,9 +39,6 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
-
-GRADE_BAND = 1.2  # the same committed-artifact band as bench.py
-TRAILING_K = 8
 
 # Subset rationale (each family's heaviest feasible representative —
 # the all-pairs oracle baselines are excluded here for the same
@@ -196,8 +194,6 @@ class Tier:
     #: previous tier's committed artifact and the factor key's label
     prev: Path | None = None
     factor_label: str = ""
-    #: queries run minutes at these tiers: cap the over-band reruns
-    max_grade_passes: int = 1
     #: local JVM heap, honored only if DRAGNET_DRIVER_MEM isn't set:
     #: in local[N] mode all N scan threads share ONE heap
     driver_mem: str | None = None
@@ -226,7 +222,6 @@ TIERS: dict[str, Tier] = {
             "the probe only (builds amortize; see bench.py "
             "STORE_BACKED_PROBE_ONLY)"
         ),
-        max_grade_passes=2,
     ),
     # partial 1000× tier (5M documents, 2M embeddings — ``tools/gen_sf1.py
     # testdata_sf1000 --scale 1000 --tables documents,embeddings``; fact
@@ -330,30 +325,6 @@ def _prev_rows(prev: Path | None) -> dict[str, float]:
         return {}
 
 
-def _seed_history_if_absent(history: Path, out: Path) -> None:
-    """First banded run: seed per-query history from the artifact
-    already at ``out``, so grading starts from measured history
-    instead of an empty band."""
-    import bench
-
-    if history.exists() or not out.exists():
-        return
-    try:
-        rec = json.loads(out.read_text())
-    except json.JSONDecodeError:
-        return
-    if not rec.get("queries"):
-        return
-    with history.open("w") as f:
-        f.write(json.dumps({
-            "ts": None,
-            "round": rec.get("round"),
-            "seeded_from": f"{out.name} (committed run)",
-            "cpus": rec.get("cpus", bench.LEGACY_HISTORY_CPUS),
-            "queries": rec["queries"],
-        }) + "\n")
-
-
 def plan_bits(df) -> dict:
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -395,6 +366,7 @@ def run_tier(
     import bench
     from dragnet_spark import registry
     from dragnet_spark.session import get_spark, session_cpus
+    from perfbench.ledger import Ledger
 
     if tier.driver_mem:
         os.environ.setdefault("DRAGNET_DRIVER_MEM", tier.driver_mem)
@@ -405,23 +377,28 @@ def run_tier(
     history = out.with_name(f"{out.stem}_HISTORY.jsonl")
     meta_p = Path(sf_dir) / "_gen_meta.json"
     meta = json.loads(meta_p.read_text()) if meta_p.exists() else {}
-    _seed_history_if_absent(history, out)
     cpus = session_cpus()
-    medians = bench.trailing_medians(history, TRAILING_K, cpus=cpus)
     prev = _prev_rows(tier.prev)
     spark = get_spark(app_name="bench_octave")
+    ledger = Ledger(spark)
     qs = registry.queries()
     timings: dict[str, float] = {}
+    counters: dict[str, dict] = {}
     plans: dict[str, dict] = {}
     errors: dict[str, str] = {}
 
-    def run_query(name: str) -> None:
-        t0 = time.time()
+    for name in tier.bench:
+        if name in skips:
+            print(f"{name}: SKIP ({skips[name]})", file=sys.stderr)
+            continue
         try:
-            df = qs[name](spark, sf_dir)
-            n = df.count()
-            t = round(time.time() - t0, 3)
-            timings[name] = min(t, timings.get(name, t))
+            with ledger.scope(name) as group:
+                t0 = time.time()
+                df = qs[name](spark, sf_dir)
+                n = df.count()
+                timings[name] = round(time.time() - t0, 3)
+            c = ledger.read(group)
+            counters[name] = {k: c[k] for k in bench.RECORDED}
             # executed plan AFTER the action: AQE's isFinalPlan bits
             plans[name] = plan_bits(df)
             plans[name]["rows"] = n
@@ -430,42 +407,7 @@ def run_tier(
         print(f"{name}: {timings.get(name, 'ERR')}s", file=sys.stderr)
         gc_nudge(spark)
 
-    for name in tier.bench:
-        if name in skips:
-            print(f"{name}: SKIP ({skips[name]})", file=sys.stderr)
-            continue
-        run_query(name)
-
-    # banded grading vs trailing medians (bench.py discipline; queries
-    # run minutes here, so over-band reruns are capped and whatever
-    # stays hot is annotated, never silently committed)
-    def _hot() -> list[str]:
-        return [
-            q for q, t in timings.items()
-            if medians.get(q) and t > GRADE_BAND * medians[q]
-        ]
-
-    reruns: dict[str, int] = {}
-    for pass_no in range(tier.max_grade_passes):
-        hot = _hot()
-        if not hot:
-            break
-        print(
-            f"{tier.metric}: grade pass {pass_no + 1}: {len(hot)} over "
-            f"{GRADE_BAND}x trailing median: {','.join(hot)}",
-            file=sys.stderr,
-        )
-        for name in hot:
-            reruns[name] = reruns.get(name, 0) + 1
-            run_query(name)
-    over_band = {q: round(timings[q] / medians[q], 2) for q in _hot()}
-    band_factors = {
-        q: round(timings[q] / medians[q], 2)
-        for q in timings if medians.get(q)
-    }
-
     rnd = bench.current_round()
-    mode = "per_query_vs_trailing_median"
     out_rec = {
         "metric": tier.metric,
         "value": round(sum(timings.values()), 3),
@@ -473,30 +415,19 @@ def run_tier(
         "round": rnd,
         "cpus": cpus,
         "queries": timings,
+        "counters": counters,
     }
     if tier.prev:
-        mode += f" + factor_vs_{tier.factor_label}"
         out_rec[f"factor_vs_{tier.factor_label}"] = {
             q: round(timings[q] / prev[q], 2)
             for q in timings if prev.get(q)
         }
+        out_rec["factor_denominators_from"] = f"{tier.prev.name} (committed)"
     out_rec["sf"] = (
         f"{Path(sf_dir).name} (gen_version={meta.get('gen_version')}, "
         f"scale={meta.get('scale')}, tables={meta.get('tables_subset')}, "
         f"rows={meta.get('rows')})"
     )
-    out_rec["grading"] = {
-        "mode": mode,
-        "grade_band": GRADE_BAND,
-        "trailing_window": TRAILING_K,
-        "per_query_factor": band_factors,
-        "n_with_history": len(band_factors),
-        "n_over_band": len(over_band),
-        "over_band": over_band,
-        "reruns": reruns,
-    }
-    if tier.prev:
-        out_rec["grading"]["denominators_from"] = f"{tier.prev.name} (committed)"
     out_rec["plans"] = plans
     out_rec["note"] = tier.note
     if skips:
@@ -516,7 +447,7 @@ def run_tier(
                 "round": rnd,
                 "cpus": cpus,
                 "queries": timings,
-                "n_over_band": len(over_band),
+                "jobs": {q: c["jobs"] for q, c in counters.items()},
             }) + "\n")
     except OSError as exc:  # pragma: no cover — read-only checkout
         print(f"{tier.metric}: history append failed: {exc}", file=sys.stderr)
@@ -526,7 +457,7 @@ def run_tier(
 
 def main() -> None:
     ap = argparse.ArgumentParser(
-        description="Banded bench of one octave tier's subset."
+        description="Bench one octave tier's subset."
     )
     ap.add_argument("tier", choices=sorted(TIERS))
     ap.add_argument("--sf-dir", help="tier data dir (default: the tier's)")
