@@ -960,7 +960,7 @@ def srp_store_pairs_bounded(
     )
 
 
-#: loudness guard for bucket-local verification: one applyInPandas
+#: loudness guard for bucket-local verification: one applyInArrow
 #: group holds a whole (band, bucket) collision family, so a bucket
 #: this large means the band width is far too narrow for the corpus —
 #: fail naming the dial (auto_bits_per_band) instead of generating
@@ -986,37 +986,35 @@ def srp_store_pairs_bucket_verify(
     join onto pairs at all: each band runs one SEQUENTIAL job — that
     band's (bucket, vec_id) store slice (partition-pruned) joins the
     vector table once (~n·dims·8 B exchange per band, the whole
-    footprint), and within-bucket exact cosines come from one chunked
-    BLAS matmul per bucket (``applyInPandas`` —
-    ``embedding_near_dup_pairs``'s discipline: zero-norm scores 0,
-    HALF_UP rounding before the threshold, row-chunks bound peak
-    memory at O(chunk × bucket)). Passing pairs land in
+    footprint), and within-bucket exact cosines come from one
+    :func:`~dragnet_spark.ops.similarity.cosine_pairs` call per bucket
+    (``applyInArrow`` — the exact-cosine kernel
+    ``embedding_near_dup_pairs`` and SemDeDup share: zero-norm scores
+    0, decimal HALF_UP rounding before the threshold, row-chunks bound
+    peak memory at O(chunk × bucket)). Passing pairs land in
     ``out_path/band=b`` (completed bands skip on re-run, guarded by
     the same run manifest as the sliced verifies); the return reads
     the sink and collapses cross-band duplicates.
 
     Output matches :func:`srp_store_pairs` /
     ``ops.dedup.embedding_near_dup_lsh`` — within-bucket pairs
-    unioned over bands ARE the LSH candidate set, and each cosine is
-    computed with the Spark expression's own formula shape
-    (dot / (‖a‖·‖b‖), NOT normalize-then-dot) and rounded with true
-    decimal HALF_UP (``Decimal(repr(x))`` — the same
-    shortest-round-trip-string route Spark's
-    ``BigDecimal.valueOf(double)`` takes, so exact 1e-6 midpoints
-    round identically, unlike a float ``floor(|x|·1e6+0.5)``
-    emulation). The one residual divergence surface is summation
-    ORDER: BLAS accumulates the dot product in a different order than
-    Spark's sequential ``aggregate`` fold, so a cosine within ~1 ulp
-    of a rounding boundary or the threshold can still differ in the
-    sixth decimal / flip inclusion — the graded corpora (planted
-    twins at cosine ≈1, thresholds ≥0.9) sit far from those
-    boundaries, and ``tests/test_fingerprint_store.py`` pins equality
+    unioned over bands ARE the LSH candidate set, and the kernel
+    computes each cosine with the Spark expression's own formula shape
+    (dot / (‖a‖·‖b‖)) and rounds it as ``F.round`` does. The one
+    residual divergence surface is summation ORDER: BLAS accumulates
+    the dot product in a different order than Spark's sequential
+    ``aggregate`` fold, so a cosine within ~1 ulp of a rounding
+    boundary or the threshold can still differ in the sixth decimal /
+    flip inclusion — the graded corpora (planted twins at cosine ≈1,
+    thresholds ≥0.9) sit far from those boundaries, and
+    ``tests/test_fingerprint_store.py`` pins equality
     with the one-shot verify at test scale."""
     import shutil as _shutil
-    from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from dragnet_spark.ops.similarity import _ids, _matrix, cosine_pairs
 
     meta = load_srp_store_meta(path)
     vecs = docs.select(
@@ -1025,67 +1023,19 @@ def srp_store_pairs_bucket_verify(
     )
     store = _read_srp(spark, path)
 
-    def bucket_pairs(key, pdf):
-        ids = pdf["__id"].to_numpy(dtype=np.int64)
-        m = len(ids)
-        if m < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
+    def verify_bucket(key, table):
+        m = table.num_rows
         if m > max_bucket_rows:
             raise ContractError(
-                f"verify bucket {key} holds {m} vectors > "
+                f"verify bucket {key[0].as_py()} holds {m} vectors > "
                 f"{max_bucket_rows}: the band width is too narrow for "
                 f"this corpus — widen bits_per_band "
                 f"(ops.dedup.auto_bits_per_band) and rebuild the store"
             )
-        V = np.asarray(list(pdf["__vec"]), dtype=np.float64)
-        norms = np.linalg.norm(V, axis=1)
-        norms[norms == 0] = 1.0  # zero vector scores 0, never NaN
-        six = Decimal("0.000001")
-        out_a, out_b, out_c = [], [], []
-        chunk = max(1, 10_000_000 // m)
-        for lo in range(0, m, chunk):
-            hi = min(lo + chunk, m)
-            # raw dot then one division by ‖a‖·‖b‖ — the Spark verify
-            # expression's formula shape (normalize-then-dot computes
-            # a measurably different double per element)
-            sims = (V[lo:hi] @ V.T) / (norms[lo:hi, None] * norms[None, :])
-            # pre-select with a FULL quantum of slack: a half-quantum
-            # bound computed in doubles can land a sub-ulp above the
-            # true decimal midpoint and drop a sim whose HALF_UP
-            # rounding equals the threshold; a full 1e-6 cannot (any
-            # sim rounding up to >= threshold is > threshold - 1e-6
-            # exactly), and the extra survivors per chunk are
-            # negligible — the exact keep filter below still decides
-            ai, bi = np.nonzero(
-                (sims >= threshold - 1.0e-6)
-                & (ids[lo:hi, None] < ids[None, :])
-            )
-            if len(ai):
-                # repr(float(v)), not repr(v): numpy 2.x reprs scalars
-                # as 'np.float64(0.5)', which Decimal rejects
-                vals = np.array(
-                    [
-                        float(
-                            Decimal(repr(float(v))).quantize(
-                                six, rounding=ROUND_HALF_UP
-                            )
-                        )
-                        for v in sims[ai, bi]
-                    ]
-                )
-                keep = vals >= threshold
-                out_a.append(ids[lo + ai[keep]])
-                out_b.append(ids[bi[keep]])
-                out_c.append(vals[keep])
-        if not out_a:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
-        )
+        ids = _ids(table.column("__id"))[0]
+        V = _matrix(table.column("__vec"), np.float64)
+        a, b, c = cosine_pairs(ids, V, ids, V, threshold)
+        return pa.table({"id_a": a, "id_b": b, "cosine": c})
 
     _check_run_manifest(
         out_path,
@@ -1108,8 +1058,8 @@ def srp_store_pairs_bucket_verify(
             slice_b.join(vecs, slice_b["vec_id"] == vecs["__id"])
             .select("bucket", "__id", "__vec")
             .groupBy("bucket")
-            .applyInPandas(
-                bucket_pairs, schema="id_a long, id_b long, cosine double"
+            .applyInArrow(
+                verify_bucket, schema="id_a long, id_b long, cosine double"
             )
             .write.mode("overwrite")
             .parquet(bdir)
@@ -1155,8 +1105,8 @@ def _srp_rows(
     """(vec_id, band, bucket) rows — the ONE definition of the SRP row
     shape, shared by build, append, and probe (the `_banded_rows`
     discipline). Vectors with NULL or wrong-dims embeddings emit no
-    rows: they can never collide, and the pandas UDF would otherwise
-    fail on a ragged batch. ``spread`` first: the quantize+matmul is
+    rows: they can never collide, and filtering them here keeps them
+    out of the Arrow UDF's batches. ``spread`` first: the quantize+matmul is
     CPU work a one-file input would run on two cores."""
     from dragnet_spark.ops import spread
     from dragnet_spark.ops.dedup import _band_buckets_udf

@@ -7,9 +7,14 @@ embeddings, text analysis (language ID, quality scoring, token
 counting, fingerprinting), and multimodal binary-column plumbing.
 
 All hot paths are built-in Spark expressions (codegen'd, shuffle-
-friendly, no driver-side state); Pandas UDFs appear only where
-vectorized Python is genuinely needed (multimodal decode stubs,
-blocked matrix similarity).
+friendly, no driver-side state); Python batch kernels appear only
+where vectorized numpy is genuinely needed. The vector kernels
+(blocked similarity, exact-cosine pairs, k-means, SRP banding) cross
+as Arrow (``mapInArrow``, ``applyInArrow``, ``arrow_udf``) and read
+their columns through ``similarity._ids`` / ``similarity._matrix``,
+so ids stay exact integers. The other batch kernels (multimodal
+decode, sequence packing, xxhash, sketches, the decontamination Bloom
+filter) still cross as pandas.
 """
 
 from __future__ import annotations

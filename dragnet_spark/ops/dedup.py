@@ -24,7 +24,8 @@ from __future__ import annotations
 from dragnet_spark.errors import ContractError
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 
@@ -683,7 +684,10 @@ def simhash_hamming(a: Column, b: Column) -> Column:
 # desc-sorts first, so an unguarded norm emits junk pairs/ranks
 from dragnet_spark.ops.similarity import (  # noqa: E402
     _dot as _vdot,
+    _ids,
+    _matrix,
     _safe_norm as _vnorm,
+    cosine_pairs,
 )
 
 
@@ -704,96 +708,61 @@ def embedding_near_dup_pairs(
     """Exact embedding-cosine near-duplicate pairs: (id_a < id_b,
     cosine) for every pair with round(cosine, 6) >= threshold.
 
-    All-pairs — the oracle-checkable baseline. Physical shape
-    (round 9): broadcast the normalized (id, vector) matrix, then one
-    BLAS matmul per Arrow batch against it (mapInPandas), emitting
-    each unordered pair exactly once from its lower-id side. This is
-    the same O(n²) arithmetic the old expression-tree self-join did,
-    but ~10²-10³× faster: a non-equi self-join is a BroadcastNestedLoop
-    join evaluating an interpreted HOF dot per pair (measured: the
-    20k-vector tier took >1 h; the matmul form does the identical
-    2×10⁸ dots in seconds), and the broadcast posture is unchanged —
-    the BNLJ broadcast one side too. Sims are processed in bounded
-    row-chunks so peak memory is O(chunk × n), never the full n².
-    Rounding (HALF_UP, mirroring Spark's BigDecimal round) happens
-    before the threshold so results stay reproducible across
-    engines/summation orders. A corpus over ``max_elements``
+    All-pairs — the oracle-checkable baseline. Physical shape: collect
+    the (id, vector) table as Arrow and broadcast it, then one
+    :func:`~dragnet_spark.ops.similarity.cosine_pairs` call per Arrow
+    batch against it (mapInArrow), emitting each unordered pair exactly
+    once from its lower-id side. This is the same O(n²) arithmetic an
+    expression-tree self-join does, but ~10²-10³× faster: a non-equi
+    self-join is a BroadcastNestedLoop join evaluating an interpreted
+    HOF dot per pair (measured: the 20k-vector tier took >1 h; the
+    matmul form does the identical 2×10⁸ dots in seconds), and the
+    broadcast posture is unchanged — the BNLJ broadcast one side too.
+    Decimal HALF_UP rounding (Spark's ``F.round``) happens before the
+    threshold, so results stay reproducible across engines and
+    summation orders. A null id pairs with nothing, as in the SQL
+    twin's ``a.vec_id < b.vec_id``. A corpus over ``max_elements``
     (n_vectors × dims) fails loudly naming
     :func:`embedding_near_dup_lsh` — the scale path that produces the
     same verified pairs from hyperplane buckets.
     """
-    import numpy as np
-
     spark = df.sparkSession
-    side = spread(df).select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    rows = side.collect()
-    if rows and len(rows) * len(rows[0]["v"]) > max_elements:
-        raise ContractError(
-            f"all-pairs baseline refuses {len(rows)} vectors x "
-            f"{len(rows[0]['v'])} dims > {max_elements} broadcast "
-            f"elements; use embedding_near_dup_lsh for corpus-scale "
-            f"near-dup (same verified pairs, bucketed candidates)"
+    side = (
+        spread(df)
+        .select(
+            F.col(id_col).cast("long").alias("id"),
+            F.col(vec_col).cast("array<double>").alias("v"),
         )
-    ids = np.asarray([r["id"] for r in rows], dtype=np.int64)
-    mat = np.asarray([r["v"] for r in rows], dtype=np.float64)
-    if len(rows):
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0  # zero vector scores 0, never NaN
-        mat = mat / norms[:, None]
+        .where(F.col("id").isNotNull())
+    )
+    table = side.toArrow()
+    ids, mat = np.array([], np.int64), None
+    if table.num_rows:
+        ids = _ids(table.column("id"))[0]
+        mat = _matrix(table.column("v"), np.float64)
+        if mat.size > max_elements:
+            raise ContractError(
+                f"all-pairs baseline refuses {mat.shape[0]} vectors x "
+                f"{mat.shape[1]} dims > {max_elements} broadcast "
+                f"elements; use embedding_near_dup_lsh for corpus-scale "
+                f"near-dup (same verified pairs, bucketed candidates)"
+            )
     bc = spark.sparkContext.broadcast((ids, mat))
 
-    def gen(batches):
-        import pandas as pd
-
+    def run(batches):
         bids, bmat = bc.value
-        n = len(bids)
-        chunk = max(1, 10_000_000 // max(n, 1))
-        for pdf in batches:
-            if not len(pdf) or n == 0:
+        for batch in batches:
+            if not batch.num_rows or not len(bids):
                 continue
-            rid = pdf["id"].to_numpy(dtype=np.int64)
-            rv = np.asarray(list(pdf["v"]), dtype=np.float64)
-            rn = np.linalg.norm(rv, axis=1)
-            rn[rn == 0] = 1.0
-            rv = rv / rn[:, None]
-            for lo in range(0, len(rid), chunk):
-                hi = min(lo + chunk, len(rid))
-                sims = rv[lo:hi] @ bmat.T
-                # Spark/BigDecimal HALF_UP, not numpy's half-even
-                sims = np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5) / 1e6
-                ai, bi = np.nonzero(
-                    (sims >= threshold) & (rid[lo:hi, None] < bids[None, :])
-                )
-                if len(ai):
-                    yield pd.DataFrame(
-                        {
-                            "id_a": rid[lo + ai],
-                            "id_b": bids[bi],
-                            "cosine": sims[ai, bi],
-                        }
-                    )
+            a, b, c = cosine_pairs(
+                _ids(batch.column("id"))[0],
+                _matrix(batch.column("v"), np.float64),
+                bids, bmat, threshold,
+            )
+            if len(a):
+                yield pa.record_batch({"id_a": a, "id_b": b, "cosine": c})
 
-    return side.mapInPandas(
-        gen, schema="id_a long, id_b long, cosine double"
-    )
-
-
-def hyperplane_signature(
-    vec_col, planes: list[list[float]]
-):
-    """Random-hyperplane sign bits (SRP-LSH): bit i = dot(v, plane_i) >= 0.
-    Returns an array<int> of 0/1. Pure expressions — fine for a handful
-    of planes; for full signatures use :func:`_band_buckets_udf` (one
-    BLAS matmul per Arrow batch instead of a planes×dims literal tree)."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bits = [
-        F.when(_vdot(v, F.array(*[F.lit(float(x)) for x in p])) >= 0, 1).otherwise(0)
-        for p in planes
-    ]
-    return F.array(*bits)
+    return side.mapInArrow(run, schema="id_a long, id_b long, cosine double")
 
 
 #: SRP quantization scale: embeddings and plane coefficients both
@@ -969,7 +938,7 @@ def _quantize_i64(M: "np.ndarray") -> "np.ndarray":
 
 
 def _band_buckets_udf(planes_q, bands: int, bits_per_band: int):
-    """Pandas UDF: embedding → array of per-band bucket strings.
+    """Arrow UDF: embedding → array of per-band bucket strings.
 
     signs = (quantize(V) @ Pq.T >= 0) computed as one int64 matmul per
     Arrow batch; each band's bit-slice is rendered as a '0101…' bucket
@@ -979,39 +948,34 @@ def _band_buckets_udf(planes_q, bands: int, bits_per_band: int):
     (see :data:`SRP_SCALE`). ``planes_q`` must be the int64 matrix from
     :func:`srp_planes_q` (or a store's persisted copy).
     """
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     P = np.asarray(planes_q, dtype=np.int64)
-
     d = P.shape[1]
+    width = bands * bits_per_band
 
-    @pandas_udf("array<string>")
-    def buckets(vecs: pd.Series) -> pd.Series:
+    @arrow_udf("array<string>")
+    def buckets(vecs: pa.Array) -> pa.Array:
         # NULL / wrong-dims rows yield NULL (they can never collide):
-        # pandas UDFs evaluate eagerly over the whole Arrow batch, so
-        # the guard must live here — a F.when() wrapper would not stop
-        # a ragged row from reaching the matmul
-        out: list = [None] * len(vecs)
-        if len(vecs) == 0:
-            return pd.Series(out, dtype=object)
-        idx, arrs = [], []
-        for i, v in enumerate(vecs):
-            if v is None:
-                continue
-            a = np.asarray(v, dtype=np.float64)
-            if a.shape != (d,):
-                continue
-            idx.append(i)
-            arrs.append(a)
-        if arrs:
-            signs = (_quantize_i64(np.stack(arrs)) @ P.T >= 0).astype(np.uint8)
-            for i, row in zip(idx, signs):
-                out[i] = [
-                    "".join("1" if x else "0"
-                            for x in row[b * bits_per_band:(b + 1) * bits_per_band])
-                    for b in range(bands)
-                ]
-        return pd.Series(out, dtype=object)
+        # the UDF evaluates eagerly over the whole Arrow batch, so the
+        # mask must live here — a F.when() wrapper would not stop a
+        # ragged row from reaching the matmul
+        ok = pc.fill_null(pc.equal(pc.list_value_length(vecs), d), False)
+        valid = vecs.filter(ok)
+        m = len(valid)
+        keys = np.empty((m, width), np.uint8)
+        if m:
+            signs = _quantize_i64(_matrix(valid, np.float64)) @ P.T
+            keys[:] = np.where(signs >= 0, ord("1"), ord("0"))
+        # every valid row holds `bands` keys of `bits_per_band` chars
+        values = pa.StringArray.from_buffers(
+            m * bands,
+            pa.py_buffer(np.arange(m * bands + 1, dtype=np.int32) * bits_per_band),
+            pa.py_buffer(keys.tobytes()),
+        )
+        ok = ok.to_numpy(zero_copy_only=False)
+        offsets = np.concatenate(([0], np.cumsum(ok * bands))).astype(np.int32)
+        return pa.ListArray.from_arrays(offsets, values, mask=pa.array(~ok))
 
     # non-deterministic marking (guide: the optimizer duplicates a UDF
     # referenced by a pushable predicate): the posexplode downstream
@@ -1036,8 +1000,8 @@ def srp_banded_sql(
     ``list_transform({vec_expr}, x -> round(x * 1e6))``). One SELECT
     per band, UNION ALL — the plane coefficients embed as integer
     literals, and because every dot product is integer arithmetic
-    carried exactly in doubles, the emitted keys match the pandas-UDF
-    path bit-for-bit."""
+    carried exactly in doubles, the emitted keys match the Arrow UDF's
+    bit-for-bit."""
     P = np.asarray(planes_q, dtype=np.int64)
     band_selects = []
     for b in range(bands):

@@ -56,6 +56,7 @@ import math
 from collections.abc import Callable
 
 from dragnet_spark.errors import ContractError
+from dragnet_spark.ops.similarity import _ids, _matrix, cosine_pairs
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -134,28 +135,6 @@ def _chunked_argmin(Q, C, chunk_elems: int = LEVEL2_CHUNK_ELEMS):
     return a, dmin
 
 
-def _matrix(col, dtype):
-    """The n × dims numpy matrix of an Arrow list column ``col`` of n
-    equal-length vectors."""
-    import pyarrow.compute as pc
-
-    flat = pc.list_flatten(col).to_numpy(zero_copy_only=False)
-    n = len(col)
-    return flat.astype(dtype, copy=False).reshape(n, len(flat) // n)
-
-
-def _ids(col):
-    """(ids, null): an Arrow int64 id column as an exact int64 array
-    (a null id reads 0) and its null mask. Arrow's own conversion would
-    make a column holding a null float64 and round ids above 2⁵³."""
-    import pyarrow.compute as pc
-
-    return (
-        pc.fill_null(col, 0).to_numpy(),
-        col.is_null().to_numpy(zero_copy_only=False),
-    )
-
-
 def _assign(
     src: DataFrame, cents: list[list[int]], keep_q: bool = False
 ) -> DataFrame:
@@ -224,7 +203,7 @@ def _update_partials(qv: DataFrame, cents: list[list[int]]) -> DataFrame:
     order-independent, so ``sum(s) div sum(n)`` downstream equals the
     exploded form's ``sum(val) div count(1)`` bit for bit."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     C = np.asarray(cents, dtype=np.int64)  # k × dims
     k, dims = C.shape
@@ -232,10 +211,10 @@ def _update_partials(qv: DataFrame, cents: list[list[int]]) -> DataFrame:
     def run(batches):
         sums = np.zeros((k, dims), dtype=np.int64)
         cnts = np.zeros(k, dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            Q = np.asarray(list(pdf["q"]), dtype=np.int64)  # n × dims
+            Q = _matrix(batch.column("q"), np.int64)  # n × dims
             best, _dmin = _chunked_argmin(Q, C)
             # segment-sum by cluster: sort once, reduceat per segment
             order = np.argsort(best, kind="stable")
@@ -247,7 +226,7 @@ def _update_partials(qv: DataFrame, cents: list[list[int]]) -> DataFrame:
             cnts += np.bincount(best, minlength=k)
         nz = np.flatnonzero(cnts)
         if len(nz):
-            yield pd.DataFrame(
+            yield pa.record_batch(
                 {
                     "cluster": np.repeat(nz.astype(np.int32), dims),
                     "dim": np.tile(np.arange(dims, dtype=np.int32), len(nz)),
@@ -256,7 +235,7 @@ def _update_partials(qv: DataFrame, cents: list[list[int]]) -> DataFrame:
                 }
             )
 
-    return qv.mapInPandas(run, schema="cluster int, dim int, s long, n long")
+    return qv.mapInArrow(run, schema="cluster int, dim int, s long, n long")
 
 
 def _lloyd_rounds(
@@ -558,55 +537,13 @@ def kmeans_assign_two_level(
         qv.unpersist()
 
 
-def _cluster_pairs_np(ids, M, threshold: float):
-    """(kept, dropped, cosine) arrays for ONE cluster's rows: every
-    pair with HALF_UP-rounded cosine >= threshold, lower id kept.
-    ``ids`` is the cluster's int64 id vector, ``M`` its float64 row
-    matrix. Rows are sorted by id HERE, so emission never depends on
-    the caller's row order. Chunked matmul bounds peak memory at
-    O(chunk x n_c) exactly as the pre-r15 inline form did."""
-    import numpy as np
-
-    nrm = np.linalg.norm(M, axis=1)
-    nrm[nrm == 0] = 1.0  # zero vector scores 0, never NaN
-    M = M / nrm[:, None]
-    order = np.argsort(ids)  # pair emission keyed by id order
-    ids, M = ids[order], M[order]
-    n = len(ids)
-    out_a, out_b, out_c = [], [], []
-    chunk = max(1, 10_000_000 // max(n, 1))
-    for lo in range(0, n, chunk):
-        hi = min(lo + chunk, n)
-        sims = M[lo:hi] @ M.T
-        # Spark/BigDecimal HALF_UP, not numpy's half-even
-        sims = np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5) / 1e6
-        ai, bi = np.nonzero(
-            (sims >= threshold) & (ids[lo:hi, None] < ids[None, :])
-        )
-        if len(ai):
-            out_a.append(ids[lo + ai])
-            out_b.append(ids[bi])
-            out_c.append(sims[ai, bi])
-    if not out_a:
-        return (
-            np.array([], dtype=np.int64),
-            np.array([], dtype=np.int64),
-            np.array([], dtype=np.float64),
-        )
-    return (
-        np.concatenate(out_a),
-        np.concatenate(out_b),
-        np.concatenate(out_c),
-    )
-
-
 def _cluster_pairs_frame(cl, table, vec_col, threshold, max_cluster_rows):
     """The pair stage's rows for one group, the Arrow ``table`` (id,
     …, ``vec_col``) whose row i sits in cluster ``cl[i]``: (cluster,
     kept_id, dropped_id, cosine, n) — one SIZE row per cluster, with
     ``n`` its row count (null ids included) and the pair columns 0,
-    then every within-cluster pair from :func:`_cluster_pairs_np`,
-    with ``n`` 0. Null ids (a ``cast('long')`` miss) emit no pairs. A
+    then every within-cluster pair from :func:`cosine_pairs`, with
+    ``n`` 0. Null ids (a ``cast('long')`` miss) emit no pairs. A
     cluster holding more than ``max_cluster_rows`` ids raises instead
     of running its O(n_c²) pair search. All clusters' arrays are
     concatenated into ONE table, so a task holding many (mostly
@@ -637,7 +574,8 @@ def _cluster_pairs_frame(cl, table, vec_col, threshold, max_cluster_rows):
                 f"auto-k keeps clusters bounded), or raise "
                 f"max_cluster_rows knowingly"
             )
-        kept, dropped, cos = _cluster_pairs_np(ids, V[m], threshold)
+        Vc = V[m]
+        kept, dropped, cos = cosine_pairs(ids, Vc, ids, Vc, threshold)
         out["cluster"].append(np.full(len(kept), c, np.int64))
         out["kept_id"].append(kept)
         out["dropped_id"].append(dropped)
@@ -687,10 +625,11 @@ def semdedup_prune_fused(
     (centroids are O(k·dims) driver ints), then ONE pass
     (:func:`_assign`) over the source that assigns each row and
     carries its vector, and ONE cluster-key exchange into the pair
-    stage, where each cluster's pairs come from one BLAS matmul over
-    its own vectors (row-chunks bound peak memory at O(chunk × n_c);
-    HALF_UP rounding before the threshold keeps the result
-    engine-exact). The cluster id is computed next to the vector, so
+    stage, where each cluster's pairs come from one
+    :func:`cosine_pairs` call over its own vectors (row-chunks bound
+    peak memory at O(chunk × n_c); decimal HALF_UP rounding before the
+    threshold keeps the result engine-exact). The cluster id is
+    computed next to the vector, so
     no id-keyed join re-attaches it.
 
     Null ids (a ``cast('long')`` miss) assign normally — they feed

@@ -7,25 +7,32 @@ Two paths:
   smaller (query) side to every partition of the corpus — i.e. a
   broadcast nested-loop — so corpus scaling is linear and the
   heavy side never moves.
-* :func:`cosine_topk_blocked` — the same result computed with a
-  Pandas UDF doing a real BLAS matmul per Arrow batch against a
-  broadcast query matrix: the 100 TB path (vectorized, ~100× the
+* :func:`cosine_topk_blocked` — the same result computed by a
+  ``mapInArrow`` pass doing a real BLAS matmul per Arrow batch against
+  a broadcast query matrix: the 100 TB path (vectorized, ~100× the
   scalar expression throughput), kept result-identical to the exact
   path so either can serve the query.
 
 Scores are rounded to 6 decimals *before* ranking, with the neighbor
 id as tie-break, so results are reproducible across engines and
 summation orders.
+
+Every numpy kernel over vectors reads its Arrow columns through
+:func:`_ids` and :func:`_matrix` and passes ids through as Arrow
+arrays where it can, so an id is never a float on its way (pandas
+would make an id column holding a null float64 and round ids above
+2⁵³). :func:`cosine_pairs` is the one exact-cosine pair search: the
+all-pairs baseline, SemDeDup's per-cluster pairs and the SRP store's
+bucket verify all call it.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-
-from dragnet_spark.ops import spread
 
 
 def _dot(a, b):
@@ -49,6 +56,89 @@ def _norm(a):
 def _safe_norm(c):
     n = _norm(c)
     return F.when(n == 0, F.lit(1.0)).otherwise(n)
+
+
+def _matrix(col, dtype):
+    """The n × dims numpy matrix of an Arrow list column ``col`` of n
+    (n ≥ 1) equal-length, non-null vectors."""
+    flat = pc.list_flatten(col).to_numpy(zero_copy_only=False)
+    n = len(col)
+    return flat.astype(dtype, copy=False).reshape(n, len(flat) // n)
+
+
+def _ids(col):
+    """(ids, null): an Arrow integer id column as an exact integer
+    array (a null id reads 0) and its null mask. Arrow's own conversion
+    would make a column holding a null float64 and round ids above
+    2⁵³."""
+    return (
+        pc.fill_null(col, 0).to_numpy(),
+        col.is_null().to_numpy(zero_copy_only=False),
+    )
+
+
+def _norms(M):
+    """Row L2 norms of ``M`` with a zero norm read as 1, so a zero
+    vector scores 0, never NaN."""
+    n = np.linalg.norm(M, axis=1)
+    n[n == 0] = 1.0
+    return n
+
+
+def cosine_pairs(ids_a, A, ids_b, B, threshold: float):
+    """(id_a, id_b, cosine) numpy arrays — int64, int64, float64 — for
+    every row pair of ``A`` × ``B`` with ``id_a < id_b`` and
+    round(cosine, 6) >= ``threshold``. Called as ``(ids, V, ids, V)``
+    it is the within-set pair search, each unordered pair once from its
+    lower-id side.
+
+    The cosine is the Spark verify expression's formula shape, a raw
+    dot over ‖a‖·‖b‖ with a zero norm read as 1, and the rounding is
+    true decimal HALF_UP (``Decimal(repr(x))``: the shortest
+    round-trip string Spark's ``BigDecimal`` rounding starts from, so
+    exact 1e-6 midpoints round as ``F.round`` rounds them). Candidates
+    are pre-selected in doubles with a full quantum of slack (a
+    half-quantum bound can land a sub-ulp above the true decimal
+    midpoint and drop a cosine that rounds to the threshold; a full
+    1e-6 cannot), then the rounded value decides. Rows of ``A`` are
+    processed in chunks, so peak memory is O(chunk × len(B)), never
+    the full product. The one residual divergence from a Spark fold is
+    summation order: a cosine within ~1 ulp of a rounding boundary can
+    differ in the sixth decimal."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    ids_a = np.asarray(ids_a, np.int64)
+    ids_b = np.asarray(ids_b, np.int64)
+    na, nb = _norms(A), _norms(B)
+    six = Decimal("0.000001")
+    out_a, out_b, out_c = [], [], []
+    chunk = max(1, 10_000_000 // max(len(B), 1))  # 80 MB of sims
+    for lo in range(0, len(A), chunk):
+        hi = min(lo + chunk, len(A))
+        sims = (A[lo:hi] @ B.T) / (na[lo:hi, None] * nb[None, :])
+        ai, bi = np.nonzero(
+            (sims >= threshold - 1.0e-6) & (ids_a[lo:hi, None] < ids_b[None, :])
+        )
+        if len(ai):
+            # repr(float(v)), not repr(v): numpy 2.x reprs scalars as
+            # 'np.float64(0.5)', which Decimal rejects
+            vals = np.array(
+                [
+                    float(Decimal(repr(float(v))).quantize(six, ROUND_HALF_UP))
+                    for v in sims[ai, bi]
+                ],
+                dtype=np.float64,
+            )
+            keep = vals >= threshold
+            out_a.append(ids_a[lo + ai[keep]])
+            out_b.append(ids_b[bi[keep]])
+            out_c.append(vals[keep])
+    if not out_a:
+        return (
+            np.array([], np.int64), np.array([], np.int64),
+            np.array([], np.float64),
+        )
+    return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_c)
 
 
 def cosine_topk(
@@ -103,46 +193,50 @@ def cosine_topk_blocked(
     max_queries: int = 65536,
 ) -> DataFrame:
     """Same contract as :func:`cosine_topk`, computed as a blocked
-    matrix product in a Pandas UDF (mapInPandas over corpus batches ×
-    broadcast query matrix). This is the throughput path at scale.
+    matrix product in ``mapInArrow`` (corpus Arrow batches × broadcast
+    query matrix). This is the throughput path at scale. Both id
+    columns ride as Arrow arrays (``take``), so ids of any type stay
+    exact — a null id beside an id above 2⁵³ included.
 
     The query side is collected to the driver and broadcast, so its
     size is a hard contract: more than ``max_queries`` rows raises
     instead of silently OOMing the driver. (65536 × 768-dim float64
     ≈ 400 MB broadcast — about the ceiling a healthy driver absorbs.)
     """
-    qrows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
+    qt = queries.select(id_col, vec_col).limit(max_queries + 1).toArrow()
+    if qt.num_rows > max_queries:
         raise ValueError(
             f"cosine_topk_blocked: query side exceeds max_queries="
             f"{max_queries}; shard the queries or raise the cap explicitly"
         )
     id_dt = dict(queries.dtypes)[id_col]
-    qids = np.array([r[0] for r in qrows])  # dtype from the data
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = 1.0
+    qids = qt.column(id_col).combine_chunks()
+    qmat = _matrix(qt.column(vec_col), np.float64) if qt.num_rows else None
+    qnorm = _norms(qmat) if qt.num_rows else None
     sc = corpus.sparkSession.sparkContext
     bq = sc.broadcast((qids, qmat, qnorm))
 
-    def score_block(it):
+    def score_block(batches):
         qids_, qmat_, qnorm_ = bq.value
-        for pdf in it:
-            cids = pdf[id_col].to_numpy()
-            cmat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cnorm = np.linalg.norm(cmat, axis=1)
-            cnorm[cnorm == 0] = 1.0
-            sims = (cmat @ qmat_.T) / cnorm[:, None] / qnorm_[None, :]
-            n_c, n_q = sims.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids_[None, :], n_c, 0).ravel(),
-                    "neighbor_id": np.repeat(cids[:, None], n_q, 1).ravel(),
-                    "score": np.round(sims.ravel(), 6),
-                }
+        n_q = len(qids_)
+        for batch in batches:
+            n_c = batch.num_rows
+            if not n_c or not n_q:
+                continue
+            cmat = _matrix(batch.column(vec_col), np.float64)
+            sims = (cmat @ qmat_.T) / _norms(cmat)[:, None] / qnorm_[None, :]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    qids_.take(np.tile(np.arange(n_q), n_c)),
+                    batch.column(id_col).cast(qids_.type).take(
+                        np.repeat(np.arange(n_c), n_q)
+                    ),
+                    pa.array(np.round(sims.ravel(), 6)),
+                ],
+                names=["query_id", "neighbor_id", "score"],
             )
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(
+    scored = corpus.select(id_col, vec_col).mapInArrow(
         score_block,
         schema=f"query_id {id_dt}, neighbor_id {id_dt}, score double",
     ).filter(F.col("neighbor_id") != F.col("query_id"))
@@ -199,20 +293,24 @@ def train_centroids(
 
 
 def _nearest_cells_udf(centroids, n_probe: int):
-    """Pandas UDF: vector → array of its n_probe nearest centroid ids."""
-    from pyspark.sql.functions import pandas_udf
+    """Arrow UDF: vector → array of its n_probe nearest centroid ids."""
+    from pyspark.sql.functions import arrow_udf
 
     C = np.asarray(centroids, dtype=np.float64)
 
-    @pandas_udf("array<int>")
-    def cells(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        M = np.array(list(vecs), dtype=np.float64)
-        M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        sims = M @ C.T
-        order = np.argsort(-sims, axis=1)[:, :n_probe]
-        return pd.Series([row.astype(int).tolist() for row in order])
+    @arrow_udf("array<int>")
+    def cells(vecs: pa.Array) -> pa.Array:
+        n = len(vecs)
+        if n == 0:
+            return pa.array([], pa.list_(pa.int32()))
+        M = _matrix(vecs, np.float64)
+        M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+        order = np.argsort(-(M @ C.T), axis=1)[:, :n_probe].astype(np.int32)
+        w = order.shape[1]
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(n + 1, dtype=np.int32) * w),
+            pa.array(order.ravel()),
+        )
 
     return cells
 

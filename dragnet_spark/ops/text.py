@@ -227,15 +227,6 @@ def fingerprint_sql(expr: str) -> str:
     return f"md5(regexp_replace(trim(lower({expr})), '\\s+', ' ', 'g'))"
 
 
-def minhash_signature(col: Column | str, num_hashes: int = 16) -> Column:
-    """MinHash over the distinct token set: element i is
-    min(md5(i || 0x1f || token)). Fixed-length hex strings make
-    lexicographic min == numeric min, so the same signature is
-    computable in any engine.
-    """
-    return minhash_signature_ngram(col, num_hashes, ngram=1)
-
-
 # universal-hash minhash: each shingle is md5-hashed ONCE to a 28-bit
 # integer h; permutation i is the universal hash (a_i*h + b_i) mod p.
 # 28-bit h keeps a_i*h within int64 under ANSI arithmetic; coefficients

@@ -1447,7 +1447,7 @@ def _semdedup_prune_oracle(threshold: float) -> str:
     "mates, turning semantic dedup into k independent bounded-size "
     "searches — LINEAR in the corpus, not (n/pinned-k)² (Abbas et "
     "al. 2023). One shuffle on cluster, then per-cluster BLAS "
-    "matmul (applyInPandas). Keeps the lower id of each "
+    "matmul (applyInArrow). Keeps the lower id of each "
     "within-cluster pair with cosine >= threshold. Recall vs the "
     "all-pairs baseline is by construction the fraction of near-dup "
     "pairs that co-cluster (true near-identical pairs, cos→1, "
@@ -1497,7 +1497,7 @@ def _semdedup_prune_two_level_oracle(threshold: float) -> str:
     "is n²·dims/target (measured factor 27.6 on 10× data at the "
     "1000× tier): level 1 clusters into ceil(√k) super-clusters "
     "(n·√k), level 2 Lloyd-clusters each super independently via one "
-    "applyInPandas pass (Σ m_g·k₂ ≈ n·√k) — total 2·n·√k, every step "
+    "applyInArrow pass (Σ m_g·k₂ ≈ n·√k) — total 2·n·√k, every step "
     "the same exact integer discipline, so the unrolled two-level "
     "DuckDB twin (kmeans_two_level_sql) grades it bit-for-bit. "
     "Cluster ids pack as super·2²⁰+sub; the pair search runs inside "
@@ -1635,7 +1635,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_cosine_topk_blocked",
     _ANN_ORACLE,
-    "same result via mapInPandas blocked BLAS matmul (the 100 TB "
+    "same result via mapInArrow blocked BLAS matmul (the 100 TB "
     "throughput path) — must agree with the expression path exactly",
 )
 def ann_cosine_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:

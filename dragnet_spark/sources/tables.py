@@ -32,6 +32,11 @@ TABLES = (
 
 _warned_tz_override = False
 
+#: (path, st_mtime_ns, st_size) → the schema its first load read.
+#: Reading a parquet path without a schema runs one footer-reading
+#: Spark job, on every load; a rewritten table stamps a new key.
+_schemas: dict = {}
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -63,7 +68,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # required for older data drops where ts was TIMESTAMP(NANOS)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    key = None  # a missing path: Spark's read raises its own error
+    if os.path.exists(path):
+        st = os.stat(path)
+        key = (path, st.st_mtime_ns, st.st_size)
+    if key in _schemas:
+        df = spark.read.schema(_schemas[key]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        _schemas[key] = df.schema
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nanosAsLong read the TIMESTAMP(NANOS) column as int64 nanos
         # integer division: double division loses integer precision past

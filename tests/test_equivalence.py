@@ -2,11 +2,10 @@
 (tests/dn/local/tst.index_file.sh runs the SAME scan_testcases.sh
 corpus with `scan` redefined as `dn query`).
 
-Build one wide metric over the reference fixture file, then answer
-every corpus query from the materialized view and compare row-for-row
-with the raw scan."""
-
-import os
+Build one wide metric over the seeded ``events_tree`` (perfbench/gen.py
+writes every field the cases use, ``req.caller == "poseidon"``
+included), then answer every corpus query from the materialized view
+and compare row-for-row with the raw scan."""
 
 import pytest
 
@@ -14,13 +13,6 @@ from dragnet_spark.index.build import Metric, build_index
 from dragnet_spark.index.query import NoMetricError, find_metric, query_index
 from dragnet_spark.query import QueryConfig
 from dragnet_spark.scan import scan_ndjson
-
-REF = "/root/reference"
-DATA = f"{REF}/tests/data/2014/05-01/one.log"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(DATA), reason="reference fixture data not present"
-)
 
 GET = {"eq": ["req.method", "GET"]}
 
@@ -43,7 +35,12 @@ CASES = [
 
 
 @pytest.fixture(scope="module")
-def big_index(spark, tmp_path_factory):
+def data(events_tree):
+    return events_tree[0]
+
+
+@pytest.fixture(scope="module")
+def big_index(spark, tmp_path_factory, data):
     idx = str(tmp_path_factory.mktemp("eq") / "index")
     metrics = [
         Metric.load(
@@ -55,7 +52,7 @@ def big_index(spark, tmp_path_factory):
     from dragnet_spark.datasource import load_datasource
     from dragnet_spark.config import DatasourceConfig
 
-    ds = DatasourceConfig(name="input", path=DATA)
+    ds = DatasourceConfig(name="input", path=data)
     df, resolver, _ = load_datasource(spark, ds, QueryConfig.load())
     build_index(
         spark, df, metrics, idx, interval="day", time_field="time",
@@ -67,14 +64,14 @@ def big_index(spark, tmp_path_factory):
 @pytest.mark.parametrize(
     "filt,bd", CASES, ids=[f"{i}:{bd or 'count'}" for i, (filt, bd) in enumerate(CASES)]
 )
-def test_query_matches_scan(spark, big_index, filt, bd):
+def test_query_matches_scan(spark, data, big_index, filt, bd):
     q = QueryConfig.load(breakdowns=bd, filter=filt)
-    want = {tuple(r) for r in scan_ndjson(spark, DATA, q).collect()}
+    want = {tuple(r) for r in scan_ndjson(spark, data, q).collect()}
     got = {tuple(r) for r in query_index(spark, big_index, q).collect()}
     assert got == want
 
 
-def test_filtered_metric_serves_identical_filter(spark, tmp_path):
+def test_filtered_metric_serves_identical_filter(spark, tmp_path, data):
     """A metric with a filter serves only queries with a structurally
     identical filter, which is then dropped from the rollup
     (tst.index_file.sh:33-38; lib/index-query.js:169-188)."""
@@ -83,12 +80,12 @@ def test_filtered_metric_serves_identical_filter(spark, tmp_path):
     from dragnet_spark.datasource import load_datasource
     from dragnet_spark.config import DatasourceConfig
 
-    ds = DatasourceConfig(name="input", path=DATA)
+    ds = DatasourceConfig(name="input", path=data)
     df, resolver, _ = load_datasource(spark, ds, QueryConfig.load())
     build_index(spark, df, metrics, idx, interval="all", resolver=resolver)
 
     q = QueryConfig.load(filter=GET)
-    want = {tuple(r) for r in scan_ndjson(spark, DATA, q).collect()}
+    want = {tuple(r) for r in scan_ndjson(spark, data, q).collect()}
     got = {tuple(r) for r in query_index(spark, idx, q).collect()}
     assert got == want
 

@@ -191,7 +191,7 @@ def test_auto_k_sql_twin_parity(spark):
 
 
 def test_prune_pairs_matches_brute_force(spark):
-    """The applyInPandas per-cluster matmul must emit exactly the
+    """The applyInArrow per-cluster matmul must emit exactly the
     within-cluster pairs >= threshold that a brute-force cross-check
     finds over kmeans_assign's clusters at the same pinned k
     (HALF_UP-rounded cosine, lower id kept)."""

@@ -228,6 +228,24 @@ def test_embedding_near_dup_exact_matches_oracle(spark, sf_dir, oracle):
     assert got == want and got
 
 
+def test_embedding_near_dup_pairs_skips_null_ids(spark):
+    """A null ``vec_id`` pairs with nothing, as in the SQL twin's
+    ``a.vec_id < b.vec_id``: the corpus answers exactly the pairs of
+    its non-null rows."""
+    from dragnet_spark.ops.dedup import embedding_near_dup_pairs
+
+    rows = [
+        (1, [1.0, 0.0]), (None, [1.0, 0.01]), (2, [1.0, 0.02]),
+        (3, [0.0, 1.0]), (4, [0.01, 1.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = rows_set(embedding_near_dup_pairs(df, threshold=0.9))
+    want = rows_set(
+        embedding_near_dup_pairs(df.where("vec_id IS NOT NULL"), threshold=0.9)
+    )
+    assert got == want == {(1, 2, 0.9998), (3, 4, 0.99995)}
+
+
 def test_embedding_near_dup_lsh_matches_exact(spark):
     """Clustered vectors with small noise: LSH-bucketed candidates +
     exact verification must reproduce the exact all-pairs result."""
@@ -557,6 +575,26 @@ def test_cosine_topk_zero_vector_agrees_with_blocked(spark):
     }
     assert exact == blocked
     assert (0, 2, 1) not in exact  # the zero vector is not rank 1
+
+
+def test_blocked_topk_keeps_ids_above_2_53_beside_a_null(spark):
+    """A null corpus id leaves its batch's other ids exact: 2⁵³+1 is
+    not a float64, so a float conversion of the id column would name
+    the neighbor 2⁵³. The blocked path answers what the exact one
+    does."""
+    from dragnet_spark.ops.similarity import cosine_topk, cosine_topk_blocked
+
+    big = 2**53 + 1
+    rows = [
+        (big, [1.0, 0.0]), (None, [0.0, 1.0]), (5, [1.0, 0.2]), (7, [0.2, 1.0]),
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).coalesce(1)  # one partition, one Arrow batch
+    q = df.filter(F.col("vec_id") == 5)
+    blocked = rows_set(cosine_topk_blocked(df, q, k=2))
+    assert (5, big, 0.980581, 1) in blocked
+    assert blocked == rows_set(cosine_topk(df, q, k=2))
 
 
 def test_blocked_topk_oversized_query_side_fails_fast(spark):

@@ -128,3 +128,21 @@ def test_boolean_filter_on_variant_ndjson(spark, tmp_path):
     # true matches; "yes" string-casts to true (Spark vocabulary);
     # false fails; missing audit drops
     assert got == {("x", 1), ("w", 1)}
+
+
+def test_repeat_load_table_reads_no_footer(spark, tmp_path, job_count):
+    """The first ``load_table`` of a file reads its schema (one footer
+    job); a second load of the same file reuses it and runs no job,
+    and a rewritten file is read afresh."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dragnet_spark.sources.tables import load_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    job_count(lambda: load_table(spark, str(tmp_path), "t"))
+    assert job_count(lambda: load_table(spark, str(tmp_path), "t")) == 0
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"] and df.count() == 3
